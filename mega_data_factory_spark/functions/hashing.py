@@ -17,45 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mega_data_factory_spark.functions.text import (
-    normalize_text,
-    normalize_text_sql,
-    sql_plain_column,
-    sql_string_literal,
-)
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from mega_data_factory_spark.functions.text import normalize_text_sql, sql_ident, sql_string_literal
 
 
 def stable_text_hash(col: Column | str) -> Column:
     """md5 hex digest of the raw string's UTF-8 bytes; NULL for NULL."""
-    return F.md5(_c(col).cast("string"))
-
-
-def content_key(
-    text_col: Column | str = "text",
-    id_col: Column | str = "doc_id",
-    *,
-    url_col: Column | str | None = None,
-    lowercase: bool = True,
-    collapse_whitespace: bool = True,
-) -> Column:
-    """Exact-dedup key per reference text_exact_dedup.py:22-114:
-    normalize(text) -> md5 hex; optional FineWeb-style ``"{url}|{text}"``
-    composite (text_exact_dedup.py:104-108); missing/invalid text falls back
-    to the record id (text_exact_dedup.py:96-99) so such rows never collide.
-    """
-    norm = normalize_text(text_col, lowercase=lowercase, collapse_whitespace=collapse_whitespace)
-    if url_col is not None:
-        # F.concat (NOT concat_ws): NULL text must propagate so the id
-        # fallback below still fires in url mode — concat_ws silently
-        # drops NULL args, giving two NULL-text rows with equal urls a
-        # shared non-NULL key and wrongly deduping them. Identical output
-        # for non-NULL text.
-        norm = F.concat(F.coalesce(_c(url_col), F.lit("")), F.lit("|"), norm)
-    return F.when(norm.isNull(), F.concat(F.lit("id:"), _c(id_col).cast("string"))).otherwise(F.md5(norm))
+    return F.md5((F.col(col) if isinstance(col, str) else col).cast("string"))
 
 
 def content_key_sql(
@@ -66,10 +33,18 @@ def content_key_sql(
     lowercase: bool = True,
     collapse_whitespace: bool = True,
 ) -> str:
-    """SQL twin of :func:`content_key` (same tree, one parse); all inputs
-    are already-rendered SQL fragments."""
+    """Exact-dedup key per reference text_exact_dedup.py:22-114:
+    normalize(text) -> md5 hex; optional FineWeb-style ``"{url}|{text}"``
+    composite (text_exact_dedup.py:104-108); missing/invalid text falls back
+    to the record id (text_exact_dedup.py:96-99) so such rows never collide.
+    All inputs are already-rendered SQL fragments."""
     norm = normalize_text_sql(text_sql, lowercase=lowercase, collapse_whitespace=collapse_whitespace)
     if url_sql is not None:
+        # concat (NOT concat_ws): NULL text must propagate so the id
+        # fallback below still fires in url mode — concat_ws silently
+        # drops NULL args, giving two NULL-text rows with equal urls a
+        # shared non-NULL key and wrongly deduping them. Identical output
+        # for non-NULL text.
         norm = f"concat(coalesce({url_sql}, ''), '|', {norm})"
     return (
         f"CASE WHEN ({norm} IS NULL) THEN concat('id:', cast({id_sql} as string)) "
@@ -77,32 +52,40 @@ def content_key_sql(
     )
 
 
+def content_key(
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    *,
+    url_col: str | None = None,
+    lowercase: bool = True,
+    collapse_whitespace: bool = True,
+) -> Column:
+    """Column form of :func:`content_key_sql` over named columns."""
+    return F.expr(
+        content_key_sql(
+            sql_ident(text_col),
+            sql_ident(id_col),
+            url_sql=None if url_col is None else sql_ident(url_col),
+            lowercase=lowercase,
+            collapse_whitespace=collapse_whitespace,
+        )
+    )
+
+
 def hash64_from_md5_sql(col_sql: str, *, seed: int | str | None = None) -> str:
-    """SQL twin of :func:`hash64_from_md5` (same tree, one parse);
-    ``col_sql`` is an already-rendered SQL fragment."""
+    """Deterministic 60-bit integer hash derived from md5 hex — reproducible
+    in ANSI SQL: ``conv(substr(md5(x), 1, 15), 16, 10)``; ``col_sql`` is an
+    already-rendered SQL fragment.
+
+    ``seed`` (appended with a ``#`` separator before hashing) yields an
+    independent hash family member — the minhash/LSH machinery uses
+    ``seed=0..k-1`` for its k permutations."""
     s = f"cast({col_sql} as string)"
     if seed is not None:
         s = f"concat({s}, {sql_string_literal(f'#{seed}')})"
     return f"cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
 
 
-def hash64_from_md5(col: Column | str, *, seed: int | str | None = None) -> Column:
-    """Deterministic 60-bit integer hash derived from md5 hex — reproducible
-    in ANSI SQL: ``conv(substr(md5(x), 1, 15), 16, 10)``.
-
-    ``seed`` (appended with a ``#`` separator before hashing) yields an
-    independent hash family member — the minhash/LSH machinery uses
-    ``seed=0..k-1`` for its k permutations.
-
-    Plain string column names take the :func:`hash64_from_md5_sql`
-    single-expr fast path (round 12, same tree — pinned by
-    tests/test_refiner_expr_parity.py::test_hash64_twin); Column inputs
-    keep the composed form.
-    """
-    ref = sql_plain_column(col)
-    if ref is not None:
-        return F.expr(hash64_from_md5_sql(ref, seed=seed))
-    s = _c(col).cast("string")
-    if seed is not None:
-        s = F.concat(s, F.lit(f"#{seed}"))
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+def hash64_from_md5(col: str, *, seed: int | str | None = None) -> Column:
+    """Column form of :func:`hash64_from_md5_sql` over a named column."""
+    return F.expr(hash64_from_md5_sql(sql_ident(col), seed=seed))

@@ -18,18 +18,14 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-# --- SQL-text twins -------------------------------------------------------
-# py4j costs ~2-4 ms per Column call on the bench hosts (round-12
-# measurement), so builders that compose dozens of Columns spend 100-350 ms
-# of pure driver latency per plan build. The *_sql helpers below render the
-# IDENTICAL Catalyst trees as SQL text so a whole builder parses in ONE
-# F.expr round trip. Every fast path is pinned to its composed twin by a
-# structural test (tests/test_refiner_expr_parity.py: analyzed-plan strings
-# equal modulo expression ids) — change one side and the test fails.
+# --- SQL text is the authored form ---------------------------------------
+# Every builder below is written once, as SQL text, and its Column form is
+# that text parsed by ONE F.expr: py4j costs ~2-4 ms per Column call on the
+# bench hosts, so composing these trees Column by Column spent 100-350 ms of
+# pure driver latency per plan build. The *_sql functions take already-
+# rendered SQL fragments (identifiers via :func:`sql_ident`, literals via
+# :func:`sql_string_literal` / :func:`sql_number_literal`) so larger
+# expressions can embed them; the Column builders take column NAMES.
 
 
 def sql_string_literal(s: str) -> str:
@@ -48,32 +44,86 @@ def sql_string_literal(s: str) -> str:
     return f"'{out}'"
 
 
-def sql_number_literal(v: int | float) -> str | None:
-    """SQL literal whose PARSED TYPE matches ``F.lit(v)``: plain digits for
-    32-bit ints (wider ints and bools have no spelling this helper
-    guarantees faithful — callers fall back to the composed path on None),
+def sql_number_literal(v: bool | int | float) -> str:
+    """SQL literal whose PARSED TYPE and value match ``F.lit(v)``:
+    ``true``/``false`` for bools; plain digits for 32-bit ints and the
+    ``L`` suffix for wider ones (py4j hands ``F.lit`` a Long there);
     ``repr(v)`` + the ``D`` suffix for finite floats (bare ``0.3`` parses
-    as DECIMAL in Spark SQL; ``repr`` round-trips the exact double)."""
+    as DECIMAL in Spark SQL; ``repr`` round-trips the exact double); a
+    cast of the string spelling for infinities and NaN, which have no
+    literal syntax."""
     if isinstance(v, bool):
-        return None
+        return "true" if v else "false"
     if isinstance(v, int):
-        return str(v) if -(2**31) <= v <= 2**31 - 1 else None
-    if isinstance(v, float) and math.isfinite(v):
+        if -(2**31) <= v < 2**31:
+            return str(v)
+        if -(2**63) <= v < 2**63:
+            return f"{v}L"
+        raise ValueError(f"integer literal {v} does not fit a 64-bit long")
+    if math.isfinite(v):
         return f"{v!r}D"
-    return None
+    spelled = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{spelled}' AS DOUBLE)"
 
 
-def sql_plain_column(col: Column | str) -> str | None:
-    """Backtick-quoted reference for a plain string column name, or None
-    when the input needs the composed-Column path (a Column object, or a
-    name carrying a backtick)."""
-    if isinstance(col, str) and "`" not in col:
-        return f"`{col}`"
-    return None
+def _name_parts(name: str) -> list[str] | None:
+    """``name`` split the way ``F.col`` splits it (Spark's attribute-name
+    parser): dots separate parts, and a backtick-quoted part is taken
+    verbatim, a doubled backtick inside it standing for one. None where
+    that parser rejects the name (an unpaired backtick, an empty part)."""
+    parts: list[str] = []
+    cur: list[str] = []
+    quoted = False
+    i = 0
+    while i < len(name):
+        ch = name[i]
+        if quoted:
+            if ch == "`":
+                if name[i + 1 : i + 2] == "`":
+                    cur.append("`")
+                    i += 1
+                else:
+                    quoted = False
+                    if i + 1 < len(name) and name[i + 1] != ".":
+                        return None
+            else:
+                cur.append(ch)
+        elif ch == "`":
+            if cur:
+                return None
+            quoted = True
+        elif ch == ".":
+            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
+                return None
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    if quoted:
+        return None
+    parts.append("".join(cur))
+    return parts
+
+
+def sql_ident(name: str, *, literal: bool = False) -> str:
+    """SQL identifier for a column reference, read the way ``F.col`` reads
+    it: ``meta.text`` is the ``text`` field of struct ``meta`` and
+    ```a.b``` the column named ``a.b``. A name that parser rejects (an
+    unpaired backtick, as in ``te`xt``) is one column name, and so is
+    every name with ``literal=True`` (schema field names and output
+    aliases, which are never paths). Each part renders backtick-quoted
+    with its backticks doubled."""
+    if not isinstance(name, str):
+        raise TypeError(f"expected a column name, got {type(name).__name__}")
+    parts = None if literal else _name_parts(name)
+    return ".".join("`" + p.replace("`", "``") + "`" for p in (parts or [name]))
 
 
 def normalize_text_sql(col_sql: str, *, lowercase: bool = True, collapse_whitespace: bool = True) -> str:
-    """SQL twin of :func:`normalize_text` (same tree, one parse)."""
+    """Canonical text normalization: trim, collapse runs of whitespace to
+    one space, lowercase. Mirrors reference text_exact_dedup.py:66-72 (both
+    steps optional there too). NULL stays NULL."""
     c = col_sql
     if collapse_whitespace:
         c = f"trim(regexp_replace({c}, '\\\\s+', ' '))"
@@ -82,63 +132,62 @@ def normalize_text_sql(col_sql: str, *, lowercase: bool = True, collapse_whitesp
     return c
 
 
+def normalize_text(col: str, *, lowercase: bool = True, collapse_whitespace: bool = True) -> Column:
+    """Column form of :func:`normalize_text_sql` over a named column."""
+    return F.expr(
+        normalize_text_sql(sql_ident(col), lowercase=lowercase, collapse_whitespace=collapse_whitespace)
+    )
+
+
 def token_count_sql(col_sql: str) -> str:
-    """SQL twin of :func:`token_count` (same tree, one parse)."""
+    """Whitespace token count: 0 for NULL/empty/blank, else number of
+    maximal non-whitespace runs. Computed arithmetically on the normalized
+    string so the SQL oracle can use the identical formula:
+    ``len(norm) - len(replace(norm, ' ', '')) + 1``."""
     norm = normalize_text_sql(col_sql, lowercase=False)
     n = f"length({norm}) - length(replace({norm}, ' ', '')) + 1"
     return f"cast(CASE WHEN (({norm} IS NULL) OR (length({norm}) = 0)) THEN 0 ELSE {n} END as bigint)"
 
 
+def token_count(col: str) -> Column:
+    """Column form of :func:`token_count_sql` over a named column."""
+    return F.expr(token_count_sql(sql_ident(col)))
+
+
 def text_length_sql(col_sql: str, length_col_sql: str | None = None) -> str:
-    """SQL twin of :func:`text_length` (same tree, one parse)."""
+    """Effective text length per reference text_length_filter.py:43-57:
+    trust a precomputed numeric length column when present, else
+    ``length(text)``, else 0 for missing text."""
     ln = f"length({col_sql})"
     if length_col_sql is not None:
         ln = f"coalesce(cast({length_col_sql} as bigint), cast({ln} as bigint))"
     return f"coalesce(cast({ln} as bigint), cast(0 as bigint))"
 
 
+def text_length(text_col: str = "text", length_col: str | None = None) -> Column:
+    """Column form of :func:`text_length_sql` over named columns."""
+    return F.expr(text_length_sql(sql_ident(text_col), None if length_col is None else sql_ident(length_col)))
+
+
 def word_occurrences_sql(col_sql: str, word: str) -> str:
-    r"""SQL twin of :func:`word_occurrences`'s fast path, for embedding in
-    larger expressions: ``col_sql`` is an already-rendered SQL fragment."""
+    r"""Count of whole-word occurrences of ``word`` (case-insensitive) using
+    an ASCII ``\b`` regex — same counting rule RE2 (DuckDB) and Java regex
+    (Spark) agree on. 0 for NULL text.
+
+    The text is lower()ed rather than matched with (?i) so the oracle SQL
+    stays trivial; the word is escaped — config-supplied words with regex
+    metacharacters ('a.b', 'c++') would otherwise mis-count (dot matches
+    anything) or kill the job at pattern-compile time. re.escape's
+    backslash-escapes are Java- and RE2-compatible for these inputs."""
     import re as _re
 
     pat = r"\b" + _re.escape(word.lower()) + r"\b"
     return f"cast(coalesce(regexp_count(lower({col_sql}), {sql_string_literal(pat)}), 0) as bigint)"
 
 
-def normalize_text(col: Column | str, *, lowercase: bool = True, collapse_whitespace: bool = True) -> Column:
-    """Canonical text normalization: trim, collapse runs of whitespace to one
-    space, lowercase. Mirrors reference text_exact_dedup.py:66-72 (both steps
-    optional there too). NULL stays NULL.
-    """
-    c = _c(col)
-    if collapse_whitespace:
-        c = F.trim(F.regexp_replace(c, r"\s+", " "))
-    if lowercase:
-        c = F.lower(c)
-    return c
-
-
-def text_length(text_col: Column | str = "text", length_col: Column | str | None = None) -> Column:
-    """Effective text length per reference text_length_filter.py:43-57:
-    trust a precomputed numeric length column when present, else
-    ``length(text)``, else 0 for missing text.
-    """
-    ln = F.length(_c(text_col))
-    if length_col is not None:
-        ln = F.coalesce(_c(length_col).cast("long"), ln.cast("long"))
-    return F.coalesce(ln.cast("long"), F.lit(0).cast("long"))
-
-
-def token_count(col: Column | str) -> Column:
-    """Whitespace token count: 0 for NULL/empty/blank, else number of
-    maximal non-whitespace runs. Computed arithmetically on the normalized
-    string so the SQL oracle can use the identical formula:
-    ``len(norm) - len(replace(norm, ' ', '')) + 1``.
-    """
-    norm = normalize_text(col, lowercase=False)
-    n = F.length(norm) - F.length(F.replace(norm, F.lit(" "), F.lit(""))) + F.lit(1)
-    return F.when(norm.isNull() | (F.length(norm) == 0), F.lit(0)).otherwise(n).cast("long")
+def word_occurrences(col: str, word: str) -> Column:
+    """Column form of :func:`word_occurrences_sql` over a named column."""
+    return F.expr(word_occurrences_sql(sql_ident(col), word))
 
 
 # GPT-2-style pre-tokenizer classes (contractions | letter runs | digit
@@ -147,7 +196,7 @@ def token_count(col: Column | str) -> Column:
 SUBWORD_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s']+"
 
 
-def subword_token_count(col: Column | str) -> Column:
+def subword_token_count(col: str) -> Column:
     """BPE-ish token count: number of matches of the GPT-2-style
     pre-tokenizer regex over the normalized text — the cheap stand-in for a
     real BPE vocab when budgeting LLM training tokens. 0 for NULL/empty.
@@ -158,43 +207,13 @@ def subword_token_count(col: Column | str) -> Column:
     return F.when(norm.isNull(), F.lit(0)).otherwise(n).cast("long")
 
 
-def word_occurrences(col: Column | str, word: str) -> Column:
-    r"""Count of whole-word occurrences of ``word`` (case-insensitive) using
-    an ASCII ``\b`` regex — same counting rule RE2 (DuckDB) and Java regex
-    (Spark) agree on. 0 for NULL text.
-    """
-    import re as _re
-
-    # lower() the text rather than using (?i) so the oracle SQL stays
-    # trivial; escape the word — config-supplied words with regex
-    # metacharacters ('a.b', 'c++') would otherwise mis-count (dot matches
-    # anything) or kill the job at pattern-compile time. re.escape's
-    # backslash-escapes are Java- and RE2-compatible for these inputs.
-    pat = r"\b" + _re.escape(word.lower()) + r"\b"
-    ref = sql_plain_column(col)
-    if ref is not None:
-        # Single-expr fast path (round 12): the stopword/marker refiners
-        # call this in loops of 8-16 words, and composing the chain as
-        # five Column ops costs five py4j round trips each (~2-4 ms/call
-        # on this host) — ~0.3-0.7 s of pure driver time per pipeline
-        # plan build. One F.expr builds the IDENTICAL expression tree
-        # (cast(coalesce(regexp_count(lower(col), pat), 0) as bigint));
-        # the pattern is escaped for Spark's string-literal rules
-        # (sql_string_literal) and the column name backtick-quoted.
-        # Columns or backtick-carrying names fall back to the composed
-        # form. Equivalence is pinned by
-        # tests/test_curation.py::test_word_occurrences_expr_parity.
-        return F.expr(word_occurrences_sql(ref, word))
-    return F.coalesce(F.regexp_count(F.lower(_c(col)), F.lit(pat)), F.lit(0)).cast("long")
-
-
-def word_array(col: Column | str) -> Column:
+def word_array(col: str) -> Column:
     """Non-empty normalized words — the shared unigram feature definition
     (DSIR scorer, quality classifier). NULL text yields NULL."""
     return F.filter(F.split(normalize_text(col), " "), lambda w: w != "")
 
 
-def word_ngram_array(col: Column | str, *, bigrams: bool = True, empty_on_null: bool = False) -> Column:
+def word_ngram_array(col: str, *, bigrams: bool = True, empty_on_null: bool = False) -> Column:
     """Unigrams (+ space-joined bigrams) as ONE array column — pure Column
     HOFs, codegen'd, no Python. The single definition shared by the
     hashed-feature operators (fastText-style ``QualityClassifier``, DSIR
@@ -220,31 +239,6 @@ def word_ngram_array(col: Column | str, *, bigrams: bool = True, empty_on_null: 
 
 
 def word_shingles_sql(col_sql: str, n: int = 3) -> str:
-    """SQL twin of :func:`word_shingles` (same tree, one parse).
-
-    Binder spelling: pyspark's ``_create_lambda`` names every lambda arg
-    ``x``/``y``/``z`` plus a fresh numeric suffix, and the parity
-    normalizer (tests/test_refiner_expr_parity.py) folds ``x_<k>`` and
-    bare ``x`` together. The two nested unary binders are spelled
-    ``x_1``/``x_2`` here — DISTINCT names, because the composed tree
-    references the OUTER normalized-text variable (``array(x_1)``, the
-    fewer-than-n-tokens fallback) from inside the inner lambda, which a
-    same-name shadowing spelling could not express."""
-    grams = "x_2"
-    for i in range(2, n + 1):
-        grams = f"zip_with({grams}, slice(x_2, {i}, size(x_2)), (x, y) -> concat_ws(' ', x, y))"
-    gram = (
-        f"CASE WHEN (size(x_2) >= {n}) THEN slice({grams}, 1, size(x_2) - {n - 1}) "
-        f"ELSE array(x_1) END"
-    )
-    build = (
-        f"CASE WHEN (x_1 IS NULL) THEN cast(NULL as array<string>) "
-        f"ELSE transform(array(split(x_1, ' ')), x_2 -> {gram})[0] END"
-    )
-    return f"transform(array({normalize_text_sql(col_sql)}), x_1 -> {build})[0]"
-
-
-def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Array of word n-gram shingles over the normalized text, preserving
     document order (duplicates included). Documents with fewer than ``n``
     tokens yield a single shingle of the whole normalized text, so every
@@ -269,29 +263,24 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     span_tokens=20 that is ~40 full text re-scans per row per site).
     Inner references to the bound variables (size/slice of a lambda var)
     are O(1) attribute reads, and the zip_with chain is sequential — each
-    level evaluates once.
+    level evaluates once. The two nested binders are spelled ``x_1`` and
+    ``x_2`` — distinct names, because the inner lambda references the
+    OUTER normalized-text variable (``array(x_1)``, the fewer-than-n-tokens
+    fallback)."""
+    grams = "x_2"
+    for i in range(2, n + 1):
+        grams = f"zip_with({grams}, slice(x_2, {i}, size(x_2)), (x, y) -> concat_ws(' ', x, y))"
+    gram = (
+        f"CASE WHEN (size(x_2) >= {n}) THEN slice({grams}, 1, size(x_2) - {n - 1}) "
+        f"ELSE array(x_1) END"
+    )
+    build = (
+        f"CASE WHEN (x_1 IS NULL) THEN cast(NULL as array<string>) "
+        f"ELSE transform(array(split(x_1, ' ')), x_2 -> {gram})[0] END"
+    )
+    return f"transform(array({normalize_text_sql(col_sql)}), x_1 -> {build})[0]"
 
-    Plain string column names take the :func:`word_shingles_sql` single-expr
-    fast path (round 12): the composed form below costs ~45 py4j round trips
-    (~100-250 ms of pure driver latency per plan build on the bench hosts)
-    and is rebuilt on every pass of every consumer (MinHash/ngram-Jaccard/
-    shared-span/decontamination plans). Identical analyzed tree, pinned by
-    tests/test_refiner_expr_parity.py::test_word_shingles_twin.
-    """
-    ref = sql_plain_column(col)
-    if ref is not None:
-        return F.expr(word_shingles_sql(ref, n))
 
-    def build(nv: Column) -> Column:
-        def gram(words: Column) -> Column:
-            k = F.size(words)
-            grams = words
-            for i in range(2, n + 1):
-                grams = F.zip_with(grams, F.slice(words, i, k), lambda a, b: F.concat_ws(" ", a, b))
-            return F.when(k >= n, F.slice(grams, 1, k - F.lit(n - 1))).otherwise(F.array(nv))
-
-        return F.when(nv.isNull(), F.lit(None).cast("array<string>")).otherwise(
-            F.transform(F.array(F.split(nv, " ")), gram)[0]
-        )
-
-    return F.transform(F.array(normalize_text(col)), build)[0]
+def word_shingles(col: str, n: int = 3) -> Column:
+    """Column form of :func:`word_shingles_sql` over a named column."""
+    return F.expr(word_shingles_sql(sql_ident(col), n))

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from abc import ABC, abstractmethod
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 REJECTION_DETAILS_COL = "_rejection_details"
@@ -43,36 +43,50 @@ REJECTION_DETAILS_COL = "_rejection_details"
 REJECTION_STRUCT_DDL = "struct<reason:string,operator:string,dedup_key:string,representative_id:string>"
 
 
-def rejection_details_sql(reason: str, operator: str) -> str:
-    """SQL twin of :func:`rejection_details` for the filtered case (both
-    key fields NULL) — same tree, one parse. Spelled ``struct(x AS name)``
-    (NOT ``named_struct``): both resolve to CreateNamedStruct, but the
-    parsed function name survives into the analyzed plan's toString and
-    the parity tests compare those strings."""
+def rejection_details_sql(
+    reason: str, operator: str, dedup_key: str = "null", representative_id: str = "null"
+) -> str:
+    """Typed ``_rejection_details`` struct (reference operator.py:258-263,
+    343-353) — kept as a real StructType, not JSON. ``reason`` and
+    ``operator`` are python strings; ``dedup_key`` and
+    ``representative_id`` are SQL fragments, NULL by default (the filtered
+    case). Spelled ``struct(x AS name)``, which resolves to the same
+    CreateNamedStruct as ``named_struct``."""
     from mega_data_factory_spark.functions.text import sql_string_literal
 
     return (
         f"struct(cast({sql_string_literal(reason)} as string) AS reason, "
         f"cast({sql_string_literal(operator)} as string) AS operator, "
-        f"cast(null as string) AS dedup_key, "
-        f"cast(null as string) AS representative_id)"
+        f"cast({dedup_key} as string) AS dedup_key, "
+        f"cast({representative_id} as string) AS representative_id)"
     )
 
 
 def rejection_details(
-    reason: Column | str,
-    operator: Column | str,
-    dedup_key: Column | None = None,
-    representative_id: Column | None = None,
+    reason: str, operator: str, dedup_key: str = "null", representative_id: str = "null"
 ) -> Column:
-    """Typed ``_rejection_details`` struct (reference operator.py:258-263,
-    343-353) — kept as a real StructType, not JSON."""
-    return F.struct(
-        (F.lit(reason) if isinstance(reason, str) else reason).cast("string").alias("reason"),
-        (F.lit(operator) if isinstance(operator, str) else operator).cast("string").alias("operator"),
-        (dedup_key if dedup_key is not None else F.lit(None)).cast("string").alias("dedup_key"),
-        (representative_id if representative_id is not None else F.lit(None)).cast("string").alias("representative_id"),
-    )
+    """Column form of :func:`rejection_details_sql`."""
+    return F.expr(rejection_details_sql(reason, operator, dedup_key, representative_id))
+
+
+def with_sql_columns(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """``df`` plus ``name -> SQL expression`` columns in ONE ``selectExpr``
+    round trip. A name that already exists is REPLACED in its original
+    position, matched case-insensitively the way ``withColumns`` matches
+    it under the default resolver; new names append in order."""
+    from mega_data_factory_spark.functions.text import sql_ident
+
+    def item(k: str) -> str:
+        return f"{exprs[k]} AS {sql_ident(k, literal=True)}"
+
+    pending = {k.lower(): k for k in exprs}
+    head = ["*"]
+    if any(c.lower() in pending for c in df.columns):
+        head = []
+        for c in df.columns:
+            k = pending.pop(c.lower(), None)
+            head.append(sql_ident(c, literal=True) if k is None else item(k))
+    return df.selectExpr(*head, *[item(k) for k in pending.values()])
 
 
 class Operator(ABC):
@@ -90,8 +104,19 @@ class Operator(ABC):
         return self.apply(df)
 
 
+# Each operator expression is authored ONCE. Where Spark SQL can spell it
+# (every name-parameterized expression), the authored form is SQL text —
+# the *_sql hooks below — and the Column form is that text through F.expr:
+# py4j costs ~2-4 ms per Column call on the bench hosts, so one parse per
+# expression instead of dozens of composed calls is what keeps cold plan
+# builds cheap. Expressions SQL cannot spell (Python UDFs, higher-order
+# Column compositions) are authored as Columns instead, and their *_sql
+# hook stays None for every parameterization of the class.
+
+
 class Refiner(Operator):
-    """Adds columns; never drops rows. Subclasses implement ``columns``;
+    """Adds columns; never drops rows. Subclasses author either
+    ``columns_sql_text`` (SQL text) or ``columns`` (Columns), never both;
     ``derived_columns`` optionally adds a second projection whose
     expressions reference the FIRST projection's columns BY NAME — the
     contract for thresholds over UDF scores (``is_aigc = score >= t``):
@@ -105,21 +130,20 @@ class Refiner(Operator):
     by name) and DROPPED from the output by both apply() and the pipeline
     path."""
 
-    @abstractmethod
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        """New column name -> expression."""
-
     def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """Optional RAW-SQL form of :meth:`columns` (round 12): new column
-        name -> already-rendered SQL fragment parsing to the identical
-        tree, or None to keep the Column path. Where :meth:`columns`'
-        SQL-twin fast path saves one py4j round trip per Column CALL,
-        this hook lets the pipeline fold a refiner's whole projection —
-        alive gate included — into ONE ``selectExpr`` round trip. Same
-        dispatch discipline as predicate_sql: None for any
-        parameterization without a faithful spelling; equality pinned in
-        tests/test_refiner_expr_parity.py."""
+        """The projection as SQL text: new column name -> SQL fragment.
+        The pipeline folds the whole projection — alive gate included —
+        into ONE ``selectExpr`` round trip. None for a class that authors
+        :meth:`columns` as Columns instead."""
         return None
+
+    def columns(self, df: DataFrame) -> dict[str, Column]:
+        """New column name -> expression (by default, the parsed
+        :meth:`columns_sql_text`)."""
+        texts = self.columns_sql_text(df)
+        if texts is None:
+            raise NotImplementedError(f"{type(self).__name__} authors neither columns nor columns_sql_text")
+        return {k: F.expr(s) for k, s in texts.items()}
 
     def derived_columns(self, df: DataFrame) -> dict[str, Column]:
         """Second-stage columns over the ``columns`` output (by name)."""
@@ -136,43 +160,40 @@ class Refiner(Operator):
 
 
 class Filter(Operator):
-    """Keep rows where ``predicate`` holds; rejected rows can be captured as
-    a side output with rejection details.
+    """Keep rows where the predicate holds; rejected rows can be captured
+    as a side output with rejection details. Subclasses author either
+    ``predicate_sql`` (SQL text) or ``predicate`` (a Column), never both.
 
-    Purity contract (``cacheable_predicate``): ``predicate(df)`` must be a
-    PURE name-based Column builder — a function of the operator's immutable
+    Purity contract (``cacheable_predicate``): the predicate must be a
+    PURE name-based builder — a function of the operator's immutable
     params and ``df.columns`` only, never of ``df``'s data, an action on
     ``df``, or mutable operator state. The pipeline relies on this to cache
     the built expression per (operator, schema) and reuse it across
     micro-batches (Pipeline._expr_cache). Every built-in Filter satisfies
-    it (unresolved Columns bind at analysis time, so one expression serves
-    every batch of the same schema). A custom Filter whose predicate
+    it (unresolved expressions bind at analysis time, so one expression
+    serves every batch of the same schema). A custom Filter whose predicate
     consults data or mutable state MUST set ``cacheable_predicate = False``
     to opt out — otherwise a stale cached tag silently reuses the first
     batch's decision logic on every later micro-batch."""
 
     cacheable_predicate: bool = True
 
-    @abstractmethod
-    def predicate(self, df: DataFrame) -> Column:
-        """Boolean keep-condition. NULL counts as reject."""
-
     def predicate_sql(self, df: DataFrame) -> str | None:
-        """Optional SQL-text twin of :meth:`predicate` (round 12): an
-        already-rendered SQL fragment that parses to the IDENTICAL
-        Catalyst tree, or None to keep the composed path. Subclasses that
-        implement it must return None for any parameterization they
-        cannot faithfully spell (Column inputs, backticked names,
-        non-32-bit ints — see functions.text.sql_number_literal) and pin
-        the equality in tests/test_refiner_expr_parity.py. Motivation:
-        py4j costs ~2-4 ms per Column call on the bench hosts, and filter
-        predicates + the pipeline tag rebuild on every cold plan."""
+        """Boolean keep-condition as SQL text (NULL counts as reject). The
+        pipeline parses its whole filter tag — alive gate, NULL-as-reject,
+        rejection struct — around it in ONE round trip. None for a class
+        that authors :meth:`predicate` as a Column instead."""
         return None
 
-    def keep(self, df: DataFrame) -> Column:
+    def predicate(self, df: DataFrame) -> Column:
+        """Boolean keep-condition (by default, the parsed
+        :meth:`predicate_sql`). NULL counts as reject."""
         psql = self.predicate_sql(df)
-        if psql is not None:
-            return F.expr(f"coalesce({psql}, false)")
+        if psql is None:
+            raise NotImplementedError(f"{type(self).__name__} authors neither predicate nor predicate_sql")
+        return F.expr(psql)
+
+    def keep(self, df: DataFrame) -> Column:
         return F.coalesce(self.predicate(df), F.lit(False))
 
     def apply(self, df: DataFrame) -> DataFrame:
@@ -185,21 +206,31 @@ class Filter(Operator):
         )
 
 
+# column a Column-authored dedup key is bound to, so the key wrappers
+# below (NULL handling, window ranking, the pipeline tag) stay SQL text
+RAW_KEY_COL = "__dedup_raw_key"
+
+
 class Deduplicator(Operator):
     """First-seen-wins dedup on a derived key.
 
-    ``key`` derives the dedup key; ``order_col`` defines "first" (the
-    deterministic strengthening of the reference's arrival-order semantics).
-    Survivors keep their columns; duplicates carry ``_rejection_details``
-    with ``dedup_key`` and ``representative_id`` = the survivor's id.
+    The key is authored as SQL text (``key_sql``) or, where SQL cannot
+    spell it (a Python UDF, a higher-order Column composition), as a
+    Column (``key``) — never both. ``order_col`` defines "first" (the
+    deterministic strengthening of the reference's arrival-order
+    semantics). Survivors keep their columns; duplicates carry
+    ``_rejection_details`` with ``dedup_key`` and ``representative_id`` =
+    the survivor's id. Everything wrapped around the key — NULL handling,
+    the window ranking, the pipeline's rejection tag — is SQL text over
+    ``key_sql``; a Column-authored key is first bound to ``RAW_KEY_COL``
+    and read from there.
 
-    Purity contract (``cacheable_predicate``): like Filter.predicate,
-    ``key(df)`` / ``_effective_key(df)`` must be pure name-based Column
-    builders (a function of immutable params and ``df.columns`` only) —
-    the pipeline caches the built dedup-tag expression per
-    (operator, schema) and reuses it across micro-batches. Subclasses
-    whose key consults data or mutable state (e.g. a store snapshot
-    re-read per batch) must set ``cacheable_predicate = False``.
+    Purity contract (``cacheable_predicate``): like Filter predicates, the
+    key must be a pure name-based builder (a function of immutable params
+    and ``df.columns`` only) — the pipeline caches the built dedup-tag
+    expression per (operator, schema) and reuses it across micro-batches.
+    Subclasses whose key consults data or mutable state (e.g. a store
+    snapshot re-read per batch) must set ``cacheable_predicate = False``.
     """
 
     cacheable_predicate: bool = True
@@ -243,108 +274,81 @@ class Deduplicator(Operator):
         # "min(order) per key" identifies exactly one winner row.
         self.wide_payload = wide_payload
 
-    @abstractmethod
-    def key(self, df: DataFrame) -> Column:
-        """Dedup key expression (string)."""
-
     def key_sql(self, df: DataFrame) -> str | None:
-        """Optional SQL-text twin of :meth:`key` (round 12): an
-        already-rendered SQL fragment parsing to the IDENTICAL tree, or
-        None to keep the composed path (the Filter.predicate_sql
-        contract — return None for any parameterization without a
-        faithful spelling; pin equality in
-        tests/test_refiner_expr_parity.py)."""
+        """Dedup key (string) as SQL text. None for a class that authors
+        :meth:`key` as a Column instead."""
         return None
 
-    def _missing_key_sql(self, df: DataFrame) -> str | None:
-        """SQL twin of :meth:`_missing_key`; subclasses that override
-        ``_missing_key`` must override this too (or return None)."""
-        k = self.key_sql(df)
-        return None if k is None else f"({k} IS NULL)"
+    def key(self, df: DataFrame) -> Column:
+        """Dedup key expression (by default, the parsed :meth:`key_sql`)."""
+        ksql = self.key_sql(df)
+        if ksql is None:
+            raise NotImplementedError(f"{type(self).__name__} authors neither key nor key_sql")
+        return F.expr(ksql)
 
-    def effective_key_sql(self, df: DataFrame) -> str | None:
-        """SQL twin of :meth:`_effective_key` — the whole NULL-handling
-        wrapper as one fragment, or None when any piece lacks a faithful
-        spelling. Control characters are spelled with Spark's
-        string-literal escapes where one exists (``\\0`` for NUL) and
-        raw otherwise (US, ``\\x1f``) — both parse to the identical
-        literal bytes (pinned by the parity tests)."""
-        from mega_data_factory_spark.functions.text import sql_plain_column
+    def _key_source(self, df: DataFrame) -> tuple[Column | None, str]:
+        """(Column to bind as ``RAW_KEY_COL`` or None, SQL text of the key
+        on the bound frame) — the one entry point every key wrapper uses."""
+        from mega_data_factory_spark.functions.text import sql_ident
 
-        k = self.key_sql(df)
-        o = sql_plain_column(self.order_col)
-        if k is None or o is None:
-            return None
+        ksql = self.key_sql(df)
+        if ksql is not None:
+            return None, ksql
+        return self.key(df), sql_ident(RAW_KEY_COL)
+
+    def _missing_key_sql(self, df: DataFrame, key_sql: str) -> str:
+        """True where the row has NO dedup identity (used by
+        null_keys="distinct"). Default: the derived key is NULL; subclasses
+        whose key sentinels NULLs (multi-column concat) override this to
+        test the underlying columns."""
+        return f"({key_sql} IS NULL)"
+
+    def _effective_key_sql(self, df: DataFrame, key_sql: str) -> str:
+        """The key with its NULL handling. A NULL order_col row has NO
+        position in the dedup order: it can be neither a representative
+        (it would win every NULLS FIRST window) nor a duplicate (of what?),
+        so it always survives, in every null_keys mode (documented
+        contract; order_col is ids in practice, so this is a malformed-row
+        escape hatch, not a mode). Its synthetic key is concat_ws (never
+        NULL) with a monotonic fallback: a bare concat yielded NULL
+        whenever order_col was NULL, collapsing identity-less rows back
+        into ONE group — the exact mass-drop "distinct" exists to prevent.
+        monotonically_increasing_id is not stable across runs, but this
+        key never surfaces: every row that gets one survives by
+        construction. Control characters are spelled with Spark's
+        string-literal escapes where one exists (``\\0`` for NUL) and raw
+        otherwise (US, ``\\x1f``) — both parse to the same literal bytes."""
+        from mega_data_factory_spark.functions.text import sql_ident
+
+        o = sql_ident(self.order_col)
         unique = (
             "concat_ws('', '\\0N\x1f', coalesce(cast(" + o + " as string), "
             "concat_ws('', 'mi:', cast(monotonically_increasing_id() as string))))"
         )
         if self.null_keys == "distinct":
-            m = self._missing_key_sql(df)
-            if m is None:
-                return None
-            return f"CASE WHEN ({m} OR ({o} IS NULL)) THEN {unique} ELSE {k} END"
-        return f"CASE WHEN ({o} IS NULL) THEN {unique} ELSE {k} END"
+            m = self._missing_key_sql(df, key_sql)
+            return f"CASE WHEN ({m} OR ({o} IS NULL)) THEN {unique} ELSE {key_sql} END"
+        return f"CASE WHEN ({o} IS NULL) THEN {unique} ELSE {key_sql} END"
 
-    def _missing_key(self, df: DataFrame) -> Column:
-        """True where the row has NO dedup identity (used by
-        null_keys="distinct"). Default: the derived key is NULL; subclasses
-        whose ``key`` sentinels NULLs (multi-column concat) override this
-        to test the underlying columns."""
-        return self.key(df).isNull()
-
-    def _effective_key(self, df: DataFrame) -> Column:
-        k = self.key(df)
-        order = F.col(self.order_col)
-        # concat_ws (never NULL) + a monotonic fallback: the old bare
-        # concat yielded NULL whenever order_col was NULL, collapsing
-        # identity-less rows back into ONE group — the exact mass-drop
-        # "distinct" exists to prevent. monotonically_increasing_id is not
-        # stable across runs, but this key never surfaces: every row that
-        # gets one survives by construction.
-        unique = F.concat_ws(
-            "",
-            F.lit("\x00N\x1f"),
-            F.coalesce(
-                order.cast("string"),
-                F.concat_ws("", F.lit("mi:"), F.monotonically_increasing_id().cast("string")),
-            ),
-        )
-        # a NULL order_col row has NO position in the dedup order: it can
-        # be neither a representative (it would win every NULLS FIRST
-        # window) nor a duplicate (of what?) — it always survives, in
-        # every null_keys mode (documented contract; order_col is ids in
-        # practice, so this is a malformed-row escape hatch, not a mode)
-        no_position = order.isNull()
-        if self.null_keys == "distinct":
-            return F.when(self._missing_key(df) | no_position, unique).otherwise(k)
-        return F.when(no_position, unique).otherwise(k)
+    def _keyed(self, df: DataFrame) -> tuple[DataFrame, str]:
+        """``df`` (with a Column-authored key bound) and the SQL text of
+        its effective key."""
+        raw, ksql = self._key_source(df)
+        if raw is not None:
+            df = df.withColumn(RAW_KEY_COL, raw)
+        return df, self._effective_key_sql(df, ksql)
 
     def _ranked(self, df: DataFrame) -> DataFrame:
-        # SQL-text fast path (round 12): the standalone query path — the
-        # pipeline tag has its own one-expr spelling — builds its three
-        # columns via ONE F.expr each instead of the composed builders
-        # (~100 ms per cold plan build for the md5 text key). Same
-        # dispatch discipline as the other twins (None = composed
-        # fallback); identical analyzed tree pinned in
-        # tests/test_refiner_expr_parity.py.
-        from mega_data_factory_spark.functions.text import sql_plain_column
+        # the standalone query path — the pipeline tag has its own
+        # one-expr spelling — builds its three columns via ONE F.expr each
+        from mega_data_factory_spark.functions.text import sql_ident
 
-        esql = self.effective_key_sql(df)
-        ic = sql_plain_column(self.id_col)
-        oc = sql_plain_column(self.order_col)
-        if esql is not None and ic is not None and oc is not None:
-            over = f"OVER (PARTITION BY __dedup_key ORDER BY {oc})"
-            return (
-                df.withColumn("__dedup_key", F.expr(esql))
-                .withColumn("__rn", F.expr(f"row_number() {over}"))
-                .withColumn("__rep", F.expr(f"first({ic}) {over}"))
-            )
-        w = Window.partitionBy(F.col("__dedup_key")).orderBy(F.col(self.order_col))
+        df, esql = self._keyed(df)
+        over = f"OVER (PARTITION BY __dedup_key ORDER BY {sql_ident(self.order_col)})"
         return (
-            df.withColumn("__dedup_key", self._effective_key(df))
-            .withColumn("__rn", F.row_number().over(w))
-            .withColumn("__rep", F.first(F.col(self.id_col)).over(w))
+            df.withColumn("__dedup_key", F.expr(esql))
+            .withColumn("__rn", F.expr(f"row_number() {over}"))
+            .withColumn("__rep", F.expr(f"first({sql_ident(self.id_col)}) {over}"))
         )
 
     # NULL-group join sentinel: groupBy/Window treat NULL keys as one
@@ -354,11 +358,18 @@ class Deduplicator(Operator):
     # impossible (keys here are md5 hex / urls / column values).
     _NULL_GROUP = "\x00G\x1f"
 
+    def _join_key_sql(self, key_sql: str) -> str:
+        """NULL-safe join key over a key's SQL text."""
+        from mega_data_factory_spark.functions.text import sql_string_literal
+
+        return f"coalesce({key_sql}, {sql_string_literal(self._NULL_GROUP)})"
+
     def _winners(self, df: DataFrame) -> DataFrame:
         """(winner order value, join key) per dedup key — the compact
         election. Grouped on the NULL-safe ``__jk``."""
+        df, esql = self._keyed(df)
         return (
-            df.withColumn("__jk", F.coalesce(self._effective_key(df), F.lit(self._NULL_GROUP)))
+            df.withColumn("__jk", F.expr(self._join_key_sql(esql)))
             .groupBy("__jk")
             .agg(F.min(F.col(self.order_col)).alias("__win_order"))
         )
@@ -367,13 +378,12 @@ class Deduplicator(Operator):
         if self.wide_payload:
             win = self._winners(df).select(F.col("__win_order").alias(self.order_col))
             survivors = df.join(win, on=self.order_col, how="left_semi")
-            # NULL-order rows always survive (_effective_key contract) but
-            # a semi-join on order_col can never match their NULL — union
-            # them back rather than silently dropping them from BOTH sides
+            # NULL-order rows always survive (_effective_key_sql contract)
+            # but a semi-join on order_col can never match their NULL —
+            # union them back rather than silently dropping them from BOTH
+            # sides
             return survivors.unionByName(df.filter(F.col(self.order_col).isNull()))
-        # string filter == the composed F.col("__rn") == 1 tree (one parse
-        # round trip; pinned with the _ranked twin)
-        return self._ranked(df).filter("(__rn = 1)").drop("__dedup_key", "__rn", "__rep")
+        return self._ranked(df).filter("(__rn = 1)").drop("__dedup_key", "__rn", "__rep", RAW_KEY_COL)
 
     def rejected(self, df: DataFrame) -> DataFrame:
         if self.wide_payload:
@@ -384,8 +394,9 @@ class Deduplicator(Operator):
             # wide-payload saving is silently unavailable there.
             if self.id_col == self.order_col:
                 win = self._winners(df)
-                keyed = df.withColumn("__dedup_key", self._effective_key(df)).withColumn(
-                    "__jk", F.coalesce(F.col("__dedup_key"), F.lit(self._NULL_GROUP))
+                kdf, esql = self._keyed(df)
+                keyed = kdf.withColumn("__dedup_key", F.expr(esql)).withColumn(
+                    "__jk", F.expr(self._join_key_sql("__dedup_key"))
                 )
                 dups = keyed.join(win, on="__jk", how="inner").filter(
                     F.col(self.order_col) != F.col("__win_order")
@@ -394,23 +405,13 @@ class Deduplicator(Operator):
                 dups = self._ranked(df).filter(F.col("__rn") > 1).withColumnRenamed("__rep", "__win_order")
             return dups.withColumn(
                 REJECTION_DETAILS_COL,
-                rejection_details("duplicate", self.name, F.col("__dedup_key"), F.col("__win_order").cast("string")),
-            ).drop("__dedup_key", "__jk", "__win_order", "__rn", "__rep")
-        from mega_data_factory_spark.functions.text import sql_string_literal
-
-        # one-expr spelling of the composed rejection_details(...) call
-        # below it replaces (same tree: struct-with-aliases, the double
-        # cast on __rep and all — pinned with the _ranked twin)
+                rejection_details("duplicate", self.name, "__dedup_key", "cast(__win_order as string)"),
+            ).drop("__dedup_key", "__jk", "__win_order", "__rn", "__rep", RAW_KEY_COL)
         dups = self._ranked(df).filter("(__rn > 1)")
         return dups.withColumn(
             REJECTION_DETAILS_COL,
-            F.expr(
-                f"struct(cast('duplicate' as string) AS reason, "
-                f"cast({sql_string_literal(self.name)} as string) AS operator, "
-                f"cast(__dedup_key as string) AS dedup_key, "
-                f"cast(cast(__rep as string) as string) AS representative_id)"
-            ),
-        ).drop("__dedup_key", "__rn", "__rep")
+            rejection_details("duplicate", self.name, "__dedup_key", "cast(__rep as string)"),
+        ).drop("__dedup_key", "__rn", "__rep", RAW_KEY_COL)
 
 
 class JoinDeduplicator(Deduplicator):
@@ -475,9 +476,7 @@ class JoinDeduplicator(Deduplicator):
             df.join(self._dup_pairs_memo(df), on=self.id_col, how="inner")
             .withColumn(
                 REJECTION_DETAILS_COL,
-                rejection_details(
-                    self.rejection_reason, self.name, F.lit(None), F.col("__rep").cast("string")
-                ),
+                rejection_details(self.rejection_reason, self.name, representative_id="cast(__rep as string)"),
             )
             .drop("__rep")
         )

@@ -301,7 +301,7 @@ class KMeansIndex:
             df.join(pairs, on=id_col)
             .withColumn(
                 "_rejection_details",
-                rejection_details("duplicate", name, F.lit(None), F.col("__rep").cast("string")),
+                rejection_details("duplicate", name, representative_id="cast(__rep as string)"),
             )
             .drop("__rep")
         )

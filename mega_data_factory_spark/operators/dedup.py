@@ -16,15 +16,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mega_data_factory_spark.functions.hashing import content_key, content_key_sql, hash64_from_md5
-from mega_data_factory_spark.functions.text import sql_plain_column, word_shingles
+from mega_data_factory_spark.functions.hashing import content_key_sql, hash64_from_md5, hash64_from_md5_sql
+from mega_data_factory_spark.functions.text import sql_ident, word_shingles, word_shingles_sql
 from mega_data_factory_spark.functions.vectors import is_finite_vector, l2_norm
-from mega_data_factory_spark.operators.base import (
-    Deduplicator,
-    JoinDeduplicator,
-    anti_join_once,
-    rejection_details,
-)
+from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator
 
 
 class TextExactDeduplicator(Deduplicator):
@@ -48,26 +43,13 @@ class TextExactDeduplicator(Deduplicator):
         self.lowercase = lowercase
         self.collapse_whitespace = collapse_whitespace
 
-    def key(self, df: DataFrame) -> Column:
-        return content_key(
-            self.text_col,
-            self.id_col,
-            url_col=self.url_col,
+    def key_sql(self, df: DataFrame) -> str:
+        return content_key_sql(
+            sql_ident(self.text_col),
+            sql_ident(self.id_col),
+            url_sql=None if self.url_col is None else sql_ident(self.url_col),
             lowercase=self.lowercase,
             collapse_whitespace=self.collapse_whitespace,
-        )
-
-    def key_sql(self, df: DataFrame) -> str | None:
-        tc, ic = sql_plain_column(self.text_col), sql_plain_column(self.id_col)
-        if tc is None or ic is None:
-            return None
-        usql = None
-        if self.url_col is not None:
-            usql = sql_plain_column(self.url_col)
-            if usql is None:
-                return None
-        return content_key_sql(
-            tc, ic, url_sql=usql, lowercase=self.lowercase, collapse_whitespace=self.collapse_whitespace
         )
 
 
@@ -112,8 +94,8 @@ class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
         self.bloom_fpp = bloom_fpp
 
     def key(self, df: DataFrame) -> Column:
-        # real content key (MRO would otherwise hit JoinDeduplicator's guard)
-        return TextExactDeduplicator.key(self, df)
+        # the parsed key_sql (MRO would otherwise hit JoinDeduplicator's guard)
+        return Deduplicator.key(self, df)
 
     def _store_keys(self, spark) -> DataFrame:
         from pyspark.errors import AnalysisException
@@ -182,7 +164,7 @@ class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
         if getattr(self, "null_keys", "group") == "distinct":
             # identity-less rows are exempt from dedup; remembering their
             # synthetic per-row keys would reject replayed rows later
-            out = out.filter(~self._missing_key(out))
+            out = out.filter(f"NOT {self._missing_key_sql(out, self.key_sql(out))}")
         new_keys = out.select(
             self.key(out).alias("content_key"),
             F.col(self.id_col).cast("string").alias("representative_id"),
@@ -314,7 +296,7 @@ def migrate_band_store(spark, store_path: str) -> dict:
     before = df.count()
     folded = (
         df.select(
-            hash64_from_md5(F.col("band_key")).alias("band_key"),
+            hash64_from_md5("band_key").alias("band_key"),
             "representative_id",
         )
         .groupBy("band_key")
@@ -393,10 +375,10 @@ class IncrementalKeyDeduplicator(IncrementalExactDeduplicator):
         self.key_cols = key_cols
         self.null_keys = null_keys  # TextExact's chain doesn't thread it
 
-    def _missing_key(self, df: DataFrame) -> Column:
-        return KeyDeduplicator._missing_key(self, df)
+    def _missing_key_sql(self, df: DataFrame, key_sql: str) -> str:
+        return KeyDeduplicator._missing_key_sql(self, df, key_sql)
 
-    def key(self, df: DataFrame) -> Column:
+    def key_sql(self, df: DataFrame) -> str:
         # The single-column form must NOT stay NULL for NULL values here:
         # the in-batch window groups NULLs together, but a NULL store row
         # never matches the store join (SQL NULL != NULL), so cross-run
@@ -406,18 +388,11 @@ class IncrementalKeyDeduplicator(IncrementalExactDeduplicator):
         # null_keys="distinct" instead rewrites NULL-component keys to a
         # per-row synthetic ("\x00N\x1f" + id): unique in the window,
         # never stored (update_store filters them), never store-matched.
-        raw = KeyDeduplicator.key(self, df)
+        raw = KeyDeduplicator.key_sql(self, df)
         if self.null_keys == "distinct":
-            unique = F.concat(F.lit("\x00N\x1f"), F.col(self.id_col).cast("string"))
-            return F.when(self._missing_key(df), unique).otherwise(raw)
-        return F.coalesce(raw, F.lit("\x00"))
-
-    def key_sql(self, df: DataFrame) -> str | None:
-        # key() above wraps KeyDeduplicator.key with store-safe NULL
-        # sentinels — the TextExact twin this class would otherwise
-        # inherit does NOT mirror it. No twin authored (the join-dedup
-        # pipeline path never consults effective_key_sql here).
-        return None
+            unique = f"concat('\\0N\x1f', cast({sql_ident(self.id_col)} as string))"
+            return f"CASE WHEN {self._missing_key_sql(df, raw)} THEN {unique} ELSE {raw} END"
+        return f"coalesce({raw}, '\\0')"
 
 
 class KeyDeduplicator(Deduplicator):
@@ -446,39 +421,23 @@ class KeyDeduplicator(Deduplicator):
             raise ValueError("key_cols must be non-empty")
         self.key_cols = key_cols
 
-    def key(self, df: DataFrame) -> Column:
+    def key_sql(self, df: DataFrame) -> str:
         # null-safe = SQL PARTITION BY semantics: concat_ws SKIPS null
         # args, so ("a", NULL) and (NULL, "a") both collapsed to "a" and
         # unrelated rows were dropped as duplicates; the NUL sentinel
         # keeps NULL distinct from "" and position-stable. Single column
         # stays the plain cast (NULLs one group, as SQL partitioning).
-        cols = [F.col(c).cast("string") for c in self.key_cols]
-        if len(cols) == 1:
-            return cols[0]
-        return F.concat_ws("\x1f", *[F.coalesce(c, F.lit("\x00")) for c in cols])
-
-    def key_sql(self, df: DataFrame) -> str | None:
-        refs = [sql_plain_column(c) for c in self.key_cols]
-        if any(r is None for r in refs):
-            return None
+        refs = [sql_ident(c) for c in self.key_cols]
         if len(refs) == 1:
             return f"cast({refs[0]} as string)"
         parts = ", ".join(f"coalesce(cast({r} as string), '\\0')" for r in refs)
         return f"concat_ws('\x1f', {parts})"
 
-    def _missing_key(self, df: DataFrame) -> Column:
-        # the multi-column key() sentinels NULLs into a non-NULL concat, so
+    def _missing_key_sql(self, df: DataFrame, key_sql: str) -> str:
+        # the multi-column key sentinels NULLs into a non-NULL concat, so
         # "distinct" mode must test the underlying columns: ANY NULL
         # component means the composite identity is underivable
-        cond = F.col(self.key_cols[0]).isNull()
-        for c in self.key_cols[1:]:
-            cond = cond | F.col(c).isNull()
-        return cond
-
-    def _missing_key_sql(self, df: DataFrame) -> str | None:
-        refs = [sql_plain_column(c) for c in self.key_cols]
-        if any(r is None for r in refs):
-            return None
+        refs = [sql_ident(c) for c in self.key_cols]
         cond = f"({refs[0]} IS NULL)"
         for r in refs[1:]:
             cond = f"({cond} OR ({r} IS NULL))"
@@ -609,11 +568,9 @@ class MinHashLSHDeduplicator(JoinDeduplicator):
             ms = ", ".join(
                 f"cast(__m{b * self.rows_per_band + r} as string)" for r in range(self.rows_per_band)
             )
-            # hash64_from_md5's exact SQL spelling — the DuckDB mirror in
-            # plans/dedup_queries.py depends on this fold bit-for-bit
-            return (
-                f"cast(conv(substr(md5(concat_ws('_', '{b}', concat_ws(',', {ms}))), 1, 15), 16, 10) as bigint)"
-            )
+            # the DuckDB mirror in plans/dedup_queries.py depends on this
+            # fold bit-for-bit
+            return hash64_from_md5_sql(f"concat_ws('_', '{b}', concat_ws(',', {ms}))")
 
         bands = F.expr("array(" + ", ".join(band_sql(b) for b in range(self.bands)) + ")")
         return sig.select(F.col(self.id_col), F.explode(bands).alias("__band_key"))
@@ -765,7 +722,7 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
 SIMHASH_BITS = 60  # md5-derived hashes carry 60 usable bits (15 hex chars)
 
 
-def simhash64(text_col: Column | str, *, shingle_n: int = 2) -> Column:
+def simhash64(text_col: str, *, shingle_n: int = 2) -> Column:
     """SimHash over word shingles as BIGINT (60 significant bits).
 
     Each distinct shingle hashes to 60 bits (md5-derived, SQL-reproducible);
@@ -778,8 +735,10 @@ def simhash64(text_col: Column | str, *, shingle_n: int = 2) -> Column:
     a literal, not a Column), and ``counts`` is referenced exactly once so
     the aggregate isn't re-evaluated per bit.
     """
-    shingles = F.array_distinct(word_shingles(text_col, shingle_n))
-    hashes = F.transform(shingles, lambda s: hash64_from_md5(s))
+    hashes = F.expr(
+        f"transform(array_distinct({word_shingles_sql(sql_ident(text_col), shingle_n)}), "
+        f"x -> {hash64_from_md5_sql('x')})"
+    )
     counts = F.aggregate(
         hashes,
         F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),

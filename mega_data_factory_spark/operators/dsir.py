@@ -122,7 +122,7 @@ class DsirImportanceScorer(Operator):
         exploded = df.select(*ids, F.explode(feats).alias("__g"))
         return exploded.select(
             *keep,
-            (hash64_from_md5(F.col("__g"), seed=HASH_SEED) % self.n_buckets).alias("__bucket"),
+            (hash64_from_md5("__g", seed=HASH_SEED) % self.n_buckets).alias("__bucket"),
         )
 
     # ------------------------------------------------------------------ fit
@@ -266,7 +266,7 @@ class DsirResampler(Operator):
         if not self.gumbel:
             return w
         h53 = F.shiftright(
-            hash64_from_md5(F.col(self.id_col).cast("string"), seed=self.seed), _UNIFORM_SHIFT
+            hash64_from_md5(self.id_col, seed=self.seed), _UNIFORM_SHIFT
         )
         u = (h53 + F.lit(0.5)) / F.lit(_UNIFORM_SPACE)
         return w + (-F.log(-F.log(u)))

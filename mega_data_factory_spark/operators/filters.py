@@ -18,9 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.functions.text import (
+    sql_ident,
     sql_number_literal,
-    sql_plain_column,
-    text_length,
     text_length_sql,
     word_occurrences,
 )
@@ -32,7 +31,7 @@ class TextLengthFilter(Filter):
 
     Effective length trusts a precomputed numeric length column when present,
     else ``length(text)``, else 0 (reference text_length_filter.py:43-57).
-    Pure Column expression — at scale this pushes into the parquet scan when
+    Pure SQL expression — at scale this pushes into the parquet scan when
     the length column is materialized.
     """
 
@@ -51,26 +50,15 @@ class TextLengthFilter(Filter):
         self.text_col = text_col
         self.length_col = length_col
 
-    def predicate(self, df: DataFrame) -> Column:
-        ln = text_length(self.text_col, self.length_col if self.length_col in (df.columns if df is not None else []) else None)
-        return ln.between(self.min_length, self.max_length)
-
-    def predicate_sql(self, df: DataFrame) -> str | None:
-        tc = sql_plain_column(self.text_col)
-        mn, mx = sql_number_literal(self.min_length), sql_number_literal(self.max_length)
-        if tc is None or mn is None or mx is None:
-            return None
+    def predicate_sql(self, df: DataFrame) -> str:
+        # the length column is trusted only when the frame carries it
         lc = self.length_col if self.length_col in (df.columns if df is not None else []) else None
-        lsql = None
-        if lc is not None:
-            lsql = sql_plain_column(lc)
-            if lsql is None:
-                return None
-        ln = text_length_sql(tc, lsql)
+        ln = text_length_sql(sql_ident(self.text_col), None if lc is None else sql_ident(lc))
+        mn, mx = sql_number_literal(self.min_length), sql_number_literal(self.max_length)
         return f"(({ln} >= {mn}) AND ({ln} <= {mx}))"
 
 
-def word_score(col: Column | str, weights: dict[str, float]) -> Column:
+def word_score(col: str, weights: dict[str, float]) -> Column:
     """URLFilter-style weighted word score (reference url_filter.py:255-282):
 
         score = 0.8 * max(matched weights) + min(sum(matched weights)/3, 0.2)
@@ -195,7 +183,7 @@ class UrlFilter(Filter):
                 F.arrays_overlap(suffixes, F.array(*[F.lit(d) for d in self.blocked])), F.lit(False)
             )
         if self.weights:
-            keep = keep & (word_score(url, self.weights) < F.lit(self.threshold))
+            keep = keep & (word_score(self.url_col, self.weights) < F.lit(self.threshold))
         if self.exclude_quality:
             keep = keep & ~F.coalesce(
                 F.arrays_overlap(suffixes, F.array(*[F.lit(d) for d in self.QUALITY_SOURCES])),
@@ -244,30 +232,13 @@ class NumericRangeFilter(Filter):
         self.lo = lo
         self.hi = hi
 
-    def predicate(self, df: DataFrame) -> Column:
-        c = F.col(self.column)
-        cond = F.lit(True)
-        if self.lo is not None:
-            cond = cond & (c >= self.lo)
-        if self.hi is not None:
-            cond = cond & (c <= self.hi)
-        return cond
-
-    def predicate_sql(self, df: DataFrame) -> str | None:
-        c = sql_plain_column(self.column)
-        if c is None:
-            return None
+    def predicate_sql(self, df: DataFrame) -> str:
+        c = sql_ident(self.column)
         cond = "true"
         if self.lo is not None:
-            lo = sql_number_literal(self.lo)
-            if lo is None:
-                return None
-            cond = f"({cond} AND ({c} >= {lo}))"
+            cond = f"({cond} AND ({c} >= {sql_number_literal(self.lo)}))"
         if self.hi is not None:
-            hi = sql_number_literal(self.hi)
-            if hi is None:
-                return None
-            cond = f"({cond} AND ({c} <= {hi}))"
+            cond = f"({cond} AND ({c} <= {sql_number_literal(self.hi)}))"
         return cond
 
 
@@ -286,23 +257,12 @@ class C4PageFilter(Filter):
         super().__init__(name)
         self.min_sentences = min_sentences
 
-    def predicate(self, df: DataFrame) -> Column:
-        return (
-            ~F.coalesce(F.col("c4_flag_brace"), F.lit(True))
-            & ~F.coalesce(F.col("c4_flag_lorem"), F.lit(True))
-            & ~F.coalesce(F.col("c4_flag_badword"), F.lit(True))
-            & (F.coalesce(F.col("c4_sentences"), F.lit(0)) >= self.min_sentences)
-        )
-
-    def predicate_sql(self, df: DataFrame) -> str | None:
-        n = sql_number_literal(self.min_sentences)
-        if n is None:
-            return None
+    def predicate_sql(self, df: DataFrame) -> str:
         return (
             "((((NOT coalesce(`c4_flag_brace`, true)) "
             "AND (NOT coalesce(`c4_flag_lorem`, true))) "
             "AND (NOT coalesce(`c4_flag_badword`, true))) "
-            f"AND (coalesce(`c4_sentences`, 0) >= {n}))"
+            f"AND (coalesce(`c4_sentences`, 0) >= {sql_number_literal(self.min_sentences)}))"
         )
 
 
@@ -349,22 +309,8 @@ class GopherQualityFilter(Filter):
         self.min_alpha_word_frac = min_alpha_word_frac
         self.min_stopwords = min_stopwords
 
-    def predicate(self, df: DataFrame) -> Column:
-        wc = F.coalesce(F.col("gopher_word_count"), F.lit(-1))
-        mwl = F.coalesce(F.col("gopher_mean_word_len"), F.lit(-1.0))
-        return (
-            wc.between(self.min_words, self.max_words)
-            & mwl.between(self.min_mean_word_len, self.max_mean_word_len)
-            & (F.coalesce(F.col("gopher_hash_ratio"), F.lit(1.0)) <= self.max_symbol_ratio)
-            & (F.coalesce(F.col("gopher_ellipsis_ratio"), F.lit(1.0)) <= self.max_symbol_ratio)
-            & (F.coalesce(F.col("gopher_bullet_line_frac"), F.lit(1.0)) <= self.max_bullet_line_frac)
-            & (F.coalesce(F.col("gopher_ellipsis_line_frac"), F.lit(1.0)) <= self.max_ellipsis_line_frac)
-            & (F.coalesce(F.col("gopher_alpha_word_frac"), F.lit(0.0)) >= self.min_alpha_word_frac)
-            & (F.coalesce(F.col("gopher_stopword_count"), F.lit(0)) >= self.min_stopwords)
-        )
-
-    def predicate_sql(self, df: DataFrame) -> str | None:
-        lits = [
+    def predicate_sql(self, df: DataFrame) -> str:
+        mnw, mxw, mnl, mxl, sym, bul, ell, alpha, stop = (
             sql_number_literal(v)
             for v in (
                 self.min_words,
@@ -377,10 +323,7 @@ class GopherQualityFilter(Filter):
                 self.min_alpha_word_frac,
                 self.min_stopwords,
             )
-        ]
-        if any(v is None for v in lits):
-            return None
-        mnw, mxw, mnl, mxl, sym, bul, ell, alpha, stop = lits
+        )
         wc = "coalesce(`gopher_word_count`, -1)"
         mwl = "coalesce(`gopher_mean_word_len`, -1.0D)"
         clauses = [

@@ -377,7 +377,7 @@ def deterministic_shuffle(
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     from mega_data_factory_spark.functions.hashing import hash64_from_md5
 
-    rank = hash64_from_md5(F.col(id_col).cast("string"), seed=salt)
+    rank = hash64_from_md5(id_col, seed=salt)
     keep = rank_col or "__shuffle_rank"
     out = (
         df.withColumn(keep, rank)

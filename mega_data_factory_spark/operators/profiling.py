@@ -31,11 +31,12 @@ on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mega_data_factory_spark.functions.text import sql_number_literal, sql_string_literal
+from mega_data_factory_spark.functions.text import sql_ident, sql_number_literal, sql_string_literal
+from mega_data_factory_spark.operators.base import with_sql_columns
 
 NUMERIC_TYPES = (
     T.ByteType,
@@ -193,12 +194,22 @@ class ColumnProfiler:
     def _samples(self) -> bool:
         return self.approx and self.percentile_sample_mod > 1 and bool(self.percentiles)
 
-    def _distinct(self, c: Column) -> Column:
-        if self.approx:
-            return F.approx_count_distinct(c, rsd=self.distinct_rsd)
-        return F.count_distinct(c)
+    def _selected(self, df: DataFrame) -> list[tuple[str, T.DataType]]:
+        fields = {f.name: f.dataType for f in df.schema.fields}
+        if self.columns is not None:
+            missing = [c for c in self.columns if c not in fields]
+            if missing:
+                raise ValueError(f"profile columns not in DataFrame: {missing}")
+            return [(c, fields[c]) for c in self.columns]
+        skip = (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
+        return [(c, t) for c, t in fields.items() if not isinstance(t, skip)]
 
-    def _pcts(self, c: Column, sample_cond: Column | None) -> Column:
+    def _distinct_sql(self, ident: str) -> str:
+        if self.approx:
+            return f"approx_count_distinct({ident}, {sql_number_literal(float(self.distinct_rsd))})"
+        return f"count(DISTINCT {ident})"
+
+    def _pcts_sql(self, ident: str, sampled: bool) -> str:
         """ALL requested percentiles from ONE sketch per column (array
         form). Two measured facts shape this:
 
@@ -220,141 +231,41 @@ class ColumnProfiler:
         sampled all-or-nothing. It now hashes a per-row id projected
         BEFORE the aggregate (nondeterministic expressions are illegal
         inside aggregate functions). Exact mode never samples."""
-        ps = F.array(*[F.lit(p) for p in self.percentiles])
-        v = c.cast("double")
+        arr = f"array({', '.join(sql_number_literal(float(p)) for p in self.percentiles)})"
+        v = f"CAST({ident} AS double)"
         if self.approx:
-            if sample_cond is not None:
-                v = F.when(sample_cond, v)  # NULLs are skipped by the sketch
-            return F.approx_percentile(v, ps, F.lit(self.approx_percentile_accuracy))
-        return F.percentile(v, ps)
+            if sampled:
+                v = f"CASE WHEN `{SAMPLE_COL}` THEN {v} END"  # NULLs are skipped by the sketch
+            return f"approx_percentile({v}, {arr}, {sql_number_literal(self.approx_percentile_accuracy)})"
+        # the explicit int frequency: the parser's 2-arg form defaults to
+        # 1L (long), a different literal node in the formatted plan
+        return f"percentile({v}, {arr}, 1)"
 
-    def _selected(self, df: DataFrame) -> list[tuple[str, T.DataType]]:
-        fields = {f.name: f.dataType for f in df.schema.fields}
-        if self.columns is not None:
-            missing = [c for c in self.columns if c not in fields]
-            if missing:
-                raise ValueError(f"profile columns not in DataFrame: {missing}")
-            return [(c, fields[c]) for c in self.columns]
-        skip = (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
-        return [(c, t) for c, t in fields.items() if not isinstance(t, skip)]
-
-    def _agg_exprs(
+    def _aggregates_sql(
         self, cols: list[tuple[str, T.DataType]]
-    ) -> tuple[list[Column], list[tuple[str, str, bool, str, int | None]]]:
+    ) -> tuple[list[str], list[tuple[str, str, bool, str, int | None]]]:
         """Aggregate expressions plus the unpivot layout
         ``(column, stat, is_text, agg_alias, array_index)`` —
         ``array_index`` is set for stats unpacked from a shared array
         aggregate (the percentile sketch)."""
-        exprs: list[Column] = []
-        layout: list[tuple[str, str, bool, str, int | None]] = []
-        sample_cond = F.col(SAMPLE_COL) if self._samples() else None
-
-        def add(col: str, stat: str, e: Column, *, text: bool = False) -> None:
-            alias = f"{col}__{stat}"
-            exprs.append(e.alias(alias))
-            layout.append((col, stat, text, alias, None))
-
-        for name, dtype in cols:
-            c = F.col(name)
-            add(name, "count", F.count(c))
-            add(name, "nulls", F.count(F.lit(1)) - F.count(c))
-            add(name, "distinct", self._distinct(c))
-            if isinstance(dtype, NUMERIC_TYPES):
-                add(name, "min", F.min(c).cast("double"))
-                add(name, "max", F.max(c).cast("double"))
-                # exact decimal sum -> one double division: order-independent
-                mean = F.round(
-                    F.sum(c.cast("decimal(38,6)")).cast("double") / F.count(c), ROUND_TO
-                )
-                add(name, "mean", mean)
-                if self.percentiles:
-                    alias = f"{name}__pcts"
-                    exprs.append(self._pcts(c, sample_cond).alias(alias))
-                    for i, p in enumerate(self.percentiles):
-                        # :g keeps fractional percentiles distinct and
-                        # exact (0.999 -> p99.9; int() truncated it to the
-                        # colliding/mislabeled p99)
-                        layout.append((name, f"p{p * 100:g}", False, alias, i))
-            elif isinstance(dtype, T.StringType):
-                add(name, "min_len", F.min(F.length(c)).cast("double"))
-                add(name, "max_len", F.max(F.length(c)).cast("double"))
-                mean_len = F.round(
-                    F.sum(F.length(c).cast("decimal(38,6)")).cast("double") / F.count(c), ROUND_TO
-                )
-                add(name, "avg_len", mean_len)
-                add(name, "min", F.min(c), text=True)
-                add(name, "max", F.max(c), text=True)
-            else:
-                add(name, "min", F.min(c).cast("string"), text=True)
-                add(name, "max", F.max(c).cast("string"), text=True)
-        return exprs, layout
-
-    # ----------------------------------------------------- SQL-text twin
-    # py4j costs ~2-4 ms per Column call on the bench hosts (round-12
-    # measurement); profile() composes ~30 Column calls per aggregated
-    # column plus ~8 per unpivot entry — ~2000 round trips ≈ 2.1 s of pure
-    # driver latency for a 16-column table (scripts/diag_r13b_profile_build
-    # .py). The twin below renders the IDENTICAL Catalyst trees as SQL text
-    # (three selectExpr round trips total), following the round-12 twin
-    # discipline: unspellable parameterizations return None and take the
-    # composed path; analyzed-plan + value equality is pinned by
-    # tests/test_profile_twin_parity.py.
-
-    def _distinct_sql(self, ident: str) -> str | None:
-        if self.approx:
-            rsd = sql_number_literal(float(self.distinct_rsd))
-            return None if rsd is None else f"approx_count_distinct({ident}, {rsd})"
-        return f"count(DISTINCT {ident})"
-
-    def _pcts_sql(self, ident: str, sampled: bool) -> str | None:
-        ps = [sql_number_literal(float(p)) for p in self.percentiles]
-        if any(p is None for p in ps):
-            return None
-        arr = f"array({', '.join(ps)})"
-        v = f"CAST({ident} AS double)"
-        if self.approx:
-            if sampled:
-                v = f"CASE WHEN `{SAMPLE_COL}` THEN {v} END"
-            acc = sql_number_literal(self.approx_percentile_accuracy)
-            if acc is None:
-                return None
-            return f"approx_percentile({v}, {arr}, {acc})"
-        # the explicit int frequency matches F.percentile's lit(1) default;
-        # the parser's 2-arg form defaults to 1L (long) — a different
-        # literal node (visible as `1L` in the formatted plan's generated
-        # alias even though analyzed toString masks the type)
-        return f"percentile({v}, {arr}, 1)"
-
-    def _agg_exprs_sql(
-        self, cols: list[tuple[str, T.DataType]]
-    ) -> tuple[list[str], list[tuple[str, str, bool, str, int | None]]] | None:
-        """SQL-text twin of :meth:`_agg_exprs` (same trees, three parse
-        round trips); ``None`` when a parameterization has no
-        guaranteed-faithful spelling (backtick-carrying names, non-32-bit
-        ints, non-finite floats) — callers fall back to the composed
-        path."""
-        if any("`" in name for name, _ in cols):
-            return None
         exprs: list[str] = []
         layout: list[tuple[str, str, bool, str, int | None]] = []
         sampled = self._samples()
 
         def add(col: str, stat: str, e_sql: str, *, text: bool = False) -> None:
             alias = f"{col}__{stat}"
-            exprs.append(f"{e_sql} AS `{alias}`")
+            exprs.append(f"{e_sql} AS {sql_ident(alias, literal=True)}")
             layout.append((col, stat, text, alias, None))
 
         for name, dtype in cols:
-            ident = f"`{name}`"
+            ident = sql_ident(name, literal=True)  # schema field names, never paths
             add(name, "count", f"count({ident})")
             add(name, "nulls", f"(count(1) - count({ident}))")
-            d = self._distinct_sql(ident)
-            if d is None:
-                return None
-            add(name, "distinct", d)
+            add(name, "distinct", self._distinct_sql(ident))
             if isinstance(dtype, NUMERIC_TYPES):
                 add(name, "min", f"CAST(min({ident}) AS double)")
                 add(name, "max", f"CAST(max({ident}) AS double)")
+                # exact decimal sum -> one double division: order-independent
                 add(
                     name,
                     "mean",
@@ -362,12 +273,12 @@ class ColumnProfiler:
                     f" / count({ident})), {ROUND_TO})",
                 )
                 if self.percentiles:
-                    p = self._pcts_sql(ident, sampled)
-                    if p is None:
-                        return None
                     alias = f"{name}__pcts"
-                    exprs.append(f"{p} AS `{alias}`")
+                    exprs.append(f"{self._pcts_sql(ident, sampled)} AS {sql_ident(alias, literal=True)}")
                     for i, pv in enumerate(self.percentiles):
+                        # :g keeps fractional percentiles distinct and
+                        # exact (0.999 -> p99.9; int() truncated it to the
+                        # colliding/mislabeled p99)
                         layout.append((name, f"p{pv * 100:g}", False, alias, i))
             elif isinstance(dtype, T.StringType):
                 add(name, "min_len", f"CAST(min(length({ident})) AS double)")
@@ -388,7 +299,7 @@ class ColumnProfiler:
     def _unpivot_sql(self, layout: list[tuple[str, str, bool, str, int | None]]) -> str:
         structs = []
         for col, stat, is_text, alias, idx in layout:
-            v = f"`{alias}`"
+            v = sql_ident(alias, literal=True)
             if idx is not None:  # percentile unpacked from the shared array
                 v = f"round({v}[{idx}], {ROUND_TO})"
             if is_text:
@@ -402,73 +313,35 @@ class ColumnProfiler:
             )
         return f"explode(array({', '.join(structs)})) AS e"
 
-    def _profile_sql(self, df: DataFrame, cols: list[tuple[str, T.DataType]]) -> DataFrame | None:
-        """The three-round-trip fast path, or None -> composed fallback."""
-        sample_sql = None
-        if self._samples():
-            if SAMPLE_COL in df.columns:
-                # composed withColumn REPLACES a colliding column;
-                # selectExpr('*', ...) would duplicate it instead
-                return None
-            k = sql_number_literal(self.percentile_sample_mod)
-            if k is None:
-                return None
-            sample_sql = (
-                f"(pmod(xxhash64(monotonically_increasing_id()), {k}) = 0)"
-                f" AS `{SAMPLE_COL}`"
-            )
-        twin = self._agg_exprs_sql(cols)
-        if twin is None:
-            return None
-        agg_strs, layout = twin
-        src = df.selectExpr("*", sample_sql) if sample_sql is not None else df
-        return src.selectExpr(*agg_strs).selectExpr(self._unpivot_sql(layout)).select("e.*")
-
     # -------------------------------------------------------------- surface
 
     def profile(self, df: DataFrame) -> DataFrame:
         """One aggregate job -> long-form profile DataFrame with columns
         ``column`` (string), ``stat`` (string), ``value`` (double — NULL
-        for text stats), ``text`` (string — NULL for numeric stats)."""
+        for text stats), ``text`` (string — NULL for numeric stats).
+
+        Authored as SQL text in three selectExpr round trips: composed as
+        Columns, the profile cost ~30 py4j calls per aggregated column
+        plus ~8 per unpivot entry — ~2000 round trips, ~2.1 s of pure
+        driver latency for a 16-column table."""
         cols = self._selected(df)
         if not cols:
             raise ValueError("no profilable columns selected")
-        fast = self._profile_sql(df, cols)
-        if fast is not None:
-            return fast
-        return self._profile_composed(df, cols)
-
-    def _profile_composed(
-        self, df: DataFrame, cols: list[tuple[str, T.DataType]]
-    ) -> DataFrame:
-        """The pre-twin composed-Column construction, byte-for-byte — the
-        fallback for unspellable parameterizations and the parity tests'
-        reference tree."""
         if self._samples():
             # row-identity sample flag, projected before the aggregate:
             # monotonically_increasing_id is unique per row (partition-
             # layout-stable for a given read), so the 1-in-K selection is
-            # independent of the measured values
-            df = df.withColumn(
-                SAMPLE_COL,
-                F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(self.percentile_sample_mod)) == 0,
+            # independent of the measured values. A same-named input
+            # column is replaced in place.
+            df = with_sql_columns(
+                df,
+                {
+                    SAMPLE_COL: f"(pmod(xxhash64(monotonically_increasing_id()), "
+                    f"{sql_number_literal(self.percentile_sample_mod)}) = 0)"
+                },
             )
-        exprs, layout = self._agg_exprs(cols)
-        row = df.agg(*exprs)
-        entries = []
-        for col, stat, is_text, alias, idx in layout:
-            v = F.col(f"`{alias}`")
-            if idx is not None:  # percentile unpacked from the shared array
-                v = F.round(v.getItem(idx), ROUND_TO)
-            entries.append(
-                F.struct(
-                    F.lit(col).alias("column"),
-                    F.lit(stat).alias("stat"),
-                    (F.lit(None).cast("double") if is_text else v.cast("double")).alias("value"),
-                    (v.cast("string") if is_text else F.lit(None).cast("string")).alias("text"),
-                )
-            )
-        return row.select(F.explode(F.array(*entries)).alias("e")).select("e.*")
+        agg_strs, layout = self._aggregates_sql(cols)
+        return df.selectExpr(*agg_strs).selectExpr(self._unpivot_sql(layout)).select("e.*")
 
     @staticmethod
     def diff(before: DataFrame, after: DataFrame) -> DataFrame:

@@ -3,29 +3,25 @@
 The reference's refiners are image-model ops (SURVEY §2.3); the text-side
 refiners here are the text-analysis operators a training-data pipeline needs
 (language-ID heuristic, quality scoring, token counting, fingerprinting) —
-first-class engine extensions per the build brief. All pure Column
-expressions: codegen'd, no Python, oracle-expressible.
+first-class engine extensions per the build brief. Expressions SQL can
+spell are authored as SQL text (``columns_sql_text``; one parse per
+projection) — codegen'd, no Python, oracle-expressible.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it in globals
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mega_data_factory_spark.functions.hashing import stable_text_hash
+from mega_data_factory_spark.functions.hashing import hash64_from_md5, stable_text_hash
 from mega_data_factory_spark.functions.text import (
     normalize_text,
     normalize_text_sql,
-    sql_plain_column,
+    sql_ident,
     sql_string_literal,
-    text_length,
     text_length_sql,
-    token_count,
     token_count_sql,
-    word_occurrences,
     word_occurrences_sql,
 )
 from mega_data_factory_spark.operators.base import Refiner
@@ -40,34 +36,12 @@ class TextStatsRefiner(Refiner):
         self.text_col = text_col
         self.length_col = length_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            return {k: F.expr(s) for k, s in texts.items()}
-        tokens = token_count(self.text_col)
-        norm = normalize_text(self.text_col, lowercase=False)
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        ref = sql_ident(self.text_col)
+        len_ref = None if self.length_col is None else sql_ident(self.length_col)
+        tok = token_count_sql(ref)
         # chars-in-tokens / tokens; normalized text has single spaces, so
         # chars-in-tokens = len(norm) - (tokens - 1)
-        avg_len = F.when(
-            tokens > 0,
-            F.round((F.length(norm) - (tokens - F.lit(1))).cast("double") / tokens, 6),
-        ).otherwise(F.lit(0.0))
-        return {
-            "text_length": text_length(self.text_col, self.length_col),
-            "token_count": tokens,
-            "avg_token_len": avg_len,
-        }
-
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """SQL-text twin of the composed tree above (one parse per output
-        column instead of ~30 py4j round trips — and ONE pipeline-side
-        selectExpr for the whole projection; structural parity pinned by
-        tests/test_refiner_expr_parity.py)."""
-        ref = sql_plain_column(self.text_col)
-        len_ref = sql_plain_column(self.length_col) if self.length_col is not None else None
-        if ref is None or (self.length_col is not None and len_ref is None):
-            return None
-        tok = token_count_sql(ref)
         norm = normalize_text_sql(ref, lowercase=False)
         avg_len = (
             f"CASE WHEN ({tok} > 0) THEN "
@@ -106,61 +80,22 @@ class LanguageIdRefiner(Refiner):
         self.text_col = text_col
         self.markers = markers or LANG_MARKERS
 
-    def scores(self) -> dict[str, Column]:
-        return {
-            lang: reduce(lambda a, b: a + b, [word_occurrences(self.text_col, w) for w in words])
-            for lang, words in self.markers.items()
-        }
-
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         # Per-language marker counts are bound once PER OUTPUT COLUMN
-        # REFERENCE as lambda variables (the round-10 expression-binding
+        # REFERENCE as a lambda variable (the round-10 expression-binding
         # lesson, see QualityScoreRefiner below): the naive tree referenced
         # each language's regex-count sum in `greatest` AND in every
         # when-chain arm, so a pushed-down LanguageCut predicate re-ran ~3x
         # the marker regexes per row interpreted. Note the invariant's
-        # limit: the dict below returns two getField projections of the
-        # same authored tree, so a Project that materializes BOTH lang_pred
-        # and lang_score still carries two copies of the marker-count
-        # struct — deduplicated by codegen CSE when compiled, but NOT
-        # shared in a CodegenFallback Project or a pushed single-column
-        # filter (which only ever pulls one copy, the stated goal). Values
-        # identical — same counts, same tie-break order.
-        #
-        # Fast path (round 12): the same tree authored as ONE SQL string
-        # (two F.expr round trips instead of ~45 Column calls at ~3 ms of
-        # py4j latency each — ~140 ms/plan-build measured in
-        # scripts/diag_r12_planbuild.py). Lambda variables are spelled `x`
-        # because pyspark's _create_lambda names them x/y/z, so the
-        # analyzed trees are identical modulo expression ids — pinned by
-        # tests/test_refiner_expr_parity.py.
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            return {k: F.expr(s) for k, s in texts.items()}
-        scores = self.scores()
-        langs = list(scores)
-        base = F.array(F.struct(*[scores[lang].alias(f"s_{i}") for i, lang in enumerate(langs)]))
-
-        def _derive(s: Column) -> Column:
-            vals = [s[f"s_{i}"] for i in range(len(langs))]
-            best = F.greatest(*vals) if len(langs) > 1 else vals[0]
-            pred = F.lit("und")
-            # first language in declared order wins ties -> iterate
-            # reversed so earlier langs overwrite later ones
-            for i in reversed(range(len(langs))):
-                pred = F.when(vals[i] == best, F.lit(langs[i])).otherwise(pred)
-            pred = F.when(best > 0, pred).otherwise(F.lit("und"))
-            return F.struct(pred.alias("lang_pred"), best.alias("lang_score"))
-
-        out = F.transform(base, _derive)[0]
-        return {"lang_pred": out["lang_pred"], "lang_score": out["lang_score"]}
-
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """SQL-text twin of the composed tree above (structural parity
-        pinned by tests/test_refiner_expr_parity.py)."""
-        ref = sql_plain_column(self.text_col)
-        if ref is None:
-            return None
+        # limit: the dict below returns two field projections of the same
+        # tree, so a Project that materializes BOTH lang_pred and
+        # lang_score still carries two copies of the marker-count struct —
+        # deduplicated by codegen CSE when compiled, but NOT shared in a
+        # CodegenFallback Project or a pushed single-column filter (which
+        # only ever pulls one copy, the stated goal). First language in
+        # declared order wins ties: the CASE chain is built reversed so
+        # earlier languages wrap later ones.
+        ref = sql_ident(self.text_col)
         scores = {
             lang: " + ".join(word_occurrences_sql(ref, w) for w in words)
             for lang, words in self.markers.items()
@@ -199,14 +134,15 @@ class QualityScoreRefiner(Refiner):
         self.text_col = text_col
         self.stopwords = stopwords
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         # Each BASE signal (token count, stopword hits, normalized length)
         # is bound once PER OUTPUT COLUMN REFERENCE as a lambda variable
         # and the derived arithmetic reads the bound values (the two
         # getField projections returned below are separate copies of the
         # authored tree — shared only under codegen CSE, which is fine for
-        # the stated goal of single-column pushed filters). The naive formulation nested `tokens`
-        # inside ratio/avg_len/band/score, so the authored tree carried ~6
+        # the stated goal of single-column pushed filters). The naive
+        # formulation nested `tokens` inside ratio/avg_len/band/score, so
+        # the authored tree carried ~6
         # copies of split(regexp_replace(text)) and 2 copies of the
         # 10-regex stopword count — harmless under codegen CSE, but a
         # pushed-down NumericRangeFilter(quality_score >= x) inlines the
@@ -216,49 +152,9 @@ class QualityScoreRefiner(Refiner):
         # 11s -> 0.06s on a 500k-doc quality_rules chain (round-10
         # scripts/diag_fineweb attribution). Values are bit-identical —
         # same arithmetic on the same doubles.
-        #
-        # Fast path (round 12): same tree authored as one SQL string per
-        # output column — see LanguageIdRefiner.columns for the py4j
-        # rationale; parity pinned by tests/test_refiner_expr_parity.py.
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            return {k: F.expr(s) for k, s in texts.items()}
-        tokens = token_count(self.text_col)
-        stop_hits = reduce(lambda a, b: a + b, [word_occurrences(self.text_col, w) for w in self.stopwords])
-        norm = normalize_text(self.text_col, lowercase=False)
-        base = F.array(
-            F.struct(
-                tokens.cast("double").alias("t"),
-                stop_hits.cast("double").alias("sh"),
-                F.length(norm).cast("double").alias("ln"),
-            )
-        )
-
-        def _derive(s: Column) -> Column:
-            ratio = F.when(s["t"] > 0, s["sh"] / s["t"]).otherwise(F.lit(0.0))
-            avg_len = F.when(s["t"] > 0, (s["ln"] - (s["t"] - F.lit(1.0))) / s["t"]).otherwise(F.lit(0.0))
-            length_component = F.least(s["t"] / F.lit(200.0), F.lit(1.0))
-            stop_component = F.least(ratio * F.lit(5.0), F.lit(1.0))
-            len_band = F.when((avg_len >= 3.0) & (avg_len <= 10.0), F.lit(1.0)).otherwise(F.lit(0.0))
-            score = F.lit(0.4) * length_component + F.lit(0.3) * stop_component + F.lit(0.3) * len_band
-            return F.struct(
-                F.round(ratio, 6).alias("stopword_ratio"), F.round(score, 6).alias("quality_score")
-            )
-
-        qs = F.transform(base, _derive)[0]
-        return {
-            "stopword_ratio": qs["stopword_ratio"],
-            "quality_score": qs["quality_score"],
-        }
-
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """SQL-text twin of the composed tree above (structural parity
-        pinned by tests/test_refiner_expr_parity.py). Double literals carry
-        the D suffix — bare 0.0 parses as DECIMAL in Spark SQL, which would
-        drift the analyzed tree (and the arithmetic) from F.lit(0.0)."""
-        ref = sql_plain_column(self.text_col)
-        if ref is None:
-            return None
+        # Double literals carry the D suffix — bare 0.0 parses as DECIMAL
+        # in Spark SQL, which would change the arithmetic.
+        ref = sql_ident(self.text_col)
         tok = token_count_sql(ref)
         sh = " + ".join(word_occurrences_sql(ref, w) for w in self.stopwords)
         norm = normalize_text_sql(ref, lowercase=False)
@@ -290,8 +186,7 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 GOPHER_BULLETS = ("•", "‣", "▪", "-", "*")
 # explicit class, not \s: Java's \s includes \x0B, RE2's (DuckDB) does not
 GOPHER_WS = "[ \\t\\x0B\\f\\r\\n]+"
-# the same patterns the composed path spells inline (kept as constants so
-# the SQL twin can reference them — Python 3.11 f-strings reject backslashes)
+# kept as constants: Python 3.11 f-strings reject backslashes
 _GOPHER_NONWORD = r"\W+"
 _GOPHER_ELLIPSIS = r"\.{3,}|…"
 
@@ -319,79 +214,17 @@ class GopherQualityRefiner(Refiner):
       * ``gopher_stopword_count`` — how many of the paper's eight
         stopwords appear (presence, not frequency).
 
-    Scale shape: pure Column HOFs over the split arrays — narrow map,
-    fuses into the scan, zero shuffle, zero Python; every expression is
-    in the Java/RE2 common subset, so the DuckDB mirror is
+    Scale shape: pure higher-order functions over the split arrays —
+    narrow map, fuses into the scan, zero shuffle, zero Python; every
+    expression is in the Java/RE2 common subset, so the DuckDB mirror is
     token-for-token (tests/test_curation.py holds the driver-gate bar)."""
 
     def __init__(self, *, text_col: str = "text", name: str | None = None):
         super().__init__(name)
         self.text_col = text_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # Fast path (round 12): same trees authored as one SQL string per
-        # output column — see LanguageIdRefiner.columns for the py4j
-        # rationale; parity pinned by tests/test_refiner_expr_parity.py.
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            return {k: F.expr(s) for k, s in texts.items()}
-        t = F.col(self.text_col)
-        words = F.filter(F.split(t, GOPHER_WS), lambda w: w != "")
-        wc = F.size(words)
-        n_chars = F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w))
-        mean_len = F.when(wc > 0, F.round(n_chars.cast("double") / wc, 6))
-        lines = F.split(t, "\n")
-        n_lines = F.size(lines)
-        bullet = F.size(
-            F.filter(
-                lines,
-                lambda u: reduce(
-                    lambda a, b: a | b, [F.trim(u).startswith(g) for g in GOPHER_BULLETS]
-                ),
-            )
-        )
-        ell_lines = F.size(
-            F.filter(lines, lambda u: F.rtrim(u).endswith("...") | F.rtrim(u).endswith("…"))
-        )
-        alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
-        # "how many of the paper's eight stopwords appear" — tokenize ONCE
-        # on non-word-char runs and intersect with the stopword set.
-        # Exactly equivalent to per-word boundary regexes
-        # ('(^|[^0-9A-Za-z_])the([^0-9A-Za-z_]|$)'): a match there is
-        # precisely 'the' occurring as a maximal [0-9A-Za-z_]-run, i.e. a
-        # token of this split ('the7'/'7the'/'the_' are single tokens and
-        # match neither form). Two measured Java-regex cliffs drove this
-        # shape (500k docs, sf10): the 8-regex form re-scanned the text
-        # per stopword (151 s, 40x the other seven signals COMBINED), and
-        # the spelled-out negated class '[^0-9a-z_]+' misses the engine's
-        # named-class fast path (24.8 s) where '\\W+' — the identical
-        # ASCII class, token-count-verified — splits in 0.9 s. The DuckDB
-        # oracle keeps the boundary-regex formulation, so the equivalence
-        # is hash-checked per row, not asserted.
-        stop_tokens = F.split(F.lower(t), _GOPHER_NONWORD)
-        stop_hits = F.size(
-            F.array_intersect(F.array(*[F.lit(w) for w in GOPHER_STOPWORDS]), stop_tokens)
-        )
-        per_word = lambda n: F.when(wc > 0, F.round(n.cast("double") / wc, 6))  # noqa: E731
-        return {
-            "gopher_word_count": F.when(t.isNotNull(), wc).cast("int"),
-            "gopher_mean_word_len": mean_len,
-            "gopher_hash_ratio": per_word(F.regexp_count(t, F.lit("#"))),
-            # count RUNS of 3+ dots (or a '…' glyph) — '.....' is one
-            # ellipsis, not two; the c4_sentences run-counting lesson
-            "gopher_ellipsis_ratio": per_word(F.regexp_count(t, F.lit(_GOPHER_ELLIPSIS))),
-            "gopher_bullet_line_frac": F.when(n_lines > 0, F.round(bullet.cast("double") / n_lines, 6)),
-            "gopher_ellipsis_line_frac": F.when(n_lines > 0, F.round(ell_lines.cast("double") / n_lines, 6)),
-            "gopher_alpha_word_frac": per_word(alpha),
-            "gopher_stopword_count": F.when(t.isNotNull(), stop_hits).cast("int"),
-        }
-
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """SQL-text twin of the composed tree above (structural parity
-        pinned by tests/test_refiner_expr_parity.py)."""
-        ref = sql_plain_column(self.text_col)
-        if ref is None:
-            return None
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        ref = sql_ident(self.text_col)
         words = f"filter(split({ref}, {sql_string_literal(GOPHER_WS)}), x -> (NOT (x = '')))"
         wc = f"size({words})"
         n_chars = f"aggregate({words}, cast(0 as bigint), (x, y) -> x + length(y))"
@@ -407,6 +240,20 @@ class GopherQualityRefiner(Refiner):
             f"size(filter({lines}, x -> (endswith(rtrim(x), '...') OR endswith(rtrim(x), '…'))))"
         )
         alpha = f"size(filter({words}, x -> x RLIKE '[A-Za-z]'))"
+        # "how many of the paper's eight stopwords appear" — tokenize ONCE
+        # on non-word-char runs and intersect with the stopword set.
+        # Exactly equivalent to per-word boundary regexes
+        # ('(^|[^0-9A-Za-z_])the([^0-9A-Za-z_]|$)'): a match there is
+        # precisely 'the' occurring as a maximal [0-9A-Za-z_]-run, i.e. a
+        # token of this split ('the7'/'7the'/'the_' are single tokens and
+        # match neither form). Two measured Java-regex cliffs drove this
+        # shape (500k docs, sf10): the 8-regex form re-scanned the text
+        # per stopword (151 s, 40x the other seven signals COMBINED), and
+        # the spelled-out negated class '[^0-9a-z_]+' misses the engine's
+        # named-class fast path (24.8 s) where '\\W+' — the identical
+        # ASCII class, token-count-verified — splits in 0.9 s. The DuckDB
+        # oracle keeps the boundary-regex formulation, so the equivalence
+        # is hash-checked per row, not asserted.
         stop_set = ", ".join(sql_string_literal(w) for w in GOPHER_STOPWORDS)
         stop_tokens = f"split(lower({ref}), {sql_string_literal(_GOPHER_NONWORD)})"
         stop_hits = f"size(array_intersect(array({stop_set}), {stop_tokens}))"
@@ -418,6 +265,8 @@ class GopherQualityRefiner(Refiner):
             "gopher_word_count": f"cast(CASE WHEN ({ref} IS NOT NULL) THEN {wc} END as int)",
             "gopher_mean_word_len": mean_len,
             "gopher_hash_ratio": per_word(f"regexp_count({ref}, '#')"),
+            # count RUNS of 3+ dots (or a '…' glyph) — '.....' is one
+            # ellipsis, not two; the c4_sentences run-counting lesson
             "gopher_ellipsis_ratio": per_word(
                 f"regexp_count({ref}, {sql_string_literal(_GOPHER_ELLIPSIS)})"
             ),
@@ -441,7 +290,7 @@ class RepetitionStatsRefiner(Refiner):
     (most frequent word bigram's share of all bigrams), both rounded to 6.
     Beyond the reference's surface — first-class per the build brief.
 
-    Default form: pure Column expressions (array HOFs) so the DuckDB oracle
+    Default form: pure SQL expressions (array HOFs) so the DuckDB oracle
     mirrors them exactly. The per-row top-bigram count is a SINGLE pass
     over the sorted bigram array (``array_sort`` + an ``aggregate``
     longest-equal-run scan — O(n log n) per row). An earlier formulation
@@ -477,24 +326,18 @@ class RepetitionStatsRefiner(Refiner):
         self.pipeline_full_frame = long_docs
         self.id_col = id_col
 
-    def _words(self) -> Column:
-        return F.split(normalize_text(self.text_col), " ")
+    def _words_sql(self) -> str:
+        return f"split({normalize_text_sql(sql_ident(self.text_col))}, ' ')"
 
-    def _dup_ratio(self, ws: Column) -> Column:
-        n = F.size(ws)
-        return F.when(
-            n > 0, F.lit(1.0) - F.size(F.array_distinct(ws)).cast("double") / n
-        ).otherwise(F.lit(0.0))
+    # word bigrams of the word array bound to lambda variable x (inner
+    # binders reuse the name x — shadowing is safe, no inner lambda reads
+    # an outer binder)
+    _BIGRAMS = (
+        "zip_with(slice(x, 1, greatest(size(x) - 1, 0)), "
+        "slice(x, 2, greatest(size(x) - 1, 0)), (x, y) -> concat(x, ' ', y))"
+    )
 
-    def _bigrams(self, ws: Column) -> Column:
-        n = F.size(ws)
-        return F.zip_with(
-            F.slice(ws, 1, F.greatest(n - 1, F.lit(0))),
-            F.slice(ws, 2, F.greatest(n - 1, F.lit(0))),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         # Both output columns bind their word/bigram arrays ONCE as lambda
         # variables (same round-10 lesson as QualityScoreRefiner: a
         # pushed-down filter inlines the authored tree into an interpreted
@@ -502,65 +345,17 @@ class RepetitionStatsRefiner(Refiner):
         # re-evaluates per row — the naive tree held ws x3 and bg x3).
         # The columns stay INDEPENDENT trees on purpose: a dup-only filter
         # (DupWordCut) must not drag the O(n log n) bigram sort into its
-        # pushed predicate.
-        #
-        # Fast path (round 12): same trees authored as one SQL string per
-        # output column — see LanguageIdRefiner.columns for the py4j
-        # rationale; parity pinned by tests/test_refiner_expr_parity.py.
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            return {k: F.expr(s) for k, s in texts.items()}
-        dup = F.transform(F.array(self._words()), lambda w: self._dup_ratio(w))[0]
-
-        def _top_ratio(bg: Column) -> Column:
-            # longest run of equal consecutive elements in the SORTED
-            # bigram array == max bigram frequency; the aggregate's lambda
-            # touches only its own accumulator + element (no captured
-            # expression trees)
-            top = F.aggregate(
-                F.array_sort(bg),
-                F.struct(
-                    F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-                ),
-                lambda acc, y: F.struct(
-                    y.alias("prev"),
-                    F.when(y == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-                    F.greatest(
-                        acc["best"],
-                        F.when(y == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-                    ).alias("best"),
-                ),
-                lambda acc: acc["best"],
-            )
-            return F.when(F.size(bg) > 0, top.cast("double") / F.size(bg)).otherwise(F.lit(0.0))
-
-        top_ratio = F.transform(
-            F.transform(F.array(self._words()), lambda w: self._bigrams(w)), _top_ratio
-        )[0]
-        return {
-            "dup_word_ratio": F.round(dup, 6),
-            "top_bigram_ratio": F.round(top_ratio, 6),
-        }
-
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """SQL-text twin of the composed tree above (structural parity
-        pinned by tests/test_refiner_expr_parity.py). Inner lambdas reuse
-        the binder name x exactly like pyspark's _create_lambda does
-        (shadowing is safe — no inner lambda references an outer binder)."""
-        ref = sql_plain_column(self.text_col)
-        if ref is None:
-            return None
-        ws = f"split({normalize_text_sql(ref)}, ' ')"
+        # pushed predicate. The top-bigram count is the longest run of
+        # equal consecutive elements in the SORTED bigram array == max
+        # bigram frequency; the aggregate's lambda touches only its own
+        # accumulator + element (no captured expression trees).
+        ws = self._words_sql()
         dup_body = (
             "CASE WHEN (size(x) > 0) "
             "THEN 1.0D - cast(size(array_distinct(x)) as double) / size(x) "
             "ELSE 0.0D END"
         )
         dup = f"transform(array({ws}), x -> {dup_body})[0]"
-        bigrams = (
-            "zip_with(slice(x, 1, greatest(size(x) - 1, 0)), "
-            "slice(x, 2, greatest(size(x) - 1, 0)), (x, y) -> concat(x, ' ', y))"
-        )
         run = "CASE WHEN (y = x.prev) THEN x.run + 1 ELSE 1 END"
         top = (
             "aggregate(array_sort(x), struct('' AS prev, 0 AS run, 0 AS best), "
@@ -570,7 +365,7 @@ class RepetitionStatsRefiner(Refiner):
         top_body = (
             f"CASE WHEN (size(x) > 0) THEN cast({top} as double) / size(x) ELSE 0.0D END"
         )
-        top_ratio = f"transform(transform(array({ws}), x -> {bigrams}), x -> {top_body})[0]"
+        top_ratio = f"transform(transform(array({ws}), x -> {self._BIGRAMS}), x -> {top_body})[0]"
         return {
             "dup_word_ratio": f"round({dup}, 6)",
             "top_bigram_ratio": f"round({top_ratio}, 6)",
@@ -586,10 +381,9 @@ class RepetitionStatsRefiner(Refiner):
         carry only (id, xxhash64(bigram)) — 16 bytes, text never shuffles —
         and both aggregations are map-side combinable, so per-row cost is
         O(total words) instead of the HOF form's O(distinct x total).
-        dup_word_ratio stays a (linear) Column expression."""
+        dup_word_ratio stays the (linear) columns_sql_text expression."""
         id_col = self.id_col
-        ws = self._words()
-        bg = self._bigrams(ws)
+        bg = F.expr(f"transform(array({self._words_sql()}), x -> {self._BIGRAMS})[0]")
         ex = df.select(F.col(id_col), F.explode(bg).alias("__bg")).select(
             id_col, F.xxhash64("__bg").alias("__bh")
         )
@@ -604,7 +398,7 @@ class RepetitionStatsRefiner(Refiner):
             F.col("__nbg") > 0, F.col("__top").cast("double") / F.col("__nbg")
         ).otherwise(F.lit(0.0))
         return (
-            out.withColumn("dup_word_ratio", F.round(self._dup_ratio(ws), 6))
+            out.withColumn("dup_word_ratio", F.expr(self.columns_sql_text(df)["dup_word_ratio"]))
             .withColumn("top_bigram_ratio", F.round(F.coalesce(top_ratio, F.lit(0.0)), 6))
             .drop("__top", "__nbg")
         )
@@ -789,11 +583,6 @@ class BoilerplateLineRefiner(Refiner):
             "full-frame transform (pipeline_full_frame)"
         )
 
-    def _line_hash(self, line: Column) -> Column:
-        from mega_data_factory_spark.functions.hashing import hash64_from_md5
-
-        return hash64_from_md5(line)
-
     def apply(self, df: DataFrame) -> DataFrame:
         from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL
 
@@ -833,7 +622,7 @@ class BoilerplateLineRefiner(Refiner):
         pairs = (
             _explode_lines(voting)
             .filter(countable)
-            .select(*gkeys, "__id", self._line_hash(F.col("__line")).alias("__lh"))
+            .select(*gkeys, "__id", hash64_from_md5("__line").alias("__lh"))
             .distinct()
         )
         docs_per_grp = voting.groupBy(*[_grp_key(g) for g in grp]).agg(
@@ -850,7 +639,7 @@ class BoilerplateLineRefiner(Refiner):
             )
         ).select(*gkeys, "__lh", F.lit(True).alias("__boiler"))
         tagged = lines.withColumn(
-            "__lh", F.when(countable, self._line_hash(F.col("__line")))
+            "__lh", F.when(countable, hash64_from_md5("__line"))
         ).join(boiler, on=[*gkeys, "__lh"], how="left")
         rebuilt = (
             tagged.withColumn("__keep", F.col("__boiler").isNull())
@@ -935,8 +724,8 @@ class IntraDocDedupRefiner(Refiner):
     blank separator lines) are never treated as duplicates — removing a
     repeated blank line would glue unrelated paragraphs together.
 
-    Scale shape: pure Column HOFs over the split array — a narrow map
-    that fuses into the scan, zero shuffle, zero Python (contrast
+    Scale shape: pure higher-order functions over the split array — a
+    narrow map that fuses into the scan, zero shuffle, zero Python (contrast
     BoilerplateLineRefiner's two corpus-level shuffles, which its
     cross-document counting genuinely needs). The duplicate scan is the
     sorted-run single pass (array_sort by (unit, position), one
@@ -965,66 +754,13 @@ class IntraDocDedupRefiner(Refiner):
         self.min_unit_chars = min_unit_chars
         self.out_col = out_col
 
-    def _dropped_positions(self, units: Column) -> Column:
-        """0-based positions of non-first exact repeats (countable units
-        only), via one sorted-run pass."""
-        zipped = F.transform(units, lambda u, i: F.struct(u.alias("u"), i.alias("p")))
-        by_unit = F.array_sort(
-            zipped,
-            lambda a, b: F.when(a["u"] < b["u"], -1)
-            .when(a["u"] > b["u"], 1)
-            .otherwise(a["p"] - b["p"]),
-        )
-        countable = lambda u: F.length(F.trim(u)) >= self.min_unit_chars  # noqa: E731
-        acc0 = F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.array().cast("array<int>").alias("ps"),
-        )
-        walked = F.aggregate(
-            by_unit,
-            acc0,
-            lambda acc, s: F.struct(
-                s["u"].alias("prev"),
-                F.when(
-                    s["u"].eqNullSafe(acc["prev"]) & countable(s["u"]),
-                    F.array_append(acc["ps"], s["p"]),
-                )
-                .otherwise(acc["ps"])
-                .alias("ps"),
-            ),
-        )
-        return walked["ps"]
-
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         import re
 
-        # Fast path (round 12): same trees authored as one SQL string per
-        # output column — see LanguageIdRefiner.columns for the py4j
-        # rationale; parity pinned by tests/test_refiner_expr_parity.py.
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            return {k: F.expr(s) for k, s in texts.items()}
-        t = F.col(self.text_col)
-        units = F.split(t, re.escape(self.sep))
-        dropped = self._dropped_positions(units)
-        kept = F.filter(
-            F.transform(units, lambda u, i: F.struct(u.alias("u"), i.alias("p"))),
-            lambda s: ~F.array_contains(dropped, s["p"]),
-        )
-        rebuilt = F.array_join(F.transform(kept, lambda s: s["u"]), self.sep)
-        return {
-            self.out_col: F.when(t.isNotNull(), rebuilt),
-            "dup_units_removed": F.when(t.isNotNull(), F.size(dropped)).otherwise(F.lit(0)).cast("int"),
-        }
-
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        """SQL-text twin of the composed tree above (structural parity
-        pinned by tests/test_refiner_expr_parity.py)."""
-        import re
-
-        ref = sql_plain_column(self.text_col)
-        if ref is None:
-            return None
+        # the duplicate scan: sort (unit, position) pairs by unit then
+        # position and walk them once, collecting the position of every
+        # countable unit equal to its predecessor
+        ref = sql_ident(self.text_col)
         units = f"split({ref}, {sql_string_literal(re.escape(self.sep))})"
         zipped = f"transform({units}, (x, y) -> struct(x AS u, y AS p))"
         by_unit = (

@@ -26,13 +26,12 @@ from mega_data_factory_spark.operators.base import Filter, Operator, Refiner, re
 BUCKETS = 10_000
 
 
-def stable_bucket(col: Column | str, *, buckets: int = BUCKETS, salt: str | None = None) -> Column:
+def stable_bucket(col: str, *, buckets: int = BUCKETS, salt: str | None = None) -> Column:
     """Deterministic bucket in [0, buckets) from the md5-derived 60-bit hash
     of the column's string form. ``salt`` yields an independent assignment
     (e.g. a fresh split epoch) — mirrored in SQL by appending ``#salt``
     before hashing (the minhash seed convention)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return hash64_from_md5(c.cast("string"), seed=salt) % F.lit(buckets)
+    return hash64_from_md5(col, seed=salt) % F.lit(buckets)
 
 
 class DatasetSplitRefiner(Refiner):
@@ -190,7 +189,7 @@ class StratifiedQuotaSampler(Operator):
         self.salt = salt
 
     def _hash(self) -> Column:
-        return hash64_from_md5(F.col(self.id_col).cast("string"), seed=self.salt)
+        return hash64_from_md5(self.id_col, seed=self.salt)
 
     def _hist_bucket(self) -> Column:
         # top bits of the 60-bit hash: monotonic range buckets

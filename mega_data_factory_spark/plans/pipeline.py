@@ -27,24 +27,31 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mega_data_factory_spark.config import PipelineConfig
+from mega_data_factory_spark.functions.text import sql_ident, sql_string_literal
 from mega_data_factory_spark.operators.base import (
+    RAW_KEY_COL,
     REJECTION_DETAILS_COL,
     Deduplicator,
     Filter,
     Operator,
     Refiner,
     rejection_details,
+    rejection_details_sql,
+    with_sql_columns,
 )
 from mega_data_factory_spark.registry import OPERATORS
 from mega_data_factory_spark.sinks import write_sink
 from mega_data_factory_spark.sources import read_source
 
 _R = REJECTION_DETAILS_COL
+# column a Column-authored filter predicate is bound to, so the filter tag
+# stays one SQL spelling (Catalyst collapses the binding projection)
+_KEEP = "__filter_keep"
 
 
 @dataclass
@@ -89,9 +96,9 @@ class Pipeline:
         # runner (run() / StreamingPipeline) after its actions complete
         self._mid_cached: list[DataFrame] = []
         # (op id, input-columns tuple) -> reusable unresolved Column
-        # expression. Filter predicates and the key-dedup tag expression
-        # are pure name-based Column builders (they consult df only for
-        # its column list, which IS the cache key), so rebuilding them per
+        # expressions. Filter predicates and the key-dedup tag expression
+        # are pure name-based builders (they consult df only for its
+        # column list, which IS the cache key), so rebuilding them per
         # micro-batch under the streaming runner was pure py4j latency —
         # ~0.2 s/trigger on the bench stream. Unresolved Columns bind at
         # analysis time, so one expression serves every batch of the same
@@ -166,35 +173,20 @@ class Pipeline:
         return df
 
     def _apply(self, df: DataFrame, op: Operator) -> DataFrame:
-        alive = self._alive()
         if isinstance(op, Filter):
             # cache gated on the base-class purity contract: a custom
             # Filter whose predicate consults data/mutable state opts out
             # with cacheable_predicate=False and is rebuilt per frame
             ck = (id(op), tuple(df.columns), "filter")
-            tag = self._expr_cache.get(ck) if op.cacheable_predicate else None
-            if tag is None:
-                # SQL-text fast path (round 12): filters exposing
-                # predicate_sql get the whole tag — alive gate, keep
-                # coalesce, rejection struct — parsed in ONE py4j round
-                # trip instead of ~20-45 composed Column calls per cold
-                # plan build. Identical analyzed tree, pinned per filter
-                # class in tests/test_refiner_expr_parity.py.
-                psql = op.predicate_sql(df)
-                if psql is not None:
-                    from mega_data_factory_spark.operators.base import rejection_details_sql
-
-                    tag = F.expr(
-                        f"CASE WHEN ((`{_R}` IS NULL) AND (NOT coalesce({psql}, false))) "
-                        f"THEN {rejection_details_sql('filtered', op.name)} ELSE `{_R}` END"
-                    )
-                else:
-                    tag = F.when(
-                        alive & ~op.keep(df), rejection_details("filtered", op.name)
-                    ).otherwise(F.col(_R))
+            hit = self._expr_cache.get(ck) if op.cacheable_predicate else None
+            if hit is None:
+                hit = self._filter_tag(op, df)
                 if op.cacheable_predicate:
-                    self._expr_cache[ck] = tag
-            return df.withColumn(_R, tag)
+                    self._expr_cache[ck] = hit
+            bound, tag = hit
+            if bound is None:
+                return df.withColumn(_R, tag)
+            return df.withColumn(_KEEP, bound).withColumn(_R, tag).drop(_KEEP)
         if isinstance(op, Deduplicator):
             if hasattr(op, "_dup_pairs"):
                 return self._apply_join_dedup(df, op)
@@ -206,32 +198,25 @@ class Pipeline:
                 # the tag column; the alive gate is the operator's concern
                 return op.apply(df)
             texts = op.columns_sql_text(df)
-            if (
-                texts is not None
-                and not (set(texts) & set(df.columns))  # selectExpr('*', x AS c)
-                # cannot REPLACE an existing column the way withColumns does
-                and all("`" not in k for k in texts)
-            ):
-                # SQL-text fast path (round 12): the whole projection —
-                # alive gate included — in ONE selectExpr round trip
-                # instead of 2-3 py4j calls per output column. Identical
-                # analyzed tree (withColumns over all-new names IS
-                # Project [*, aliases]), pinned per refiner in
-                # tests/test_refiner_expr_parity.py.
-                out = df.selectExpr(
-                    "*",
-                    *[
-                        f"CASE WHEN (`{_R}` IS NULL) THEN {sql} END AS `{k}`"
-                        for k, sql in texts.items()
-                    ],
+            if texts is not None:
+                # the whole projection — alive gate included — in ONE
+                # selectExpr round trip instead of 2-3 py4j calls per
+                # output column; an existing output name is replaced in
+                # place, as withColumns would
+                out = with_sql_columns(
+                    df, {k: f"CASE WHEN (`{_R}` IS NULL) THEN {sql} END" for k, sql in texts.items()}
                 )
                 keys = texts
             else:
+                # Column-authored projections (model UDFs): each gated by
+                # the alive flag so UDFs never run on dead rows
                 cols = op.columns(df)
+                alive = self._alive()
                 out = df.withColumns({k: F.when(alive, v) for k, v in cols.items()})
                 keys = cols
             derived = op.derived_columns(out)
             if derived:
+                alive = self._alive()
                 out = out.withColumns({k: F.when(alive, v) for k, v in derived.items()})
             # '__'-prefixed columns() keys are refiner-private intermediates
             # (the struct-once geometry — see Refiner docstring): feed
@@ -241,110 +226,110 @@ class Pipeline:
         # generic operator: full-frame transform (must preserve the tag col)
         return op.apply(df)
 
-    def _apply_key_dedup(self, df: DataFrame, op: Deduplicator) -> DataFrame:
-        alive = self._alive()
-        if not op.wide_payload and op.cacheable_predicate:
-            ck = (id(op), tuple(df.columns), "key_dedup")
-            cached = self._expr_cache.get(ck)
-            if cached is not None:
-                return df.withColumn(_R, cached)
-            # SQL-text fast path (round 12): the whole tag — dead-row key
-            # sentinel, effective key, both window functions, rejection
-            # struct — parsed in ONE py4j round trip instead of ~50
-            # composed Column calls per cold plan build. Identical
-            # analyzed tree (window frames, double casts and all), pinned
-            # per dedup class in tests/test_refiner_expr_parity.py.
-            tag = self._key_dedup_tag_sql(op, df)
-            if tag is not None:
-                self._expr_cache[ck] = tag
-                return df.withColumn(_R, tag)
-        # _effective_key, not key(): the null_keys="distinct" contract
-        # (rows with no dedup identity each survive) must hold on the
-        # pipeline path too — op.key() alone would collapse every NULL-key
-        # row into one window partition and mass-reject all but one
-        # concat_ws, never NULL: a bare concat made a dead NULL-id row's
-        # sentinel NULL, landing it in the alive NULL-key window partition
-        # where it (sorting NULLS FIRST on order_col) absorbed every alive
-        # NULL-key row as a "duplicate" of a dead representative
-        key = F.when(alive, op._effective_key(df).cast("string")).otherwise(
-            F.concat_ws("", F.lit("\x00D\x1f"), F.coalesce(F.col(op.id_col).cast("string"), F.lit("")))
-        )
-        if op.wide_payload:
-            # winner election on a NARROW projection (the base.apply
-            # geometry): the full-row window below would shuffle the heavy
-            # payload bytes the flag exists to keep out of the exchange.
-            # Losers (order value + representative id) join back on the
-            # unique order_col — AQE broadcasts the loser set when small.
-            # __jk: NULL-safe join key — groupBy treats NULL keys as one
-            # group but the equi-join back would never match them, silently
-            # letting every NULL-key duplicate survive (base.Deduplicator's
-            # _NULL_GROUP rationale); __dk keeps the REAL key for the tag
-            keyed = df.withColumn("__dk", key).withColumn(
-                "__jk", F.coalesce(F.col("__dk"), F.lit(Deduplicator._NULL_GROUP))
-            )
-            narrow = keyed.select("__jk", F.col("__dk"), F.col(op.order_col).alias("__o"), F.col(op.id_col).alias("__i"))
-            win = narrow.groupBy("__jk").agg(
-                F.min("__o").alias("__win_o"), F.min_by("__i", "__o").alias("__win_rep")
-            )
-            losers = (
-                narrow.join(win, on="__jk")
-                .filter(F.col("__o") != F.col("__win_o"))
-                .select(F.col("__o").alias(op.order_col), "__dk", F.col("__win_rep").alias("__rep"))
-            )
-            out = df.join(losers, on=op.order_col, how="left")  # losers carry __dk for the tag
-            tagged = out.withColumn(
-                _R,
-                F.when(
-                    self._alive() & F.col("__rep").isNotNull(),
-                    rejection_details("duplicate", op.name, F.col("__dk"), F.col("__rep").cast("string")),
-                ).otherwise(F.col(_R)),
-            )
-            return tagged.drop("__dk", "__rep")
-        # ONE projection, window expressions inline: the earlier temp-column
-        # form (__dk/__rn/__rep across four withColumns + a drop) re-ran
-        # plan analysis per frame — pure driver latency that multiplies by
-        # micro-batch count under the streaming runner (measured ~0.2 s of
-        # the per-trigger floor). Both window functions share one
-        # WindowSpec, so the physical plan is a single Window node either
-        # way; the key expression is reused verbatim in the partition spec
-        # and the rejection struct.
-        w = Window.partitionBy(key).orderBy(F.col(op.order_col))
-        tag = F.when(
-            self._alive() & (F.row_number().over(w) > 1),
-            rejection_details(
-                "duplicate", op.name, key, F.first(F.col(op.id_col)).over(w).cast("string")
-            ),
-        ).otherwise(F.col(_R))
-        if op.cacheable_predicate:
-            self._expr_cache[(id(op), tuple(df.columns), "key_dedup")] = tag
-        return df.withColumn(_R, tag)
-
     @staticmethod
-    def _key_dedup_tag_sql(op: Deduplicator, df: DataFrame) -> Column | None:
-        """One-expr spelling of the window dedup tag below, or None when
-        the operator/key has no faithful SQL twin (the composed path then
-        builds the identical tree Column by Column)."""
-        from mega_data_factory_spark.functions.text import sql_plain_column, sql_string_literal
+    def _filter_tag(op: Filter, df: DataFrame) -> tuple[Column | None, Column]:
+        """(predicate Column to bind as ``_KEEP`` or None, the tag): alive
+        gate, NULL-as-reject and rejection struct parsed in ONE round trip
+        around the filter's SQL predicate. A Column-authored predicate is
+        bound first and read by name — the binding projection collapses
+        into the tag's, so the plan is the inline one."""
+        psql = op.predicate_sql(df)
+        bound = None
+        if psql is None:
+            bound, psql = op.predicate(df), sql_ident(_KEEP)
+        tag = F.expr(
+            f"CASE WHEN ((`{_R}` IS NULL) AND (NOT coalesce({psql}, false))) "
+            f"THEN {rejection_details_sql('filtered', op.name)} ELSE `{_R}` END"
+        )
+        return bound, tag
 
-        esql = op.effective_key_sql(df)
-        ic = sql_plain_column(op.id_col)
-        oc = sql_plain_column(op.order_col)
-        if esql is None or ic is None or oc is None:
-            return None
+    def _apply_key_dedup(self, df: DataFrame, op: Deduplicator) -> DataFrame:
+        ck = (id(op), tuple(df.columns), "key_dedup")
+        hit = self._expr_cache.get(ck) if op.cacheable_predicate else None
+        if hit is None:
+            hit = self._key_dedup_exprs(op, df)
+            if op.cacheable_predicate:
+                self._expr_cache[ck] = hit
+        raw, key, tag = hit
+        if raw is not None:
+            df = df.withColumn(RAW_KEY_COL, raw)
+        out = self._wide_key_dedup(df, op, key) if op.wide_payload else df.withColumn(_R, tag)
+        return out.drop(RAW_KEY_COL) if raw is not None else out
+
+    def _key_dedup_exprs(self, op: Deduplicator, df: DataFrame) -> tuple[Column | None, str, Column | None]:
+        """(Column-authored key to bind as ``RAW_KEY_COL`` or None, the
+        pipeline key's SQL text, the window tag — None on the wide_payload
+        path, which elects winners by join instead).
+
+        The key is the operator's effective key — the null_keys="distinct"
+        contract (rows with no dedup identity each survive) must hold on
+        the pipeline path too — for alive rows, and for dead rows a
+        per-row sentinel so they can neither absorb nor represent alive
+        rows. The sentinel is concat_ws, never NULL: a bare concat made a
+        dead NULL-id row's sentinel NULL, landing it in the alive NULL-key
+        window partition where it (sorting NULLS FIRST on order_col)
+        absorbed every alive NULL-key row as a "duplicate" of a dead
+        representative.
+
+        The tag is ONE projection with the window expressions inline: the
+        earlier temp-column form (__dk/__rn/__rep across four withColumns
+        + a drop) re-ran plan analysis per frame — pure driver latency
+        that multiplies by micro-batch count under the streaming runner
+        (measured ~0.2 s of the per-trigger floor). Both window functions
+        share one window spec, so the physical plan is a single Window
+        node; the key is reused verbatim in the partition spec and the
+        rejection struct."""
+        raw, ksql = op._key_source(df)
+        if raw is not None:
+            # a Column-authored key (model UDFs) runs for alive rows only
+            raw = F.when(self._alive(), raw)
+        ic, oc = sql_ident(op.id_col), sql_ident(op.order_col)
         key = (
-            f"CASE WHEN (`{_R}` IS NULL) THEN cast({esql} as string) "
+            f"CASE WHEN (`{_R}` IS NULL) THEN cast({op._effective_key_sql(df, ksql)} as string) "
             f"ELSE concat_ws('', '\\0D\x1f', coalesce(cast({ic} as string), '')) END"
         )
+        if op.wide_payload:
+            return raw, key, None
         over = f"OVER (PARTITION BY {key} ORDER BY {oc})"
-        name = sql_string_literal(op.name)
-        return F.expr(
+        tag = F.expr(
             f"CASE WHEN ((`{_R}` IS NULL) AND (row_number() {over} > 1)) "
             f"THEN struct(cast('duplicate' as string) AS reason, "
-            f"cast({name} as string) AS operator, "
+            f"cast({sql_string_literal(op.name)} as string) AS operator, "
             f"cast({key} as string) AS dedup_key, "
             f"cast(cast(first({ic}) {over} as string) as string) AS representative_id) "
             f"ELSE `{_R}` END"
         )
+        return raw, key, tag
+
+    def _wide_key_dedup(self, df: DataFrame, op: Deduplicator, key: str) -> DataFrame:
+        """Winner election on a NARROW projection (the base.apply
+        geometry): the full-row window would shuffle the heavy payload
+        bytes the wide_payload flag exists to keep out of the exchange.
+        Losers (order value + representative id) join back on the unique
+        order_col — AQE broadcasts the loser set when small. __jk is the
+        NULL-safe join key — groupBy treats NULL keys as one group but the
+        equi-join back would never match them, silently letting every
+        NULL-key duplicate survive (base.Deduplicator's _NULL_GROUP
+        rationale); __dk keeps the REAL key for the tag."""
+        keyed = df.withColumn("__dk", F.expr(key)).withColumn("__jk", F.expr(op._join_key_sql("__dk")))
+        narrow = keyed.select("__jk", F.col("__dk"), F.col(op.order_col).alias("__o"), F.col(op.id_col).alias("__i"))
+        win = narrow.groupBy("__jk").agg(
+            F.min("__o").alias("__win_o"), F.min_by("__i", "__o").alias("__win_rep")
+        )
+        losers = (
+            narrow.join(win, on="__jk")
+            .filter(F.col("__o") != F.col("__win_o"))
+            .select(F.col("__o").alias(op.order_col), "__dk", F.col("__win_rep").alias("__rep"))
+        )
+        out = df.join(losers, on=op.order_col, how="left")  # losers carry __dk for the tag
+        tagged = out.withColumn(
+            _R,
+            F.when(
+                self._alive() & F.col("__rep").isNotNull(),
+                rejection_details("duplicate", op.name, "__dk", "cast(__rep as string)"),
+            ).otherwise(F.col(_R)),
+        )
+        return tagged.drop("__dk", "__rep")
 
     def _apply_join_dedup(self, df: DataFrame, op: Deduplicator) -> DataFrame:
         # The pairs side embeds the full upstream plan (scan + every prior
@@ -373,8 +358,7 @@ class Pipeline:
                     # carry their own reason
                     getattr(op, "rejection_reason", "duplicate"),
                     op.name,
-                    F.lit(None),
-                    F.col("__rep").cast("string"),
+                    representative_id="cast(__rep as string)",
                 ),
             ).otherwise(F.col(_R)),
         )

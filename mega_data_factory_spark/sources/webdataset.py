@@ -195,7 +195,7 @@ def write_webdataset(
     os.makedirs(out_dir, exist_ok=True)
     width = max(5, len(str(num_shards - 1)))
 
-    shard = (hash64_from_md5(F.col(key_col).cast("string"), seed="wds") % num_shards).alias(
+    shard = (hash64_from_md5(key_col, seed="wds") % num_shards).alias(
         "__shard_id__"
     )
     # NULL keys cannot name tar members AND would land in a NULL shard id

@@ -124,7 +124,7 @@ def long_key_band_pairs(d: MinHashLSHDeduplicator, df):
     exploded = df.select(
         F.col(d.id_col),
         F.explode(F.array_distinct(word_shingles(d.text_col, d.shingle_n))).alias("__s"),
-    ).select(F.col(d.id_col), hash64_from_md5(F.col("__s")).alias("__bh"))
+    ).select(F.col(d.id_col), hash64_from_md5("__s").alias("__bh"))
     sig = exploded.groupBy(d.id_col).agg(
         *[F.min(minhash_hash_family(F.col("__bh"), i)).alias(f"__m{i}") for i in range(d.num_hashes)]
     )

@@ -1,0 +1,108 @@
+"""Plan regression check: regenerate explain('formatted') for EVERY declared
+driver query and diff it against a baseline dump modulo expression ids
+(#123), cached-plan ids, AQE plan_ids, lambda-binder suffixes and the
+checkout path of materialized fixtures. Prints per-query OK/DRIFT and a
+summary; exits nonzero on any drift.
+
+The default baseline is the committed plans/r13/<q>_after.txt. To judge a
+change to the operator layer, dump the parent commit's plans from its own
+checkout and compare against that dump, so queries that already drift
+from plans/r13 are judged against the parent's own plans:
+
+    python scripts/plan_drift.py --sf SF_DIR --dump PARENT_DUMP      # in the parent checkout
+    python scripts/plan_drift.py --sf SF_DIR --baseline PARENT_DUMP
+
+plans/r13 was dumped at sf0.1 with SPARK_GRAFT_CPUS=8; exchange partition
+counts follow the core count, so compare at the same setting.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import re
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ID = re.compile(r"#\d+")
+PLAN_ID = re.compile(r"plan_id=\d+")
+CTE_ID = re.compile(r"CTERelationDef \d+|CTERelationRef \d+")
+SUBQ = re.compile(r"(Subquery|subquery)#?\d*")
+RESULT_ID = re.compile(r"\[id=#?\d+\]")
+# pyspark's _create_lambda appends a fresh per-session suffix to binder
+# names (x_51); the binder NAME is display-only (references resolve by id)
+LAMBDA = re.compile(r"lambda ([a-z]+)_\d+")
+RDD_ID = re.compile(r"RDD\[\d+\]")
+# fixtures materialized under the checkout (.localdata/...) carry its path
+CHECKOUT = re.compile(r"file:\S*?/\.localdata/")
+
+
+def norm(s: str) -> str:
+    s = ID.sub("#", s)
+    s = PLAN_ID.sub("plan_id=", s)
+    s = CTE_ID.sub(lambda m: m.group(0).split()[0] + " N", s)
+    s = SUBQ.sub(lambda m: m.group(0).rstrip("0123456789#"), s)
+    s = RESULT_ID.sub("[id=#]", s)
+    s = LAMBDA.sub(r"lambda \1", s)
+    s = RDD_ID.sub("RDD[N]", s)
+    s = CHECKOUT.sub("file:<checkout>/.localdata/", s)
+    return s
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    sf_env = os.environ.get("SPARK_GRAFT_SF_DIR")
+    ap.add_argument("--sf", default=sf_env, required=sf_env is None, help="scale dir (default $SPARK_GRAFT_SF_DIR)")
+    ap.add_argument("--baseline", default=os.path.join(REPO, "plans", "r13"))
+    ap.add_argument("--dump", default=None, help="write <q>_after.txt for every query here instead of diffing")
+    args = ap.parse_args()
+
+    from mega_data_factory_spark.session import get_spark
+
+    spark = get_spark("plan-drift", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1).count()
+
+    import __spark_entry__ as e
+
+    jvm = spark.sparkContext._jvm
+    drift = []
+    for name, fn in e.queries().items():
+        now = jvm.PythonSQLUtils.explainString(fn(spark, args.sf)._jdf.queryExecution(), "formatted")
+        if args.dump:
+            os.makedirs(args.dump, exist_ok=True)
+            with open(os.path.join(args.dump, f"{name}_after.txt"), "w") as f:
+                f.write(now)
+            print(f"{name:34s} dumped")
+            continue
+        path = os.path.join(args.baseline, f"{name}_after.txt")
+        if not os.path.exists(path):
+            print(f"{name:34s} NO_FILE")
+            drift.append(name)
+            continue
+        with open(path) as f:
+            committed = f.read()
+        a, b = norm(now).strip(), norm(committed).strip()
+        if a == b:
+            print(f"{name:34s} OK")
+            continue
+        print(f"{name:34s} DRIFT")
+        la, lb = a.splitlines(), b.splitlines()
+        shown = 0
+        for x, y in zip(la, lb):
+            if x != y and shown < 6:
+                print(f"  now:      {x[:150]}")
+                print(f"  baseline: {y[:150]}")
+                shown += 1
+        if len(la) != len(lb):
+            print(f"  line counts differ: now {len(la)} vs baseline {len(lb)}")
+        drift.append(name)
+    if not args.dump:
+        print(f"\n{len(drift)} drifted of {len(e.queries())}: {drift}")
+        sys.exit(1 if drift else 0)
+
+
+if __name__ == "__main__":
+    main()

@@ -1060,13 +1060,12 @@ def test_gopher_quality_filter_rules(spark, tmp_path):
 
 
 def test_word_occurrences_expr_parity(spark):
-    """The round-12 single-expr fast path of word_occurrences must produce
-    the same counts as the composed-Column fallback for every class of
-    word (plain, regex metacharacters, quotes, backslashes, unicode) and
-    for NULL/empty text — the fast path only changes how the expression
-    is BUILT (one parsed expr vs five py4j calls), never its value."""
-    from pyspark.sql import functions as F
-
+    """word_occurrences (one parsed SQL expression) counts whole-word,
+    case-insensitive occurrences for every class of word — plain, regex
+    metacharacters, quotes, backslashes, unicode — and 0 for NULL/empty
+    text. The expected counts were generated where the earlier composed
+    Column form agreed with the SQL text; a word that starts or ends in a
+    non-word character has no ASCII \\b boundary there, hence its zeros."""
     from mega_data_factory_spark.functions.text import word_occurrences
 
     rows = [
@@ -1079,16 +1078,20 @@ def test_word_occurrences_expr_parity(spark):
         (6, None),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    words = ["the", "a.b", "don't", "c++", "[set]", "back\\slash", "tür", "'quoted'"]
-    for w in words:
-        fast = [r["n"] for r in df.select(word_occurrences("text", w).alias("n")).orderBy("id").collect()]
-        # the Column path (fallback) — force it by passing a Column
-        slow = [
-            r["n"]
-            for r in df.select(word_occurrences(F.col("text"), w).alias("n")).orderBy("id").collect()
-        ]
-        assert fast == slow, f"expr/Column divergence for word {w!r}: {fast} vs {slow}"
-    # a backticked column name must take the fallback and still work
+    expected_counts = {
+        "'quoted'": [0, 0, 0, 0, 0, 0, 0],
+        "[set]": [0, 0, 0, 0, 0, 0, 0],
+        "a.b": [0, 2, 0, 0, 0, 0, 0],
+        "back\\slash": [0, 0, 0, 1, 0, 0, 0],
+        "c++": [0, 0, 0, 0, 0, 0, 0],
+        "don't": [0, 0, 1, 0, 0, 0, 0],
+        "the": [2, 0, 0, 0, 0, 0, 0],
+        "tür": [0, 0, 0, 0, 3, 0, 0],
+    }
+    for w, expected in expected_counts.items():
+        got = [r["n"] for r in df.select(word_occurrences("text", w).alias("n")).orderBy("id").collect()]
+        assert got == expected, f"word {w!r}: {got}"
+    # a backtick-carrying column name, quoted the way F.col reads it
     df2 = df.withColumnRenamed("text", "te`xt")
-    n = df2.select(word_occurrences(F.col("`te``xt`"), "the").alias("n")).count()
-    assert n == 7
+    got = [r["n"] for r in df2.select(word_occurrences("`te``xt`", "the").alias("n")).orderBy("id").collect()]
+    assert got == expected_counts["the"]

@@ -743,3 +743,70 @@ def test_pipeline_fused_key_dedup_null_semantics(spark, tmp_path):
         (7, "NumericRangeFilter"), (4, "KeyDeduplicator"),
     }
     assert rej.filter("id = 4").first()["_rejection_details"]["representative_id"] == "1"
+
+
+def test_struct_field_and_backtick_column_names(spark, tmp_path):
+    """An operator's column parameter is read the way F.col reads it:
+    ``meta.text`` is the ``text`` field of struct ``meta``, and
+    ```te``xt``` — or the raw ``te`xt``, which F.col rejects — the column
+    named te`xt. Every SQL-authored operator resolves both, standalone and
+    through Pipeline.run, with the values it gives over a plain ``text``
+    column."""
+    from mega_data_factory_spark.config import PipelineConfig, SinkConfig
+    from mega_data_factory_spark.operators import dedup as D
+    from mega_data_factory_spark.operators import filters as Fi
+    from mega_data_factory_spark.operators import refiners as R
+    from mega_data_factory_spark.plans.pipeline import Pipeline
+
+    texts = [
+        "The cat sat. The cat sat.\nThe cat sat. The cat sat.",
+        "the CAT  sat. the cat sat.\nThe cat sat. The cat sat.",
+        None,
+        "der die und das el la",
+        "word " * 30,
+        "",
+    ]
+    base = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    df = base.selectExpr("doc_id", "text", "named_struct('text', text) AS meta", "text AS `te``xt`")
+    df.createOrReplaceTempView("names_in")
+    names = ["text", "meta.text", "`te``xt`", "te`xt"]
+
+    def ops(col):
+        return [
+            ("TextStatsRefiner", {"text_col": col}),
+            ("LanguageIdRefiner", {"text_col": col}),
+            ("QualityScoreRefiner", {"text_col": col}),
+            ("GopherQualityRefiner", {"text_col": col}),
+            ("RepetitionStatsRefiner", {"text_col": col}),
+            ("IntraDocDedupRefiner", {"text_col": col}),
+            ("TextLengthFilter", {"min_length": 10, "max_length": 200, "text_col": col}),
+            ("TextExactDeduplicator", {"text_col": col, "id_col": "doc_id"}),
+            ("KeyDeduplicator", {"key_cols": [col], "order_col": "doc_id"}),
+        ]
+
+    def rows(frame):
+        return sorted(tuple(str(v) for v in r) for r in frame.collect())
+
+    classes = {**vars(R), **vars(Fi), **vars(D)}
+    standalone = {n: [rows(classes[k](**p).apply(df)) for k, p in ops(n)] for n in names}
+    for n in names[1:]:
+        assert standalone[n] == standalone["text"], n
+
+    runs = {}
+    for i, n in enumerate(names[:3]):
+        cfg = PipelineConfig.from_dict(
+            {
+                "pipeline": {
+                    "name": "names", "id_col": "doc_id", "source": {"table": "names_in"},
+                    "stages": [{"name": "s", "operators": [{"name": k, "params": p} for k, p in ops(n)]}],
+                }
+            }
+        )
+        cfg.sink = SinkConfig(path=str(tmp_path / f"out{i}"))
+        cfg.rejected_sink = SinkConfig(path=str(tmp_path / f"rej{i}"))
+        result = Pipeline(cfg).run(spark)
+        funnel = [(m.operator, m.input_records, m.output_records) for m in result.operators]
+        runs[n] = (funnel, rows(spark.read.parquet(str(tmp_path / f"out{i}"))))
+    assert runs["meta.text"] == runs["text"]
+    assert runs["`te``xt`"] == runs["text"]
+    assert runs["text"][0][-1][2] < len(texts)  # the chain rejects something

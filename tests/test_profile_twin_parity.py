@@ -1,66 +1,25 @@
-"""Structural parity for the round-13 ColumnProfiler SQL-text fast path.
+"""Pinned values for the SQL-text ColumnProfiler.
 
-profile() composes ~30 Column calls per aggregated column plus ~8 per
-unpivot entry — ~2000 py4j round trips ≈ 2.1 s of pure driver latency for
-a 16-column table (scripts/diag_r13b_profile_build.py). The twin
-(`_profile_sql`) renders the IDENTICAL Catalyst trees as SQL text in three
-selectExpr round trips. This module pins, for every parameterization the
-twin claims to spell:
-
-  * analyzed-plan equality with the composed-Column construction
-    (`_profile_composed`), modulo expression ids — any drift in literals,
-    casts, aggregate choice, sampling projection, or unpivot shape fails
-    the diff;
-  * value equality on a mixed-type fixture (numeric, string incl. quotes/
-    backslashes/NULL, decimal, timestamp, boolean);
-  * the refusal cases (backtick-carrying names, a pre-existing
-    ``__profile_sample`` column, non-32-bit sample mod) fall back to the
-    composed path.
+``ColumnProfiler.profile`` is authored once, as SQL text parsed in three
+``selectExpr`` round trips. The expected profiles below were generated
+with the earlier two-rendering code, on the mixed-type fixture its parity
+tests used (numeric, string with quotes/backslashes/unicode/empty/NULL,
+decimal, timestamp, boolean), where the composed-Column and SQL-text
+constructions were proven equal — in exact mode, sketch mode, and every
+parameterization below. The fixture is one partition so the sketch
+mode's row-id sample is layout-stable. Wide profiles are pinned by a
+digest of their sorted stringified rows; the exact profile is spelled out.
 """
 
 from __future__ import annotations
 
 import datetime
-import re
+import hashlib
 from decimal import Decimal
 
 import pytest
 
 from mega_data_factory_spark.operators.profiling import SAMPLE_COL, ColumnProfiler
-
-
-def _analyzed(df) -> str:
-    return df._jdf.queryExecution().analyzed().toString()
-
-
-def _formatted(df) -> str:
-    # the formatted plan prints literals through sql() (e.g. `1L`), so it
-    # catches literal-TYPE drift that analyzed toString masks (Literal(1,
-    # int) and Literal(1L, long) both print as `1` there — the exact-mode
-    # percentile frequency argument was exactly such a case)
-    jvm = df.sparkSession.sparkContext._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def _norm(plan: str) -> str:
-    plan = re.sub(r"#\d+", "#N", plan)
-    return re.sub(r"plan_id=\d+", "plan_id=N", plan)
-
-
-@pytest.fixture(scope="module")
-def fixture_df(spark):
-    rows = [
-        (1, 10.5, Decimal("3.14"), "alpha", datetime.datetime(2024, 1, 1, 8, 0), True),
-        (2, -0.25, Decimal("2.00"), "it's a 'quoted' back\\slash", datetime.datetime(2024, 6, 1, 9, 30), False),
-        (3, None, Decimal("9.99"), None, None, None),
-        (4, 7.0, None, "Tür déjà …", datetime.datetime(2023, 12, 31, 23, 59), True),
-        (5, 7.0, Decimal("3.14"), "", datetime.datetime(2024, 1, 1, 8, 0), False),
-    ]
-    schema = (
-        "k long, x double, d decimal(10,2), s string, ts timestamp, b boolean"
-    )
-    return spark.createDataFrame(rows, schema)
-
 
 PROFILERS = [
     pytest.param(lambda: ColumnProfiler(), id="default-sketch"),
@@ -75,56 +34,110 @@ PROFILERS = [
     ),
 ]
 
+PROFILE_DIGESTS = {
+    "column-subset": "172eb31476af814b",
+    "custom-sketch-params": "89f6fd61bf231b89",
+    "default-sketch": "89f6fd61bf231b89",
+    "exact": "3439766daa7f5623",
+    "no-percentiles": "8e83bdcaf76c7d93",
+    "p99.9": "06718c0f0caaa24a",
+    "sample-col-collision": "436aa2e7c8586b88",
+    "sketch-unsampled": "f1a80400e7f4dfba",
+    "wide-sample-mod": "89f6fd61bf231b89",
+}
+PROFILE_EXACT = [
+    ("b", "count", "4.0", "None"), ("b", "distinct", "2.0", "None"), ("b", "max", "None", "true"),
+    ("b", "min", "None", "false"), ("b", "nulls", "1.0", "None"), ("d", "count", "4.0", "None"),
+    ("d", "distinct", "3.0", "None"), ("d", "max", "9.99", "None"),
+    ("d", "mean", "4.5675", "None"), ("d", "min", "2.0", "None"), ("d", "nulls", "1.0", "None"),
+    ("d", "p25", "2.855", "None"), ("d", "p50", "3.14", "None"), ("d", "p75", "4.8525", "None"),
+    ("k", "count", "5.0", "None"), ("k", "distinct", "5.0", "None"), ("k", "max", "5.0", "None"),
+    ("k", "mean", "3.0", "None"), ("k", "min", "1.0", "None"), ("k", "nulls", "0.0", "None"),
+    ("k", "p25", "2.0", "None"), ("k", "p50", "3.0", "None"), ("k", "p75", "4.0", "None"),
+    ("s", "avg_len", "10.25", "None"), ("s", "count", "4.0", "None"),
+    ("s", "distinct", "4.0", "None"), ("s", "max", "None", "it's a 'quoted' back\\slash"),
+    ("s", "max_len", "26.0", "None"), ("s", "min", "None", ""), ("s", "min_len", "0.0", "None"),
+    ("s", "nulls", "1.0", "None"), ("ts", "count", "4.0", "None"),
+    ("ts", "distinct", "3.0", "None"), ("ts", "max", "None", "2024-06-01 09:30:00"),
+    ("ts", "min", "None", "2023-12-31 23:59:00"), ("ts", "nulls", "1.0", "None"),
+    ("x", "count", "4.0", "None"), ("x", "distinct", "3.0", "None"), ("x", "max", "10.5", "None"),
+    ("x", "mean", "6.0625", "None"), ("x", "min", "-0.25", "None"), ("x", "nulls", "1.0", "None"),
+    ("x", "p25", "5.1875", "None"), ("x", "p50", "7.0", "None"), ("x", "p75", "7.875", "None"),
+]
+
+
+@pytest.fixture(scope="module")
+def fixture_df(spark):
+    rows = [
+        (1, 10.5, Decimal("3.14"), "alpha", datetime.datetime(2024, 1, 1, 8, 0), True),
+        (2, -0.25, Decimal("2.00"), "it's a 'quoted' back\\slash", datetime.datetime(2024, 6, 1, 9, 30), False),
+        (3, None, Decimal("9.99"), None, None, None),
+        (4, 7.0, None, "Tür déjà …", datetime.datetime(2023, 12, 31, 23, 59), True),
+        (5, 7.0, Decimal("3.14"), "", datetime.datetime(2024, 1, 1, 8, 0), False),
+    ]
+    schema = "k long, x double, d decimal(10,2), s string, ts timestamp, b boolean"
+    return spark.createDataFrame(rows, schema).coalesce(1)
+
+
+def _rows(profile_df):
+    return sorted(tuple(str(v) for v in r) for r in profile_df.collect())
+
+
+def _digest(rows) -> str:
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
+
 
 @pytest.mark.parametrize("make", PROFILERS)
 def test_profile_twin_analyzed_plan_parity(spark, fixture_df, make):
+    """One aggregate job: the optimized plan holds ONE aggregate for
+    every column and stat (exact mode's DISTINCT counts add the
+    Expand-based second stage Spark rewrites them into) and one Generate
+    (the in-plan unpivot)."""
     prof = make()
-    cols = prof._selected(fixture_df)
-    fast = prof._profile_sql(fixture_df, cols)
-    assert fast is not None, "twin unexpectedly refused a spellable parameterization"
-    composed = prof._profile_composed(fixture_df, cols)
-    assert _norm(_analyzed(fast)) == _norm(_analyzed(composed))
-    assert _norm(_formatted(fast)) == _norm(_formatted(composed))
+    plan = prof.profile(fixture_df)._jdf.queryExecution().optimizedPlan().toString()
+    lines = [ln.lstrip("+-: ") for ln in plan.splitlines()]
+    assert sum(ln.startswith("Aggregate ") for ln in lines) == (1 if prof.approx else 2)
+    assert sum(ln.startswith("Expand ") for ln in lines) == (0 if prof.approx else 1)
+    assert sum(ln.startswith("Generate ") for ln in lines) == 1
 
 
 @pytest.mark.parametrize("make", PROFILERS)
-def test_profile_twin_value_parity(spark, fixture_df, make):
-    prof = make()
-    cols = prof._selected(fixture_df)
-    fast = prof._profile_sql(fixture_df, cols)
-    composed = prof._profile_composed(fixture_df, cols)
-    key = lambda r: (r["column"], r["stat"])  # noqa: E731
-    a = sorted([tuple(str(v) for v in r) for r in fast.collect()])
-    b = sorted([tuple(str(v) for v in r) for r in composed.collect()])
-    assert a == b
-    assert prof.profile(fixture_df).columns == ["column", "stat", "value", "text"]
+def test_profile_twin_value_parity(spark, fixture_df, make, request):
+    out = make().profile(fixture_df)
+    assert out.columns == ["column", "stat", "value", "text"]
+    rows = _rows(out)
+    assert _digest(rows) == PROFILE_DIGESTS[request.node.callspec.id]
+    if request.node.callspec.id == "exact":
+        assert rows == PROFILE_EXACT
 
 
 def test_profile_twin_refuses_backtick_names(spark):
-    df = spark.range(3).selectExpr("id AS `a``b`")
-    prof = ColumnProfiler()
-    # the twin must refuse rather than mis-parse; the composed path it
-    # falls back to has never supported backtick names either (F.col on
-    # such a name raises) — behavior unchanged from the pre-twin code
-    assert prof._profile_sql(df, prof._selected(df)) is None
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    with pytest.raises(AnalysisException):
-        prof.profile(df).collect()
+    """A column whose NAME carries a backtick (or a dot) is profiled under
+    that literal name — schema field names are never struct paths."""
+    plain = ColumnProfiler().profile(spark.range(3).selectExpr("id AS ab", "id * 2 AS cd"))
+    odd = ColumnProfiler().profile(spark.range(3).selectExpr("id AS `a``b`", "id * 2 AS `c.d`"))
+    rename = {"ab": "a`b", "cd": "c.d"}
+    assert _rows(odd) == sorted((rename[c], *rest) for c, *rest in _rows(plain))
 
 
-def test_profile_twin_refuses_sample_col_collision(spark):
-    df = spark.range(3).selectExpr("id", f"(id % 2 = 0) AS `{SAMPLE_COL}`")
-    prof = ColumnProfiler(columns=["id"])
-    assert prof._profile_sql(df, prof._selected(df)) is None
-    assert prof.profile(df).count() > 0
-    # without sampling the collision is irrelevant and the twin engages
-    prof2 = ColumnProfiler(columns=["id"], percentile_sample_mod=1)
-    assert prof2._profile_sql(df, prof2._selected(df)) is not None
+def test_profile_twin_refuses_sample_col_collision(spark, fixture_df):
+    """A pre-existing sample-flag column is replaced in place by the
+    profiler's own flag."""
+    df = fixture_df.selectExpr("*", f"(k % 2 = 0) AS `{SAMPLE_COL}`")
+    rows = _rows(ColumnProfiler(["k", "x"]).profile(df))
+    assert _digest(rows) == PROFILE_DIGESTS["sample-col-collision"]
 
 
-def test_profile_twin_refuses_wide_sample_mod(spark):
-    df = spark.range(3).selectExpr("id")
-    prof = ColumnProfiler(percentile_sample_mod=2**40)
-    assert prof._profile_sql(df, prof._selected(df)) is None
-    assert prof.profile(df).count() > 0
+def test_profile_replaces_sample_col_case_insensitively(spark, fixture_df):
+    """Column resolution is case-insensitive, so a differently-cased
+    ``__PROFILE_SAMPLE`` column is the same column: replaced in its
+    position, not duplicated into an ambiguous reference."""
+    df = fixture_df.selectExpr("*", f"(k % 2 = 0) AS `{SAMPLE_COL.upper()}`")
+    rows = _rows(ColumnProfiler(["k", "x"]).profile(df))
+    assert _digest(rows) == PROFILE_DIGESTS["sample-col-collision"]
+
+
+def test_profile_twin_refuses_wide_sample_mod(spark, fixture_df):
+    """A sample modulus wider than 32 bits is spelled as a long literal."""
+    rows = _rows(ColumnProfiler(percentile_sample_mod=2**40).profile(fixture_df))
+    assert _digest(rows) == PROFILE_DIGESTS["wide-sample-mod"]

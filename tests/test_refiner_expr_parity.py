@@ -1,31 +1,32 @@
-"""Structural parity for the round-12 SQL-text fast paths.
+"""Pinned values for the SQL-text operator expressions.
 
-py4j costs ~2-4 ms per Column call on the bench hosts, so the struct-builder
-refiners (LanguageId / QualityScore / RepetitionStats / GopherQuality /
-IntraDocDedup / TextStats) author their Catalyst trees as ONE SQL string per
-output column instead of dozens of composed Column calls. The fast path must
-be a pure re-spelling: this module pins, for every such refiner,
-
-  * analyzed-plan equality with the composed-Column twin, modulo expression
-    ids (`#123`) and the fresh-name suffix pyspark appends to lambda
-    variables (`lambda x_1` vs SQL's `lambda x` — the binder NAME is
-    display-only; references resolve by id). Any drift in literals, casts,
-    operator shape, or lambda structure fails the diff.
-  * value equality on an adversarial fixture (quotes, backslashes, regex
-    metacharacters, repeated lines, unicode, empty, NULL).
-
-The composed path is forced by stubbing the plain-column detector
-(`refiners.sql_plain_column`) to return None — exactly the dispatch the
-fast path takes for Column inputs or backticked names.
+Every hot operator expression is authored once, as SQL text, and its
+Column form is that text through ``F.expr``. The expected outputs below
+were generated with the earlier two-rendering code, on the inputs its
+parity tests used, where the composed-Column and SQL-text forms were
+proven equal. These tests pin the single rendering to those values:
+quotes, backslashes, regex metacharacters, repeated lines, unicode, empty
+and NULL text, a precomputed ``length_col``, the ``sep`` variant of
+``IntraDocDedupRefiner``, wide-integer / infinite / boolean literals and
+backtick-carrying column names. Wide outputs are pinned by a digest of
+their stringified rows (``_digest``); short ones are spelled out.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
+import mega_data_factory_spark.operators.dedup as D
+import mega_data_factory_spark.operators.filters as Fi
 import mega_data_factory_spark.operators.refiners as R
+from mega_data_factory_spark.functions.hashing import hash64_from_md5
+from mega_data_factory_spark.functions.text import sql_ident, word_shingles
+from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
+from mega_data_factory_spark.plans.pipeline import Pipeline
 
 ROWS = [
     (0, "the cat and the hat el la de que der die und das le les et des"),
@@ -37,7 +38,14 @@ ROWS = [
     (6, ""),
     (7, None),
 ]
-
+# the dedup fixture adds a case/whitespace variant, an exact copy, and a
+# second NULL and empty text, so the content keys have duplicates to find
+DUP_ROWS = ROWS + [
+    (8, "  THE cat and the HAT el la de que der die und das le les et des "),
+    (9, "it's a 'quoted' back\\slash c++ a.b [set] (paren) #tag ..."),
+    (10, None),
+    (11, ""),
+]
 
 REFINERS = [
     pytest.param(lambda: R.TextStatsRefiner(), id="TextStatsRefiner"),
@@ -53,504 +61,444 @@ REFINERS = [
     ),
 ]
 
+FILTERS = [
+    pytest.param(
+        lambda: Fi.NumericRangeFilter(column="score", lo=1, hi=0.6, name="RangeCut"), id="NumericRangeFilter"
+    ),
+    pytest.param(lambda: Fi.NumericRangeFilter(column="score", lo=0.3, name="LoOnly"), id="NumericRangeFilter-lo"),
+    pytest.param(lambda: Fi.TextLengthFilter(min_length=5, max_length=1000), id="TextLengthFilter"),
+    pytest.param(
+        lambda: Fi.TextLengthFilter(min_length=5, max_length=1000, length_col="n_chars"),
+        id="TextLengthFilter-lencol",
+    ),
+    pytest.param(lambda: Fi.GopherQualityFilter(), id="GopherQualityFilter"),
+    pytest.param(lambda: Fi.C4PageFilter(), id="C4PageFilter"),
+]
 
-def _fixture_df(spark):
-    from pyspark.sql import functions as F
+DEDUPS = [
+    pytest.param(lambda: D.TextExactDeduplicator(), id="TextExact"),
+    pytest.param(lambda: D.TextExactDeduplicator(url_col="url", lowercase=False), id="TextExact-url"),
+    pytest.param(lambda: D.TextExactDeduplicator(collapse_whitespace=False, name="Exact2"), id="TextExact-nocollapse"),
+    pytest.param(lambda: D.KeyDeduplicator(["url"], order_col="doc_id"), id="KeyDedup-single"),
+    pytest.param(lambda: D.KeyDeduplicator(["url", "n_chars"], order_col="doc_id"), id="KeyDedup-multi"),
+    pytest.param(lambda: D.KeyDeduplicator(["url"], order_col="doc_id", null_keys="distinct"), id="KeyDedup-distinct"),
+    pytest.param(
+        lambda: D.KeyDeduplicator(["url", "n_chars"], order_col="doc_id", null_keys="distinct"),
+        id="KeyDedup-multi-distinct",
+    ),
+]
 
-    return spark.createDataFrame(ROWS, "doc_id long, text string").withColumn(
+# ---------------------------------------------------------------- pinned
+
+# output columns, then per-doc_id rows (or a digest of them)
+REFINER_VALUES = {
+    "GopherQualityRefiner": (
+        (
+            "gopher_word_count", "gopher_mean_word_len", "gopher_hash_ratio", "gopher_ellipsis_ratio",
+            "gopher_bullet_line_frac", "gopher_ellipsis_line_frac", "gopher_alpha_word_frac",
+            "gopher_stopword_count",
+        ),
+        [
+            ("17", "2.705882", "0.0", "0.0", "0.0", "0.0", "1.0", "2"),
+            ("10", "4.8", "0.0", "0.0", "0.0", "0.0", "1.0", "0"),
+            ("10", "4.8", "0.1", "0.1", "0.0", "1.0", "0.9", "0"),
+            ("11", "4.454545", "0.0", "0.090909", "0.5", "0.25", "0.818182", "1"),
+            ("7", "3.0", "0.0", "0.142857", "0.0", "0.0", "0.857143", "0"),
+            ("51", "4.0", "0.0", "0.0", "0.0", "0.0", "1.0", "0"),
+            ("0", "None", "None", "None", "0.0", "0.0", "None", "0"),
+            ("None", "None", "None", "None", "None", "None", "None", "None"),
+        ],
+    ),
+    "IntraDocDedupRefiner": (
+        ("text_deduped", "dup_units_removed"),
+        "7015e03f9c781f29",
+    ),
+    "IntraDocDedupRefiner-sep": (
+        ("td", "dup_units_removed"),
+        "fc840d92b454b4f3",
+    ),
+    "LanguageIdRefiner": (
+        ("lang_pred", "lang_score"),
+        [
+            ("es", "4"), ("und", "0"), ("en", "2"), ("und", "0"), ("und", "0"), ("und", "0"),
+            ("und", "0"), ("und", "0"),
+        ],
+    ),
+    "QualityScoreRefiner": (
+        ("stopword_ratio", "quality_score"),
+        [
+            ("0.176471", "0.298706"), ("0.0", "0.32"), ("0.2", "0.62"), ("0.090909", "0.458364"),
+            ("0.0", "0.314"), ("0.0", "0.402"), ("0.0", "0.0"), ("0.0", "0.0"),
+        ],
+    ),
+    "RepetitionStatsRefiner": (
+        ("dup_word_ratio", "top_bigram_ratio"),
+        [
+            ("0.058824", "0.0625"), ("0.5", "0.333333"), ("0.0", "0.111111"), ("0.090909", "0.1"),
+            ("0.285714", "0.333333"), ("0.980392", "1.0"), ("0.0", "0.0"), ("0.0", "0.0"),
+        ],
+    ),
+    "TextStatsRefiner": (
+        ("text_length", "token_count", "avg_token_len"),
+        [
+            ("62", "17", "2.705882"), ("57", "10", "4.8"), ("57", "10", "4.8"),
+            ("59", "11", "4.454545"), ("27", "7", "3.0"), ("254", "51", "4.0"), ("0", "0", "0.0"),
+            ("0", "0", "0.0"),
+        ],
+    ),
+    "TextStatsRefiner-lencol": (
+        ("text_length", "token_count", "avg_token_len"),
+        [
+            ("62", "17", "2.705882"), ("57", "10", "4.8"), ("57", "10", "4.8"),
+            ("59", "11", "4.454545"), ("27", "7", "3.0"), ("254", "51", "4.0"), ("0", "0", "0.0"),
+            ("0", "0", "0.0"),
+        ],
+    ),
+}
+SHINGLE_DIGESTS = {1: "e01a01a78bcab50e", 2: "eab2ee23b069fc1a", 3: "268536ccf25b462e", 4: "088fc483c399f2b0"}
+HASH64_VALUES = {
+    "a'b\\c": [
+        6693868686953206, 745063320733447559, 604011744762932156, 949563868019388666,
+        667489273257699504, 873698094772337695, 440733046328359732, None,
+    ],
+    "wds": [
+        422479339523683900, 874749748505842215, 780561666691431165, 752648430322637717,
+        45666413000324319, 401667895037123714, 1093123634929896587, None,
+    ],
+    0: [
+        857008399020163243, 990730419064407122, 1122539966698494073, 758191114014412069,
+        296012544581474862, 206907513558021784, 635800711565145161, None,
+    ],
+    7: [
+        731055146240677273, 61963173173411831, 827830337093679286, 551075714614295735,
+        326333222002252689, 665078909663050555, 67608196039695984, None,
+    ],
+    None: [
+        204105304346243653, 525550377177666144, 18721393713730023, 411853922149811988,
+        748964470201536578, 532526309055441580, 955282973525019424, None,
+    ],
+}
+MINHASH_BANDS = (168, "c682e44974a93cff")
+# keep() per doc_id
+KEEP_VALUES = {
+    "C4PageFilter": [False, False, False, False, False, False, False, False],
+    "GopherQualityFilter": [False, False, False, False, False, False, False, False],
+    "GopherQualityFilter-wide": [False, True, False, True, False, True, False, False],
+    "NumericRangeFilter": [False, False, False, False, False, False, False, False],
+    "NumericRangeFilter-backtick": [False, True, False, True, False, True, True, True],
+    "NumericRangeFilter-inf": [False, True, False, True, False, True, True, True],
+    "NumericRangeFilter-lo": [False, True, False, True, False, True, True, True],
+    "NumericRangeFilter-wide": [True, True, True, True, True, True, True, True],
+    "TextLengthFilter": [True, True, True, True, True, True, False, False],
+    "TextLengthFilter-lencol": [True, True, True, True, True, True, False, False],
+    "TextLengthFilter-wide": [True, True, True, True, True, True, False, False],
+}
+# (pipeline tag digest, standalone survivors, standalone rejections digest)
+DEDUP_VALUES = {
+    "KeyDedup-backtick": ("4de71b7ca7b7012b", [0, 1, 3], "5c48f87fe2f5e095"),
+    "KeyDedup-distinct": ("ee02562c1320c91b", [0, 1, 2, 3, 4, 5, 7, 8, 10, 11], "c67d5b3e091454f3"),
+    "KeyDedup-multi": ("5e3fb3ceed9d4fef", [0, 1, 2, 3, 4, 6, 8], "467807eb79b8c19a"),
+    "KeyDedup-multi-distinct": (
+        "b315f15dc7d81574", [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11], "4f53cda18c2baa0c"
+    ),
+    "KeyDedup-single": ("4de71b7ca7b7012b", [0, 1, 3], "5c48f87fe2f5e095"),
+    "TextExact": ("c48ac2778b8e411d", [0, 1, 2, 3, 4, 5, 6, 7, 10], "2b8a187a999d8a27"),
+    "TextExact-backtick": ("c48ac2778b8e411d", [0, 1, 2, 3, 4, 5, 6, 7, 10], "2b8a187a999d8a27"),
+    "TextExact-nocollapse": (
+        "9119257a9b9abdde", [0, 1, 2, 3, 4, 5, 6, 7, 8, 10], "3990a44bd651b454"
+    ),
+    "TextExact-url": (
+        "b315f15dc7d81574", [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11], "4f53cda18c2baa0c"
+    ),
+}
+# IncrementalKeyDeduplicator keys on the dedup fixture, per null_keys mode and key width
+INCREMENTAL_KEYS = {
+    "distinct-1": [
+        "http://ex.com/0", "\x00N\x1f1", "\x00N\x1f2", "http://ex.com/1", "\x00N\x1f4",
+        "\x00N\x1f5", "http://ex.com/0", "\x00N\x1f7", "\x00N\x1f8", "http://ex.com/1",
+        "\x00N\x1f10", "\x00N\x1f11",
+    ],
+    "distinct-2": [
+        "http://ex.com/0\x1f62", "\x00N\x1f1", "\x00N\x1f2", "\x00N\x1f3", "\x00N\x1f4",
+        "\x00N\x1f5", "http://ex.com/0\x1f0", "\x00N\x1f7", "\x00N\x1f8", "\x00N\x1f9",
+        "\x00N\x1f10", "\x00N\x1f11",
+    ],
+    "group-1": [
+        "http://ex.com/0", "\x00", "\x00", "http://ex.com/1", "\x00", "\x00", "http://ex.com/0",
+        "\x00", "\x00", "http://ex.com/1", "\x00", "\x00",
+    ],
+    "group-2": [
+        "http://ex.com/0\x1f62", "\x00\x1f\x00", "\x00\x1f57", "http://ex.com/1\x1f\x00",
+        "\x00\x1f27", "\x00\x1f\x00", "http://ex.com/0\x1f0", "\x00\x1f\x00", "\x00\x1f65",
+        "http://ex.com/1\x1f\x00", "\x00\x1f\x00", "\x00\x1f\x00",
+    ],
+}
+SIMHASH_VALUES = [
+    23362502065276022, 291911740260876648, 655581812052119459, 358778491737064154,
+    213035601231147633, 60093474051096336, 955282973525019424, None, 23362502065276022,
+    655581812052119459, None, 955282973525019424,
+]
+
+# --------------------------------------------------------------- helpers
+
+
+def _digest(rows) -> str:
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
+
+
+def _check(rows, expected) -> None:
+    assert (_digest(rows) if isinstance(expected, str) else rows) == expected
+
+
+def _str_rows(df, cols, order="doc_id"):
+    return [tuple(str(r[c]) for c in cols) for r in df.orderBy(order).collect()]
+
+
+def _fixture_df(spark, rows=ROWS):
+    return spark.createDataFrame(rows, "doc_id long, text string").withColumn(
         "n_chars", F.when(F.col("doc_id") % 2 == 0, F.length("text"))
     )
 
 
-def _analyzed(df) -> str:
-    return df._jdf.queryExecution().analyzed().toString()
+def _with_tags(df, dead_id: int | None = None):
+    """Add the tag column; ``dead_id``'s row arrives already rejected."""
+    tag = F.lit(None).cast(REJECTION_STRUCT_DDL)
+    if dead_id is not None:
+        tag = F.when(F.col("doc_id") == dead_id, rejection_details("filtered", "Pre")).otherwise(tag)
+    return df.withColumn("_rejection_details", tag)
+
+
+def _pipe() -> Pipeline:
+    pipe = Pipeline.__new__(Pipeline)
+    pipe._expr_cache = {}
+    pipe._mid_cached = []
+    return pipe
 
 
 def _norm(plan: str) -> str:
-    plan = re.sub(r"#\d+", "#N", plan)
-    # pyspark's _unresolved_named_lambda_variable appends a fresh counter
-    # to its fixed x/y/z binder names; the SQL text spells them bare. The
-    # name is cosmetic (references bind by expression id, already
-    # normalized above) — but only the SUFFIX is normalized, so a twin
-    # that swapped binders (x for y) would still fail the diff.
-    return re.sub(r"lambda ([xyz])_\d+", r"lambda \1", plan)
+    return re.sub(r"#\d+", "#N", plan)
 
 
-def _both_paths(make_refiner, df):
-    fast = make_refiner().apply(df)
-    orig = R.sql_plain_column
-    R.sql_plain_column = lambda c: None
-    try:
-        slow = make_refiner().apply(df)
-    finally:
-        R.sql_plain_column = orig
-    return fast, slow
+def _analyzed(df) -> str:
+    return _norm(df._jdf.queryExecution().analyzed().toString())
+
+
+# -------------------------------------------------------------- refiners
 
 
 @pytest.mark.parametrize("make_refiner", REFINERS)
 def test_fast_path_tree_identical(spark, make_refiner):
+    """The Column form IS the parsed SQL text: withColumns over
+    ``columns()`` analyzes to the same tree as a selectExpr of
+    ``columns_sql_text()`` — there is no second rendering to drift."""
     df = _fixture_df(spark)
-    fast, slow = _both_paths(make_refiner, df)
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "SQL-text twin drifted from the composed tree:\n" + "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
+    op = make_refiner()
+    texts = op.columns_sql_text(df)
+    via_columns = df.withColumns(op.columns(df))
+    via_text = df.selectExpr("*", *[f"{s} AS {sql_ident(k, literal=True)}" for k, s in texts.items()])
+    assert _analyzed(via_columns) == _analyzed(via_text)
 
 
 @pytest.mark.parametrize("make_refiner", REFINERS)
-def test_fast_path_values_identical(spark, make_refiner):
+def test_fast_path_values_identical(spark, make_refiner, request):
+    cols, expected = REFINER_VALUES[request.node.callspec.id]
+    out = make_refiner().apply(_fixture_df(spark))
+    _check(_str_rows(out, cols), expected)
+
+
+@pytest.mark.parametrize("make_refiner", REFINERS)
+def test_pipeline_refiner_projection_twin(spark, make_refiner, request):
+    """The pipeline's one-selectExpr projection (alive gate folded into
+    each CASE): the pinned values on alive rows, NULL on the dead row."""
+    cols, expected = REFINER_VALUES[request.node.callspec.id]
     df = _fixture_df(spark)
-    fast, slow = _both_paths(make_refiner, df)
-    rows_f = [tuple(str(v) for v in r) for r in fast.orderBy("doc_id").collect()]
-    rows_s = [tuple(str(v) for v in r) for r in slow.orderBy("doc_id").collect()]
-    assert rows_f == rows_s
+    alive = _str_rows(make_refiner().apply(df), cols)
+    _check(alive, expected)
+    out = _pipe()._apply(_with_tags(df, dead_id=1), make_refiner())
+    dead = tuple("None" for _ in cols)
+    assert _str_rows(out, cols) == [dead if i == 1 else row for i, row in enumerate(alive)]
+
+
+def test_pipeline_refiner_projection_collision_falls_back(spark):
+    """An output name that already exists is replaced IN PLACE inside the
+    one selectExpr — matched case-insensitively, keeping its position, as
+    withColumns would; new names append after."""
+    df = _with_tags(_fixture_df(spark)).withColumn("TOKEN_COUNT", F.lit(-1))
+    out = _pipe()._apply(df, R.TextStatsRefiner())
+    assert out.columns == [
+        "doc_id", "text", "n_chars", "_rejection_details", "token_count", "text_length", "avg_token_len"
+    ]
+    cols, expected = REFINER_VALUES["TextStatsRefiner"]
+    _check(_str_rows(out, cols), expected)
+
+
+def test_fast_path_actually_dispatches(spark):
+    """Every operator of the lists above authors SQL text for every
+    parameterization, and identifiers render the way F.col reads them."""
+    df = _with_tags(_fixture_df(spark)).withColumn("url", F.lit("u")).withColumn("score", F.lit(0.5))
+    for p in REFINERS:
+        assert p.values[0]().columns_sql_text(df) is not None, p.id
+    for p in FILTERS:
+        assert p.values[0]().predicate_sql(df) is not None, p.id
+    for p in DEDUPS:
+        assert p.values[0]().key_sql(df) is not None, p.id
+    assert sql_ident("text") == "`text`"
+    assert sql_ident("meta.text") == "`meta`.`text`"
+    assert sql_ident("`a.b`.c") == "`a.b`.`c`"
+    assert sql_ident("`te``xt`") == "`te``xt`"
+    assert sql_ident("te`xt") == "`te``xt`"  # F.col rejects it: one literal name
+    assert sql_ident("a.b", literal=True) == "`a.b`"
+    with pytest.raises(TypeError):
+        sql_ident(F.col("text"))
+
+
+# ------------------------------------------------------- shared builders
 
 
 @pytest.mark.parametrize("n", [1, 2, 3, 4])
 def test_word_shingles_twin(spark, n):
-    """word_shingles' SQL-text fast path (round 12): identical analyzed
-    tree and values vs the composed nested-lambda form, across shingle
-    widths — this expression feeds every oracle-anchored dedup key
-    (MinHash bands, ngram Jaccard, decontamination), so the bar is plan
-    equality, not just value equality."""
-    import mega_data_factory_spark.functions.text as T
-
     df = _fixture_df(spark)
-    fast = df.select(T.word_shingles("text", n).alias("s"))
-    orig = T.sql_plain_column
-    T.sql_plain_column = lambda c: None
-    try:
-        slow = df.select(T.word_shingles("text", n).alias("s"))
-    finally:
-        T.sql_plain_column = orig
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
-    rows_f = [str(r) for r in fast.collect()]
-    rows_s = [str(r) for r in slow.collect()]
-    assert rows_f == rows_s
-    # and the fast path must actually engage for a plain name
-    assert "pythonUDF" not in _analyzed(fast)  # sanity: still pure SQL exprs
+    rows = [str(r[0]) for r in df.orderBy("doc_id").select(word_shingles("text", n)).collect()]
+    assert _digest(rows) == SHINGLE_DIGESTS[n]
 
 
 @pytest.mark.parametrize("seed", [None, 0, 7, "wds", "a'b\\c"])
 def test_hash64_twin(spark, seed):
-    """hash64_from_md5's SQL-text fast path: identical analyzed tree and
-    values vs the composed form, including seeds that need SQL string
-    escaping."""
-    import mega_data_factory_spark.functions.hashing as H
-    from pyspark.sql import functions as F
-
     df = _fixture_df(spark)
-    fast = df.select(H.hash64_from_md5("text", seed=seed).alias("h"))
-    slow = df.select(H.hash64_from_md5(F.col("text"), seed=seed).alias("h"))
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
-    assert [str(r) for r in fast.collect()] == [str(r) for r in slow.collect()]
-
-
-FILTERS = [
-    pytest.param(
-        lambda: __import__("mega_data_factory_spark.operators.filters", fromlist=["x"]).NumericRangeFilter(
-            column="score", lo=1, hi=0.6, name="RangeCut"
-        ),
-        id="NumericRangeFilter",
-    ),
-    pytest.param(
-        lambda: __import__("mega_data_factory_spark.operators.filters", fromlist=["x"]).NumericRangeFilter(
-            column="score", lo=0.3, name="LoOnly"
-        ),
-        id="NumericRangeFilter-lo",
-    ),
-    pytest.param(
-        lambda: __import__("mega_data_factory_spark.operators.filters", fromlist=["x"]).TextLengthFilter(
-            min_length=5, max_length=1000
-        ),
-        id="TextLengthFilter",
-    ),
-    pytest.param(
-        lambda: __import__("mega_data_factory_spark.operators.filters", fromlist=["x"]).TextLengthFilter(
-            min_length=5, max_length=1000, length_col="n_chars"
-        ),
-        id="TextLengthFilter-lencol",
-    ),
-    pytest.param(
-        lambda: __import__("mega_data_factory_spark.operators.filters", fromlist=["x"]).GopherQualityFilter(),
-        id="GopherQualityFilter",
-    ),
-    pytest.param(
-        lambda: __import__("mega_data_factory_spark.operators.filters", fromlist=["x"]).C4PageFilter(),
-        id="C4PageFilter",
-    ),
-]
-
-
-def _filter_fixture(spark):
-    from pyspark.sql import functions as F
-
-    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
-    from mega_data_factory_spark.operators.refiners import (
-        C4HeuristicRefiner,
-        GopherQualityRefiner,
-    )
-
-    df = (
-        _fixture_df(spark)
-        .withColumn("score", (F.col("doc_id") * 7 % 13).cast("double") / 10)
-        .withColumn("_rejection_details", F.lit(None).cast(REJECTION_STRUCT_DDL))
-    )
-    df = df.withColumns(GopherQualityRefiner().columns(df))
-    df = C4HeuristicRefiner().apply(df)  # columns + derived (c4_sentences)
-    return df
-
-
-@pytest.mark.parametrize("make_filter", FILTERS)
-def test_filter_tag_twin(spark, make_filter):
-    """The pipeline's filter tag (alive gate + keep coalesce + rejection
-    struct) authored as one SQL expr must be tree- and value-identical to
-    the composed form — for every filter class exposing predicate_sql."""
-    from mega_data_factory_spark.plans.pipeline import Pipeline
-
-    df = _filter_fixture(spark)
-
-    def tag(force_composed: bool):
-        op = make_filter()
-        assert op.predicate_sql(df) is not None, "twin must dispatch on this fixture"
-        if force_composed:
-            op.predicate_sql = lambda df: None  # instance shadow: composed path
-        pipe = Pipeline.__new__(Pipeline)
-        pipe._expr_cache = {}
-        pipe._mid_cached = []
-        return pipe._apply(df, op)
-
-    fast, slow = tag(False), tag(True)
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
-    rows_f = [str(r) for r in fast.orderBy("doc_id").collect()]
-    rows_s = [str(r) for r in slow.orderBy("doc_id").collect()]
-    assert rows_f == rows_s
-
-
-@pytest.mark.parametrize("make_filter", FILTERS)
-def test_filter_keep_twin(spark, make_filter):
-    """Filter.keep()'s fast path (used by apply()/rejected() outside the
-    pipeline) must match the composed coalesce(predicate, false)."""
-    df = _filter_fixture(spark)
-    op_fast, op_slow = make_filter(), make_filter()
-    op_slow.predicate_sql = lambda df: None
-    fast = df.select(op_fast.keep(df).alias("k"))
-    slow = df.select(op_slow.keep(df).alias("k"))
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
-    assert [str(r) for r in fast.collect()] == [str(r) for r in slow.collect()]
-
-
-def test_filter_twin_refuses_unspellable(spark):
-    """Parameterizations with no faithful SQL spelling must fall back."""
-    from mega_data_factory_spark.operators.filters import NumericRangeFilter
-
-    df = _filter_fixture(spark)
-    assert NumericRangeFilter(column="sc`ore", lo=1).predicate_sql(df) is None
-    assert NumericRangeFilter(column="score", lo=2**40).predicate_sql(df) is None
-    assert NumericRangeFilter(column="score", lo=float("inf")).predicate_sql(df) is None
-
-
-@pytest.mark.parametrize("make_refiner", REFINERS)
-def test_pipeline_refiner_projection_twin(spark, make_refiner):
-    """Pipeline._apply's one-selectExpr refiner projection (alive gate
-    folded into each CASE) must be tree- and value-identical to the
-    composed withColumns-of-F.when path — for every refiner exposing
-    columns_sql_text, including with dead rows present."""
-    from pyspark.sql import functions as F
-
-    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
-    from mega_data_factory_spark.plans.pipeline import Pipeline
-
-    df = _fixture_df(spark).withColumn(
-        "_rejection_details",
-        F.when(
-            F.col("doc_id") == 1,
-            F.expr(
-                "struct(cast('filtered' as string) AS reason, cast('Pre' as string) AS operator, "
-                "cast(null as string) AS dedup_key, cast(null as string) AS representative_id)"
-            ),
-        ).otherwise(F.lit(None).cast(REJECTION_STRUCT_DDL)),
-    )
-
-    def applied(force_composed: bool):
-        op = make_refiner()
-        assert op.columns_sql_text(df) is not None, "twin must dispatch on this fixture"
-        if force_composed:
-            op.columns_sql_text = lambda df: None  # instance shadow
-        pipe = Pipeline.__new__(Pipeline)
-        pipe._expr_cache = {}
-        pipe._mid_cached = []
-        return pipe._apply(df, op)
-
-    fast, slow = applied(False), applied(True)
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
-    rows_f = [str(r) for r in fast.orderBy("doc_id").collect()]
-    rows_s = [str(r) for r in slow.orderBy("doc_id").collect()]
-    assert rows_f == rows_s
-
-
-def test_pipeline_refiner_projection_collision_falls_back(spark):
-    """selectExpr('*', x AS c) cannot REPLACE an existing column the way
-    withColumns does — a refiner whose output name already exists in the
-    frame must take the composed path (which replaces in place)."""
-    from pyspark.sql import functions as F
-
-    import mega_data_factory_spark.operators.refiners as R
-    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
-    from mega_data_factory_spark.plans.pipeline import Pipeline
-
-    df = (
-        _fixture_df(spark)
-        .withColumn("_rejection_details", F.lit(None).cast(REJECTION_STRUCT_DDL))
-        .withColumn("token_count", F.lit(-1))  # collides with TextStats output
-    )
-    pipe = Pipeline.__new__(Pipeline)
-    pipe._expr_cache = {}
-    pipe._mid_cached = []
-    out = pipe._apply(df, R.TextStatsRefiner())
-    # exactly ONE token_count column, replaced in place
-    assert out.columns.count("token_count") == 1
-    vals = {r["doc_id"]: r["token_count"] for r in out.collect()}
-    assert vals[0] != -1  # replaced, not kept
-
-
-def _make_dedups():
-    from mega_data_factory_spark.operators.dedup import KeyDeduplicator, TextExactDeduplicator
-
-    return [
-        pytest.param(lambda: TextExactDeduplicator(), id="TextExact"),
-        pytest.param(lambda: TextExactDeduplicator(url_col="url", lowercase=False), id="TextExact-url"),
-        pytest.param(
-            lambda: TextExactDeduplicator(collapse_whitespace=False, name="Exact2"),
-            id="TextExact-nocollapse",
-        ),
-        pytest.param(
-            lambda: KeyDeduplicator(["url"], order_col="doc_id"), id="KeyDedup-single"
-        ),
-        pytest.param(
-            lambda: KeyDeduplicator(["url", "n_chars"], order_col="doc_id"), id="KeyDedup-multi"
-        ),
-        pytest.param(
-            lambda: KeyDeduplicator(["url"], order_col="doc_id", null_keys="distinct"),
-            id="KeyDedup-distinct",
-        ),
-        pytest.param(
-            lambda: KeyDeduplicator(["url", "n_chars"], order_col="doc_id", null_keys="distinct"),
-            id="KeyDedup-multi-distinct",
-        ),
-    ]
-
-
-def _dedup_fixture(spark):
-    from pyspark.sql import functions as F
-
-    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
-
-    return (
-        _fixture_df(spark)
-        .withColumn(
-            "url",
-            F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit("http://ex.com/"), (F.col("doc_id") % 2).cast("string"))),
-        )
-        .withColumn(
-            "_rejection_details",
-            F.when(
-                F.col("doc_id") == 5,
-                F.expr(
-                    "struct(cast('filtered' as string) AS reason, cast('Pre' as string) AS operator, "
-                    "cast(null as string) AS dedup_key, cast(null as string) AS representative_id)"
-                ),
-            ).otherwise(F.lit(None).cast(REJECTION_STRUCT_DDL)),
-        )
-    )
-
-
-@pytest.mark.parametrize("make_dedup", _make_dedups())
-def test_key_dedup_tag_twin(spark, make_dedup):
-    """The pipeline's window dedup tag authored as one SQL expr must be
-    tree- and value-identical to the composed form — across key shapes,
-    url composites, both null_keys modes, and with dead rows present."""
-    from mega_data_factory_spark.plans.pipeline import Pipeline
-
-    df = _dedup_fixture(spark)
-
-    def tag(force_composed: bool):
-        op = make_dedup()
-        assert op.effective_key_sql(df) is not None, "twin must dispatch on this fixture"
-        if force_composed:
-            op.effective_key_sql = lambda df: None  # instance shadow
-        pipe = Pipeline.__new__(Pipeline)
-        pipe._expr_cache = {}
-        pipe._mid_cached = []
-        return pipe._apply(df, op)
-
-    fast, slow = tag(False), tag(True)
-    a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-    assert a == b, "\n".join(
-        f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-    )
-    rows_f = [str(r) for r in fast.orderBy("doc_id").collect()]
-    rows_s = [str(r) for r in slow.orderBy("doc_id").collect()]
-    assert rows_f == rows_s
-
-
-def test_key_dedup_twin_refuses_unspellable(spark):
-    from mega_data_factory_spark.operators.dedup import (
-        IncrementalKeyDeduplicator,
-        KeyDeduplicator,
-        TextExactDeduplicator,
-    )
-
-    df = _dedup_fixture(spark)
-    assert TextExactDeduplicator(text_col="te`xt").key_sql(df) is None
-    assert KeyDeduplicator(["u`rl"], order_col="doc_id").key_sql(df) is None
-    # IncrementalKeyDeduplicator's key() wraps extra sentinels — it must
-    # NOT inherit the TextExact twin
-    inc = IncrementalKeyDeduplicator.__new__(IncrementalKeyDeduplicator)
-    assert IncrementalKeyDeduplicator.key_sql(inc, df) is None
-
-
-@pytest.mark.parametrize("make_dedup", _make_dedups())
-@pytest.mark.parametrize("force_composed_key", [False, True], ids=["twin-key", "composed-key"])
-def test_standalone_dedup_twin(spark, make_dedup, force_composed_key):
-    """Deduplicator.apply()/rejected() on the STANDALONE query path (the
-    pipeline tag has its own pinned twin) must be tree- and value-identical
-    to the pre-twin composed construction, replicated verbatim below. The
-    composed-key variant forces effective_key_sql -> None, pinning the
-    unconditional string-filter and rejection-struct spellings on their
-    own."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from mega_data_factory_spark.operators.base import (
-        REJECTION_DETAILS_COL,
-        rejection_details,
-    )
-
-    df = _dedup_fixture(spark)
-
-    op = make_dedup()
-    assert op.effective_key_sql(df) is not None, "twin must dispatch on this fixture"
-    if force_composed_key:
-        op.effective_key_sql = lambda df: None  # instance shadow
-    fast_surv, fast_rej = op.apply(df), op.rejected(df)
-
-    # the pre-twin composed construction, replicated verbatim
-    ref = make_dedup()
-    w = Window.partitionBy(F.col("__dedup_key")).orderBy(F.col(ref.order_col))
-    ranked = (
-        df.withColumn("__dedup_key", ref._effective_key(df))
-        .withColumn("__rn", F.row_number().over(w))
-        .withColumn("__rep", F.first(F.col(ref.id_col)).over(w))
-    )
-    slow_surv = ranked.filter(F.col("__rn") == 1).drop("__dedup_key", "__rn", "__rep")
-    slow_rej = (
-        ranked.filter(F.col("__rn") > 1)
-        .withColumn(
-            REJECTION_DETAILS_COL,
-            rejection_details(
-                "duplicate", ref.name, F.col("__dedup_key"), F.col("__rep").cast("string")
-            ),
-        )
-        .drop("__dedup_key", "__rn", "__rep")
-    )
-
-    for fast, slow in ((fast_surv, slow_surv), (fast_rej, slow_rej)):
-        a, b = _norm(_analyzed(fast)), _norm(_analyzed(slow))
-        assert a == b, "\n".join(
-            f"fast: {x}\nslow: {y}" for x, y in zip(a.splitlines(), b.splitlines()) if x != y
-        )
-        rows_f = [str(r) for r in fast.orderBy("doc_id").collect()]
-        rows_s = [str(r) for r in slow.orderBy("doc_id").collect()]
-        assert rows_f == rows_s
-
-
-def test_fast_path_actually_dispatches(spark):
-    """The fast path must engage for plain string column names (the guard
-    against a silent fallback that would quietly re-pay the py4j cost)."""
-    df = _fixture_df(spark)
-    for p in REFINERS:
-        make = p.values[0]
-        r = make()
-        assert r.columns_sql_text(df) is not None, type(r).__name__
-    # and the plain-column detector must refuse anything it cannot safely
-    # interpolate into SQL text: backtick-carrying names (F.col cannot
-    # parse those either — the composed fallback's pre-existing limit, not
-    # a twin regression) and Column objects.
-    from pyspark.sql import functions as F
-
-    assert R.sql_plain_column("te`xt") is None
-    assert R.sql_plain_column(F.col("text")) is None
+    got = [r[0] for r in df.orderBy("doc_id").select(hash64_from_md5("text", seed=seed)).collect()]
+    assert got == HASH64_VALUES[seed]
 
 
 def test_minhash_band_ids_twin(spark):
-    """The MinHash signature aggregates and band fold are authored as SQL
-    expr strings (round-12 py4j batch) yet are the bit-for-bit cross-engine
-    key contract with the DuckDB oracle mirror — r12 advice: pin them
-    against the pre-rewrite composed construction (replicated verbatim
-    below) the way test_standalone_dedup_twin pins the ranked triple, so a
-    future edit to the fold spelling cannot silently drift the key."""
-    from pyspark.sql import functions as F
-
-    from mega_data_factory_spark.functions.hashing import hash64_from_md5
-    from mega_data_factory_spark.functions.text import word_shingles
-    from mega_data_factory_spark.operators.dedup import (
-        MinHashLSHDeduplicator,
-        minhash_hash_family,
-    )
-
+    """The MinHash band fold reuses hash64_from_md5's SQL text; the band
+    ids are the bit-for-bit key contract with the DuckDB mirror."""
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
     rows = [
         (i, " ".join(words[(i + j) % len(words)] for j in range(9)) + f" tail{i % 5}")
         for i in range(40)
     ] + [(100, None), (101, ""), (102, "short")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    bands = sorted(map(tuple, D.MinHashLSHDeduplicator(num_hashes=8, bands=4)._band_ids(df).collect()))
+    assert (len(bands), hashlib.sha256(repr(bands).encode()).hexdigest()[:16]) == MINHASH_BANDS
 
-    op = MinHashLSHDeduplicator(num_hashes=8, bands=4)
-    fast = op._band_ids(df)
 
-    # pre-rewrite composed construction, replicated verbatim
-    exploded = df.select(
-        F.col(op.id_col),
-        F.explode(F.array_distinct(word_shingles(op.text_col, op.shingle_n))).alias("__s"),
-    ).select(F.col(op.id_col), hash64_from_md5("__s").alias("__bh"))
-    sig = exploded.groupBy(op.id_col).agg(
-        *[
-            F.min(minhash_hash_family(F.col("__bh"), i)).alias(f"__m{i}")
-            for i in range(op.num_hashes)
-        ]
+# --------------------------------------------------------------- filters
+
+
+def _filter_fixture(spark):
+    df = _with_tags(_fixture_df(spark)).withColumn("score", (F.col("doc_id") * 7 % 13).cast("double") / 10)
+    df = R.GopherQualityRefiner().apply(df)
+    return R.C4HeuristicRefiner().apply(df)
+
+
+def _keep(df, op):
+    return [r[0] for r in df.orderBy("doc_id").select(op.keep(df)).collect()]
+
+
+@pytest.mark.parametrize("make_filter", FILTERS)
+def test_filter_keep_twin(spark, make_filter, request):
+    assert _keep(_filter_fixture(spark), make_filter()) == KEEP_VALUES[request.node.callspec.id]
+
+
+@pytest.mark.parametrize("make_filter", FILTERS)
+def test_filter_tag_twin(spark, make_filter, request):
+    """The pipeline's filter tag rejects exactly the rows the pinned keep
+    flags reject, with the 'filtered' struct naming the operator."""
+    op = make_filter()
+    out = _pipe()._apply(_filter_fixture(spark), op)
+    tags = [r[0] for r in out.orderBy("doc_id").select("_rejection_details").collect()]
+    for keep, tag in zip(KEEP_VALUES[request.node.callspec.id], tags):
+        assert (tag is None) == keep
+        assert keep or (tag["reason"], tag["operator"]) == ("filtered", op.name)
+
+
+def test_filter_twin_refuses_unspellable(spark):
+    """Parameterizations the two-rendering code could only build as
+    Columns — ints wider than 32 bits, an infinite bound, a
+    backtick-carrying column name — are spelled in SQL and keep their
+    values; the pipeline tag agrees with keep() for each."""
+    df = _filter_fixture(spark)
+    cases = {
+        "NumericRangeFilter-wide": Fi.NumericRangeFilter(column="score", lo=-(2**40), hi=2**40),
+        "NumericRangeFilter-inf": Fi.NumericRangeFilter(column="score", lo=0.3, hi=float("inf")),
+        "TextLengthFilter-wide": Fi.TextLengthFilter(min_length=5, max_length=2**40),
+        "GopherQualityFilter-wide": Fi.GopherQualityFilter(min_words=1, max_words=2**40, min_stopwords=0),
+    }
+    for key, op in cases.items():
+        assert _keep(df, op) == KEEP_VALUES[key], key
+        tags = [r[0] for r in _pipe()._apply(df, op).orderBy("doc_id").select("_rejection_details").collect()]
+        assert [t is None for t in tags] == KEEP_VALUES[key], key
+    bdf = df.withColumnRenamed("score", "sc`ore")
+    op = Fi.NumericRangeFilter(column="`sc``ore`", lo=0.3)
+    assert _keep(bdf, op) == KEEP_VALUES["NumericRangeFilter-backtick"]
+
+
+# ---------------------------------------------------------------- dedups
+
+
+def _dedup_fixture(spark):
+    df = _fixture_df(spark, DUP_ROWS).withColumn(
+        "url",
+        F.when(F.col("doc_id") % 3 == 0, F.concat(F.lit("http://ex.com/"), (F.col("doc_id") % 2).cast("string"))),
     )
+    return _with_tags(df, dead_id=5)
 
-    def band_col(b: int):
-        ms = F.concat_ws(
-            ",",
-            *[
-                F.col(f"__m{b * op.rows_per_band + r}").cast("string")
-                for r in range(op.rows_per_band)
-            ],
-        )
-        return hash64_from_md5(F.concat_ws("_", F.lit(str(b)), ms))
 
-    slow = sig.select(
-        F.col(op.id_col),
-        F.explode(F.array(*[band_col(b) for b in range(op.bands)])).alias("__band_key"),
-    )
+def _dedup_values(make, df):
+    tag = [str(r[0]) for r in _pipe()._apply(df, make()).orderBy("doc_id").select("_rejection_details").collect()]
+    surv = [r[0] for r in make().apply(df).orderBy("doc_id").select("doc_id").collect()]
+    rej = [
+        (r[0], str(r[1]))
+        for r in make().rejected(df).orderBy("doc_id").select("doc_id", "_rejection_details").collect()
+    ]
+    return _digest(tag), surv, _digest(rej)
 
-    got = sorted(map(tuple, fast.collect()))
-    want = sorted(map(tuple, slow.collect()))
-    assert got == want and len(got) > 0
+
+@pytest.mark.parametrize("make_dedup", DEDUPS)
+def test_key_dedup_tag_twin(spark, make_dedup, request):
+    """Pipeline tag (dead-row sentinel, effective key, window ranking,
+    rejection struct), standalone survivors and standalone rejections."""
+    assert _dedup_values(make_dedup, _dedup_fixture(spark)) == DEDUP_VALUES[request.node.callspec.id]
+
+
+def _column_key(make):
+    """The same operator with its key authored as a Column (key_sql None),
+    which the key wrappers read from the bound RAW_KEY_COL."""
+
+    def build():
+        op = make()
+        key_sql = op.key_sql
+        op.key = lambda df: F.expr(key_sql(df))
+        op.key_sql = lambda df: None
+        return op
+
+    return build
+
+
+@pytest.mark.parametrize("make_dedup", DEDUPS)
+@pytest.mark.parametrize("force_composed_key", [False, True], ids=["twin-key", "composed-key"])
+def test_standalone_dedup_twin(spark, make_dedup, force_composed_key, request):
+    """Standalone apply()/rejected(), for a SQL-authored key and for the
+    same key authored as a Column — both give the pinned values."""
+    make = _column_key(make_dedup) if force_composed_key else make_dedup
+    _, surv, rej = _dedup_values(make, _dedup_fixture(spark))
+    key = request.node.callspec.id.split("-", 2)[-1]
+    assert (surv, rej) == DEDUP_VALUES[key][1:]
+
+
+def test_key_dedup_twin_refuses_unspellable(spark):
+    """Backtick-carrying column names (F.col-quoted) are spelled in SQL and
+    keep their values; the store-safe incremental key keeps its NULL
+    sentinels in both null_keys modes; the simhash key its bits."""
+    df = _dedup_fixture(spark)
+    bdf = df.withColumnRenamed("text", "te`xt").withColumnRenamed("url", "u`rl")
+    got = _dedup_values(lambda: D.TextExactDeduplicator(text_col="`te``xt`"), bdf)
+    assert got == DEDUP_VALUES["TextExact-backtick"]
+    got = _dedup_values(lambda: D.KeyDeduplicator(["`u``rl`"], order_col="doc_id"), bdf)
+    assert got == DEDUP_VALUES["KeyDedup-backtick"]
+    for key, expected in INCREMENTAL_KEYS.items():
+        mode, n = key.split("-")
+        cols = ["url", "n_chars"][: int(n)]
+        op = D.IncrementalKeyDeduplicator("/nonexistent", cols, id_col="doc_id", null_keys=mode)
+        assert [r[0] for r in df.orderBy("doc_id").select(op.key(df)).collect()] == expected, key
+    assert [r[0] for r in df.orderBy("doc_id").select(D.simhash64("text")).collect()] == SIMHASH_VALUES

@@ -523,7 +523,7 @@ def test_legacy_string_band_store_guarded_and_migrated(spark, tmp_path):
     exploded = hist.select(
         "doc_id",
         F.explode(F.array_distinct(word_shingles("text", shingle_n))).alias("__s"),
-    ).select("doc_id", hash64_from_md5(F.col("__s")).alias("__bh"))
+    ).select("doc_id", hash64_from_md5("__s").alias("__bh"))
     sig = exploded.groupBy("doc_id").agg(
         *[F.min(minhash_hash_family(F.col("__bh"), i)).alias(f"__m{i}")
           for i in range(num_hashes)]

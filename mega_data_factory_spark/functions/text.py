@@ -32,7 +32,9 @@ def sql_string_literal(s: str) -> str:
     """Render a python string as a Spark SQL string literal (default,
     non-ANSI escape rules: backslash escapes are interpreted, so double
     them; control characters spelled as escapes to keep the SQL text
-    printable)."""
+    printable; ``$`` spelled ``\\u0024``, because the parser substitutes
+    ``${env:HOME}``-style references anywhere in the text, even inside a
+    literal)."""
     out = (
         s.replace("\\", "\\\\")
         .replace("'", "\\'")
@@ -40,6 +42,7 @@ def sql_string_literal(s: str) -> str:
         .replace("\r", "\\r")
         .replace("\t", "\\t")
         .replace("\x00", "\\0")
+        .replace("$", "\\u0024")
     )
     return f"'{out}'"
 

@@ -10,6 +10,8 @@ and count-derived columns are populated, latency columns are NULL.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -20,6 +22,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from mega_data_factory_spark.session import local_frame
 
 OPERATOR_METRICS_SCHEMA = StructType(
     [
@@ -105,7 +109,7 @@ def write_store_metrics(
     from mega_data_factory_spark.operators.dedup import store_stats
 
     st = store_stats(spark, store_path)
-    row = _one_slice_df(
+    row = local_frame(
         spark,
         [
             (
@@ -128,20 +132,6 @@ def write_store_metrics(
     )
 
 
-def _one_slice_df(spark: SparkSession, rows: list, schema: str):
-    """createDataFrame for driver-small metric rows as ONE input slice.
-
-    ``createDataFrame(list)`` parallelizes into ``defaultParallelism``
-    slices (32 locally), so each tiny metrics write launched a 32-task
-    job; measured round 12, that made the three-level metrics write cost
-    ~1.7s per pipeline run (~0.57s per write) of pure task-launch
-    overhead — the single largest FIXED cost of the recipe bench lines
-    after the operator work itself. One explicit slice keeps each write
-    a one-task job (~0.27s) and one output file; the frames are a few
-    rows by contract, so a single slice loses no parallelism."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
 def write_metrics(spark: SparkSession, result, base_path: str) -> None:
     """Write runs/stages/operators parquet under ``base_path`` (append)."""
     now = F.current_timestamp()
@@ -150,7 +140,7 @@ def write_metrics(spark: SparkSession, result, base_path: str) -> None:
         (result.run_id, result.pipeline, m.stage, m.operator, i, m.input_records, m.output_records, m.pass_rate)
         for i, m in enumerate(result.operators)
     ]
-    ops = _one_slice_df(
+    ops = local_frame(
         spark,
         op_rows,
         "run_id string, pipeline string, stage_name string, operator_name string, position long, "
@@ -165,7 +155,7 @@ def write_metrics(spark: SparkSession, result, base_path: str) -> None:
             stage_rows[m.stage] = (m.input_records, m.output_records)
         else:
             stage_rows[m.stage] = (stage_rows[m.stage][0], m.output_records)
-    stages = _one_slice_df(
+    stages = local_frame(
         spark,
         [
             (result.run_id, result.pipeline, s, pos, i, o, (100.0 * o / i if i else 100.0))
@@ -175,7 +165,7 @@ def write_metrics(spark: SparkSession, result, base_path: str) -> None:
         "input_records long, output_records long, pass_rate double",
     ).withColumn("timestamp", now)
 
-    runs = _one_slice_df(
+    runs = local_frame(
         spark,
         [
             (
@@ -191,9 +181,20 @@ def write_metrics(spark: SparkSession, result, base_path: str) -> None:
         "run_id string, pipeline string, duration_sec double, throughput_rps double, input_records long, output_records long, pass_rate double",
     ).withColumn("timestamp", now)
 
-    ops.select([f.name for f in OPERATOR_METRICS_SCHEMA.fields]).write.mode("append").parquet(f"{base_path}/operators")
-    stages.select([f.name for f in STAGE_METRICS_SCHEMA.fields]).write.mode("append").parquet(f"{base_path}/stages")
-    runs.select([f.name for f in RUN_METRICS_SCHEMA.fields]).write.mode("append").parquet(f"{base_path}/runs")
+    def append(df, schema: StructType, table: str) -> None:
+        df.select([f.name for f in schema.fields]).write.mode("append").parquet(f"{base_path}/{table}")
+
+    # the three one-task appends overlap on driver threads (Pipeline.run
+    # overlaps its two sinks the same way): each is commit-latency-bound,
+    # so the run pays about the slowest one instead of their sum
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        futs = [
+            ex.submit(append, ops, OPERATOR_METRICS_SCHEMA, "operators"),
+            ex.submit(append, stages, STAGE_METRICS_SCHEMA, "stages"),
+            ex.submit(append, runs, RUN_METRICS_SCHEMA, "runs"),
+        ]
+        for fut in futs:
+            fut.result()
 
 
 def training_mix_manifest(

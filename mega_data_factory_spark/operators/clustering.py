@@ -31,6 +31,7 @@ from mega_data_factory_spark.operators.base import (
     anti_join_once,
     rejection_details,
 )
+from mega_data_factory_spark.session import local_frame
 
 
 class KMeansIndex:
@@ -375,7 +376,7 @@ class SemanticDeduplicator(JoinDeduplicator):
         df = df.filter(F.col(self.vec_col).isNotNull() & (l2_norm(self.vec_col) > 0))
         if not df.take(1):  # nothing comparable: no pairs, no k-means fit
             id_dt = df.schema[self.id_col].dataType.simpleString()
-            return df.sparkSession.createDataFrame([], f"{self.id_col} {id_dt}, __rep {id_dt}")
+            return local_frame(df.sparkSession, [], f"{self.id_col} {id_dt}, __rep {id_dt}")
         # Cluster on UNIT vectors (spherical k-means): cosine-identical
         # vectors (e.g. a scaled copy) must land in the same cell, which
         # euclidean k-means on raw magnitudes does not guarantee.

@@ -20,6 +20,7 @@ from mega_data_factory_spark.functions.hashing import content_key_sql, hash64_fr
 from mega_data_factory_spark.functions.text import sql_ident, word_shingles, word_shingles_sql
 from mega_data_factory_spark.functions.vectors import is_finite_vector, l2_norm
 from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator
+from mega_data_factory_spark.session import local_frame
 
 
 class TextExactDeduplicator(Deduplicator):
@@ -104,7 +105,7 @@ class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
         try:
             raw = spark.read.parquet(self.store_path)
         except AnalysisException:  # first run: empty store
-            return spark.createDataFrame([], "content_key string, representative_id string")
+            return local_frame(spark, [], "content_key string, representative_id string")
         # OUTSIDE the try: a store with the wrong schema (e.g. pointed at a
         # band store) must raise UNRESOLVED_COLUMN, not silently read as
         # first-run-empty and re-admit every historical duplicate
@@ -636,7 +637,7 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
         try:
             raw = spark.read.parquet(self.store_path)
         except AnalysisException:  # first run: empty store
-            return spark.createDataFrame([], "band_key long, representative_id string")
+            return local_frame(spark, [], "band_key long, representative_id string")
         # outside the try — wrong-schema stores must raise, not read empty
         # (the IncrementalExactDeduplicator._store_keys rationale)
         _require_long_band_key(raw, self.store_path)
@@ -1212,7 +1213,7 @@ class SemanticDecontaminationFilter(JoinDeduplicator):
         id_dt = df.schema[self.id_col].dataType.simpleString()
         if n == 0:
             bench.unpersist()
-            return df.sparkSession.createDataFrame([], f"{self.id_col} {id_dt}, __rep string")
+            return local_frame(df.sparkSession, [], f"{self.id_col} {id_dt}, __rep string")
         if len(dims) > 1:
             # mixed benchmark dims = two different embedding models in one
             # benchmark table: a matmul against either is wrong for the
@@ -1343,7 +1344,7 @@ class EmbeddingCosineDeduplicator(JoinDeduplicator):
         n = sum(r["__c"] for r in dims)
         if n == 0:  # empty (or all-NULL/zero-norm) input: no pairs, no matmul
             cached.unpersist()
-            return df.sparkSession.createDataFrame([], f"{self.id_col} {id_dt}, __rep {id_dt}")
+            return local_frame(df.sparkSession, [], f"{self.id_col} {id_dt}, __rep {id_dt}")
         dim = max(dims, key=lambda r: (r["__c"], r["__d"]))["__d"]
         if len(dims) > 1:
             import warnings

@@ -19,6 +19,7 @@ from mega_data_factory_spark.functions.text import (
     normalize_text,
     normalize_text_sql,
     sql_ident,
+    sql_number_literal,
     sql_string_literal,
     text_length_sql,
     token_count_sql,
@@ -914,20 +915,38 @@ class UnicodeNormalizeRefiner(Refiner):
 
     Beyond the reference's surface — first-class per the build brief.
 
-    The NFC + control-strip path is an Arrow-batched pandas UDF
-    (``unicodedata.normalize`` has no JVM builtin) and is mirrored
-    value-for-value by DuckDB's ``nfc_normalize`` + regexp in the
-    differential test. ``fix_mojibake=True`` additionally repairs the
-    classic UTF-8-read-as-cp1252 double encoding ("Ã©" -> "é") via a
-    sloppy-windows-1252 round-trip attempted only when telltale lead bytes are
-    present and accepted only if it strictly shrinks the text — a
-    heuristic, so it is pytest-only, not oracle-mirrored.
+    The normalize + control-strip path is SQL text: ICU4J's
+    ``Normalizer.compose``/``decompose`` (shipped in Spark's jars) called
+    through ``reflect``, then one ``regexp_replace``. It runs in the JVM
+    with no Python worker and is mirrored value-for-value by DuckDB's
+    ``nfc_normalize`` + regexp in the differential test. ICU throws on a
+    NULL argument, so the call is NULL-guarded. ``reflect`` is
+    nondeterministic to Catalyst and has no generated code: the
+    projection stays out of whole-stage codegen and is not collapsed
+    into its readers, but it adds no stage or exchange.
 
-    Scale shape: narrow map, one Arrow crossing, no shuffle; at 100 TB it
-    fuses into the ingest scan like the other refiners' UDF stages.
+    ``fix_mojibake=True`` is a different behaviour, not another spelling:
+    it additionally repairs the classic UTF-8-read-as-cp1252 double
+    encoding ("Ã©" -> "é") via a sloppy-windows-1252 round-trip attempted
+    only when telltale lead bytes are present and accepted only if it
+    strictly shrinks the text. That byte-level heuristic has no SQL
+    spelling, so this mode stays an Arrow-batched pandas UDF (Python's
+    ``unicodedata`` does its normalization); it is pytest-only, not
+    oracle-mirrored.
+
+    Scale shape: narrow map, no shuffle; it fuses into the ingest scan's
+    stage like the other refiners (the mojibake mode adds one Arrow
+    crossing).
     """
 
     _CONTROL_RE = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]"
+    # unicodedata form -> (ICU4J Normalizer method, compatibility flag)
+    _ICU = {
+        "NFC": ("compose", False),
+        "NFKC": ("compose", True),
+        "NFD": ("decompose", False),
+        "NFKD": ("decompose", True),
+    }
 
     def __init__(
         self,
@@ -939,20 +958,33 @@ class UnicodeNormalizeRefiner(Refiner):
         name: str | None = None,
     ):
         super().__init__(name)
-        if form not in ("NFC", "NFD", "NFKC", "NFKD"):
+        if form not in self._ICU:
             raise ValueError(f"form must be a unicodedata form, got {form!r}")
         self.text_col = text_col
         self.out_col = out_col
         self.form = form
         self.fix_mojibake = fix_mojibake
 
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
+        if self.fix_mojibake:
+            return None
+        t = sql_ident(self.text_col)
+        method, compat = self._ICU[self.form]
+        normalized = f"reflect('com.ibm.icu.text.Normalizer', '{method}', {t}, {sql_number_literal(compat)})"
+        return {
+            self.out_col: f"CASE WHEN {t} IS NOT NULL THEN "
+            f"regexp_replace({normalized}, {sql_string_literal(self._CONTROL_RE)}, '') END"
+        }
+
     def columns(self, df: DataFrame) -> dict[str, Column]:
+        if not self.fix_mojibake:
+            return super().columns(df)
         import re as _re
         import unicodedata
 
         from pyspark.sql.functions import pandas_udf
 
-        form, fix = self.form, self.fix_mojibake
+        form = self.form
         ctrl = _re.compile(self._CONTROL_RE)
         # UTF-8 lead bytes seen through a latin-1 lens: Ã Â â €
         tell = _re.compile("[ÃÂâ€]")
@@ -979,7 +1011,7 @@ class UnicodeNormalizeRefiner(Refiner):
             def one(s):
                 if s is None:
                     return None
-                if fix and tell.search(s):
+                if tell.search(s):
                     try:
                         repaired = sloppy_1252(s).decode("utf-8")
                         # accept only a strict shrink: real mojibake always

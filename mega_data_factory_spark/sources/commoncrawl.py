@@ -34,6 +34,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mega_data_factory_spark.session import local_frame
 from mega_data_factory_spark.sources.warc import WARC_SCHEMA, parse_warc_bytes
 
 DEFAULT_BASE_URL = "https://data.commoncrawl.org/"
@@ -131,7 +132,7 @@ def read_commoncrawl(
         num_workers=num_workers,
     )
     if not paths:
-        return spark.createDataFrame([], WARC_SCHEMA)
+        return local_frame(spark, [], WARC_SCHEMA)
     cache = cache_dir or os.path.join(tempfile.gettempdir(), "commoncrawl-cache")
     base, cid = base_url, crawl_id
 

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mega_data_factory_spark.session import local_frame
+
 TRIGGER_METRICS_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),
@@ -148,7 +150,8 @@ class StreamingMetricsListener(StreamingQueryListener):
             return
         rows, self._pending = self._pending, []
         try:
-            df = self._spark.createDataFrame(
+            df = local_frame(
+                self._spark,
                 rows,
                 "run_id string, pipeline string, query_id string, batch_id long, "
                 "num_input_rows long, input_rows_per_second double, processed_rows_per_second double, "
@@ -207,7 +210,8 @@ class StreamingMetricsListener(StreamingQueryListener):
         counters have already been surfaced on stderr by ``_flush`` —
         this must never throw on the event thread."""
         try:
-            row = self._spark.createDataFrame(
+            row = local_frame(
+                self._spark,
                 [
                     (
                         self.run_id,

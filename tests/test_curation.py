@@ -651,7 +651,13 @@ FROM marked GROUP BY doc_id ORDER BY doc_id
 
 def test_unicode_normalize_matches_oracle(spark):
     """NFC + control-strip mirrored by DuckDB's nfc_normalize + regexp -
-    NFD composition, embedded controls, newline/tab preservation, NULLs."""
+    NFD composition, embedded controls, newline/tab preservation, NULLs -
+    and all four forms value-equal to Python's ``unicodedata``.
+
+    Version skew: the refiner normalizes with ICU4J 77 (Unicode 16) while
+    Python 3.11's ``unicodedata`` is Unicode 14.0.0, so the two may differ
+    on code points assigned after Unicode 14 that carry decompositions;
+    every input below predates it."""
     from tests.conftest import assert_df_matches_sql
     from mega_data_factory_spark.operators.refiners import UnicodeNormalizeRefiner
 
@@ -694,6 +700,34 @@ FROM n ORDER BY doc_id
     assert got[2].text_normalized == rows[1][1] and not got[2].unicode_changed
     assert got[3].text_normalized == "ctrlcharsgone"
     assert got[5].text_normalized is None and got[5].unicode_changed is None
+
+    import re
+    import unicodedata
+
+    forms_rows = [
+        (1, "cafe\u0301 and A\u030a"),            # NFD input
+        (2, "\u00c5 vs \u212b"),                   # A-ring vs angstrom sign
+        (3, "\ufb01ne ligature"),                   # fi ligature
+        (4, "\uff26\uff55\uff4c\uff4c\uff0d\uff57\uff49\uff44\uff54\uff48 \uff11\uff12"),  # full-width
+        (5, "\ud55c\uad6d\uc5b4 \u1112\u1161\u11ab"),  # Hangul syllables and jamo
+        (6, "d\u0307\u0323 reordered"),            # dot above + dot below
+        (7, "emoji \U0001f600 \U0001f44d\U0001f3fd"),  # astral plane, modifier
+        (8, "\u05e9\u05c1\u05b8\u05dc\u05d5\u05b9\u05dd"),  # pointed Hebrew
+        (9, "c0\x01\x02\x1b\x7f stripped\tkept\nkept\x0b\x0c\r"),
+        (10, None),
+    ]
+    fdf = spark.createDataFrame(forms_rows, "doc_id long, text string")
+    ctrl_re = re.compile(UnicodeNormalizeRefiner._CONTROL_RE)
+    for form in ("NFC", "NFD", "NFKC", "NFKD"):
+        res = {
+            r.doc_id: r.text_normalized
+            for r in UnicodeNormalizeRefiner(form=form).apply(fdf).collect()
+        }
+        want = {
+            i: None if t is None else ctrl_re.sub("", unicodedata.normalize(form, t))
+            for i, t in forms_rows
+        }
+        assert res == want, form
 
 
 def test_unicode_mojibake_repair(spark):

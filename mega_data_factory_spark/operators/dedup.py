@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.functions.hashing import content_key_sql, hash64_from_md5, hash64_from_md5_sql
-from mega_data_factory_spark.functions.text import sql_ident, word_shingles, word_shingles_sql
+from mega_data_factory_spark.functions.text import span_hashes_sql, sql_ident, word_shingles, word_shingles_sql
 from mega_data_factory_spark.functions.vectors import is_finite_vector, l2_norm
 from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator
 from mega_data_factory_spark.session import local_frame
@@ -933,12 +933,20 @@ class NgramJaccardDeduplicator(JoinDeduplicator):
 
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         t = self.threshold
-        sh = df.select(
+        # (id, |s|, hash) rows from ONE generator over the shingle set, bound
+        # once as the lambda variable ``a``: exploding a projected array
+        # attribute instead lets Catalyst infer a size(...) > 0 filter on it
+        # and push copies of the whole shingle tree into that filter (see
+        # span_hash_index)
+        sh = f"array_distinct({word_shingles_sql(sql_ident(self.text_col), self.shingle_n)})"
+        inv = df.select(
             F.col(self.id_col).alias("__id"),
-            F.array_distinct(word_shingles(self.text_col, self.shingle_n)).alias("__sh"),
-        ).withColumn("__n", F.size("__sh"))
-        inv = sh.select("__id", "__n", F.explode("__sh").alias("__s")).select(
-            "__id", "__n", F.xxhash64("__s").alias("__h")
+            F.inline(
+                F.expr(
+                    f"transform(array({sh}), a -> "
+                    "transform(a, s -> named_struct('__n', size(a), '__h', xxhash64(s))))[0]"
+                )
+            ),
         )
         if self.max_doc_freq is not None:
             # stop-shingle cut: drop shingles whose document frequency
@@ -972,21 +980,20 @@ class NgramJaccardDeduplicator(JoinDeduplicator):
 
 
 def span_hash_index(df: DataFrame, text_col: str, span_tokens: int, id_col: str | None = None) -> DataFrame:
-    """Exploded 8-byte span hashes (optionally id-keyed): distinct
-    ``span_tokens``-word shingles -> xxhash64. Docs under ``span_tokens``
-    words contribute nothing (word_shingles' whole-text fallback is
-    Jaccard-only — wrong for exact-span semantics). ONE definition for
-    every span consumer (:class:`SharedSpanDeduplicator` self-join, both
-    corpus sides of :class:`DecontaminationFilter`) so the under-length
-    convention can never desynchronize between them."""
+    """Exploded 8-byte span hashes (optionally id-keyed): the distinct
+    xxhash64 of every ``span_tokens``-word span; docs under ``span_tokens``
+    words contribute nothing. ONE definition for every span consumer
+    (:class:`SharedSpanDeduplicator`, both corpus sides of
+    :class:`DecontaminationFilter`) so the under-length convention can never
+    desynchronize between them.
+
+    ``explode`` wraps the span expression itself, not a projected
+    attribute: over an attribute, Catalyst's InferFiltersFromGenerate adds
+    ``isnotnull``/``size > 0`` on it and predicate pushdown inlines the
+    whole shingle tree into that Filter, so every document's spans were
+    built several times over. Wrapped, the index costs one evaluation."""
     ids = [F.col(id_col).alias("__id")] if id_col else []
-    sh = df.select(*ids, F.array_distinct(word_shingles(text_col, span_tokens)).alias("__sh"))
-    n_words = F.size(F.split(F.col("__sh").getItem(0), " "))
-    sh = sh.filter(F.size("__sh").isNotNull() & (n_words >= span_tokens))
-    keep = ["__id"] if id_col else []
-    return sh.select(*keep, F.explode("__sh").alias("__s")).select(
-        *keep, F.xxhash64("__s").alias("__h")
-    )
+    return df.select(*ids, F.explode(F.expr(span_hashes_sql(sql_ident(text_col), span_tokens))).alias("__h"))
 
 
 class SharedSpanDeduplicator(JoinDeduplicator):
@@ -1000,11 +1007,19 @@ class SharedSpanDeduplicator(JoinDeduplicator):
     matches (the shingle equality is the exact span equality, modulo the
     documented ~1e-9 xxhash64 collision odds).
 
-    Scale shape: distinct k-shingles explode to (id, hash) 8-byte keys, one
-    self-join on the hash, map-side-combinable pair count. ``max_doc_freq``
-    cuts boilerplate spans (license headers, navigation chrome) before the
-    join — with spans this long the cap rarely costs recall: a span shared
-    by thousands of docs IS boilerplate, which span-dedup exists to ignore.
+    Scale shape: distinct spans explode to (id, hash) 8-byte keys that
+    shuffle once on the hash. With the default ``min_shared=1`` the rule is
+    first-seen-wins per span — the ``MinHashLSHDeduplicator._band_pairs``
+    shape: ``min(id)`` over a window partitioned by the hash, keep rows
+    whose id is above it, and a doc's representative is the smallest such
+    minimum over its spans. That equals the pairwise rule (the smallest id
+    sharing any span with b, when it is below b) at a cost linear in each
+    span's document count. ``min_shared > 1`` needs per-pair counts, so it
+    keeps a self-join on the hash with a map-side-combinable pair count.
+    ``max_doc_freq`` cuts boilerplate spans (license headers, navigation
+    chrome) before either — with spans this long the cap rarely costs
+    recall: a span shared by thousands of docs IS boilerplate, which
+    span-dedup exists to ignore.
     """
 
     def __init__(
@@ -1026,6 +1041,20 @@ class SharedSpanDeduplicator(JoinDeduplicator):
 
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         inv = span_hash_index(df, self.text_col, self.span_tokens, id_col=self.id_col)
+        if self.min_shared <= 1:
+            w = Window.partitionBy("__h")
+            first = F.col("__m") < F.col("__id")
+            cols = [F.min("__id").over(w).alias("__m")]
+            if self.max_doc_freq is not None:
+                # DF = the span's document count (the index is distinct per doc)
+                cols.append(F.count(F.lit(1)).over(w).alias("__df"))
+                first &= F.col("__df") <= self.max_doc_freq
+            return (
+                inv.select("__id", *cols)
+                .filter(first)
+                .groupBy(F.col("__id").alias(self.id_col))
+                .agg(F.min("__m").alias("__rep"))
+            )
         if self.max_doc_freq is not None:
             keep = (
                 inv.groupBy("__h")

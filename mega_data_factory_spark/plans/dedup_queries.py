@@ -335,12 +335,12 @@ def shared_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tag_sides(corpus, d._dup_pairs(corpus), "doc_id").orderBy("doc_id")
 
 
-def _span_ctes(n: int) -> str:
+def _span_ctes(n: int, max_df: int | None = SPAN_MAX_DF) -> str:
     """CTEs norm/w/sp/inv: distinct word n-gram SPANS per corpus doc — like
     _shingle_ctes but docs with fewer than n words are DROPPED (they have no
     n-token span; the whole-text fallback is a Jaccard-only convention) —
-    plus the span-DF cut before the self-join. The Spark side joins on
-    xxhash64(span) (~1e-9 collision odds, accepted as in the Jaccard
+    plus the span-DF cut (``max_df``; None = no cut) before the self-join.
+    The Spark side joins on xxhash64(span) (~1e-9 collision odds, accepted as in the Jaccard
     oracle); the oracle joins the strings."""
     return f"""
 norm AS (SELECT doc_id, {NORM_SQL} AS t FROM corpus),
@@ -355,7 +355,7 @@ span_df AS (SELECT span, count(*) AS dfreq FROM inv0 GROUP BY 1),
 inv AS (
   SELECT i.doc_id, i.span FROM inv0 i
   JOIN span_df d ON i.span = d.span
-  WHERE d.dfreq <= {SPAN_MAX_DF}
+  {"" if max_df is None else f"WHERE d.dfreq <= {max_df}"}
 )
 """
 

@@ -14,6 +14,10 @@ from plans/r13 are judged against the parent's own plans:
 
 plans/r13 was dumped at sf0.1 with SPARK_GRAFT_CPUS=8; exchange partition
 counts follow the core count, so compare at the same setting.
+
+Every query is built with its expression ids starting at a base fixed by
+its name (see pin_expr_ids), so a query's plan does not depend on which
+queries ran before it in the session.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import argparse
 import os
 import re
 import sys
+import zlib
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -51,6 +56,38 @@ def norm(s: str) -> str:
     return s
 
 
+def pin_expr_ids(spark, name: str) -> None:
+    """Restart Catalyst's JVM-global expression-id counter at a base fixed
+    by the query name. Some plan shapes depend on the id VALUES, not just
+    their order: RewriteDistinctAggregates groups distinct aggregates in a
+    hash map keyed on expressions whose hashes include expression ids, so
+    its Expand lists them in an id-dependent order — and a session shares
+    one counter, so every earlier query shifted the ids of the later ones.
+    Each name owns a disjoint 2^24-id range above 2^40 (far past anything a
+    session allocates on its own), so attributes a query reuses from an
+    earlier one (temp views, memoized frames) can never collide with the
+    ids it allocates.
+
+    The counter is a private AtomicLong that py4j would hand back as a
+    plain int, so the set runs as one JVM-side method handle:
+    ``curId.set(base)``."""
+    jvm = spark.sparkContext._jvm
+    cls = jvm.java.lang.Class.forName
+    field = cls("org.apache.spark.sql.catalyst.expressions.NamedExpression$").getDeclaredField("curId")
+    field.setAccessible(True)
+    mh = jvm.java.lang.invoke.MethodHandles
+    lookup = mh.lookup()
+    set_type = jvm.java.lang.invoke.MethodType.methodType(jvm.java.lang.Void.TYPE, jvm.java.lang.Long.TYPE)
+    setter = lookup.findVirtual(cls("java.util.concurrent.atomic.AtomicLong"), "set", set_type)
+    args = spark.sparkContext._gateway.new_array(jvm.java.lang.Object, 1)
+    args[0] = (1 << 40) + (id_slot(name) << 24)
+    mh.collectArguments(setter, 0, lookup.unreflectGetter(field)).invokeWithArguments(args)
+
+
+def id_slot(name: str) -> int:
+    return zlib.crc32(name.encode()) & ((1 << 22) - 1)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     sf_env = os.environ.get("SPARK_GRAFT_SF_DIR")
@@ -68,8 +105,13 @@ def main() -> None:
     import __spark_entry__ as e
 
     jvm = spark.sparkContext._jvm
+    queries = e.queries()
+    slots = {id_slot(name) for name in queries}
+    if len(slots) != len(queries):
+        sys.exit("two query names share an expression-id range; widen id_slot")
     drift = []
-    for name, fn in e.queries().items():
+    for name, fn in queries.items():
+        pin_expr_ids(spark, name)
         now = jvm.PythonSQLUtils.explainString(fn(spark, args.sf)._jdf.queryExecution(), "formatted")
         if args.dump:
             os.makedirs(args.dump, exist_ok=True)
@@ -100,7 +142,7 @@ def main() -> None:
             print(f"  line counts differ: now {len(la)} vs baseline {len(lb)}")
         drift.append(name)
     if not args.dump:
-        print(f"\n{len(drift)} drifted of {len(e.queries())}: {drift}")
+        print(f"\n{len(drift)} drifted of {len(queries)}: {drift}")
         sys.exit(1 if drift else 0)
 
 

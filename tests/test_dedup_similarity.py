@@ -285,36 +285,76 @@ def test_shared_span_dedup_behavior(spark):
     assert len(rej) == 1 and rej[0].doc_id == 2 and rej[0].rep == "1"
 
 
-def test_shared_span_dedup_matches_oracle(spark):
-    """Survivor set over the real documents corpus vs an exact DuckDB
-    mirror of the span inverted index (k=12 so natural overlaps exist)."""
-    from tests.conftest import SF_DIR_ORACLE, assert_df_matches_sql
+def _assert_shared_span_matches_oracle(spark, k, max_df):
+    """Rejected docs AND their representatives over the real documents
+    corpus vs an exact DuckDB mirror of the pairwise rule: a doc sharing a
+    span with an earlier doc is rejected in favour of the smallest such id;
+    ``max_df`` is the oracle's _span_ctes DF cut."""
+    from pyspark.sql import functions as F
+
+    from tests.conftest import assert_df_matches_sql
     from mega_data_factory_spark.operators.dedup import SharedSpanDeduplicator
+    from mega_data_factory_spark.plans.dedup_queries import _span_ctes
     from mega_data_factory_spark.session import load_tables
 
-    k = 12
     docs = load_tables(spark, SF_DIR_ORACLE, ("documents",))["documents"]
-    d = SharedSpanDeduplicator(span_tokens=k, id_col="doc_id")
-    out = d.apply(docs).select("doc_id").orderBy("doc_id")
-    norm = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+    d = SharedSpanDeduplicator(span_tokens=k, max_doc_freq=max_df, id_col="doc_id")
+    rej = d.rejected(docs).select(
+        "doc_id", F.col("_rejection_details.representative_id").alias("representative_id")
+    )
     sql = f"""
-WITH w AS (SELECT doc_id, string_split({norm}, ' ') AS ws FROM documents),
-sh AS (
-  SELECT doc_id,
-    list_distinct(list_transform(range(1, len(ws) - {k - 2}), i -> array_to_string(ws[i:i+{k - 1}], ' '))) AS s
-  FROM w WHERE len(ws) >= {k}
-),
-inv AS (SELECT doc_id, unnest(s) AS span FROM sh),
+WITH corpus AS (SELECT doc_id, text FROM documents),
+{_span_ctes(k, max_df).strip()},
 pairs AS (
   SELECT a.doc_id AS ida, b.doc_id AS idb
   FROM inv a JOIN inv b ON a.span = b.span AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-dups AS (SELECT DISTINCT idb AS doc_id FROM pairs)
-SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dups)
-ORDER BY doc_id
+)
+SELECT idb AS doc_id, CAST(min(ida) AS VARCHAR) AS representative_id FROM pairs GROUP BY idb
 """
-    assert_df_matches_sql(out, sql, name="shared_span_dedup")
+    assert_df_matches_sql(rej, sql, name=f"shared_span_dedup_k{k}")
+    assert d.apply(docs).count() + rej.count() == docs.count()
+
+
+def test_shared_span_dedup_matches_oracle(spark):
+    """k=12 so natural overlaps exist; no DF cap."""
+    _assert_shared_span_matches_oracle(spark, 12, None)
+
+
+def test_shared_span_dedup_df_cap_matches_oracle(spark):
+    """k=4 under a DF cap of 2: the cap drops 100 common spans and moves
+    12 representatives, so the window's per-span count must match the
+    oracle's span_df cut."""
+    _assert_shared_span_matches_oracle(spark, 4, 2)
+
+
+def test_span_index_built_once_per_side(spark):
+    """Every document's shingle tree is evaluated once per side of a pair
+    plan: explode/inline wrap the span expression itself, so Catalyst
+    infers no non-empty filter over a projected array attribute and cannot
+    push copies of the tree into one. Counted in the optimized plan as
+    regexp_replace sites (each tree normalizes its text once); the
+    first-wins window reads the span index once, the self-join and
+    cross-corpus forms once per side."""
+    from pyspark.sql import functions as F
+
+    from mega_data_factory_spark.operators.dedup import (
+        DecontaminationFilter,
+        NgramJaccardDeduplicator,
+        SharedSpanDeduplicator,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR_ORACLE}/documents.parquet").select("doc_id", "text")
+    bench = docs.filter(F.col("doc_id") < 5).select("text")
+    cases = {
+        "span min_shared=1": (SharedSpanDeduplicator(span_tokens=12), 1),
+        "span min_shared=1 df-cap": (SharedSpanDeduplicator(span_tokens=12, max_doc_freq=5), 1),
+        "span min_shared=2": (SharedSpanDeduplicator(span_tokens=12, min_shared=2), 2),
+        "decontamination": (DecontaminationFilter(bench, span_tokens=13), 2),
+        "ngram jaccard": (NgramJaccardDeduplicator(0.6), 2),
+    }
+    for name, (d, sites) in cases.items():
+        plan = d._dup_pairs(docs)._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("regexp_replace") == sites, name
 
 
 def test_decontamination_matches_oracle(spark):

@@ -446,8 +446,9 @@ def test_recipe_plans_expression_duplication_bounded(spark):
         # word_shingles at span_tokens=20 carried ~40 split(normalize)
         # copies per reference before its round-10 binding — the c4
         # recipe's span-dedup filter held 594 regexp_replace sites (18
-        # after)
-        "c4_style_recipe.yaml": 30,
+        # after); wrapping the span expression in explode took the
+        # pushed-down filter copies out (1 site)
+        "c4_style_recipe.yaml": 4,
         "example_text_curation.yaml": 80,
     }
     for yaml_name, bound in bounds.items():

@@ -362,6 +362,30 @@ def test_word_shingles_twin(spark, n):
     assert _digest(rows) == SHINGLE_DIGESTS[n]
 
 
+def _words(k: int) -> str:
+    return "  ".join((f"W{i}" if i % 2 else f"w{i}") for i in range(1, k + 1))
+
+
+@pytest.mark.parametrize("n", [15, 1])
+def test_word_shingles_length_edges(spark, n):
+    """Exactly n words, n-1 words, empty, whitespace-only and NULL text,
+    pinned to the zip_with-chain builder's outputs; n+2 words give the 3
+    sliding windows."""
+    rows = [(1, _words(n) + " \t"), (2, "\n" + _words(n - 1)), (3, ""), (4, " \t\n "), (5, None),
+            (6, _words(n + 2))]
+    df = spark.createDataFrame(rows, "id int, text string")
+    got = {r.id: r.s for r in df.select("id", word_shingles("text", n).alias("s")).collect()}
+    ws = [f"w{i}" for i in range(1, n + 3)]
+    assert got == {
+        1: [" ".join(ws[:n])],
+        2: [" ".join(ws[: n - 1])],  # n=1: the empty text's one empty shingle
+        3: [""],
+        4: [""],
+        5: None,
+        6: [" ".join(ws[i : i + n]) for i in range(3)],
+    }
+
+
 @pytest.mark.parametrize("seed", [None, 0, 7, "wds", "a'b\\c"])
 def test_hash64_twin(spark, seed):
     df = _fixture_df(spark)

@@ -678,7 +678,7 @@ def main() -> None:
 
     def _blk_q5():
         # Bucketed-layout datapoint for the suite's one fact-fact join
-        # (VERDICT r6 #5: promote the diag_q5_bucketed evidence into
+        # (VERDICT r6 #5: promote the scripts/diag_q5_bucketed.out evidence into
         # maintained bench lines). q5's lineitem-orders join core is timed
         # two ways on the same data with auto-broadcast off (so the join
         # strategy, not a broadcast, is what's measured): q5_join_core over
@@ -1282,7 +1282,7 @@ def main() -> None:
             for i in range(2):
                 # knobs sized to the TRIGGER (~1M rows): full
                 # session-scale shuffle width and 4 output files per sink
-                # (A/B sweep: scripts/diag_stream_amort.py)
+                # (A/B sweep: scripts/diag_stream_amort.out)
                 wall, trig = _streaming_pipeline(
                     spark, src_big, amort_tmp, f"astream{i}", files_per_trigger=32,
                     shuffle_partitions=32, output_files=4,

@@ -5,25 +5,37 @@ Re-expresses the reference's operator algebra (framework/operator.py:206-382):
 
   * ``Refiner``       — adds columns (projection extension), reference
                         ``refine_batch`` (operator.py:206-223);
-  * ``Filter``        — keep/reject predicate with an optional rejected side
-                        output carrying ``_rejection_details``
-                        (operator.py:226-268);
+  * ``Filter``        — keep/reject predicate; rejected rows carry
+                        ``_rejection_details`` (operator.py:226-268);
   * ``Deduplicator``  — first-seen-wins on a derived key with representative
                         tracking (operator.py:271-382, backend.py:13-226).
 
+The tag contract: a Filter or Deduplicator splits its input into passed
+and rejected rows in ONE method, ``tag(df)``. ``df`` carries a nullable
+``_rejection_details`` struct, NULL meaning alive; ``tag`` fills it for the
+alive rows the operator rejects and leaves every other row's value as it
+was. Dead rows take no part in the decision: they can neither absorb nor
+represent an alive row. The batch pipeline and the streaming runner apply
+every Filter and Deduplicator through ``tag``, and a standalone
+Deduplicator's ``apply``/``rejected`` are the alive/dead rows of ``tag``
+over its input with every row alive — one implementation per operator
+kind. A Filter's ``apply``/``rejected`` stay plain ``filter`` calls, so the
+predicate still pushes into the scan. ``tag`` builds its expressions once
+per input schema (``df.columns``): unresolved expressions bind at analysis
+time, so one build serves every micro-batch of a stream.
+
 Spark-first design decisions:
-  * every operator is a pure ``DataFrame -> DataFrame`` transform, so a
+  * every operator is a ``DataFrame -> DataFrame`` transform, so a
     pipeline is one Catalyst plan — pushdown/pruning/codegen work across
     operator boundaries (the reference's CombinedOperator fusion is free);
-  * filters expose a Column ``predicate`` so Catalyst can push it into the
-    scan; Python only appears when a Refiner genuinely needs it;
+  * filters expose a ``predicate`` so Catalyst can push it into the scan;
+    Python only appears when a Refiner genuinely needs it;
   * dedup is a hash-shuffle window: ``row_number() over (partition by key
     order by order_col)`` — the shuffle *is* the reference's sharded
     seen-set (backend.py:134-143), with a deterministic ``min(order_col)``
     tie-break replacing the reference's racy arrival order (backend.py:39-47);
-  * the rejected side output is computed by tagging rows in a single pass
-    (``Pipeline._apply``'s ``_rejection_details`` when-tagging), so a
-    pipeline can split passed/rejected without scanning the source twice.
+  * tagging rather than splitting lets a pipeline write its passed and
+    rejected sides without scanning the source twice.
 
 At 100 TB: refiner/filter chains are narrow (no shuffle at all); each
 deduplicator contributes exactly one shuffle keyed on its dedup key, and AQE
@@ -37,7 +49,10 @@ from abc import ABC, abstractmethod
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mega_data_factory_spark.functions.text import sql_ident, sql_string_literal
+
 REJECTION_DETAILS_COL = "_rejection_details"
+_R = REJECTION_DETAILS_COL
 # the nullable tag column's DDL — ONE definition for the batch builder and
 # the streaming runner (they used to carry drift-prone inline copies)
 REJECTION_STRUCT_DDL = "struct<reason:string,operator:string,dedup_key:string,representative_id:string>"
@@ -52,8 +67,6 @@ def rejection_details_sql(
     ``representative_id`` are SQL fragments, NULL by default (the filtered
     case). Spelled ``struct(x AS name)``, which resolves to the same
     CreateNamedStruct as ``named_struct``."""
-    from mega_data_factory_spark.functions.text import sql_string_literal
-
     return (
         f"struct(cast({sql_string_literal(reason)} as string) AS reason, "
         f"cast({sql_string_literal(operator)} as string) AS operator, "
@@ -74,7 +87,6 @@ def with_sql_columns(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
     round trip. A name that already exists is REPLACED in its original
     position, matched case-insensitively the way ``withColumns`` matches
     it under the default resolver; new names append in order."""
-    from mega_data_factory_spark.functions.text import sql_ident
 
     def item(k: str) -> str:
         return f"{exprs[k]} AS {sql_ident(k, literal=True)}"
@@ -102,6 +114,17 @@ class Operator(ABC):
 
     def __call__(self, df: DataFrame) -> DataFrame:
         return self.apply(df)
+
+    def _per_schema(self, df: DataFrame, build):
+        """``build(df)``, built once per input schema. Tag expressions are
+        functions of the operator's params and ``df.columns`` only, so
+        rebuilding them per streaming micro-batch was pure py4j latency
+        (~0.2 s per trigger on the bench stream)."""
+        memo = self.__dict__.setdefault("_tag_memo", {})
+        cols = tuple(df.columns)
+        if cols not in memo:
+            memo[cols] = build(df)
+        return memo[cols]
 
 
 # Each operator expression is authored ONCE. Where Spark SQL can spell it
@@ -159,28 +182,20 @@ class Refiner(Operator):
         return out.drop(*tmp) if tmp else out
 
 
+# column a Column-authored filter predicate is bound to, so the filter tag
+# stays one SQL spelling (Catalyst collapses the binding projection)
+_KEEP = "__filter_keep"
+
+
 class Filter(Operator):
-    """Keep rows where the predicate holds; rejected rows can be captured
-    as a side output with rejection details. Subclasses author either
-    ``predicate_sql`` (SQL text) or ``predicate`` (a Column), never both.
-
-    Purity contract (``cacheable_predicate``): the predicate must be a
-    PURE name-based builder — a function of the operator's immutable
-    params and ``df.columns`` only, never of ``df``'s data, an action on
-    ``df``, or mutable operator state. The pipeline relies on this to cache
-    the built expression per (operator, schema) and reuse it across
-    micro-batches (Pipeline._expr_cache). Every built-in Filter satisfies
-    it (unresolved expressions bind at analysis time, so one expression
-    serves every batch of the same schema). A custom Filter whose predicate
-    consults data or mutable state MUST set ``cacheable_predicate = False``
-    to opt out — otherwise a stale cached tag silently reuses the first
-    batch's decision logic on every later micro-batch."""
-
-    cacheable_predicate: bool = True
+    """Keep rows where the predicate holds (NULL counts as reject).
+    Subclasses author either ``predicate_sql`` (SQL text) or ``predicate``
+    (a Column), never both. ``tag`` marks the alive rows that fail it
+    'filtered'; ``apply``/``rejected`` filter ``df`` directly."""
 
     def predicate_sql(self, df: DataFrame) -> str | None:
-        """Boolean keep-condition as SQL text (NULL counts as reject). The
-        pipeline parses its whole filter tag — alive gate, NULL-as-reject,
+        """Boolean keep-condition as SQL text (NULL counts as reject).
+        ``tag`` parses its whole expression — alive gate, NULL-as-reject,
         rejection struct — around it in ONE round trip. None for a class
         that authors :meth:`predicate` as a Column instead."""
         return None
@@ -205,9 +220,32 @@ class Filter(Operator):
             REJECTION_DETAILS_COL, rejection_details("filtered", self.name)
         )
 
+    def tag(self, df: DataFrame) -> DataFrame:
+        """``df`` with its alive rows that fail the predicate tagged."""
+        bound, tag = self._per_schema(df, self._tag_exprs)
+        if bound is None:
+            return df.withColumn(_R, tag)
+        return df.withColumn(_KEEP, bound).withColumn(_R, tag).drop(_KEEP)
+
+    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, Column]:
+        """(predicate Column to bind as ``_KEEP`` or None, the tag): alive
+        gate, NULL-as-reject and rejection struct parsed in ONE round trip
+        around the SQL predicate. A Column-authored predicate is bound
+        first and read by name — the binding projection collapses into the
+        tag's, so the plan is the inline one."""
+        psql = self.predicate_sql(df)
+        bound = None
+        if psql is None:
+            bound, psql = self.predicate(df), sql_ident(_KEEP)
+        tag = F.expr(
+            f"CASE WHEN ((`{_R}` IS NULL) AND (NOT coalesce({psql}, false))) "
+            f"THEN {rejection_details_sql('filtered', self.name)} ELSE `{_R}` END"
+        )
+        return bound, tag
+
 
 # column a Column-authored dedup key is bound to, so the key wrappers
-# below (NULL handling, window ranking, the pipeline tag) stay SQL text
+# below (NULL handling, window ranking, the tag) stay SQL text
 RAW_KEY_COL = "__dedup_raw_key"
 
 
@@ -218,22 +256,14 @@ class Deduplicator(Operator):
     spell it (a Python UDF, a higher-order Column composition), as a
     Column (``key``) — never both. ``order_col`` defines "first" (the
     deterministic strengthening of the reference's arrival-order
-    semantics). Survivors keep their columns; duplicates carry
-    ``_rejection_details`` with ``dedup_key`` and ``representative_id`` =
-    the survivor's id. Everything wrapped around the key — NULL handling,
-    the window ranking, the pipeline's rejection tag — is SQL text over
-    ``key_sql``; a Column-authored key is first bound to ``RAW_KEY_COL``
-    and read from there.
-
-    Purity contract (``cacheable_predicate``): like Filter predicates, the
-    key must be a pure name-based builder (a function of immutable params
-    and ``df.columns`` only) — the pipeline caches the built dedup-tag
-    expression per (operator, schema) and reuses it across micro-batches.
-    Subclasses whose key consults data or mutable state (e.g. a store
-    snapshot re-read per batch) must set ``cacheable_predicate = False``.
+    semantics). ``tag`` marks every alive row after the first of its key
+    'duplicate', with ``dedup_key`` and ``representative_id`` = the first
+    row's id; ``apply`` keeps the survivors and ``rejected`` the
+    duplicates of ``tag`` over ``df`` with every row alive. Everything
+    wrapped around the key — NULL handling, the window ranking, the
+    rejection struct — is SQL text over ``key_sql``; a Column-authored key
+    is first bound to ``RAW_KEY_COL`` and read from there.
     """
-
-    cacheable_predicate: bool = True
 
     def __init__(
         self,
@@ -265,13 +295,14 @@ class Deduplicator(Operator):
         self.null_keys = null_keys
         # wide_payload: rows carry a heavy column (image/audio bytes) that
         # must NOT go through the dedup shuffle. The window strategy
-        # shuffles whole rows; the semi-join strategy shuffles only
-        # (key, order) pairs to elect winners, then semi-joins the winner
-        # ids back — with AQE that is a broadcast join (no movement of the
-        # payload at all) until the winner set itself is huge, at which
-        # point it degrades to an id-only shuffle, still never the bytes.
-        # Requires order_col values to be unique (they are ids here) so
-        # "min(order) per key" identifies exactly one winner row.
+        # shuffles whole rows; the election strategy shuffles only
+        # (key, order, id) rows to elect winners, then joins the losers
+        # back on order_col — with AQE that is a broadcast join (no
+        # movement of the payload at all) until the loser set itself is
+        # huge, at which point it degrades to an id-only shuffle, still
+        # never the bytes. Requires order_col values to be unique (they
+        # are ids here) so "min(order) per key" identifies exactly one
+        # winner row.
         self.wide_payload = wide_payload
 
     def key_sql(self, df: DataFrame) -> str | None:
@@ -285,16 +316,6 @@ class Deduplicator(Operator):
         if ksql is None:
             raise NotImplementedError(f"{type(self).__name__} authors neither key nor key_sql")
         return F.expr(ksql)
-
-    def _key_source(self, df: DataFrame) -> tuple[Column | None, str]:
-        """(Column to bind as ``RAW_KEY_COL`` or None, SQL text of the key
-        on the bound frame) — the one entry point every key wrapper uses."""
-        from mega_data_factory_spark.functions.text import sql_ident
-
-        ksql = self.key_sql(df)
-        if ksql is not None:
-            return None, ksql
-        return self.key(df), sql_ident(RAW_KEY_COL)
 
     def _missing_key_sql(self, df: DataFrame, key_sql: str) -> str:
         """True where the row has NO dedup identity (used by
@@ -318,8 +339,6 @@ class Deduplicator(Operator):
         construction. Control characters are spelled with Spark's
         string-literal escapes where one exists (``\\0`` for NUL) and raw
         otherwise (US, ``\\x1f``) — both parse to the same literal bytes."""
-        from mega_data_factory_spark.functions.text import sql_ident
-
         o = sql_ident(self.order_col)
         unique = (
             "concat_ws('', '\\0N\x1f', coalesce(cast(" + o + " as string), "
@@ -330,100 +349,126 @@ class Deduplicator(Operator):
             return f"CASE WHEN ({m} OR ({o} IS NULL)) THEN {unique} ELSE {key_sql} END"
         return f"CASE WHEN ({o} IS NULL) THEN {unique} ELSE {key_sql} END"
 
-    def _keyed(self, df: DataFrame) -> tuple[DataFrame, str]:
-        """``df`` (with a Column-authored key bound) and the SQL text of
-        its effective key."""
-        raw, ksql = self._key_source(df)
+    def tag(self, df: DataFrame) -> DataFrame:
+        """``df`` with every alive row after the first of its key tagged."""
+        raw, key, tag = self._per_schema(df, self._tag_exprs)
         if raw is not None:
             df = df.withColumn(RAW_KEY_COL, raw)
-        return df, self._effective_key_sql(df, ksql)
+        out = self._elected_tag(df, key) if self.wide_payload else df.withColumn(_R, tag)
+        return out.drop(RAW_KEY_COL) if raw is not None else out
 
-    def _ranked(self, df: DataFrame) -> DataFrame:
-        # the standalone query path — the pipeline tag has its own
-        # one-expr spelling — builds its three columns via ONE F.expr each
-        from mega_data_factory_spark.functions.text import sql_ident
+    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, str, Column | None]:
+        """(Column-authored key to bind as ``RAW_KEY_COL`` or None, the
+        tag key's SQL text, the window tag — None on the wide_payload
+        path, which elects winners by join instead).
 
-        df, esql = self._keyed(df)
-        over = f"OVER (PARTITION BY __dedup_key ORDER BY {sql_ident(self.order_col)})"
-        return (
-            df.withColumn("__dedup_key", F.expr(esql))
-            .withColumn("__rn", F.expr(f"row_number() {over}"))
-            .withColumn("__rep", F.expr(f"first({sql_ident(self.id_col)}) {over}"))
+        The key is the effective key — the null_keys="distinct" contract
+        (rows with no dedup identity each survive) — for alive rows, and
+        for dead rows a per-row sentinel so they can neither absorb nor
+        represent alive rows. The sentinel is concat_ws, never NULL: a bare
+        concat made a dead NULL-id row's sentinel NULL, landing it in the
+        alive NULL-key window partition where it (sorting NULLS FIRST on
+        order_col) absorbed every alive NULL-key row as a "duplicate" of a
+        dead representative.
+
+        The tag is ONE projection with the window expressions inline: the
+        earlier temp-column form (__dk/__rn/__rep across four withColumns
+        + a drop) re-ran plan analysis per frame — pure driver latency
+        that multiplies by micro-batch count under the streaming runner
+        (measured ~0.2 s of the per-trigger floor). Both window functions
+        share one window spec, so the physical plan is a single Window
+        node; the key is reused verbatim in the partition spec and the
+        rejection struct."""
+        ksql, raw = self.key_sql(df), None
+        if ksql is None:
+            # a Column-authored key (model UDFs) runs for alive rows only
+            raw, ksql = F.when(F.col(_R).isNull(), self.key(df)), sql_ident(RAW_KEY_COL)
+        ic, oc = sql_ident(self.id_col), sql_ident(self.order_col)
+        key = (
+            f"CASE WHEN (`{_R}` IS NULL) THEN cast({self._effective_key_sql(df, ksql)} as string) "
+            f"ELSE concat_ws('', '\\0D\x1f', coalesce(cast({ic} as string), '')) END"
         )
+        if self.wide_payload:
+            return raw, key, None
+        over = f"OVER (PARTITION BY {key} ORDER BY {oc})"
+        tag = F.expr(
+            f"CASE WHEN ((`{_R}` IS NULL) AND (row_number() {over} > 1)) "
+            f"THEN struct(cast('duplicate' as string) AS reason, "
+            f"cast({sql_string_literal(self.name)} as string) AS operator, "
+            f"cast({key} as string) AS dedup_key, "
+            f"cast(cast(first({ic}) {over} as string) as string) AS representative_id) "
+            f"ELSE `{_R}` END"
+        )
+        return raw, key, tag
 
-    # NULL-group join sentinel: groupBy/Window treat NULL keys as one
-    # group, but an equi-JOIN on the key never matches NULL — the wide
-    # path's rejected() would silently lose every NULL-key duplicate.
-    # Control chars make a collision with a real key practically
-    # impossible (keys here are md5 hex / urls / column values).
+    # NULL-group join sentinel: groupBy treats NULL keys as one group, but
+    # an equi-JOIN on the key never matches NULL — the election would
+    # silently let every NULL-key duplicate survive. Control chars make a
+    # collision with a real key practically impossible (keys here are md5
+    # hex / urls / column values).
     _NULL_GROUP = "\x00G\x1f"
 
-    def _join_key_sql(self, key_sql: str) -> str:
-        """NULL-safe join key over a key's SQL text."""
-        from mega_data_factory_spark.functions.text import sql_string_literal
-
-        return f"coalesce({key_sql}, {sql_string_literal(self._NULL_GROUP)})"
-
-    def _winners(self, df: DataFrame) -> DataFrame:
-        """(winner order value, join key) per dedup key — the compact
-        election. Grouped on the NULL-safe ``__jk``."""
-        df, esql = self._keyed(df)
-        return (
-            df.withColumn("__jk", F.expr(self._join_key_sql(esql)))
-            .groupBy("__jk")
-            .agg(F.min(F.col(self.order_col)).alias("__win_order"))
+    def _elected_tag(self, df: DataFrame, key: str) -> DataFrame:
+        """Winner election on a NARROW projection: the full-row window
+        would shuffle the heavy payload bytes the wide_payload flag exists
+        to keep out of the exchange. Losers (order value + representative
+        id, ``min_by`` so it holds when id_col is not order_col) join back
+        on the unique order_col — AQE broadcasts the loser set when small.
+        __jk is the NULL-safe join key (``_NULL_GROUP``); __dk keeps the
+        REAL key for the tag."""
+        keyed = df.withColumn("__dk", F.expr(key)).withColumn(
+            "__jk", F.expr(f"coalesce(__dk, {sql_string_literal(self._NULL_GROUP)})")
         )
+        narrow = keyed.select(
+            "__jk", F.col("__dk"), F.col(self.order_col).alias("__o"), F.col(self.id_col).alias("__i")
+        )
+        win = narrow.groupBy("__jk").agg(
+            F.min("__o").alias("__win_o"), F.min_by("__i", "__o").alias("__win_rep")
+        )
+        losers = (
+            narrow.join(win, on="__jk")
+            .filter(F.col("__o") != F.col("__win_o"))
+            .select(F.col("__o").alias(self.order_col), "__dk", F.col("__win_rep").alias("__rep"))
+        )
+        out = df.join(losers, on=self.order_col, how="left")  # losers carry __dk for the tag
+        tagged = out.withColumn(
+            _R,
+            F.when(
+                F.col(_R).isNull() & F.col("__rep").isNotNull(),
+                rejection_details("duplicate", self.name, "__dk", "cast(__rep as string)"),
+            ).otherwise(F.col(_R)),
+        )
+        return tagged.drop("__dk", "__rep")
 
     def apply(self, df: DataFrame) -> DataFrame:
-        if self.wide_payload:
-            win = self._winners(df).select(F.col("__win_order").alias(self.order_col))
-            survivors = df.join(win, on=self.order_col, how="left_semi")
-            # NULL-order rows always survive (_effective_key_sql contract)
-            # but a semi-join on order_col can never match their NULL —
-            # union them back rather than silently dropping them from BOTH
-            # sides
-            return survivors.unionByName(df.filter(F.col(self.order_col).isNull()))
-        return self._ranked(df).filter("(__rn = 1)").drop("__dedup_key", "__rn", "__rep", RAW_KEY_COL)
+        return self._split(df, alive=True)
 
     def rejected(self, df: DataFrame) -> DataFrame:
-        if self.wide_payload:
-            # representative id == winner's order value only when id_col IS
-            # order_col (the common case); otherwise the winner election
-            # cannot recover the representative's id and the window path
-            # (which shuffles the payload) is the only correct plan — the
-            # wide-payload saving is silently unavailable there.
-            if self.id_col == self.order_col:
-                win = self._winners(df)
-                kdf, esql = self._keyed(df)
-                keyed = kdf.withColumn("__dedup_key", F.expr(esql)).withColumn(
-                    "__jk", F.expr(self._join_key_sql("__dedup_key"))
-                )
-                dups = keyed.join(win, on="__jk", how="inner").filter(
-                    F.col(self.order_col) != F.col("__win_order")
-                )
-            else:
-                dups = self._ranked(df).filter(F.col("__rn") > 1).withColumnRenamed("__rep", "__win_order")
-            return dups.withColumn(
-                REJECTION_DETAILS_COL,
-                rejection_details("duplicate", self.name, "__dedup_key", "cast(__win_order as string)"),
-            ).drop("__dedup_key", "__jk", "__win_order", "__rn", "__rep", RAW_KEY_COL)
-        dups = self._ranked(df).filter("(__rn > 1)")
-        return dups.withColumn(
-            REJECTION_DETAILS_COL,
-            rejection_details("duplicate", self.name, "__dedup_key", "cast(__rep as string)"),
-        ).drop("__dedup_key", "__rn", "__rep", RAW_KEY_COL)
+        return self._split(df, alive=False)
+
+    def _split(self, df: DataFrame, *, alive: bool) -> DataFrame:
+        """The alive (``apply``) or dead (``rejected``) rows of ``tag`` over
+        ``df`` with every row a candidate: the tag column starts NULL,
+        replacing one the input carries, and the rows keep the input's
+        column order (the election's join moves ``order_col`` first)."""
+        cols = df.columns if _R in df.columns else [*df.columns, _R]
+        tagged = self.tag(df.withColumn(_R, F.lit(None).cast(REJECTION_STRUCT_DDL)))
+        if tagged.columns != cols:
+            tagged = tagged.selectExpr(*[sql_ident(c, literal=True) for c in cols])
+        if not alive:
+            return tagged.filter(f"(`{_R}` IS NOT NULL)")
+        out = tagged.filter(f"(`{_R}` IS NULL)")
+        return out if _R in df.columns else out.drop(_R)
 
 
 class JoinDeduplicator(Deduplicator):
     """Pair-emitting dedup base: subclasses implement ``_dup_pairs(df) ->
     (id_col, __rep)`` — one row per rejected id with its representative —
-    and inherit ONE shared apply/rejected implementation. The anti-join
-    and rejection tagging previously lived as near-identical copies in
-    eight classes and had already drifted (reason threading, join ``how``).
+    and inherit ONE ``tag``, a left join against those pairs (``apply``
+    and ``rejected`` are its views, as for every Deduplicator).
     ``rejection_reason`` customizes the tag (DecontaminationFilter:
     "contaminated"). ``key`` is deliberately unavailable — these dedups
-    are defined over pairs, not a single-key window (``Pipeline`` routes
-    them through ``_dup_pairs`` directly)."""
+    are defined over pairs, not a single-key window."""
 
     rejection_reason = "duplicate"
 
@@ -434,52 +479,25 @@ class JoinDeduplicator(Deduplicator):
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         """(id_col, __rep) rows for every rejected id."""
 
-    def _dup_pairs_memo(self, df: DataFrame) -> DataFrame:
-        """``_dup_pairs(df)`` memoized on the INPUT FRAME's identity.
-        apply() and rejected() (and update_store's re-apply) are routinely
-        called with the same df in one batch; without the memo each call
-        rebuilds the pair plan — and for the bloom-pruned incremental
-        stores, plan construction is EAGER work (store count + full key
-        scan + bitmap collect per BloomFilter.fit), so one batch paid the
-        feature's dominant cost two or three times. Keyed on object
-        identity: a new micro-batch frame is a new object, so the filter
-        is still refit per batch (the staleness guarantee the incremental
-        docstrings make); DataFrames are immutable, so reuse is safe.
-
-        ``_memo_token`` guards EXTERNAL state: pure dedups are functions
-        of df alone (the base token is a constant ``()`` that always
-        matches; returning None DISABLES reuse), but the store-backed
-        incrementals capture the seen-store's file listing at plan-build
-        time — reusing that plan after ``update_store``/``compact_store``
-        rewrote the directory would miss new keys or crash on deleted
-        files, so their token (the store dir snapshot) changes and the
-        memo rebuilds."""
-        memo = getattr(self, "_pairs_memo", None)
-        token = self._memo_token()
-        if memo is not None and memo[0] is df and token is not None and memo[2] == token:
-            return memo[1]
-        pairs = self._dup_pairs(df)
-        self._pairs_memo = (df, pairs, token)
-        return pairs
-
-    def _memo_token(self) -> object:
-        """External-state fingerprint for the pairs memo. None from a
-        STATEFUL subclass means "unknown" and disables reuse; the base
-        returns a constant (no external state)."""
-        return ()
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return anti_join_once(df, self._dup_pairs_memo(df), self.id_col)
-
-    def rejected(self, df: DataFrame) -> DataFrame:
-        return (
-            df.join(self._dup_pairs_memo(df), on=self.id_col, how="inner")
-            .withColumn(
-                REJECTION_DETAILS_COL,
+    def tag(self, df: DataFrame) -> DataFrame:
+        """``df`` with every alive row that ``_dup_pairs`` over the alive
+        rows names tagged. The pairs side embeds ``df``'s plan a second
+        time, so a caller running several actions persists ``df`` first
+        (``Pipeline`` does). No broadcast hint: the pairs frame is
+        O(duplicates) — tiny on a clean corpus but O(n) on a near-dup-heavy
+        one, where a forced broadcast OOMs the driver at scale. AQE sees
+        the real size at runtime and broadcasts whenever it is small."""
+        alive = F.col(_R).isNull()
+        pairs = self._dup_pairs(df.filter(alive)).withColumnRenamed(self.id_col, "__dup_id")
+        joined = df.join(pairs, df[self.id_col] == F.col("__dup_id"), "left")
+        tagged = joined.withColumn(
+            _R,
+            F.when(
+                alive & F.col("__dup_id").isNotNull(),
                 rejection_details(self.rejection_reason, self.name, representative_id="cast(__rep as string)"),
-            )
-            .drop("__rep")
+            ).otherwise(F.col(_R)),
         )
+        return tagged.drop("__dup_id", "__rep")
 
 
 def anti_join_once(df: DataFrame, dup_ids: DataFrame, id_col: str) -> DataFrame:

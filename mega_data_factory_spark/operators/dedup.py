@@ -111,13 +111,6 @@ class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
         # first-run-empty and re-admit every historical duplicate
         return raw.select("content_key", "representative_id")
 
-    def _memo_token(self) -> object:
-        # the pairs plan snapshots the store's file listing (and, bloom
-        # path, an eagerly-collected bitmap): valid only while the store
-        # directory is unchanged. update_store appends and compact_store
-        # swaps files — both shift this snapshot, invalidating the memo.
-        return _store_dir_token(self.store_path)
-
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         """(id, __rep): rejected rows with their representative — the stored
         one when the key is already known, else the batch's min-id row."""
@@ -171,26 +164,6 @@ class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
             F.col(self.id_col).cast("string").alias("representative_id"),
         ).dropDuplicates(["content_key"])
         new_keys.write.mode("append").parquet(self.store_path)
-
-
-def _store_dir_token(store_path: str) -> object:
-    """Cheap fingerprint of a store directory's file set (name, mtime,
-    size per file) for plan-memo invalidation. None (= "unknown, never
-    reuse") when the path is missing or not a local/posix directory —
-    correctness degrades to the pre-memo rebuild-every-call behavior."""
-    import os
-
-    try:
-        with os.scandir(store_path.rstrip("/")) as it:
-            return tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in it
-                    if e.is_file()
-                )
-            )
-    except OSError:
-        return None
 
 
 def _recover_store(store_path: str) -> None:
@@ -587,7 +560,7 @@ class MinHashLSHDeduplicator(JoinDeduplicator):
             .agg(F.min("__bucket_min").alias("__rep"))
         )
 
-    # join-dedup contract for the pipeline runner (pipeline._apply_join_dedup)
+    # the pairs JoinDeduplicator.tag joins against
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         return self._band_pairs(df)
 
@@ -642,11 +615,6 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
         # (the IncrementalExactDeduplicator._store_keys rationale)
         _require_long_band_key(raw, self.store_path)
         return raw.select("band_key", "representative_id")
-
-    def _memo_token(self) -> object:
-        # see IncrementalExactDeduplicator._memo_token: the pairs-plan memo
-        # is only valid while the band store's file set is unchanged
-        return _store_dir_token(self.store_path)
 
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         ids = self._band_ids(df)

@@ -151,7 +151,7 @@ class QualityScoreRefiner(Refiner):
         # Project holds HOFs -> CodegenFallback, no subexpression
         # elimination), re-scanning the text per copy per row: measured
         # 11s -> 0.06s on a 500k-doc quality_rules chain (round-10
-        # scripts/diag_fineweb attribution). Values are bit-identical —
+        # scripts/diag_fineweb.out attribution). Values are bit-identical —
         # same arithmetic on the same doubles.
         # Double literals carry the D suffix — bare 0.0 parses as DECIMAL
         # in Spark SQL, which would change the arithmetic.

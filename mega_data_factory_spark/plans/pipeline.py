@@ -6,13 +6,13 @@ stage (which would re-scan the source once per side output — the reference
 writes rejected rows mid-pipeline from each worker, framework/worker.py:
 113-117), every row carries a nullable ``_rejection_details`` struct:
 
-  * a Filter fills it for failing rows that are still alive;
+  * a Filter or Deduplicator fills it through its own ``tag`` (the tag
+    contract in operators/base.py — the one implementation standalone
+    ``apply``/``rejected`` also use): a Filter tags failing alive rows, a
+    single-key Deduplicator ranks alive rows per key, a join-based
+    near-dedup left-joins its duplicate-pairs frame over alive rows;
   * a Refiner computes its columns for alive rows only (rejected rows get
-    NULL — model UDFs never run on dead rows);
-  * a single-key Deduplicator ranks *alive* rows per key — dead rows get a
-    unique sentinel key so they can't absorb or become representatives;
-  * join-based near-dedup operators tag via a left join against their
-    duplicate-pairs frame computed over alive rows.
+    NULL — model UDFs never run on dead rows).
 
 The tagged frame is persisted once; the passed sink, rejected sink
 (partitioned by rejecting operator, reference executor.py:100-124) and the
@@ -32,16 +32,14 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mega_data_factory_spark.config import PipelineConfig
-from mega_data_factory_spark.functions.text import sql_ident, sql_string_literal
 from mega_data_factory_spark.operators.base import (
-    RAW_KEY_COL,
     REJECTION_DETAILS_COL,
+    REJECTION_STRUCT_DDL,
     Deduplicator,
     Filter,
+    JoinDeduplicator,
     Operator,
     Refiner,
-    rejection_details,
-    rejection_details_sql,
     with_sql_columns,
 )
 from mega_data_factory_spark.registry import OPERATORS
@@ -49,9 +47,6 @@ from mega_data_factory_spark.sinks import write_sink
 from mega_data_factory_spark.sources import read_source
 
 _R = REJECTION_DETAILS_COL
-# column a Column-authored filter predicate is bound to, so the filter tag
-# stays one SQL spelling (Catalyst collapses the binding projection)
-_KEEP = "__filter_keep"
 
 
 @dataclass
@@ -87,25 +82,20 @@ class PipelineResult:
 
 
 class Pipeline:
+    """A recipe's operators over its source as ONE tagged plan. ``build``
+    and the streaming runner share ``apply_ops``; ``run`` writes the
+    passed, rejected and metrics sides from the persisted tagged frame.
+    Join-dedup inputs are persisted mid-plan and released by the runner
+    after its actions (``release_intermediates``)."""
+
     def __init__(self, config: PipelineConfig):
         from mega_data_factory_spark.resources import build_task_profile
 
         self.config = config
         self._ops: list[tuple[str, Operator]] = []  # (stage, instance) in order
-        # frames persisted mid-plan by _apply_join_dedup; released by the
+        # join-dedup inputs persisted mid-plan by _apply; released by the
         # runner (run() / StreamingPipeline) after its actions complete
         self._mid_cached: list[DataFrame] = []
-        # (op id, input-columns tuple) -> reusable unresolved Column
-        # expressions. Filter predicates and the key-dedup tag expression
-        # are pure name-based builders (they consult df only for its
-        # column list, which IS the cache key), so rebuilding them per
-        # micro-batch under the streaming runner was pure py4j latency —
-        # ~0.2 s/trigger on the bench stream. Unresolved Columns bind at
-        # analysis time, so one expression serves every batch of the same
-        # schema. The purity contract is stated on the Filter/Deduplicator
-        # base classes; custom operators that violate it opt out via
-        # cacheable_predicate=False and are rebuilt per frame.
-        self._expr_cache: dict[tuple, Column] = {}
         # per-stage ResourceProfiles (GPU stage placement, resources.py);
         # built eagerly so a bad resources block fails at construction
         self.stage_profiles = {
@@ -155,8 +145,6 @@ class Pipeline:
         (a duplicated loop in the runner had already drifted: it skipped
         the stage resource tagging, silently dropping GPU scheduling for
         streamed model stages)."""
-        from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
-
         if _R not in df.columns:
             df = df.withColumn(_R, F.lit(None).cast(REJECTION_STRUCT_DDL))
         tagged: set[str] = set()
@@ -173,24 +161,17 @@ class Pipeline:
         return df
 
     def _apply(self, df: DataFrame, op: Operator) -> DataFrame:
-        if isinstance(op, Filter):
-            # cache gated on the base-class purity contract: a custom
-            # Filter whose predicate consults data/mutable state opts out
-            # with cacheable_predicate=False and is rebuilt per frame
-            ck = (id(op), tuple(df.columns), "filter")
-            hit = self._expr_cache.get(ck) if op.cacheable_predicate else None
-            if hit is None:
-                hit = self._filter_tag(op, df)
-                if op.cacheable_predicate:
-                    self._expr_cache[ck] = hit
-            bound, tag = hit
-            if bound is None:
-                return df.withColumn(_R, tag)
-            return df.withColumn(_KEEP, bound).withColumn(_R, tag).drop(_KEEP)
-        if isinstance(op, Deduplicator):
-            if hasattr(op, "_dup_pairs"):
-                return self._apply_join_dedup(df, op)
-            return self._apply_key_dedup(df, op)
+        if isinstance(op, JoinDeduplicator):
+            # The pairs side embeds the full upstream plan (scan + every
+            # prior operator) a SECOND time, and the filter(alive)
+            # difference defeats ReusedExchange — K join-dedups would
+            # re-execute the upstream (model-UDF refiners included) K extra
+            # times per action. Persist the shared input once; the runner
+            # releases it after its action.
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            self._mid_cached.append(df)
+        if isinstance(op, (Filter, Deduplicator)):
+            return op.tag(df)
         if isinstance(op, Refiner):
             if getattr(op, "pipeline_full_frame", False):
                 # refiner modes that are full-frame transforms (e.g. the
@@ -225,144 +206,6 @@ class Pipeline:
             return out.drop(*tmp) if tmp else out
         # generic operator: full-frame transform (must preserve the tag col)
         return op.apply(df)
-
-    @staticmethod
-    def _filter_tag(op: Filter, df: DataFrame) -> tuple[Column | None, Column]:
-        """(predicate Column to bind as ``_KEEP`` or None, the tag): alive
-        gate, NULL-as-reject and rejection struct parsed in ONE round trip
-        around the filter's SQL predicate. A Column-authored predicate is
-        bound first and read by name — the binding projection collapses
-        into the tag's, so the plan is the inline one."""
-        psql = op.predicate_sql(df)
-        bound = None
-        if psql is None:
-            bound, psql = op.predicate(df), sql_ident(_KEEP)
-        tag = F.expr(
-            f"CASE WHEN ((`{_R}` IS NULL) AND (NOT coalesce({psql}, false))) "
-            f"THEN {rejection_details_sql('filtered', op.name)} ELSE `{_R}` END"
-        )
-        return bound, tag
-
-    def _apply_key_dedup(self, df: DataFrame, op: Deduplicator) -> DataFrame:
-        ck = (id(op), tuple(df.columns), "key_dedup")
-        hit = self._expr_cache.get(ck) if op.cacheable_predicate else None
-        if hit is None:
-            hit = self._key_dedup_exprs(op, df)
-            if op.cacheable_predicate:
-                self._expr_cache[ck] = hit
-        raw, key, tag = hit
-        if raw is not None:
-            df = df.withColumn(RAW_KEY_COL, raw)
-        out = self._wide_key_dedup(df, op, key) if op.wide_payload else df.withColumn(_R, tag)
-        return out.drop(RAW_KEY_COL) if raw is not None else out
-
-    def _key_dedup_exprs(self, op: Deduplicator, df: DataFrame) -> tuple[Column | None, str, Column | None]:
-        """(Column-authored key to bind as ``RAW_KEY_COL`` or None, the
-        pipeline key's SQL text, the window tag — None on the wide_payload
-        path, which elects winners by join instead).
-
-        The key is the operator's effective key — the null_keys="distinct"
-        contract (rows with no dedup identity each survive) must hold on
-        the pipeline path too — for alive rows, and for dead rows a
-        per-row sentinel so they can neither absorb nor represent alive
-        rows. The sentinel is concat_ws, never NULL: a bare concat made a
-        dead NULL-id row's sentinel NULL, landing it in the alive NULL-key
-        window partition where it (sorting NULLS FIRST on order_col)
-        absorbed every alive NULL-key row as a "duplicate" of a dead
-        representative.
-
-        The tag is ONE projection with the window expressions inline: the
-        earlier temp-column form (__dk/__rn/__rep across four withColumns
-        + a drop) re-ran plan analysis per frame — pure driver latency
-        that multiplies by micro-batch count under the streaming runner
-        (measured ~0.2 s of the per-trigger floor). Both window functions
-        share one window spec, so the physical plan is a single Window
-        node; the key is reused verbatim in the partition spec and the
-        rejection struct."""
-        raw, ksql = op._key_source(df)
-        if raw is not None:
-            # a Column-authored key (model UDFs) runs for alive rows only
-            raw = F.when(self._alive(), raw)
-        ic, oc = sql_ident(op.id_col), sql_ident(op.order_col)
-        key = (
-            f"CASE WHEN (`{_R}` IS NULL) THEN cast({op._effective_key_sql(df, ksql)} as string) "
-            f"ELSE concat_ws('', '\\0D\x1f', coalesce(cast({ic} as string), '')) END"
-        )
-        if op.wide_payload:
-            return raw, key, None
-        over = f"OVER (PARTITION BY {key} ORDER BY {oc})"
-        tag = F.expr(
-            f"CASE WHEN ((`{_R}` IS NULL) AND (row_number() {over} > 1)) "
-            f"THEN struct(cast('duplicate' as string) AS reason, "
-            f"cast({sql_string_literal(op.name)} as string) AS operator, "
-            f"cast({key} as string) AS dedup_key, "
-            f"cast(cast(first({ic}) {over} as string) as string) AS representative_id) "
-            f"ELSE `{_R}` END"
-        )
-        return raw, key, tag
-
-    def _wide_key_dedup(self, df: DataFrame, op: Deduplicator, key: str) -> DataFrame:
-        """Winner election on a NARROW projection (the base.apply
-        geometry): the full-row window would shuffle the heavy payload
-        bytes the wide_payload flag exists to keep out of the exchange.
-        Losers (order value + representative id) join back on the unique
-        order_col — AQE broadcasts the loser set when small. __jk is the
-        NULL-safe join key — groupBy treats NULL keys as one group but the
-        equi-join back would never match them, silently letting every
-        NULL-key duplicate survive (base.Deduplicator's _NULL_GROUP
-        rationale); __dk keeps the REAL key for the tag."""
-        keyed = df.withColumn("__dk", F.expr(key)).withColumn("__jk", F.expr(op._join_key_sql("__dk")))
-        narrow = keyed.select("__jk", F.col("__dk"), F.col(op.order_col).alias("__o"), F.col(op.id_col).alias("__i"))
-        win = narrow.groupBy("__jk").agg(
-            F.min("__o").alias("__win_o"), F.min_by("__i", "__o").alias("__win_rep")
-        )
-        losers = (
-            narrow.join(win, on="__jk")
-            .filter(F.col("__o") != F.col("__win_o"))
-            .select(F.col("__o").alias(op.order_col), "__dk", F.col("__win_rep").alias("__rep"))
-        )
-        out = df.join(losers, on=op.order_col, how="left")  # losers carry __dk for the tag
-        tagged = out.withColumn(
-            _R,
-            F.when(
-                self._alive() & F.col("__rep").isNotNull(),
-                rejection_details("duplicate", op.name, "__dk", "cast(__rep as string)"),
-            ).otherwise(F.col(_R)),
-        )
-        return tagged.drop("__dk", "__rep")
-
-    def _apply_join_dedup(self, df: DataFrame, op: Deduplicator) -> DataFrame:
-        # The pairs side embeds the full upstream plan (scan + every prior
-        # operator) a SECOND time, and the filter(alive) difference defeats
-        # ReusedExchange — K join-dedups would re-execute the upstream
-        # (model-UDF refiners included) K extra times per action. Persist
-        # the shared input once; the runner releases it after its action.
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._mid_cached.append(df)
-        # No broadcast hint: the dup-pairs frame is O(duplicates) — tiny on
-        # a clean corpus but O(n) on a near-dup-heavy one, where a forced
-        # broadcast OOMs the driver at scale. AQE sees the real size at
-        # runtime and picks broadcast itself whenever the frame is small.
-        pairs = op._dup_pairs(df.filter(self._alive())).withColumnRenamed(op.id_col, "__dup_id")
-        joined = df.join(
-            pairs,
-            df[op.id_col] == F.col("__dup_id"),
-            "left",
-        )
-        tagged = joined.withColumn(
-            _R,
-            F.when(
-                self._alive() & F.col("__dup_id").isNotNull(),
-                rejection_details(
-                    # join-rejectors that aren't dedups (DecontaminationFilter)
-                    # carry their own reason
-                    getattr(op, "rejection_reason", "duplicate"),
-                    op.name,
-                    representative_id="cast(__rep as string)",
-                ),
-            ).otherwise(F.col(_R)),
-        )
-        return tagged.drop("__dup_id", "__rep")
 
     def explain(self, spark: SparkSession, mode: str = "formatted") -> str:
         """Physical plan of the built pipeline (one Catalyst plan for all

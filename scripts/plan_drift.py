@@ -15,6 +15,11 @@ from plans/r13 are judged against the parent's own plans:
 plans/r13 was dumped at sf0.1 with SPARK_GRAFT_CPUS=8; exchange partition
 counts follow the core count, so compare at the same setting.
 
+The same run also dumps the ``Pipeline.explain`` of each recipe in RECIPES
+(its source pointed at the scale dir's documents table) as
+``<recipe>_after.txt``. A recipe is compared only when the baseline holds
+its dump, so the recipe-less plans/r13 baseline skips them.
+
 Every query is built with its expression ids starting at a base fixed by
 its name (see pin_expr_ids), so a query's plan does not depend on which
 queries ran before it in the session.
@@ -84,6 +89,21 @@ def pin_expr_ids(spark, name: str) -> None:
     mh.collectArguments(setter, 0, lookup.unreflectGetter(field)).invokeWithArguments(args)
 
 
+# recipes whose Pipeline plans are dumped next to the driver queries
+RECIPES = ("fineweb_style_recipe", "c4_style_recipe", "gopher_style_recipe")
+
+
+def recipe_plan(spark, name: str, sf: str) -> str:
+    """Formatted ``Pipeline.explain`` of configs/<name>.yaml, read over
+    ``sf``'s documents table."""
+    from mega_data_factory_spark.config import PipelineConfig
+    from mega_data_factory_spark.plans.pipeline import Pipeline
+
+    cfg = PipelineConfig.from_yaml(os.path.join(REPO, "configs", f"{name}.yaml"))
+    cfg.source.path = os.path.join(sf, "documents.parquet")
+    return Pipeline(cfg).explain(spark)
+
+
 def id_slot(name: str) -> int:
     return zlib.crc32(name.encode()) & ((1 << 22) - 1)
 
@@ -106,20 +126,26 @@ def main() -> None:
 
     jvm = spark.sparkContext._jvm
     queries = e.queries()
-    slots = {id_slot(name) for name in queries}
-    if len(slots) != len(queries):
-        sys.exit("two query names share an expression-id range; widen id_slot")
+    names = [*queries, *RECIPES]
+    if len({id_slot(name) for name in names}) != len(names):
+        sys.exit("two plan names share an expression-id range; widen id_slot")
     drift = []
-    for name, fn in queries.items():
+    for name in names:
+        path = os.path.join(args.baseline, f"{name}_after.txt")
+        if name in RECIPES and not args.dump and not os.path.exists(path):
+            print(f"{name:34s} SKIPPED (no baseline dump)")
+            continue
         pin_expr_ids(spark, name)
-        now = jvm.PythonSQLUtils.explainString(fn(spark, args.sf)._jdf.queryExecution(), "formatted")
+        if name in RECIPES:
+            now = recipe_plan(spark, name, args.sf)
+        else:
+            now = jvm.PythonSQLUtils.explainString(queries[name](spark, args.sf)._jdf.queryExecution(), "formatted")
         if args.dump:
             os.makedirs(args.dump, exist_ok=True)
             with open(os.path.join(args.dump, f"{name}_after.txt"), "w") as f:
                 f.write(now)
             print(f"{name:34s} dumped")
             continue
-        path = os.path.join(args.baseline, f"{name}_after.txt")
         if not os.path.exists(path):
             print(f"{name:34s} NO_FILE")
             drift.append(name)
@@ -142,7 +168,7 @@ def main() -> None:
             print(f"  line counts differ: now {len(la)} vs baseline {len(lb)}")
         drift.append(name)
     if not args.dump:
-        print(f"\n{len(drift)} drifted of {len(queries)}: {drift}")
+        print(f"\n{len(drift)} drifted of {len(names)}: {drift}")
         sys.exit(1 if drift else 0)
 
 

@@ -400,7 +400,7 @@ def test_rejected_sink_carries_run_id(spark, tmp_path):
 
 def test_pipeline_key_dedup_respects_null_keys_distinct(spark, tmp_path):
     """The PIPELINE tagging path must honor null_keys='distinct' too: it
-    builds the window key itself (_apply_key_dedup), and using op.key()
+    builds the window key itself (Deduplicator.tag), and using op.key()
     instead of op._effective_key() silently collapsed every NULL-key row
     into one window partition — all but one URL-less document in the
     corpus rejected as 'duplicates'."""

@@ -270,7 +270,6 @@ def _with_tags(df, dead_id: int | None = None):
 
 def _pipe() -> Pipeline:
     pipe = Pipeline.__new__(Pipeline)
-    pipe._expr_cache = {}
     pipe._mid_cached = []
     return pipe
 

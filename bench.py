@@ -606,7 +606,8 @@ def main() -> None:
         # min-of-2 passes per query (VERDICT r4 #3): a single pass conflates
         # plan/codegen compile + file-listing cold costs with execution and
         # produced ±30-60% round-over-round phantom swings (q1 2.97s cold vs
-        # 0.96s steady, q3 4.65s vs 0.71s — measured via scripts/diag_q1q3.py).
+        # 0.96s steady, q3 4.65s vs 0.71s — measured by scripts/diag_q1q3.py,
+        # retired; `git show 1cb1da2:scripts/diag_q1q3.py` has it).
         # Each pass still re-plans and re-executes from scratch; only OS page
         # cache / JIT state carries over, matching the reference's
         # steady-state methodology.

@@ -30,10 +30,12 @@ Spark-first design decisions:
     operator boundaries (the reference's CombinedOperator fusion is free);
   * filters expose a ``predicate`` so Catalyst can push it into the scan;
     Python only appears when a Refiner genuinely needs it;
-  * dedup is a hash-shuffle window: ``row_number() over (partition by key
+  * dedup is ONE hash-shuffle window, ``rank() over (partition by key
     order by order_col)`` — the shuffle *is* the reference's sharded
     seen-set (backend.py:134-143), with a deterministic ``min(order_col)``
-    tie-break replacing the reference's racy arrival order (backend.py:39-47);
+    first replacing the reference's racy arrival order (backend.py:39-47);
+    rows tied first all survive, and first-wins is top-1 per key, so
+    ``apply`` plans a partial WindowGroupLimit before the exchange;
   * tagging rather than splitting lets a pipeline write its passed and
     rejected sides without scanning the source twice.
 
@@ -258,7 +260,8 @@ class Deduplicator(Operator):
     deterministic strengthening of the reference's arrival-order
     semantics). ``tag`` marks every alive row after the first of its key
     'duplicate', with ``dedup_key`` and ``representative_id`` = the first
-    row's id; ``apply`` keeps the survivors and ``rejected`` the
+    row's id (rows tied first all survive; the least of their ids
+    represents); ``apply`` keeps the survivors and ``rejected`` the
     duplicates of ``tag`` over ``df`` with every row alive. Everything
     wrapped around the key — NULL handling, the window ranking, the
     rejection struct — is SQL text over ``key_sql``; a Column-authored key
@@ -271,7 +274,6 @@ class Deduplicator(Operator):
         *,
         order_col: str = "doc_id",
         id_col: str | None = None,
-        wide_payload: bool = False,
         null_keys: str = "group",
     ):
         super().__init__(name)
@@ -288,22 +290,10 @@ class Deduplicator(Operator):
         #              fingerprints — where NULL means "could not derive";
         #              grouping there mass-drops unrelated rows).
         # Implemented by rewriting NULL keys to a per-row synthetic key
-        # ("\x00N\x1f" + order value, unique because order_col is): one
-        # plan shape for both modes, window and wide_payload paths alike.
+        # ("\x00N\x1f" + order value): one plan shape for both modes.
         if null_keys not in ("group", "distinct"):
             raise ValueError(f"null_keys must be 'group' or 'distinct', got {null_keys!r}")
         self.null_keys = null_keys
-        # wide_payload: rows carry a heavy column (image/audio bytes) that
-        # must NOT go through the dedup shuffle. The window strategy
-        # shuffles whole rows; the election strategy shuffles only
-        # (key, order, id) rows to elect winners, then joins the losers
-        # back on order_col — with AQE that is a broadcast join (no
-        # movement of the payload at all) until the loser set itself is
-        # huge, at which point it degrades to an id-only shuffle, still
-        # never the bytes. Requires order_col values to be unique (they
-        # are ids here) so "min(order) per key" identifies exactly one
-        # winner row.
-        self.wide_payload = wide_payload
 
     def key_sql(self, df: DataFrame) -> str | None:
         """Dedup key (string) as SQL text. None for a class that authors
@@ -330,37 +320,32 @@ class Deduplicator(Operator):
         (it would win every NULLS FIRST window) nor a duplicate (of what?),
         so it always survives, in every null_keys mode (documented
         contract; order_col is ids in practice, so this is a malformed-row
-        escape hatch, not a mode). Its synthetic key is concat_ws (never
-        NULL) with a monotonic fallback: a bare concat yielded NULL
-        whenever order_col was NULL, collapsing identity-less rows back
-        into ONE group — the exact mass-drop "distinct" exists to prevent.
-        monotonically_increasing_id is not stable across runs, but this
-        key never surfaces: every row that gets one survives by
-        construction. Control characters are spelled with Spark's
-        string-literal escapes where one exists (``\\0`` for NUL) and raw
-        otherwise (US, ``\\x1f``) — both parse to the same literal bytes."""
+        escape hatch, not a mode). All such rows share the constant key
+        ``\\0O\\x1f`` and tie at rank 1 there; a per-row nondeterministic
+        key would keep the survivors filter out of the window (no
+        WindowGroupLimit). Control characters are spelled with Spark's string-literal escapes
+        where one exists (``\\0`` for NUL) and raw otherwise (US,
+        ``\\x1f``) — both parse to the same literal bytes."""
         o = sql_ident(self.order_col)
-        unique = (
-            "concat_ws('', '\\0N\x1f', coalesce(cast(" + o + " as string), "
-            "concat_ws('', 'mi:', cast(monotonically_increasing_id() as string))))"
-        )
+        no_order = f"WHEN ({o} IS NULL) THEN '\\0O\x1f'"
         if self.null_keys == "distinct":
             m = self._missing_key_sql(df, key_sql)
-            return f"CASE WHEN ({m} OR ({o} IS NULL)) THEN {unique} ELSE {key_sql} END"
-        return f"CASE WHEN ({o} IS NULL) THEN {unique} ELSE {key_sql} END"
+            return (
+                f"CASE {no_order} WHEN {m} THEN concat('\\0N\x1f', cast({o} as string)) "
+                f"ELSE {key_sql} END"
+            )
+        return f"CASE {no_order} ELSE {key_sql} END"
 
     def tag(self, df: DataFrame) -> DataFrame:
         """``df`` with every alive row after the first of its key tagged."""
-        raw, key, tag = self._per_schema(df, self._tag_exprs)
-        if raw is not None:
-            df = df.withColumn(RAW_KEY_COL, raw)
-        out = self._elected_tag(df, key) if self.wide_payload else df.withColumn(_R, tag)
-        return out.drop(RAW_KEY_COL) if raw is not None else out
+        raw, tag = self._per_schema(df, self._tag_exprs)
+        if raw is None:
+            return df.withColumn(_R, tag)
+        return df.withColumn(RAW_KEY_COL, raw).withColumn(_R, tag).drop(RAW_KEY_COL)
 
-    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, str, Column | None]:
+    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, Column]:
         """(Column-authored key to bind as ``RAW_KEY_COL`` or None, the
-        tag key's SQL text, the window tag — None on the wide_payload
-        path, which elects winners by join instead).
+        window tag).
 
         The key is the effective key — the null_keys="distinct" contract
         (rows with no dedup identity each survive) — for alive rows, and
@@ -370,6 +355,15 @@ class Deduplicator(Operator):
         alive NULL-key window partition where it (sorting NULLS FIRST on
         order_col) absorbed every alive NULL-key row as a "duplicate" of a
         dead representative.
+
+        ``rank()`` lets every row tied first survive (the NULL-order
+        partition is one such tie); a later row's representative is the
+        least id among them — ``first(id)`` where id is order_col (tied
+        rows share it, and no struct crosses the shuffle), else
+        ``min(struct(order, id))``, since ``first`` would hang on the
+        order ties arrived in. With no guard around ``rank``,
+        ``apply``'s filter is ``rank <= 1`` and plans a partial
+        WindowGroupLimit below the exchange.
 
         The tag is ONE projection with the window expressions inline: the
         earlier temp-column form (__dk/__rn/__rep across four withColumns
@@ -388,57 +382,19 @@ class Deduplicator(Operator):
             f"CASE WHEN (`{_R}` IS NULL) THEN cast({self._effective_key_sql(df, ksql)} as string) "
             f"ELSE concat_ws('', '\\0D\x1f', coalesce(cast({ic} as string), '')) END"
         )
-        if self.wide_payload:
-            return raw, key, None
         over = f"OVER (PARTITION BY {key} ORDER BY {oc})"
+        rep = f"first({ic}) {over}"
+        if ic != oc:
+            rep = f"(min(struct({oc} AS o, {ic} AS i)) {over}).i"
         tag = F.expr(
-            f"CASE WHEN ((`{_R}` IS NULL) AND (row_number() {over} > 1)) "
+            f"CASE WHEN ((`{_R}` IS NULL) AND (rank() {over} > 1)) "
             f"THEN struct(cast('duplicate' as string) AS reason, "
             f"cast({sql_string_literal(self.name)} as string) AS operator, "
             f"cast({key} as string) AS dedup_key, "
-            f"cast(cast(first({ic}) {over} as string) as string) AS representative_id) "
+            f"cast({rep} as string) AS representative_id) "
             f"ELSE `{_R}` END"
         )
-        return raw, key, tag
-
-    # NULL-group join sentinel: groupBy treats NULL keys as one group, but
-    # an equi-JOIN on the key never matches NULL — the election would
-    # silently let every NULL-key duplicate survive. Control chars make a
-    # collision with a real key practically impossible (keys here are md5
-    # hex / urls / column values).
-    _NULL_GROUP = "\x00G\x1f"
-
-    def _elected_tag(self, df: DataFrame, key: str) -> DataFrame:
-        """Winner election on a NARROW projection: the full-row window
-        would shuffle the heavy payload bytes the wide_payload flag exists
-        to keep out of the exchange. Losers (order value + representative
-        id, ``min_by`` so it holds when id_col is not order_col) join back
-        on the unique order_col — AQE broadcasts the loser set when small.
-        __jk is the NULL-safe join key (``_NULL_GROUP``); __dk keeps the
-        REAL key for the tag."""
-        keyed = df.withColumn("__dk", F.expr(key)).withColumn(
-            "__jk", F.expr(f"coalesce(__dk, {sql_string_literal(self._NULL_GROUP)})")
-        )
-        narrow = keyed.select(
-            "__jk", F.col("__dk"), F.col(self.order_col).alias("__o"), F.col(self.id_col).alias("__i")
-        )
-        win = narrow.groupBy("__jk").agg(
-            F.min("__o").alias("__win_o"), F.min_by("__i", "__o").alias("__win_rep")
-        )
-        losers = (
-            narrow.join(win, on="__jk")
-            .filter(F.col("__o") != F.col("__win_o"))
-            .select(F.col("__o").alias(self.order_col), "__dk", F.col("__win_rep").alias("__rep"))
-        )
-        out = df.join(losers, on=self.order_col, how="left")  # losers carry __dk for the tag
-        tagged = out.withColumn(
-            _R,
-            F.when(
-                F.col(_R).isNull() & F.col("__rep").isNotNull(),
-                rejection_details("duplicate", self.name, "__dk", "cast(__rep as string)"),
-            ).otherwise(F.col(_R)),
-        )
-        return tagged.drop("__dk", "__rep")
+        return raw, tag
 
     def apply(self, df: DataFrame) -> DataFrame:
         return self._split(df, alive=True)
@@ -450,11 +406,8 @@ class Deduplicator(Operator):
         """The alive (``apply``) or dead (``rejected``) rows of ``tag`` over
         ``df`` with every row a candidate: the tag column starts NULL,
         replacing one the input carries, and the rows keep the input's
-        column order (the election's join moves ``order_col`` first)."""
-        cols = df.columns if _R in df.columns else [*df.columns, _R]
+        column order."""
         tagged = self.tag(df.withColumn(_R, F.lit(None).cast(REJECTION_STRUCT_DDL)))
-        if tagged.columns != cols:
-            tagged = tagged.selectExpr(*[sql_ident(c, literal=True) for c in cols])
         if not alive:
             return tagged.filter(f"(`{_R}` IS NOT NULL)")
         out = tagged.filter(f"(`{_R}` IS NULL)")

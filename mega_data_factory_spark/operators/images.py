@@ -649,7 +649,9 @@ class ImagePhashDeduplicator(Deduplicator):
     """First-seen-wins dedup on the perceptual hash; reuses a precomputed
     ``phash`` column when present (reference image_phash_dedup.py:75-76),
     falling back to decode+DCT. Undecodable images key on their id so they
-    never collide (image_phash_dedup.py: failures -> key = id)."""
+    never collide (image_phash_dedup.py: failures -> key = id). Whole rows
+    cross the base window's one shuffle; ``apply`` sends at most one row
+    per phash per partition."""
 
     def __init__(
         self,
@@ -657,16 +659,9 @@ class ImagePhashDeduplicator(Deduplicator):
         image_col: str = "image",
         id_col: str = "id",
         phash_col: str = "phash",
-        wide_payload: bool = False,
         name: str | None = None,
     ):
-        # wide_payload=True elects winners over compact (phash, id) pairs
-        # and semi-joins the winner ids back, so the image bytes never
-        # enter the dedup shuffle — the right trade when the upstream plan
-        # is a cheap re-scannable source, because the election branch
-        # re-evaluates it. Default False: one pass + whole-row shuffle,
-        # which wins whenever upstream contains the decode/quality UDFs.
-        super().__init__(name, order_col=id_col, id_col=id_col, wide_payload=wide_payload)
+        super().__init__(name, order_col=id_col, id_col=id_col)
         self.image_col = image_col
         self.phash_col = phash_col
 

@@ -107,8 +107,9 @@ def text_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full text column through an exchange (measured 2x at sf0.1) to fix
     # what is purely a test-file artifact — the single-row-group parquet
     # caps scan parallelism at 2 tasks locally, whereas any real corpus
-    # scan has thousands of splits. WindowGroupLimit keeps the real
-    # shuffle at one compact row per key.
+    # scan has thousands of splits. A partial WindowGroupLimit below the
+    # dedup exchange keeps that shuffle at one compact (doc_id, key) row
+    # per key per scan partition; the text itself never crosses it.
     d = TextExactDeduplicator(id_col="doc_id")
     out = d.apply(t["documents"].withColumn("content_key", d.key(t["documents"])))
     return out.select("doc_id", "content_key").orderBy("doc_id")

@@ -45,11 +45,6 @@ def test_key_dedup_null_keys_distinct_mode(spark):
     assert {r.id for r in d.apply(df).collect()} == {1, 2, 3, 5, 6}
     rej = d.rejected(df)
     assert {r.id for r in rej.collect()} == {4}
-    # wide_payload winner-election path agrees
-    dw = KeyDeduplicator(["k"], order_col="id", null_keys="distinct")
-    dw.wide_payload = True
-    assert {r.id for r in dw.apply(df).collect()} == {1, 2, 3, 5, 6}
-    assert {r.id for r in dw.rejected(df).collect()} == {4}
     # multi-column: ANY NULL component = no identity
     df2 = spark.createDataFrame(
         [(1, "a", None), (2, "a", None), (3, "a", "x"), (4, "a", "x")],
@@ -526,58 +521,10 @@ def test_minhash_bands_guard_is_valueerror(spark):
         MinHashLSHDeduplicator(num_hashes=16, bands=5)
 
 
-def test_pipeline_wide_payload_dedup_avoids_row_window(spark, tmp_path):
-    """The pipeline path must honor wide_payload: winner election on a
-    narrow projection instead of windowing full (payload-heavy) rows.
-    Tag semantics stay identical to the window path."""
-    from mega_data_factory_spark.config import PipelineConfig, SinkConfig
-    from mega_data_factory_spark.plans.pipeline import Pipeline
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, "a", b"\x00" * 64), (2, "a", b"\x01" * 64), (3, "b", b"\x02" * 64), (4, None, b"x"), (5, None, b"y")],
-        "doc_id long, k string, payload binary",
-    ).write.parquet(src)
-
-    def cfg(wide):
-        c = PipelineConfig.from_dict(
-            {
-                "pipeline": {
-                    "name": "p",
-                    "id_col": "doc_id",
-                    "source": {"path": src},
-                    "operators": [
-                        {"name": "KeyDeduplicator",
-                         "params": {"key_cols": ["k"], "order_col": "doc_id"}}
-                    ],
-                }
-            }
-        )
-        c.sink = SinkConfig(path=str(tmp_path / f"out{wide}"), mode="overwrite")
-        return c
-
-    plain = Pipeline(cfg(False))
-    wide = Pipeline(cfg(True))
-    wide._ops[0][1].wide_payload = True
-    try:
-        r1, r2 = plain.run(spark), wide.run(spark)
-        a = {r.doc_id for r in spark.read.parquet(str(tmp_path / "outFalse")).collect()}
-        b = {r.doc_id for r in spark.read.parquet(str(tmp_path / "outTrue")).collect()}
-        assert a == b == {1, 3, 4}  # NULL keys group (default mode): 4 wins over 5
-        assert r1.output_records == r2.output_records == 3
-        # plan shape: the wide path has no row_number window over the rows
-        plan = wide.explain(spark)
-        assert "row_number" not in plan
-    finally:
-        plain.release_intermediates()
-        wide.release_intermediates()
-
-
 def test_null_order_rows_always_survive(spark):
     """A NULL order_col row has no position: it must survive in every
     mode and never become a representative (it used to WIN every
-    NULLS FIRST window partition it shared), and the wide-payload
-    semi-join must not silently drop it from both outputs."""
+    NULLS FIRST window partition it shared)."""
     from mega_data_factory_spark.operators.dedup import KeyDeduplicator
 
     df = spark.createDataFrame(
@@ -590,10 +537,6 @@ def test_null_order_rows_always_survive(spark):
     assert out == {(1, "a"), (None, "a"), (None, "b"), (3, None)}
     rej = {(r.id, r.k) for r in d.rejected(df).collect()}
     assert rej == {(2, "a")}
-    dw = KeyDeduplicator(["k"], order_col="id")
-    dw.wide_payload = True
-    assert {(r.id, r.k) for r in dw.apply(df).collect()} == out
-    assert {(r.id, r.k) for r in dw.rejected(df).collect()} == rej
 
 
 def test_resume_manifest_not_marked_on_truncated_or_auditonly_runs(spark, tmp_path):
@@ -690,16 +633,15 @@ def test_pretagged_input_metrics(spark, tmp_path):
 
 
 def test_wide_payload_null_key_duplicates_are_rejected(spark):
-    """Standalone wide path: NULL keys form ONE group (default mode) and
-    their duplicates must appear in rejected() — the equi-join on the key
-    used to silently lose them (NULL never equi-joins)."""
+    """Standalone window path: NULL keys form ONE group (default mode) and
+    their duplicates must appear in rejected() — an equi-join on the key
+    would silently lose them (NULL never equi-joins)."""
     from mega_data_factory_spark.operators.dedup import KeyDeduplicator
 
     df = spark.createDataFrame(
         [(1, None), (2, None), (3, "a")], "id long, k string"
     )
     d = KeyDeduplicator(["k"], order_col="id")
-    d.wide_payload = True
     assert {r.id for r in d.apply(df).collect()} == {1, 3}
     assert {r.id for r in d.rejected(df).collect()} == {2}
 

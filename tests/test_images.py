@@ -186,17 +186,6 @@ def test_image_feature_extractor_fused(spark, images_df):
     assert 2 in survivors and 5 not in survivors and 4 in survivors
 
 
-def test_image_phash_dedup_wide_payload(spark, images_df):
-    """wide_payload semi-join strategy: same survivors/rejects as the
-    window strategy, but the plan elects winners over compact columns."""
-    d = ImagePhashDeduplicator(id_col="id", wide_payload=True)
-    survivors = {r.id for r in d.apply(images_df).collect()}
-    assert survivors == {1, 2, 3, 4, 6}
-    rej = {r.id: r for r in d.rejected(images_df).select("id", "_rejection_details.*").collect()}
-    assert rej[5]["representative_id"] == "2"
-    assert rej[7]["representative_id"] == "6"
-
-
 def test_dct_phash_matches_batch_on_flat_images():
     # one hash definition: per-image delegates to the batched kernel, so
     # flat/degenerate images (float-noise DCT coefficients) can't drift

@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.config import PipelineConfig
-from mega_data_factory_spark.operators.dedup import KeyDeduplicator
+from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
+from mega_data_factory_spark.operators.dedup import KeyDeduplicator, TextExactDeduplicator
 from mega_data_factory_spark.plans.pipeline import Pipeline
 
 
@@ -21,11 +22,11 @@ def _rejections(df):
     )
 
 
-def test_wide_payload_rejected_elects_when_id_is_not_order(spark):
-    """With ``id_col != order_col`` the standalone wide-payload path still
-    elects winners on the narrow projection (representative = the min-order
-    row's id): the same rejected rows, keys and representatives as the
-    window path, and no row window over the payload-carrying rows."""
+def test_rejected_names_min_order_representative_when_id_is_not_order(spark):
+    """With ``id_col != order_col`` the window tag names the min-order
+    row's id as representative, a NULL-order row survives without
+    representing anyone, and ``rejected``/``apply`` keep the input's
+    column order."""
     df = spark.createDataFrame(
         [
             ("r1", 30, "a", b"\x00" * 32), ("r2", 10, "a", b"\x01"), ("r3", 20, "a", b"\x02"),
@@ -34,18 +35,157 @@ def test_wide_payload_rejected_elects_when_id_is_not_order(spark):
         ],
         "rid string, ord long, k string, payload binary",
     )
-    window = KeyDeduplicator(["k"], order_col="ord", id_col="rid")
-    wide = KeyDeduplicator(["k"], order_col="ord", id_col="rid")
-    wide.wide_payload = True
-    expected = _rejections(window.rejected(df))
-    assert [(r[0], r[4]) for r in expected] == [("r1", "r2"), ("r3", "r2"), ("r5", "r4"), ("r7", "r6")]
-    rejected = wide.rejected(df)
-    assert _rejections(rejected) == expected
+    d = KeyDeduplicator(["k"], order_col="ord", id_col="rid")
+    rejected = d.rejected(df)
+    assert [(r[0], r[4]) for r in _rejections(rejected)] == [("r1", "r2"), ("r3", "r2"), ("r5", "r4"), ("r7", "r6")]
     assert rejected.columns == [*df.columns, "_rejection_details"]
-    assert "row_number" not in rejected._jdf.queryExecution().optimizedPlan().toString()
-    survivors = wide.apply(df)
+    survivors = d.apply(df)
     assert survivors.columns == df.columns
     assert sorted(r.rid for r in survivors.collect()) == ["r2", "r4", "r6", "r8", "r9"]
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_standalone_dedup_plans_window_group_limit_with_null_order_rows(spark):
+    """A standalone key dedup's survivors plan a partial WindowGroupLimit
+    below the shuffle even when NULL-order rows are present: their shared
+    key is a constant, not a per-row nondeterministic id. Every NULL-order
+    row survives and none is named as a representative."""
+    docs = spark.createDataFrame(
+        [
+            (None, "same text"), (1, "same text"), (2, "same  text"), (None, "other"),
+            (3, "other"), (4, "unique"), (None, "same text"),
+        ],
+        "doc_id long, text string",
+    )
+    text = TextExactDeduplicator(id_col="doc_id")
+    kept = text.apply(docs)
+    assert "WindowGroupLimit" in _executed_plan(kept)
+    ids = [r.doc_id for r in kept.collect()]
+    assert sorted(i for i in ids if i is not None) == [1, 3, 4] and ids.count(None) == 3
+    reps = [(r.doc_id, r.rep) for r in text.rejected(docs).select(
+        "doc_id", F.col("_rejection_details.representative_id").alias("rep")).collect()]
+    assert reps == [(2, "1")]
+
+    rows = spark.createDataFrame(
+        [
+            ("a1", None, "a"), ("a2", 1, "a"), ("a3", 2, "a"), ("n1", None, None),
+            ("n2", 3, None), ("n3", 4, None), ("b1", None, "b"),
+        ],
+        "rid string, ord long, k string",
+    )
+    no_order = {"a1", "n1", "b1"}
+    for null_keys, survivors, dups in [
+        ("group", ["a1", "a2", "b1", "n1", "n2"], [("a3", "a2"), ("n3", "n2")]),
+        ("distinct", ["a1", "a2", "b1", "n1", "n2", "n3"], [("a3", "a2")]),
+    ]:
+        d = KeyDeduplicator(["k"], order_col="ord", id_col="rid", null_keys=null_keys)
+        kept = d.apply(rows)
+        assert "WindowGroupLimit" in _executed_plan(kept), null_keys
+        assert sorted(r.rid for r in kept.collect()) == survivors
+        assert no_order <= set(survivors)
+        rejected = [(r.rid, r.rep) for r in d.rejected(rows).select(
+            "rid", F.col("_rejection_details.representative_id").alias("rep")).collect()]
+        assert sorted(rejected) == dups
+        assert not no_order & {rep for _, rep in rejected}
+
+
+def _tagged(df):
+    return sorted(
+        (
+            (r.id, r.reason, r.dk, r.rep)
+            for r in df.filter("_rejection_details IS NOT NULL").select(
+                F.col("rid").alias("id"), F.col("_rejection_details.reason").alias("reason"),
+                F.col("_rejection_details.dedup_key").alias("dk"),
+                F.col("_rejection_details.representative_id").alias("rep"),
+            ).collect()
+        ),
+        key=repr,
+    )
+
+
+def test_window_tag_invariant_to_shuffle_layout_and_input_order(spark):
+    """The window tag is a function of the rows alone: standalone
+    ``rejected`` and the pipeline's ``apply_ops`` tag the same
+    (id, dedup_key, representative_id) rows at 1 and 7 shuffle
+    partitions, with AQE on and off, and with the input reversed over
+    three partitions. The frame has NULL-key, NULL-order and pre-dead
+    rows, ties on order_col, and ``id_col != order_col``. Tie rule: every
+    row tied first survives, and a later row's representative is the
+    tied-first row with the least id."""
+    rows = [
+        ("r1", 10, "a", None), ("r2", 10, "a", None), ("r3", 20, "a", None),
+        ("r4", 5, "a", "EarlierOp"), ("r5", None, "a", None), ("r6", None, "a", None),
+        ("r7", 1, None, None), ("r8", 2, None, None),
+        ("r9", 3, "b", None), ("r10", 3, "b", None), ("r11", 30, "b", None),
+    ]
+    schema = "rid string, ord long, k string, pre string"
+
+    def frame(data, parts):
+        return (
+            spark.createDataFrame(data, schema).repartition(parts)
+            .withColumn(
+                "_rejection_details",
+                F.when(
+                    F.col("pre").isNotNull(),
+                    F.expr("named_struct('reason', 'filtered', 'operator', pre, "
+                           "'dedup_key', NULL, 'representative_id', NULL)").cast(REJECTION_STRUCT_DDL),
+                ),
+            )
+            .drop("pre")
+        )
+
+    cfg = PipelineConfig.from_dict(
+        {
+            "pipeline": {
+                "name": "invariance",
+                "id_col": "rid",
+                "source": {"table": "unused"},
+                "operators": [
+                    {"name": "KeyDeduplicator",
+                     "params": {"key_cols": ["k"], "order_col": "ord", "id_col": "rid", "name": "KeyDedup"}},
+                ],
+            }
+        }
+    )
+    pipe = Pipeline(cfg)
+    standalone = KeyDeduplicator(["k"], order_col="ord", id_col="rid", name="KeyDedup")
+
+    def run(data, parts):
+        df = frame(data, parts)
+        return _tagged(standalone.rejected(df)), _tagged(pipe.apply_ops(df))
+
+    # standalone: every row is alive, so r4 (ord 5) represents group "a"
+    want_rejected = sorted(
+        [
+            ("r1", "duplicate", "a", "r4"), ("r2", "duplicate", "a", "r4"), ("r3", "duplicate", "a", "r4"),
+            ("r8", "duplicate", None, "r7"), ("r11", "duplicate", "b", "r10"),
+        ],
+        key=repr,
+    )
+    # pipeline: r4 arrives dead, so r1/r2 tie first and both survive
+    want_pipeline = sorted(
+        [
+            ("r3", "duplicate", "a", "r1"), ("r4", "filtered", None, None),
+            ("r8", "duplicate", None, "r7"), ("r11", "duplicate", "b", "r10"),
+        ],
+        key=repr,
+    )
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for partitions in ("1", "7"):
+            for aqe in ("true", "false"):
+                spark.conf.set("spark.sql.shuffle.partitions", partitions)
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                leg = (partitions, aqe)
+                assert run(rows, 1) == (want_rejected, want_pipeline), leg
+                assert run(rows[::-1], 3) == (want_rejected, want_pipeline), leg
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_tag_expressions_build_once_per_schema(spark):

@@ -8,12 +8,31 @@ cluster's ``spark.sql.shuffle.partitions`` in real deployments.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
+import json
 import os
+import re
+import shutil
+import subprocess
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
 from mega_data_factory_spark.functions.text import sql_ident, sql_number_literal, sql_string_literal
+
+try:
+    import fcntl
+except ImportError:  # not POSIX: sessions start without a class archive
+    fcntl = None
+
+# dumps tried per archive key: a start whose JVM is killed before its
+# exit-time dump finishes leaves nothing to promote, and retrying forever
+# would make every start pay the slower dumping start
+_CDS_DUMPS = 3
 
 
 def _host_mem_gib() -> int | None:
@@ -37,6 +56,214 @@ def _host_mem_gib() -> int | None:
     return None
 
 
+def _java_home() -> str | None:
+    """The JDK ``spark-class`` launches: ``$JAVA_HOME``, else the ``java``
+    on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
+
+
+def _template_conf_only(spark_home: str) -> bool:
+    """True when the launcher puts no deployment directory on the driver's
+    class path: the effective ``SPARK_CONF_DIR`` holds nothing but Spark's
+    ``*.template`` files, and no Hadoop/YARN conf dir or extra class path
+    is set. The JVM will not dump an archive while a non-empty directory is
+    on the class path, and a real deployment conf must never be dropped."""
+    if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
+        return False
+    try:
+        names = os.listdir(os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf"))
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+    return all(n.endswith(".template") for n in names)
+
+
+def _heap_bytes(memory: str) -> int:
+    """A ``spark.driver.memory`` string in bytes (no unit means MiB)."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", memory.strip().lower())
+    return int(m[1]) << {"": 20, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}[m[2]] if m else 0
+
+
+def _cds_key(spark_home: str, java_home: str, driver_memory: str) -> str:
+    """An archive maps only into the JVM build that wrote it, over the same
+    jars and in the same compressed-oops mode (heap below 32 GiB), so all
+    of these, and the pyspark version, key it."""
+    try:
+        with open(os.path.join(java_home, "release")) as f:
+            release = f.read()
+    except FileNotFoundError:
+        release = ""
+    jars = sorted((e.name, e.stat().st_size) for e in os.scandir(os.path.join(spark_home, "jars")))
+    oops = _heap_bytes(driver_memory) < 32 << 30
+    ident = repr((java_home, release, jars, pyspark.__version__, oops))
+    return hashlib.sha256(ident.encode()).hexdigest()[:16]
+
+
+def _alive(pid) -> bool:
+    """Whether ``pid``, as read from a lock file, names a running process."""
+    if not isinstance(pid, int) or pid <= 0:
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # running, as another user
+        pass
+    return True
+
+
+def _read_json(path: str) -> dict:
+    try:
+        with open(path) as f:
+            value = json.load(f)
+    except (FileNotFoundError, ValueError):
+        return {}
+    return value if isinstance(value, dict) else {}
+
+
+def _write_json(path: str, value: dict) -> None:
+    tmp = f"{path}.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(value, f)
+    os.replace(tmp, path)
+
+
+@contextlib.contextmanager
+def _locked(root: str):
+    """Every start decides under one exclusive ``flock`` of the cache
+    directory; the kernel releases it when a holder dies."""
+    fd = os.open(root, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
+
+
+class _ClassArchive:
+    """The driver JVM's per-machine dynamic class-data-sharing archive
+    (lifecycle in ``get_spark``). Under ``${XDG_CACHE_HOME:-~/.cache}/
+    mega-data-factory-spark/cds/`` it keeps one empty ``conf/`` dir, the
+    promoted ``<key>.jsa``, a ``<key>.json`` record and, while a start
+    dumps, ``<key>.lock`` and ``<key>.<pid>.tmp``."""
+
+    def __init__(self, root: str, key: str):
+        self.root = root
+        self.conf_dir = os.path.join(root, "conf")
+        self.jsa, self.record, self.lock = (os.path.join(root, key + e) for e in (".jsa", ".json", ".lock"))
+        self.tmp = os.path.join(root, f"{key}.{os.getpid()}.tmp")
+        self.java_options = ""
+        self.dumping = False
+
+    @classmethod
+    def open(cls, driver_memory: str) -> _ClassArchive | None:
+        """This start's archive, or None for a start without one: a
+        deployment conf dir, an unwritable cache, or nothing to use yet
+        while another start dumps."""
+        spark_home, java_home = _find_spark_home(), _java_home()
+        if fcntl is None or java_home is None or not _template_conf_only(spark_home):
+            return None
+        cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+        try:
+            archive = cls(os.path.join(cache, "mega-data-factory-spark", "cds"),
+                          _cds_key(spark_home, java_home, driver_memory))
+            os.makedirs(archive.conf_dir, exist_ok=True)
+            with _locked(archive.root):
+                archive.java_options = archive._choose()
+        except OSError:
+            return None
+        return archive if archive.java_options else None
+
+    def _choose(self) -> str:
+        """The JVM options of this start; "" starts without an archive."""
+        use = f"-XX:SharedArchiveFile={self.jsa} -Xshare:auto -Xlog:cds=off"
+        record = _read_json(self.record)
+        try:
+            st = os.stat(self.jsa)
+        except FileNotFoundError:
+            pass
+        else:
+            # a truncated or rewritten archive SIGBUSes the JVM even under
+            # -Xshare:auto, so only the exact file the probe passed is used
+            if [st.st_size, st.st_mtime_ns] == record.get("archive"):
+                return use
+            os.unlink(self.jsa)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(self.record)
+            return ""
+        if os.path.exists(self.lock):
+            lock = _read_json(self.lock)
+            if _alive(lock.get("pid")):
+                return ""  # that start's JVM is still running, or dumping
+            tmp = lock.get("tmp")
+            if isinstance(tmp, str) and os.path.dirname(tmp) == self.root and os.path.exists(tmp):
+                if self._probe(tmp, record):
+                    os.replace(tmp, self.jsa)
+                    st = os.stat(self.jsa)
+                    _write_json(self.record, dict(record, archive=[st.st_size, st.st_mtime_ns]))
+                    os.unlink(self.lock)
+                    return use
+                os.unlink(tmp)
+            os.unlink(self.lock)
+        dumps = record.get("dumps")
+        dumps = dumps if isinstance(dumps, int) else 0
+        if dumps >= _CDS_DUMPS:
+            return ""
+        with os.fdopen(os.open(self.lock, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644), "w") as f:
+            json.dump({"pid": os.getpid(), "tmp": self.tmp}, f)
+        _write_json(self.record, {"dumps": dumps + 1})
+        self.dumping = True
+        # unsilenced, the dump warns about every signed jar it skips
+        return f"-XX:ArchiveClassesAtExit={self.tmp} -Xlog:cds=off,cds+dynamic=off"
+
+    def _probe(self, tmp: str, record: dict) -> bool:
+        """Whether a JVM maps ``tmp`` with ``-Xshare:on``: good exits 0, a
+        truncated file aborts, garbage is refused. It runs with the dumping
+        JVM's exact class path, modules and heap size (a different one reads
+        as a mismatch), writes no crash log and takes about 0.25 s."""
+        try:
+            args = [a for a in record["jvm_args"] if a.startswith(("--add-modules", "-Xmx"))]
+            cmd = [os.path.join(record["java_home"], "bin", "java"), "-cp", record["classpath"], *args]
+        except (KeyError, TypeError):
+            return False  # the dumper died before it recorded its JVM
+        cmd += ["-XX:+SuppressFatalErrorMessage", "-XX:-CreateCoredumpOnCrash",
+                "-Xshare:on", f"-XX:SharedArchiveFile={tmp}", "-version"]
+        try:
+            done = subprocess.run(cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, cwd=self.root, timeout=60)
+        except subprocess.TimeoutExpired:
+            return False
+        return done.returncode == 0
+
+    def launch(self, builder) -> SparkSession:
+        """``builder.getOrCreate()`` with the archive's empty ``conf/`` as
+        ``SPARK_CONF_DIR`` for the gateway launch only. A dumping start then
+        records what the probe of its archive needs and hands the lock to
+        the JVM's pid: the dump runs when the JVM exits, which can be after
+        this process has gone."""
+        saved = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = self.conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            if saved is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = saved
+        if self.dumping:
+            jvm = spark.sparkContext._jvm
+            system = jvm.java.lang.System
+            jvm_args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+            with contextlib.suppress(OSError), _locked(self.root):
+                record = dict(_read_json(self.record), classpath=system.getProperty("java.class.path"),
+                              java_home=system.getProperty("java.home"), jvm_args=jvm_args)
+                _write_json(self.record, record)
+                _write_json(self.lock, {"pid": int(jvm.java.lang.ProcessHandle.current().pid()), "tmp": self.tmp})
+        return spark
+
+
 def get_spark(
     app_name: str = "mega-data-factory-spark",
     cpus: int | None = None,
@@ -51,6 +278,33 @@ def get_spark(
         batch size so wide binary columns (images) don't blow executor memory.
       * Shuffle partition count = 2x cores locally; on a real cluster this is
         overridden (or left to AQE coalescing, which is enabled).
+
+    A call that launches the driver JVM starts it from a per-machine
+    dynamic class-data-sharing archive, which halves session start (JVM
+    launch and class loading are most of it). Its lifecycle, per archive
+    key (JDK build, Spark jars, pyspark version, compressed-oops mode),
+    with every decision taken under a ``flock`` of the cache directory:
+      * The first start takes ``<key>.lock`` (``O_EXCL``) and launches with
+        ``-XX:ArchiveClassesAtExit=<key>.<pid>.tmp``; it records the JVM's
+        class path and arguments, and the lock then names the JVM's pid.
+        The JVM writes the archive when it exits (about 12 s for a
+        140 MB archive), and this start is slower than a plain one.
+        Concurrent starts meanwhile start without an archive.
+      * The next start after that JVM has gone probes the ``.tmp`` with a
+        ``java -Xshare:on -version`` run (a truncated archive SIGBUSes a
+        JVM even under ``-Xshare:auto``). A good one is renamed to
+        ``<key>.jsa`` and its size and mtime recorded; a bad one is deleted
+        and this start dumps again (at most three dumps per key).
+      * Later starts pass ``-XX:SharedArchiveFile=<key>.jsa -Xshare:auto``
+        when the file still matches the record; a changed file is deleted
+        and the start is a plain one.
+    The launcher puts ``$SPARK_CONF_DIR`` on the class path and the JVM
+    dumps no archive with a non-empty directory there, so while an archive
+    is used or dumped the gateway launch alone sees an empty ``conf/``
+    under the cache as ``SPARK_CONF_DIR``. That happens only when the
+    effective conf dir holds nothing but ``*.template`` files: a real
+    deployment conf means no archive at all. An unwritable cache means a
+    plain start. Delete the cache directory to drop every archive.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -84,6 +338,7 @@ def get_spark(
         default_driver_mem = f"{slot_mem}g"
     else:
         default_driver_mem = "8g"
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", default_driver_mem)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -99,7 +354,7 @@ def get_spark(
         # compact rows still batch by record count
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", default_driver_mem))
+        .config("spark.driver.memory", driver_memory)
         # Broadcast thresholds: keep the STATIC threshold small — the static
         # planner works from parquet-size x selectivity guesses and a big
         # threshold lets it broadcast a filtered FACT side (measured: q3 at
@@ -124,45 +379,51 @@ def get_spark(
         # 12 on the suite's one fact-fact join (q5 core, broadcasts off):
         # 1.08s -> 0.87s at sf0.1, min-of-3, reproduced twice.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", str(64 * 1024 * 1024))
-        # GCLocker-starvation guard (guide §5): Arrow's JNI critical
-        # sections (Get/ReleasePrimitiveArrayCritical in the batch
-        # transport) hold the JDK GCLocker while our 16 MiB Arrow batches
-        # allocate G1-humongous arrays; on JDK 17 a thread whose allocation
-        # needs a GC retries only GCLockerRetryAllocationCount=2 times
-        # while the locker is held, then throws a SPURIOUS "Java heap
-        # space" OOM with free heap remaining. Observed once at the 100x
-        # local stress scale (sf10 sweep leg b10a, 12:00:22: executor OOMs
-        # + "Retried waiting for GCLocker too often" at the same instant
-        # during the Arrow BPE encode; the identically-configured b10b leg
-        # ran the same line clean in 33.9s, so capacity was not the
-        # limit). 100 retries makes the starvation window practically
-        # unhittable and costs nothing when the locker is uncontended.
-        # Executor opts are inert locally (same JVM) and the right default
-        # where Arrow UDFs actually run on a cluster.
         .config("spark.ui.enabled", "false")
     )
+    # GCLocker-starvation guard (guide §5): Arrow's JNI critical
+    # sections (Get/ReleasePrimitiveArrayCritical in the batch
+    # transport) hold the JDK GCLocker while our 16 MiB Arrow batches
+    # allocate G1-humongous arrays; on JDK 17 a thread whose allocation
+    # needs a GC retries only GCLockerRetryAllocationCount=2 times
+    # while the locker is held, then throws a SPURIOUS "Java heap
+    # space" OOM with free heap remaining. Observed once at the 100x
+    # local stress scale (sf10 sweep leg b10a, 12:00:22: executor OOMs
+    # + "Retried waiting for GCLocker too often" at the same instant
+    # during the Arrow BPE encode; the identically-configured b10b leg
+    # ran the same line clean in 33.9s, so capacity was not the
+    # limit). 100 retries makes the starvation window practically
+    # unhittable and costs nothing when the locker is uncontended.
+    # Executor opts are inert locally (same JVM) and the right default
+    # where Arrow UDFs actually run on a cluster.
+    _gclocker = "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
     # r12-advice: a builder-set extraJavaOptions silently clobbers any
     # deployment-provided JVM options (spark-defaults.conf loses to the
     # builder). Append deployment options from the env (mirroring the
     # SPARK_DRIVER_MEMORY override) and from extra_conf instead of
     # overwriting them — the GCLocker guard composes with GC tuning,
     # -Djava.io.tmpdir etc. rather than replacing it.
-    _gclocker = "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
     extra_conf = dict(extra_conf or {})
-    for key, env in (
-        ("spark.driver.extraJavaOptions", "SPARK_DRIVER_JAVA_OPTIONS"),
-        ("spark.executor.extraJavaOptions", "SPARK_EXECUTOR_JAVA_OPTIONS"),
+    archive = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        archive = _ClassArchive.open(extra_conf.get("spark.driver.memory", driver_memory))
+    driver_opts = f"{_gclocker} {archive.java_options}" if archive else _gclocker
+    for key, env, own in (
+        ("spark.driver.extraJavaOptions", "SPARK_DRIVER_JAVA_OPTIONS", driver_opts),
+        ("spark.executor.extraJavaOptions", "SPARK_EXECUTOR_JAVA_OPTIONS", _gclocker),
     ):
         supplied = " ".join(
             s for s in (extra_conf.pop(key, ""), os.environ.get(env, "")) if s
         ).strip()
-        builder = builder.config(key, f"{_gclocker} {supplied}".strip() if supplied else _gclocker)
+        builder = builder.config(key, f"{own} {supplied}".strip())
     if not SparkSession.getActiveSession():
         builder = builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    return builder.getOrCreate()
+    if archive is None:
+        return builder.getOrCreate()
+    return archive.launch(builder)
 
 
 TABLES = (

@@ -58,6 +58,10 @@ _R = REJECTION_DETAILS_COL
 # the nullable tag column's DDL — ONE definition for the batch builder and
 # the streaming runner (they used to carry drift-prone inline copies)
 REJECTION_STRUCT_DDL = "struct<reason:string,operator:string,dedup_key:string,representative_id:string>"
+# the alive/dead row predicates as SQL text — the one spelling every
+# runner and operator filters with (a Column per use is a py4j build each)
+ALIVE_SQL = f"(`{_R}` IS NULL)"
+DEAD_SQL = f"(`{_R}` IS NOT NULL)"
 
 
 def rejection_details_sql(
@@ -240,7 +244,7 @@ class Filter(Operator):
         if psql is None:
             bound, psql = self.predicate(df), sql_ident(_KEEP)
         tag = F.expr(
-            f"CASE WHEN ((`{_R}` IS NULL) AND (NOT coalesce({psql}, false))) "
+            f"CASE WHEN ({ALIVE_SQL} AND (NOT coalesce({psql}, false))) "
             f"THEN {rejection_details_sql('filtered', self.name)} ELSE `{_R}` END"
         )
         return bound, tag
@@ -379,7 +383,7 @@ class Deduplicator(Operator):
             raw, ksql = F.when(F.col(_R).isNull(), self.key(df)), sql_ident(RAW_KEY_COL)
         ic, oc = sql_ident(self.id_col), sql_ident(self.order_col)
         key = (
-            f"CASE WHEN (`{_R}` IS NULL) THEN cast({self._effective_key_sql(df, ksql)} as string) "
+            f"CASE WHEN {ALIVE_SQL} THEN cast({self._effective_key_sql(df, ksql)} as string) "
             f"ELSE concat_ws('', '\\0D\x1f', coalesce(cast({ic} as string), '')) END"
         )
         over = f"OVER (PARTITION BY {key} ORDER BY {oc})"
@@ -387,7 +391,7 @@ class Deduplicator(Operator):
         if ic != oc:
             rep = f"(min(struct({oc} AS o, {ic} AS i)) {over}).i"
         tag = F.expr(
-            f"CASE WHEN ((`{_R}` IS NULL) AND (rank() {over} > 1)) "
+            f"CASE WHEN ({ALIVE_SQL} AND (rank() {over} > 1)) "
             f"THEN struct(cast('duplicate' as string) AS reason, "
             f"cast({sql_string_literal(self.name)} as string) AS operator, "
             f"cast({key} as string) AS dedup_key, "
@@ -409,19 +413,24 @@ class Deduplicator(Operator):
         column order."""
         tagged = self.tag(df.withColumn(_R, F.lit(None).cast(REJECTION_STRUCT_DDL)))
         if not alive:
-            return tagged.filter(f"(`{_R}` IS NOT NULL)")
-        out = tagged.filter(f"(`{_R}` IS NULL)")
+            return tagged.filter(DEAD_SQL)
+        out = tagged.filter(ALIVE_SQL)
         return out if _R in df.columns else out.drop(_R)
 
 
 class JoinDeduplicator(Deduplicator):
-    """Pair-emitting dedup base: subclasses implement ``_dup_pairs(df) ->
-    (id_col, __rep)`` — one row per rejected id with its representative —
-    and inherit ONE ``tag``, a left join against those pairs (``apply``
-    and ``rejected`` are its views, as for every Deduplicator).
+    """Pair-emitting dedup base, for pair-defined near-dup rules only
+    (MinHash bands, SimHash distance, n-gram Jaccard, shared spans,
+    embeddings): subclasses implement ``_dup_pairs(df) -> (id_col,
+    __rep)`` — one row per rejected id with its representative — and
+    inherit ONE ``tag``, a left join against those pairs (``apply`` and
+    ``rejected`` are its views, as for every Deduplicator).
     ``rejection_reason`` customizes the tag (DecontaminationFilter:
-    "contaminated"). ``key`` is deliberately unavailable — these dedups
-    are defined over pairs, not a single-key window."""
+    "contaminated"). ``key`` is deliberately unavailable. A dedup with one
+    key per row — store-backed ones included — is a plain
+    :class:`Deduplicator`: first-wins per key is the inherited window, and
+    a pairs frame would re-embed the input plan and make ``Pipeline``
+    cache it."""
 
     rejection_reason = "duplicate"
 

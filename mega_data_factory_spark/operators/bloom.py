@@ -327,7 +327,8 @@ def bloom_pruned_left_join(
     rejects are DEFINITELY unmatched (no false negatives) and bypass the
     join with NULL right-side columns. Result is row-for-row equal to the
     plain left join whenever ``right`` is unique on ``on`` (the incremental
-    stores are — both call sites collapse duplicates first).
+    stores are — ``SeenStore.lookup``, the one call site, collapses
+    duplicates first).
 
     Join geometry (the part that matters at 100 TB): a naive
     ``hits LEFT JOIN right`` cannot broadcast — left-outer correctness
@@ -349,7 +350,7 @@ def bloom_pruned_left_join(
     hit-sliver cardinality. The broadcast hints are load-bearing and
     bounded: both broadcasts are O(true duplicates + fpp x batch). A batch
     that is MOSTLY duplicates breaks that bound — there, the plain join
-    was the right plan anyway (``fpp=None`` at the call sites).
+    was the right plan anyway (``bloom_fpp=None`` on the store).
 
     Cost model: ``right`` is scanned twice more than the plain join (fit
     fold + semi reduction) — it is the compact key store, ~0.1-0.5% of the

@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 from mega_data_factory_spark.functions.hashing import content_key_sql, hash64_from_md5, hash64_from_md5_sql
 from mega_data_factory_spark.functions.text import span_hashes_sql, sql_ident, word_shingles, word_shingles_sql
 from mega_data_factory_spark.functions.vectors import is_finite_vector, l2_norm
-from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator
+from mega_data_factory_spark.operators.base import (
+    ALIVE_SQL,
+    REJECTION_DETAILS_COL as _R,
+    Deduplicator,
+    JoinDeduplicator,
+    rejection_details_sql,
+)
 from mega_data_factory_spark.session import local_frame
 
 
@@ -54,108 +60,139 @@ class TextExactDeduplicator(Deduplicator):
         )
 
 
-class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
+class SeenStore:
+    """The incremental dedups' cross-run state — the reference's seen-set
+    (framework/backend.py:21-47, one dict per shard, lost on restart) as
+    DATA: a parquet directory of ``(key, representative_id)`` rows that
+    ``update_store`` appends; the exact/key stores key on ``content_key
+    string``, the MinHash band store on ``band_key long``. Its rules: a
+    crashed compaction is recovered from ``.old`` before every read and
+    append; no directory yet is the empty first-run store; a wrong-schema
+    store raises instead of reading as empty (which would re-admit every
+    historical duplicate); replayed appends collapse to the least
+    representative per key; the lookup is a left join, Bloom-pruned when
+    ``bloom_fpp`` is set (operators/bloom.py). The store is read again on
+    every lookup, never memoized: a cached frame or filter would miss the
+    keys the previous micro-batch's ``update_store`` appended."""
+
+    def __init__(self, path: str, key_col: str, key_type: str, *, bloom_fpp: float | None = None):
+        if not isinstance(path, str) or not path:
+            raise ValueError(f"store_path must be a non-empty path, got {path!r}")
+        if bloom_fpp is not None and not 0.0 < bloom_fpp < 1.0:
+            raise ValueError(f"bloom_fpp must be in (0, 1), got {bloom_fpp}")
+        self.path = path
+        self.key_col = key_col
+        self.key_type = key_type
+        self.bloom_fpp = bloom_fpp
+
+    def read(self, spark) -> DataFrame | None:
+        """(key_col, representative_id) rows as appended, or None before
+        the first append."""
+        from pyspark.errors import AnalysisException
+
+        _recover_store(self.path)
+        try:
+            raw = spark.read.parquet(self.path)
+        except AnalysisException:  # first run: empty store
+            return None
+        # OUTSIDE the try: a wrong-schema store must raise, not read empty
+        _require_long_band_key(raw, self.path)
+        return raw.select(self.key_col, "representative_id")
+
+    def keys(self, spark) -> DataFrame:
+        """(key_col, representative_id), one row per stored key."""
+        raw = self.read(spark)
+        if raw is None:
+            return local_frame(spark, [], f"{self.key_col} {self.key_type}, representative_id string")
+        return _first_representative(raw, self.key_col)
+
+    def lookup(self, df: DataFrame, on: str, rep: str) -> DataFrame:
+        """``df`` plus ``rep``: the stored representative of the row's
+        ``on`` key, NULL where the store lacks the key (or it is NULL)."""
+        store = self.keys(df.sparkSession).toDF(on, rep)
+        if self.bloom_fpp:
+            from mega_data_factory_spark.operators.bloom import bloom_pruned_left_join
+
+            return bloom_pruned_left_join(df, store, on, fpp=self.bloom_fpp)
+        return df.join(store, on=on, how="left")
+
+    def append(self, keys: DataFrame) -> None:
+        """Append ``(key_col, representative_id)`` rows, recovering first:
+        appending into a crashed compaction's window would recreate the
+        directory with only this batch and orphan the history in ``.old``."""
+        _recover_store(self.path)
+        keys.write.mode("append").parquet(self.path)
+
+
+def _first_representative(rows: DataFrame, key_col: str) -> DataFrame:
+    """One row per key with its least ``representative_id``: the lookup,
+    compaction and migration make the same deterministic pick, so the
+    served representative is reproducible and survives compaction."""
+    return rows.groupBy(key_col).agg(F.min("representative_id").alias("representative_id"))
+
+
+class IncrementalExactDeduplicator(TextExactDeduplicator):
     """Exact-content dedup against BOTH the current batch and a persisted
-    seen-keys store — continuous-ingestion dedup across runs. The
-    reference's seen-set actors hold this state in memory forever
-    (framework/backend.py:21-47, one dict per shard, lost on restart);
-    here the state is just DATA: a parquet directory of (content_key,
-    representative id) rows that previous runs appended. Batch N+1 joins
-    against it, so dedup survives restarts, scales past memory, and stays
-    inspectable.
+    seen-keys store (:class:`SeenStore`) — continuous-ingestion dedup
+    across runs. The state is a parquet directory of (content_key,
+    representative id) rows that previous runs appended, so dedup
+    survives restarts, scales past memory, and stays inspectable.
 
     Semantics: a row is rejected if its key appears in the store (the
     stored representative wins) OR an earlier same-key row exists in the
-    batch (min id wins — the batch path's usual rule). After the sinks
-    land, call ``update_store`` to append the batch's NEW keys.
+    batch (min id wins — the batch path's usual rule); either way its
+    ``dedup_key`` is the content key. After the sinks land, call
+    ``update_store`` to append the batch's NEW keys.
 
     Scale shape: the store is keys only (33-byte md5 + id, ~0.1% of a text
-    corpus); the membership check is one hash join on the key — the same
-    shuffle the in-batch dedup already pays, and AQE broadcasts the store
-    side while it is small. For a 100 TB corpus the store join is
+    corpus). ``tag`` is one store lookup — a left join on the key, which
+    Spark broadcasts while the store is small — followed by the inherited
+    first-wins window, the one shuffle every key dedup pays. There is no
+    pairs frame and no join back on id, so a pipeline caches nothing
+    mid-plan for this operator. For a 100 TB corpus the store join is
     shuffle-on-key; bucketing the store by ``content_key`` (SinkConfig
     bucket_by) makes repeated runs co-located. ``bloom_fpp`` routes the
-    store check through a Bloom pre-filter (operators/bloom.py): on a
+    lookup through a Bloom pre-filter (operators/bloom.py): on a
     steady-state crawl most batch rows are NEW, and the filter lets them
     bypass the store join entirely — only true duplicates plus an
     fpp-sized sliver shuffle. No false negatives, so rejection semantics
-    are unchanged; the filter is refit from the store on every apply
-    (never cached across ``update_store`` — a stale filter would miss
-    keys the previous micro-batch appended). A CLUSTER knob: it pays off
-    once the store outgrows the broadcast threshold and shuffle rides the
-    network; on local[*] RAM-shuffle the plain join is faster
-    (scripts/diag_bloom.out), which is why it defaults to None.
+    are unchanged. A CLUSTER knob: it pays off once the store outgrows the
+    broadcast threshold and shuffle rides the network; on local[*]
+    RAM-shuffle the plain join is faster (scripts/diag_bloom.out), which is
+    why it defaults to None.
     """
 
     def __init__(self, store_path: str, *, bloom_fpp: float | None = None, **kwargs):
         super().__init__(**kwargs)
-        self.store_path = store_path
-        if bloom_fpp is not None and not 0.0 < bloom_fpp < 1.0:
-            raise ValueError(f"bloom_fpp must be in (0, 1), got {bloom_fpp}")
-        self.bloom_fpp = bloom_fpp
+        self.store = SeenStore(store_path, "content_key", "string", bloom_fpp=bloom_fpp)
 
-    def key(self, df: DataFrame) -> Column:
-        # the parsed key_sql (MRO would otherwise hit JoinDeduplicator's guard)
-        return Deduplicator.key(self, df)
+    @property
+    def store_path(self) -> str:
+        return self.store.path
 
-    def _store_keys(self, spark) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        _recover_store(self.store_path)  # crashed-compaction fallback
-        try:
-            raw = spark.read.parquet(self.store_path)
-        except AnalysisException:  # first run: empty store
-            return local_frame(spark, [], "content_key string, representative_id string")
-        # OUTSIDE the try: a store with the wrong schema (e.g. pointed at a
-        # band store) must raise UNRESOLVED_COLUMN, not silently read as
-        # first-run-empty and re-admit every historical duplicate
-        return raw.select("content_key", "representative_id")
-
-    def _dup_pairs(self, df: DataFrame) -> DataFrame:
-        """(id, __rep): rejected rows with their representative — the stored
-        one when the key is already known, else the batch's min-id row."""
-        keyed = df.select(F.col(self.id_col).alias("__id"), self.key(df).alias("__k"))
-        w = Window.partitionBy("__k").orderBy("__id")
-        ranked = keyed.withColumn("__rn", F.row_number().over(w)).withColumn(
-            "__first", F.min("__id").over(w)
-        )
-        # deterministic collapse of replayed/duplicate appends (min, the
-        # same pick compact_store materializes — a dropDuplicates here
-        # picked an arbitrary row per run, so rejection audits were not
-        # reproducible and compaction could flip the served representative)
-        store = (
-            self._store_keys(df.sparkSession)
-            .withColumnRenamed("content_key", "__k")
-            .groupBy("__k")
-            .agg(F.min("representative_id").alias("representative_id"))
-        )
-        if self.bloom_fpp:
-            from mega_data_factory_spark.operators.bloom import bloom_pruned_left_join
-
-            joined = bloom_pruned_left_join(ranked, store, "__k", fpp=self.bloom_fpp)
-        else:
-            joined = ranked.join(store, on="__k", how="left")
-        seen = F.col("representative_id").isNotNull()
-        return (
-            joined.filter(seen | (F.col("__rn") > 1))
-            .select(
-                F.col("__id").alias(self.id_col),
-                F.when(seen, F.col("representative_id"))
-                .otherwise(F.col("__first").cast("string"))
-                .alias("__rep"),
-            )
-        )
+    def tag(self, df: DataFrame) -> DataFrame:
+        """Tag every alive row whose key the store holds as a duplicate of
+        the stored representative, then apply the inherited window to the
+        rows still alive: the store hits are dead by then, so they neither
+        absorb nor represent a batch row. The key's SQL text is built once
+        here; Spark evaluates it twice, in the lookup's projection and in
+        the window's."""
+        key = self._effective_key_sql(df, self.key_sql(df))
+        keyed = df.selectExpr("*", f"CASE WHEN {ALIVE_SQL} THEN cast({key} as string) END AS `__seen_key`")
+        joined = self.store.lookup(keyed, "__seen_key", "__seen_rep")
+        hit = rejection_details_sql("duplicate", self.name, "`__seen_key`", "`__seen_rep`")
+        tag = f"CASE WHEN (`__seen_rep` IS NOT NULL) THEN {hit} ELSE `{_R}` END AS `{_R}`"
+        return super().tag(joined.selectExpr(*(tag if c == _R else sql_ident(c, literal=True) for c in df.columns)))
 
     def update_store(self, df: DataFrame, *, survivors: bool = False) -> None:
         """Append the batch's NEW keys (survivors of ``apply``) to the
         store. Call after the run's sinks landed (same at-least-once
         posture as the batch resume manifest: re-appending an existing key
-        is harmless — the join takes any matching row's representative).
-        ``survivors=True`` declares ``df`` is ALREADY the deduped output
-        (``Pipeline.run`` passes its passed-side frame), skipping the
-        redundant re-apply."""
+        is harmless — the lookup collapses it). ``survivors=True`` declares
+        ``df`` is ALREADY the deduped output (``Pipeline.run`` passes its
+        passed-side frame), skipping the redundant re-apply."""
         out = df if survivors else self.apply(df)
-        if getattr(self, "null_keys", "group") == "distinct":
+        if self.null_keys == "distinct":
             # identity-less rows are exempt from dedup; remembering their
             # synthetic per-row keys would reject replayed rows later
             out = out.filter(f"NOT {self._missing_key_sql(out, self.key_sql(out))}")
@@ -163,14 +200,14 @@ class IncrementalExactDeduplicator(JoinDeduplicator, TextExactDeduplicator):
             self.key(out).alias("content_key"),
             F.col(self.id_col).cast("string").alias("representative_id"),
         ).dropDuplicates(["content_key"])
-        new_keys.write.mode("append").parquet(self.store_path)
+        self.store.append(new_keys)
 
 
 def _recover_store(store_path: str) -> None:
     """If a compaction crashed between its two directory swaps, the live
     path is missing and the data sits in ``.old`` — restore it. Called by
-    compact_store and the store readers, so the crash window can never
-    read as an empty first-run store."""
+    compact_store and every SeenStore read and append, so the crash window
+    can never read as an empty first-run store."""
     import os
 
     base = store_path.rstrip("/")
@@ -178,44 +215,45 @@ def _recover_store(store_path: str) -> None:
         os.replace(base + ".old", base)
 
 
+def _swap_in(rows: DataFrame, store_path: str, n_files: int) -> None:
+    """Replace the store directory with ``rows``, write-new/swap-old: a
+    crash between the two moves leaves the data in ``.old``, where
+    ``_recover_store`` finds it, so no crash point loses the seen-state."""
+    import os
+    import shutil
+
+    base = store_path.rstrip("/")
+    tmp, old = base + ".compacting", base + ".old"
+    rows.coalesce(n_files).write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(old, ignore_errors=True)
+    os.replace(base, old)
+    os.replace(tmp, base)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def compact_store(spark, store_path: str, *, target_files: int | None = None) -> dict:
     """Offline maintenance for the incremental dedup stores: every run
     appends a new parquet fragment and replays re-append existing keys, so
     an always-on ingestion accumulates duplicate rows and small files —
-    the store join stays CORRECT (the consumers collapse duplicates) but
+    the store join stays CORRECT (the lookup collapses duplicates) but
     the scan cost creeps. Compaction rewrites the directory to one row per
-    key (min representative — the same deterministic pick the consumers
-    make, so semantics are bit-identical before/after) in ``target_files``
-    files, via write-new/swap-old. A crash between the two swaps leaves
-    the data in ``.old`` — both the store consumers (``_store_keys`` /
-    ``_store_bands``) and a re-run of this function fall back to /
-    recover from it, so no crash point loses the seen-state (a missing
-    store silently reading as first-run-empty would re-admit every
-    historical duplicate). Works on all three store shapes (content_key /
-    band_key / arbitrary-key) by keying on the first column. Run it
-    between batches, not concurrently with one. Paths here are
-    local/shared-posix filesystem (the swap is os.rename); for an object
-    store, point the store at a catalog table and compact with INSERT
-    OVERWRITE instead.
+    key (min representative — the same deterministic pick the lookup
+    makes, so semantics are bit-identical before/after) in
+    ``target_files`` files, via write-new/swap-old (``_swap_in``); a
+    re-run and every SeenStore read recover from a crash between the
+    swaps. Works on all three store shapes (content_key / band_key /
+    arbitrary-key) by keying on the first column. Run it between batches,
+    not concurrently with one. Paths here are local/shared-posix
+    filesystem (the swap is os.rename); for an object store, point the
+    store at a catalog table and compact with INSERT OVERWRITE instead.
     """
-    import os
-    import shutil
-
     _recover_store(store_path)
     df = spark.read.parquet(store_path)
-    key_col = df.columns[0]
     before = df.count()
-    compacted = df.groupBy(key_col).agg(
-        F.min("representative_id").alias("representative_id")
-    )
+    compacted = _first_representative(df, df.columns[0])
     after = compacted.count()
     n_files = target_files or max(1, after // 4_000_000)  # ~keys per 100MB-ish file
-    tmp, old = store_path.rstrip("/") + ".compacting", store_path.rstrip("/") + ".old"
-    compacted.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(store_path.rstrip("/"), old)
-    os.replace(tmp, store_path.rstrip("/"))
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(compacted, store_path, n_files)
     return {"rows_before": before, "rows_after": after, "files": n_files}
 
 
@@ -252,9 +290,6 @@ def migrate_band_store(spark, store_path: str) -> dict:
     signatures need recomputing. Same write-new/swap-old crash discipline
     as ``compact_store``; collapses replayed duplicates in the same pass.
     A store that is already long-keyed is left untouched."""
-    import os
-    import shutil
-
     from pyspark.sql.types import LongType, StringType
 
     _recover_store(store_path)
@@ -268,22 +303,11 @@ def migrate_band_store(spark, store_path: str) -> dict:
             f"{dt.simpleString()} (expected string for a legacy store)"
         )
     before = df.count()
-    folded = (
-        df.select(
-            hash64_from_md5("band_key").alias("band_key"),
-            "representative_id",
-        )
-        .groupBy("band_key")
-        .agg(F.min("representative_id").alias("representative_id"))
+    folded = _first_representative(
+        df.select(hash64_from_md5("band_key").alias("band_key"), "representative_id"), "band_key"
     )
     after = folded.count()
-    n_files = max(1, after // 4_000_000)
-    tmp, old = store_path.rstrip("/") + ".compacting", store_path.rstrip("/") + ".old"
-    folded.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(store_path.rstrip("/"), old)
-    os.replace(tmp, store_path.rstrip("/"))
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(folded, store_path, max(1, after // 4_000_000))
     return {"migrated": True, "rows_before": before, "rows_after": after}
 
 
@@ -586,55 +610,27 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
     and the membership check rides the SAME
     shuffle the in-batch band grouping already pays — one hash join on
     ``__band_key``, AQE-broadcast while the store is small, co-located
-    forever if the store directory is bucketed by band key. At-least-once
-    appends are safe: duplicate store rows collapse in the pre-join
-    min() aggregate. ``bloom_fpp`` adds the same Bloom pre-filter as the
-    exact store (operators/bloom.py): band keys the filter rejects are
-    definitely not in the store and skip the join — only possibly-seen
-    bands shuffle. Refit per apply, never cached across ``update_store``;
+    forever if the store directory is bucketed by band key. The lookup is
+    the exact store's (:class:`SeenStore`): replayed appends collapse
+    before the join, and ``bloom_fpp`` adds the same Bloom pre-filter
+    (operators/bloom.py), so band keys the filter rejects skip the join —
     a cluster knob (store past broadcast threshold), not a local[*] win —
     see scripts/diag_bloom.out.
     """
 
     def __init__(self, store_path: str, *, bloom_fpp: float | None = None, **kwargs):
         super().__init__(**kwargs)
-        self.store_path = store_path
-        if bloom_fpp is not None and not 0.0 < bloom_fpp < 1.0:
-            raise ValueError(f"bloom_fpp must be in (0, 1), got {bloom_fpp}")
-        self.bloom_fpp = bloom_fpp
+        self.store = SeenStore(store_path, "band_key", "long", bloom_fpp=bloom_fpp)
 
-    def _store_bands(self, spark) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        _recover_store(self.store_path)  # crashed-compaction fallback
-        try:
-            raw = spark.read.parquet(self.store_path)
-        except AnalysisException:  # first run: empty store
-            return local_frame(spark, [], "band_key long, representative_id string")
-        # outside the try — wrong-schema stores must raise, not read empty
-        # (the IncrementalExactDeduplicator._store_keys rationale)
-        _require_long_band_key(raw, self.store_path)
-        return raw.select("band_key", "representative_id")
+    @property
+    def store_path(self) -> str:
+        return self.store.path
 
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         ids = self._band_ids(df)
         w = Window.partitionBy("__band_key")
         ranked = ids.withColumn("__bucket_min", F.min(F.col(self.id_col)).over(w))
-        store = (
-            self._store_bands(df.sparkSession)
-            .withColumnRenamed("band_key", "__band_key")
-            # deterministic collapse of replayed/duplicate appends (string
-            # min — representatives are opaque ids here, the pick just has
-            # to be stable)
-            .groupBy("__band_key")
-            .agg(F.min("representative_id").alias("__srep"))
-        )
-        if self.bloom_fpp:
-            from mega_data_factory_spark.operators.bloom import bloom_pruned_left_join
-
-            joined = bloom_pruned_left_join(ranked, store, "__band_key", fpp=self.bloom_fpp)
-        else:
-            joined = ranked.join(store, on="__band_key", how="left")
+        joined = self.store.lookup(ranked, "__band_key", "__srep")
         batch_earlier = F.col("__bucket_min") < F.col(self.id_col)
         return (
             joined.filter(F.col("__srep").isNotNull() | batch_earlier)
@@ -655,29 +651,16 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
         """Append the surviving docs' band keys. Same at-least-once posture
         as the exact store: re-appending is harmless."""
         # guard the append too: ``update_store(df, survivors=True)`` never
-        # reads the store via _store_bands, so without this check a legacy
-        # string-keyed directory would silently accumulate mixed-schema
-        # fragments (long rows beside string rows) — corrupting the store
-        # the moment it happens, not when it's next read. _recover_store
-        # FIRST (round-12 review): a crashed compaction/migration leaves
-        # the data in ``.old`` with the live path missing — reading
-        # without recovery would treat that window as first-run and the
-        # append would recreate the directory with ONLY the new batch's
-        # bands, permanently orphaning the historical store. The check is
-        # memoized per instance: this process only ever appends long keys
-        # it wrote itself, so per-micro-batch re-validation would add a
-        # directory listing + footer read to every streaming trigger for
-        # a schema that cannot legally change mid-run.
+        # looks the store up, so without this check a legacy string-keyed
+        # directory would silently accumulate mixed-schema fragments (long
+        # rows beside string rows) — corrupting the store the moment it
+        # happens, not when it's next read. The check is memoized per
+        # instance: this process only ever appends long keys it wrote
+        # itself, so per-micro-batch re-validation would add a directory
+        # listing + footer read to every streaming trigger for a schema
+        # that cannot legally change mid-run.
         if not getattr(self, "_store_schema_validated", False):
-            from pyspark.errors import AnalysisException
-
-            _recover_store(self.store_path)
-            try:
-                existing = df.sparkSession.read.parquet(self.store_path)
-            except AnalysisException:  # first run: nothing to guard
-                existing = None
-            if existing is not None:
-                _require_long_band_key(existing, self.store_path)
+            self.store.read(df.sparkSession)
             self._store_schema_validated = True
         out = df if survivors else self.apply(df)
         bands = (
@@ -685,7 +668,7 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
             .groupBy(F.col("__band_key").alias("band_key"))
             .agg(F.min(F.col(self.id_col).cast("string")).alias("representative_id"))
         )
-        bands.write.mode("append").parquet(self.store_path)
+        self.store.append(bands)
 
 
 SIMHASH_BITS = 60  # md5-derived hashes carry 60 usable bits (15 hex chars)

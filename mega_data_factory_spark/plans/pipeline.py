@@ -27,12 +27,14 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mega_data_factory_spark.config import PipelineConfig
 from mega_data_factory_spark.operators.base import (
+    ALIVE_SQL,
+    DEAD_SQL,
     REJECTION_DETAILS_COL,
     REJECTION_STRUCT_DDL,
     Deduplicator,
@@ -85,8 +87,8 @@ class Pipeline:
     """A recipe's operators over its source as ONE tagged plan. ``build``
     and the streaming runner share ``apply_ops``; ``run`` writes the
     passed, rejected and metrics sides from the persisted tagged frame.
-    Join-dedup inputs are persisted mid-plan and released by the runner
-    after its actions (``release_intermediates``)."""
+    Pair-defined (``JoinDeduplicator``) dedup inputs are persisted mid-plan
+    and released by the runner after its actions (``release_intermediates``)."""
 
     def __init__(self, config: PipelineConfig):
         from mega_data_factory_spark.resources import build_task_profile
@@ -108,9 +110,6 @@ class Pipeline:
                 self._ops.append((stage.name, OPERATORS.create(oc.name, oc.params)))
 
     # ------------------------------------------------------------- building
-
-    def _alive(self) -> Column:
-        return F.col(_R).isNull()
 
     def release_intermediates(self) -> None:
         """Unpersist the mid-plan caches from the last build (idempotent)."""
@@ -192,12 +191,12 @@ class Pipeline:
                 # Column-authored projections (model UDFs): each gated by
                 # the alive flag so UDFs never run on dead rows
                 cols = op.columns(df)
-                alive = self._alive()
+                alive = F.expr(ALIVE_SQL)
                 out = df.withColumns({k: F.when(alive, v) for k, v in cols.items()})
                 keys = cols
             derived = op.derived_columns(out)
             if derived:
-                alive = self._alive()
+                alive = F.expr(ALIVE_SQL)
                 out = out.withColumns({k: F.when(alive, v) for k, v in derived.items()})
             # '__'-prefixed columns() keys are refiner-private intermediates
             # (the struct-once geometry — see Refiner docstring): feed
@@ -268,7 +267,7 @@ class Pipeline:
                 ).alias("pre_rejected")
             )
             observed = tagged.observe(obs, *obs_exprs)
-            passed = observed.filter(self._alive()).drop(_R)
+            passed = observed.filter(ALIVE_SQL).drop(_R)
 
             def _write_passed() -> None:
                 if self.config.sink:
@@ -280,7 +279,7 @@ class Pipeline:
                 import dataclasses
 
                 rejected = (
-                    tagged.filter(~self._alive())
+                    tagged.filter(DEAD_SQL)
                     .withColumn("operator", F.col(f"{_R}.operator"))
                     # run provenance: the sink is append-mode, so without
                     # this a shared path mixes runs and the report's
@@ -373,7 +372,7 @@ class Pipeline:
                         # from the cached tagged frame, not the observed
                         # plan (a second action must not refire the
                         # Observation)
-                        op.update_store(tagged.filter(self._alive()).drop(_R), survivors=True)
+                        op.update_store(tagged.filter(ALIVE_SQL).drop(_R), survivors=True)
                         if self.config.metrics_path and getattr(op, "store_path", None):
                             # store growth is monitorable from the metrics
                             # table (event=post_update; footer/listing

@@ -6,7 +6,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.config import PipelineConfig
-from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL
+from mega_data_factory_spark.operators.base import ALIVE_SQL, DEAD_SQL, REJECTION_DETAILS_COL
 from mega_data_factory_spark.plans.pipeline import Pipeline
 
 
@@ -284,9 +284,10 @@ class StreamingPipeline:
     upstream OR an incremental store operator
     (``IncrementalExactDeduplicator`` / ``IncrementalMinHashDeduplicator``)
     in the config — their parquet stores are appended after each
-    micro-batch's sinks land, so batch N+1 dedups (exactly or
-    approximately) against everything batch N admitted, surviving
-    restarts without state-store RocksDB.
+    micro-batch's sinks land and re-read by the next trigger's tag, so
+    batch N+1 dedups (exactly or approximately) against everything batch N
+    admitted, surviving restarts without state-store RocksDB. The exact
+    store's lookup caches nothing: a trigger persists one frame.
 
     ``output_files`` bounds the files each micro-batch appends per sink
     (coalesce before the write). Streaming parquet sinks otherwise emit one
@@ -402,7 +403,6 @@ class StreamingPipeline:
 
             from mega_data_factory_spark.sinks import write_sink
 
-            alive = F.col(REJECTION_DETAILS_COL).isNull()
             nf = self.output_files
 
             def _sized(df: DataFrame) -> DataFrame:
@@ -413,7 +413,7 @@ class StreamingPipeline:
                 # custom SINKS registrations apply in streaming too; the
                 # micro-batch contract forces append mode
                 write_sink(
-                    _sized(tagged.filter(alive).drop(REJECTION_DETAILS_COL)),
+                    _sized(tagged.filter(ALIVE_SQL).drop(REJECTION_DETAILS_COL)),
                     dataclasses.replace(cfg.sink, mode="append"),
                 )
 
@@ -425,7 +425,7 @@ class StreamingPipeline:
                 )
                 write_sink(
                     _sized(
-                        tagged.filter(~alive).withColumn(
+                        tagged.filter(DEAD_SQL).withColumn(
                             "operator", F.col(f"{REJECTION_DETAILS_COL}.operator")
                         )
                     ),
@@ -462,7 +462,7 @@ class StreamingPipeline:
                 for _stage, op in self.pipeline._ops:
                     if hasattr(op, "update_store"):
                         op.update_store(
-                            tagged.filter(alive).drop(REJECTION_DETAILS_COL), survivors=True
+                            tagged.filter(ALIVE_SQL).drop(REJECTION_DETAILS_COL), survivors=True
                         )
         finally:
             tagged.unpersist()

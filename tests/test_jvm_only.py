@@ -64,9 +64,9 @@ def test_driver_small_frames_plan_local(spark, tmp_path, monkeypatch):
     lst.write_health()
     assert lst.rows_written == 1 and lst.flush_failures == 0
     plans["content_keys"] = _plan(
-        IncrementalExactDeduplicator(str(tmp_path / "none1"), text_col="text")._store_keys(spark)
+        IncrementalExactDeduplicator(str(tmp_path / "none1"), text_col="text").store.keys(spark)
     )
-    plans["band_keys"] = _plan(IncrementalMinHashDeduplicator(str(tmp_path / "none2"))._store_bands(spark))
+    plans["band_keys"] = _plan(IncrementalMinHashDeduplicator(str(tmp_path / "none2")).store.keys(spark))
 
     assert set(plans) == {"operators", "stages", "runs", "stores", "triggers", "telemetry", "content_keys", "band_keys"}
     for name, plan in plans.items():

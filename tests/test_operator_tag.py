@@ -122,21 +122,6 @@ def test_window_tag_invariant_to_shuffle_layout_and_input_order(spark):
         ("r9", 3, "b", None), ("r10", 3, "b", None), ("r11", 30, "b", None),
     ]
     schema = "rid string, ord long, k string, pre string"
-
-    def frame(data, parts):
-        return (
-            spark.createDataFrame(data, schema).repartition(parts)
-            .withColumn(
-                "_rejection_details",
-                F.when(
-                    F.col("pre").isNotNull(),
-                    F.expr("named_struct('reason', 'filtered', 'operator', pre, "
-                           "'dedup_key', NULL, 'representative_id', NULL)").cast(REJECTION_STRUCT_DDL),
-                ),
-            )
-            .drop("pre")
-        )
-
     cfg = PipelineConfig.from_dict(
         {
             "pipeline": {
@@ -154,7 +139,7 @@ def test_window_tag_invariant_to_shuffle_layout_and_input_order(spark):
     standalone = KeyDeduplicator(["k"], order_col="ord", id_col="rid", name="KeyDedup")
 
     def run(data, parts):
-        df = frame(data, parts)
+        df = _pre_tagged(spark, data, schema, parts)
         return _tagged(standalone.rejected(df)), _tagged(pipe.apply_ops(df))
 
     # standalone: every row is alive, so r4 (ord 5) represents group "a"
@@ -173,6 +158,86 @@ def test_window_tag_invariant_to_shuffle_layout_and_input_order(spark):
         ],
         key=repr,
     )
+
+    def check(leg):
+        assert run(rows, 1) == (want_rejected, want_pipeline), leg
+        assert run(rows[::-1], 3) == (want_rejected, want_pipeline), leg
+
+    _each_shuffle_layout(spark, check)
+
+
+def test_store_dedup_tag_invariant_and_caches_nothing_mid_plan(spark, tmp_path):
+    """A store-backed key dedup is the window tag behind one store lookup:
+    with a non-empty store (a replayed append included), standalone
+    ``rejected`` and the pipeline's ``apply_ops`` tag the same
+    (id, dedup_key, representative_id) rows at 1 and 7 shuffle partitions,
+    with AQE on and off, for both ``null_keys`` modes; store hits carry
+    the stored (least) representative, pre-dead rows are never looked up,
+    and the pipeline caches nothing mid-plan for it."""
+    from mega_data_factory_spark.operators.dedup import IncrementalKeyDeduplicator
+
+    schema = "rid string, k string, pre string"
+    rows = [
+        ("p1", "a", None), ("p2", "b", "EarlierOp"), ("p3", "b", None), ("p4", "b", None),
+        ("p5", None, None), ("p6", None, None), ("p7", "d", "EarlierOp"), ("p8", "c", None), ("p9", "c", None),
+    ]
+    hit_nulls = [("p5", "duplicate", "\x00", "h2"), ("p6", "duplicate", "\x00", "h2")]
+    want_rejected = [
+        ("p1", "duplicate", "a", "h1"), ("p3", "duplicate", "b", "p2"), ("p4", "duplicate", "b", "p2"),
+        ("p7", "duplicate", "d", "h3"), ("p9", "duplicate", "c", "p8"),
+    ]
+    want_pipeline = [
+        ("p1", "duplicate", "a", "h1"), ("p2", "filtered", None, None), ("p4", "duplicate", "b", "p3"),
+        ("p7", "filtered", None, None), ("p9", "duplicate", "c", "p8"),
+    ]
+    for null_keys in ("group", "distinct"):
+        store = str(tmp_path / null_keys)
+        params = {"store_path": store, "key_cols": ["k"], "id_col": "rid", "null_keys": null_keys, "name": "Seen"}
+        standalone = IncrementalKeyDeduplicator(**params)
+        history = spark.createDataFrame([("h1", "a"), ("h2", None), ("h3", "d")], "rid string, k string")
+        standalone.update_store(history, survivors=True)
+        replay = spark.createDataFrame([("h9", "a")], "rid string, k string")
+        standalone.update_store(replay, survivors=True)
+        pipe = Pipeline(PipelineConfig.from_dict({"pipeline": {
+            "name": "store_invariance", "id_col": "rid", "source": {"table": "unused"},
+            "operators": [{"name": "IncrementalKeyDeduplicator", "params": params}],
+        }}))
+        # a NULL key is one stored identity under "group", none under "distinct"
+        extra = hit_nulls if null_keys == "group" else []
+        want = (sorted(want_rejected + extra, key=repr), sorted(want_pipeline + extra, key=repr))
+
+        def run(data, parts):
+            df = _pre_tagged(spark, data, schema, parts)
+            return _tagged(standalone.rejected(df)), _tagged(pipe.apply_ops(df))
+
+        def check(leg):
+            assert run(rows, 1) == want, (null_keys, leg)
+            assert run(rows[::-1], 3) == want, (null_keys, leg)
+            assert pipe._mid_cached == [], (null_keys, leg)
+
+        _each_shuffle_layout(spark, check)
+
+
+def _pre_tagged(spark, data, schema, parts):
+    """``data`` over ``parts`` partitions with a ``_rejection_details``
+    column: rows whose ``pre`` names an operator arrive dead ('filtered')."""
+    return (
+        spark.createDataFrame(data, schema).repartition(parts)
+        .withColumn(
+            "_rejection_details",
+            F.when(
+                F.col("pre").isNotNull(),
+                F.expr("named_struct('reason', 'filtered', 'operator', pre, "
+                       "'dedup_key', NULL, 'representative_id', NULL)").cast(REJECTION_STRUCT_DDL),
+            ),
+        )
+        .drop("pre")
+    )
+
+
+def _each_shuffle_layout(spark, check):
+    """``check((shuffle partitions, AQE))`` at 1 and 7 partitions, AQE on
+    and off, with the session set to each; restores the session after."""
     keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     saved = {k: spark.conf.get(k) for k in keys}
     try:
@@ -180,9 +245,7 @@ def test_window_tag_invariant_to_shuffle_layout_and_input_order(spark):
             for aqe in ("true", "false"):
                 spark.conf.set("spark.sql.shuffle.partitions", partitions)
                 spark.conf.set("spark.sql.adaptive.enabled", aqe)
-                leg = (partitions, aqe)
-                assert run(rows, 1) == (want_rejected, want_pipeline), leg
-                assert run(rows[::-1], 3) == (want_rejected, want_pipeline), leg
+                check((partitions, aqe))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

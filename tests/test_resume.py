@@ -122,9 +122,15 @@ def test_incremental_dedup_across_runs(spark, tmp_path):
     )
     surv2 = {r.doc_id for r in d.apply(b2).collect()}
     assert surv2 == {11}
-    reps = {r.doc_id: r["representative_id"] for r in d.rejected(b2).select(
-        "doc_id", "_rejection_details.representative_id").collect()}
+    rejected = d.rejected(b2).select(
+        "doc_id", "_rejection_details.representative_id", "_rejection_details.dedup_key").collect()
+    reps = {r.doc_id: r["representative_id"] for r in rejected}
     assert reps == {10: "1", 12: "11", 13: "2"}
+    # store hits (10, 13) and the in-batch duplicate (12) all carry the
+    # content key they were rejected on: the md5 hex of the normalized text
+    content_keys = {r.doc_id: r.k for r in b2.select("doc_id", d.key(b2).alias("k")).collect()}
+    assert {r.doc_id: r["dedup_key"] for r in rejected} == {i: content_keys[i] for i in (10, 12, 13)}
+    assert all(len(content_keys[i]) == 32 for i in (10, 12, 13))
     d.update_store(b2)
 
     # store now covers both runs; a third batch of all-seen texts keeps nothing
@@ -401,8 +407,9 @@ def test_incremental_key_dedup_null_key_cross_run(spark, tmp_path):
 
 def test_compact_store_crash_window_recovers(spark, tmp_path):
     """A crash between compaction's two swaps leaves the data in .old; the
-    consumers and a re-run both recover it instead of reading an empty
-    first-run store (which would re-admit every historical duplicate)."""
+    consumers, a re-run and an append all recover it instead of reading an
+    empty first-run store (which would re-admit every historical
+    duplicate)."""
     import os
 
     from mega_data_factory_spark.operators.dedup import (
@@ -420,6 +427,11 @@ def test_compact_store_crash_window_recovers(spark, tmp_path):
     os.replace(store, store + ".old")
     stats = compact_store(spark, store, target_files=1)
     assert stats["rows_after"] == 1  # compaction recovered and ran
+    # an append in the crash window recovers first, never orphaning .old
+    os.replace(store, store + ".old")
+    d.update_store(spark.createDataFrame([(2, "beta text")], "doc_id long, text string"), survivors=True)
+    assert not os.path.exists(store + ".old")
+    assert sorted(r.representative_id for r in spark.read.parquet(store).collect()) == ["1", "2"]
 
 
 def test_store_growth_is_monitorable_in_metrics(spark, tmp_path):

@@ -10,18 +10,25 @@ Re-expresses the reference's operator algebra (framework/operator.py:206-382):
   * ``Deduplicator``  — first-seen-wins on a derived key with representative
                         tracking (operator.py:271-382, backend.py:13-226).
 
-The tag contract: a Filter or Deduplicator splits its input into passed
-and rejected rows in ONE method, ``tag(df)``. ``df`` carries a nullable
-``_rejection_details`` struct, NULL meaning alive; ``tag`` fills it for the
-alive rows the operator rejects and leaves every other row's value as it
-was. Dead rows take no part in the decision: they can neither absorb nor
-represent an alive row. The batch pipeline and the streaming runner apply
-every Filter and Deduplicator through ``tag``, and a standalone
-Deduplicator's ``apply``/``rejected`` are the alive/dead rows of ``tag``
-over its input with every row alive — one implementation per operator
-kind. A Filter's ``apply``/``rejected`` stay plain ``filter`` calls, so the
-predicate still pushes into the scan. ``tag`` builds its expressions once
-per input schema (``df.columns``): unresolved expressions bind at analysis
+The tag contract: every operator runs inside a pipeline through ONE
+method, ``tag(df)``. ``df`` carries a nullable ``_rejection_details``
+struct, NULL meaning alive; ``tag`` fills it for the alive rows the
+operator rejects and leaves every other row's value as it was. Dead rows
+take no part in the decision: they can neither absorb nor represent an
+alive row, and a Refiner's projection is NULL on them. The batch pipeline
+and the streaming runner apply every operator through ``tag``:
+
+  * a Refiner's ``tag`` and ``apply`` are one projection that differs only
+    in the alive gate;
+  * a standalone Deduplicator's ``apply``/``rejected`` are the alive/dead
+    rows of ``tag`` over its input with every row alive;
+  * a Filter's ``apply``/``rejected`` stay plain ``filter`` calls, so the
+    predicate still pushes into the scan;
+  * a generic Operator's ``tag`` is its ``apply``, which keeps the tag
+    column.
+
+A Filter's or Deduplicator's ``tag`` builds its expressions once per
+input schema (``df.columns``): unresolved expressions bind at analysis
 time, so one build serves every micro-batch of a stream.
 
 Spark-first design decisions:
@@ -121,6 +128,11 @@ class Operator(ABC):
     def __call__(self, df: DataFrame) -> DataFrame:
         return self.apply(df)
 
+    def tag(self, df: DataFrame) -> DataFrame:
+        """``df`` through this operator inside a pipeline: a full-frame
+        transform's ``apply``, which must keep the tag column."""
+        return self.apply(df)
+
     def _per_schema(self, df: DataFrame, build):
         """``build(df)``, built once per input schema. Tag expressions are
         functions of the operator's params and ``df.columns`` only, so
@@ -150,20 +162,27 @@ class Refiner(Operator):
     expressions reference the FIRST projection's columns BY NAME — the
     contract for thresholds over UDF scores (``is_aigc = score >= t``):
     repeating the score expression in ``columns`` would evaluate the UDF
-    twice, and overriding ``apply`` alone would be silently bypassed by
-    ``Pipeline._apply``, which routes Refiners through these two hooks.
+    twice. ``apply`` and ``tag`` are the same two projections; ``tag``
+    gates every column on the row being alive, so dead rows get NULL. A
+    subclass that overrides ``apply`` must override ``tag`` too, or the
+    pipeline keeps the hooks' projection.
 
     A ``columns`` key starting with ``__`` is a refiner-private
-    intermediate: it is visible to ``derived_columns`` (the struct-once
-    geometry for multi-field UDFs — emit the struct once, extract fields
-    by name) and DROPPED from the output by both apply() and the pipeline
-    path."""
+    intermediate: it is visible to ``derived_columns`` and DROPPED from the
+    output. It is the struct-once geometry for a multi-field UDF: emit the
+    struct once under a private key, from the UDF marked nondeterministic,
+    and extract the fields by name in ``derived_columns``. A deterministic
+    UDF would be substituted into a downstream filter predicate and kept
+    in the projection (two ArrowEvalPython passes per row); a
+    nondeterministic one referenced once per field would run once per
+    field, since nondeterministic expressions are never CSE'd. Referenced
+    once in its own projection, it runs once per row."""
 
     def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
         """The projection as SQL text: new column name -> SQL fragment.
-        The pipeline folds the whole projection — alive gate included —
-        into ONE ``selectExpr`` round trip. None for a class that authors
-        :meth:`columns` as Columns instead."""
+        The whole projection — alive gate included — is ONE ``selectExpr``
+        round trip. None for a class that authors :meth:`columns` as
+        Columns instead."""
         return None
 
     def columns(self, df: DataFrame) -> dict[str, Column]:
@@ -179,13 +198,35 @@ class Refiner(Operator):
         return {}
 
     def apply(self, df: DataFrame) -> DataFrame:
-        cols = self.columns(df)
-        out = df.withColumns(cols)
+        return self._project(df, gated=False)
+
+    def tag(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the columns, NULL on dead rows."""
+        return self._project(df, gated=True)
+
+    def _project(self, df: DataFrame, *, gated: bool) -> DataFrame:
+        """The projection, then ``derived_columns`` over it, then the
+        ``__`` intermediates dropped. An existing output name is replaced
+        in place, as ``withColumns`` would."""
+        texts = self.columns_sql_text(df)
+        if texts is not None:
+            if gated:
+                texts = {k: f"CASE WHEN {ALIVE_SQL} THEN {sql} END" for k, sql in texts.items()}
+            out, keys = with_sql_columns(df, texts), texts
+        else:
+            keys = self.columns(df)
+            out = df.withColumns(_gate(keys) if gated else keys)
         derived = self.derived_columns(out)
         if derived:
-            out = out.withColumns(derived)
-        tmp = [k for k in cols if k.startswith("__")]
+            out = out.withColumns(_gate(derived) if gated else derived)
+        tmp = [k for k in keys if k.startswith("__")]
         return out.drop(*tmp) if tmp else out
+
+
+def _gate(cols: dict[str, Column]) -> dict[str, Column]:
+    """Each column NULL on dead rows."""
+    alive = F.expr(ALIVE_SQL)
+    return {k: F.when(alive, v) for k, v in cols.items()}
 
 
 # column a Column-authored filter predicate is bound to, so the filter tag

@@ -69,8 +69,8 @@ class QualityClassifier(Operator):
     A generic (full-frame) operator, not a ``Refiner``: scoring goes
     through ``PipelineModel.transform`` rather than a per-column
     expression, and the transform preserves every input column (incl. the
-    pipeline's rejection tag), which is the generic-operator contract in
-    ``Pipeline._apply``.
+    pipeline's rejection tag), which is the generic-operator contract of
+    ``Operator.tag``.
 
     ``fit(df, label_col)`` trains on a labelled frame (label 1 = keep);
     ``fit_weak(positive_df, negative_df)`` builds the GPT-3-style weak

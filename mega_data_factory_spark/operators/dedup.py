@@ -87,13 +87,21 @@ class SeenStore:
 
     def read(self, spark) -> DataFrame | None:
         """(key_col, representative_id) rows as appended, or None before
-        the first append."""
+        the first append. A missing local directory is the first run and
+        never reaches the reader, whose file-not-found would log a stack
+        trace at WARN; a remote store, or an existing empty directory,
+        reads as empty through the reader's AnalysisException."""
+        import os
+        from urllib.parse import urlparse
+
         from pyspark.errors import AnalysisException
 
         _recover_store(self.path)
+        if not urlparse(self.path).scheme and not os.path.exists(self.path):
+            return None
         try:
             raw = spark.read.parquet(self.path)
-        except AnalysisException:  # first run: empty store
+        except AnalysisException:  # an empty directory or a remote first run
             return None
         # OUTSIDE the try: a wrong-schema store must raise, not read empty
         _require_long_band_key(raw, self.path)

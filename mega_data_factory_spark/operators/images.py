@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator, Operator, Refiner
+from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator, Refiner
 
 # ------------------------------------------------------------ byte parsing
 
@@ -396,32 +396,6 @@ def _bytes_col(df: DataFrame, image_col: str) -> Column:
     return F.col(image_col)
 
 
-def _project_struct_once(df: DataFrame, udf, input_col: Column, fields: dict[str, str], extra: dict[str, Column] | None = None) -> DataFrame:
-    """Materialize a struct-returning pandas UDF exactly once, then extract
-    its fields in a second projection.
-
-    A deterministic UDF whose output feeds a downstream filter gets
-    substituted into the filter condition AND kept in the projection — two
-    ArrowEvalPython passes per row (the r1 image-pipeline regression). A
-    nondeterministic UDF referenced once per field is worse still: Catalyst
-    evaluates it once per reference. The fix needs both halves: mark the
-    UDF nondeterministic (CollapseProject/PushDownPredicate then refuse to
-    duplicate it) AND reference it exactly once in its own projection, with
-    the per-field extraction stacked deterministically above it.
-    """
-    tmp = "__struct_once"
-    out = df.withColumn(tmp, udf.asNondeterministic()(input_col))
-    # replace, don't append: a frame that already carries one of the output
-    # columns (re-applied refiner, precomputed phash) must not end up with
-    # duplicate names -> ambiguous-reference AnalysisException downstream
-    produced = set(fields) | set(extra or {})
-    sel = [F.col(c) for c in df.columns if c not in produced]
-    sel += [F.col(f"{tmp}.{src}").alias(dst) for dst, src in fields.items()]
-    for name, col in (extra or {}).items():
-        sel.append(col.alias(name))
-    return out.select(*sel)
-
-
 class ImageMetadataRefiner(Refiner):
     """Adds image_width/height/file_size_bytes/format from headers only —
     no pixel decode, so throughput is parse-bound (reference
@@ -443,33 +417,19 @@ class ImageMetadataRefiner(Refiner):
         # not accept the Series -> DataFrame (struct-returning) signature.
         return F.pandas_udf(_meta, StructType(_META_FIELDS[:2] + [_META_FIELDS[3]]))
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        meta_udf = self._udf()
-        b = _bytes_col(df, self.image_col)
-        return _project_struct_once(
-            df,
-            meta_udf,
-            b,
-            {
-                "image_width": "image_width",
-                "image_height": "image_height",
-                "image_format": "image_format",
-            },
-            extra={"image_file_size_bytes": F.coalesce(F.octet_length(b).cast("long"), F.lit(0).cast("long"))},
-        )
-
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        """Column-expression form for Pipeline's single-pass alive-row
-        tagging (no Filter nodes there, so the filter-substitution
-        double-eval that apply() guards against cannot occur; the
-        deterministic UDF is CSE'd into one ArrowEvalPython)."""
-        m = self._udf()(_bytes_col(df, self.image_col))
-        b = _bytes_col(df, self.image_col)
+        # the struct-once geometry (Refiner docstring): one header parse
+        # per row, fields read by name in derived_columns
+        return {"__image_meta": self._udf().asNondeterministic()(_bytes_col(df, self.image_col))}
+
+    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
+        m = F.col("__image_meta")
+        size = F.octet_length(_bytes_col(df, self.image_col)).cast("long")
         return {
             "image_width": m["image_width"],
             "image_height": m["image_height"],
-            "image_file_size_bytes": F.coalesce(F.octet_length(b).cast("long"), F.lit(0).cast("long")),
             "image_format": m["image_format"],
+            "image_file_size_bytes": F.coalesce(size, F.lit(0).cast("long")),
         }
 
 
@@ -512,30 +472,18 @@ class ImageTechnicalQualityRefiner(Refiner):
             ),
         )
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        return _project_struct_once(
-            df,
-            self._udf(),
-            _bytes_col(df, self.image_col),
-            {
-                "image_compression_artifacts": "image_compression_artifacts",
-                "image_information_entropy": "image_information_entropy",
-            },
-        )
-
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        """Column-expression form for Pipeline's single-pass tagging (see
-        ImageMetadataRefiner.columns)."""
-        q = self._udf()(_bytes_col(df, self.image_col))
-        return {
-            "image_compression_artifacts": q["image_compression_artifacts"],
-            "image_information_entropy": q["image_information_entropy"],
-        }
+        # one decode per row (the struct-once geometry, Refiner docstring)
+        return {"__image_quality": self._udf().asNondeterministic()(_bytes_col(df, self.image_col))}
+
+    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
+        q = F.col("__image_quality")
+        return {k: q[k] for k in ("image_compression_artifacts", "image_information_entropy")}
 
 
-class ImageFeatureExtractor(Operator):
+class ImageFeatureExtractor(Refiner):
     """Fused image stage: metadata + technical quality + phash in ONE
-    ``mapInPandas`` crossing with ONE decode per image.
+    pandas-UDF crossing with ONE decode per image.
 
     The chain ImageMetadataRefiner -> ImageTechnicalQualityRefiner ->
     ImagePhashDeduplicator decodes every image 2x and ships the bytes
@@ -563,11 +511,13 @@ class ImageFeatureExtractor(Operator):
         self.image_col = image_col
         self.with_phash = with_phash
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def _added(self) -> list[StructField]:
+        return self._ADDED if self.with_phash else self._ADDED[:-1]
+
+    def _udf(self):
         import pandas as pd
 
         with_phash = self.with_phash
-        added = self._ADDED if with_phash else self._ADDED[:-1]
 
         def _features(data):
             n = len(data)
@@ -605,10 +555,15 @@ class ImageFeatureExtractor(Operator):
         # a struct-returning scalar pandas UDF instead of mapInPandas: the
         # image bytes cross into Python ONCE and never come back out (the
         # binary column itself stays JVM-side), halving Arrow traffic.
-        feat_udf = F.pandas_udf(_features, StructType(added))
-        return _project_struct_once(
-            df, feat_udf, _bytes_col(df, self.image_col), {f.name: f.name for f in added}
-        )
+        return F.pandas_udf(_features, StructType(self._added()))
+
+    def columns(self, df: DataFrame) -> dict[str, Column]:
+        # one decode per row (the struct-once geometry, Refiner docstring)
+        return {"__image_features": self._udf().asNondeterministic()(_bytes_col(df, self.image_col))}
+
+    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
+        f = F.col("__image_features")
+        return {a.name: f[a.name] for a in self._added()}
 
 
 def phash_hex_or_null(df: DataFrame, *, image_col: str, phash_col: str) -> Column:
@@ -720,7 +675,7 @@ class ImagePhashNearDeduplicator(JoinDeduplicator):
         # rlike + two substrings from it BY NAME: inlining the expression
         # three times would plant three copies of the nondeterministic
         # decode+DCT UDF — measured as phash_udf evaluated 3x per row per
-        # join side (the _project_struct_once rule, images.py docstring)
+        # join side (the struct-once rule, Refiner docstring)
         hexed = df.select(
             F.col(self.id_col).alias("__id"),
             phash_hex_or_null(df, image_col=self.image_col, phash_col=self.phash_col).alias(

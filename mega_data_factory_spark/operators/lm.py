@@ -218,9 +218,9 @@ class PerplexityBucketRefiner(Refiner):
     groups-by-language are few, but per-domain grouping makes the
     threshold table large.
 
-    Pipeline semantics: full-frame (thresholds are corpus statistics);
-    only alive rows with a non-NULL score vote, dead rows and NULL scores
-    get a NULL bucket. NULL group values form their OWN group (the
+    Pipeline semantics: full-frame (thresholds are corpus statistics), so
+    ``tag`` is ``apply``; only alive rows with a non-NULL score vote, dead
+    rows and NULL scores get a NULL bucket. NULL group values form their OWN group (the
     BoilerplateLineRefiner NUL-sentinel rule) and get real buckets — a
     missing language tag must not exempt documents from the cut; an SQL
     mirror must therefore group on ``COALESCE(g, chr(0))`` too, not a
@@ -229,8 +229,6 @@ class PerplexityBucketRefiner(Refiner):
     on identical doubles); tests/test_lm.py holds the driver-gate bar
     including planted NULL-group rows.
     """
-
-    pipeline_full_frame = True
 
     def __init__(
         self,
@@ -255,11 +253,8 @@ class PerplexityBucketRefiner(Refiner):
         self.out_col = out_col
         self.approx = approx
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:  # pragma: no cover
-        raise NotImplementedError(
-            f"{self.name} needs corpus-wide percentile thresholds; it runs "
-            "as a full-frame transform (pipeline_full_frame)"
-        )
+    def tag(self, df: DataFrame) -> DataFrame:
+        return self.apply(df)
 
     def apply(self, df: DataFrame) -> DataFrame:
         from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL

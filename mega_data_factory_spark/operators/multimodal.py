@@ -316,24 +316,13 @@ class AudioMetadataRefiner(Refiner):
 
         return meta_udf
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        # _project_struct_once (images.py): ONE UDF evaluation, fields
-        # extracted above it — a bare asNondeterministic columns() dict
-        # would evaluate the parse once PER FIELD (nondeterministic
-        # expressions are never CSE'd; measured 5x with an accumulator),
-        # while a deterministic one gets substituted into downstream
-        # filter predicates (the 2x the old comment measured)
-        from mega_data_factory_spark.operators.images import _project_struct_once
-
-        return _project_struct_once(df, self._udf(), _bytes_col(df, self.audio_col), dict(self._FIELDS))
-
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        """Column-expression form for Pipeline's single-pass alive-row
-        tagging: no Filter nodes exist in that plan, so the DETERMINISTIC
-        UDF cannot be substituted into a predicate, and equal deterministic
-        UDF expressions are CSE'd into one ArrowEvalPython (the
-        ImageMetadataRefiner discipline)."""
-        m = self._udf()(_bytes_col(df, self.audio_col))
+        # ONE parse per row (the struct-once geometry, Refiner docstring):
+        # a struct reference per field measured 5 evaluations per row
+        return {"__audio_meta": self._udf().asNondeterministic()(_bytes_col(df, self.audio_col))}
+
+    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
+        m = F.col("__audio_meta")
         return {dst: m[src] for dst, src in self._FIELDS.items()}
 
 
@@ -500,24 +489,13 @@ class AudioSpectralFeaturesRefiner(Refiner):
 
         return feats_udf
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        # ONE decode+FFT per row: _project_struct_once materializes the
-        # struct before field extraction (a nondeterministic columns()
-        # dict measured 8 evaluations per row — one per field)
-        from mega_data_factory_spark.operators.images import _project_struct_once
-
-        return _project_struct_once(
-            df,
-            self._udf(),
-            _bytes_col(df, self.audio_col),
-            {f"audio_{f}": f for f in _SPECTRAL_FIELDS},
-        )
-
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        """Pipeline tagging path: deterministic UDF, CSE'd to one
-        evaluation (no Filter nodes there to substitute into — the
-        ImageMetadataRefiner discipline)."""
-        m = self._udf()(_bytes_col(df, self.audio_col))
+        # ONE decode+FFT per row (the struct-once geometry, Refiner
+        # docstring): a struct reference per field measured 8 per row
+        return {"__audio_spectral": self._udf().asNondeterministic()(_bytes_col(df, self.audio_col))}
+
+    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
+        m = F.col("__audio_spectral")
         return {f"audio_{f}": m[f] for f in _SPECTRAL_FIELDS}
 
 
@@ -564,35 +542,16 @@ class VisualDegradationsRefiner(Refiner):
 
         return heads_udf
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        # ONE evaluation of the four heads: _project_struct_once
-        # materializes the struct before field extraction. The old
-        # asNondeterministic columns() form evaluated the UDF once PER
-        # FIELD (4x) — nondeterministic expressions are never CSE'd
-        # (measured with an accumulator; the previous comment claiming
-        # ExtractPythonUDFs dedups them was wrong for nondeterministic)
-        from mega_data_factory_spark.operators.images import _project_struct_once
-
-        out = _project_struct_once(
-            df, self._udf(), F.col(self.emb_col), {f"img_vd_{k}": k for k in self.HEAD_SEEDS}
-        )
-        derived = self.derived_columns(out)
-        return out.withColumns(derived) if derived else out
-
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        """Pipeline tagging path: deterministic UDF, CSE'd to one
-        evaluation (no Filter nodes there — the ImageMetadataRefiner
-        discipline)."""
-        h = self._udf()(F.col(self.emb_col))
-        return {f"img_vd_{k}": h[k] for k in self.HEAD_SEEDS}
+        # ONE evaluation of the four heads (the struct-once geometry,
+        # Refiner docstring): a struct reference per field measured 4
+        return {"__vd_heads": self._udf().asNondeterministic()(F.col(self.emb_col))}
 
     def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        # derives from the score COLUMNS by name (derived hook, so the
-        # Pipeline path materializes the overall too)
-        overall = F.lit(1.0) - sum(
-            F.col(f"img_vd_{k}") * F.lit(w) for k, w in self.WEIGHTS.items()
-        )
-        return {"img_vd_overall_quality": overall.cast("float")}
+        h = F.col("__vd_heads")
+        heads = {f"img_vd_{k}": h[k] for k in self.HEAD_SEEDS}
+        overall = F.lit(1.0) - sum(h[k] * F.lit(w) for k, w in self.WEIGHTS.items())
+        return {**heads, "img_vd_overall_quality": overall.cast("float")}
 
 
 class ImageResizeRefiner(Refiner):

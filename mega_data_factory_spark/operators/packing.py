@@ -317,9 +317,9 @@ class DocumentChunker(Operator):
             starts, lambda s: F.array_join(F.slice(words, s + 1, chunk), " ")
         )
         pos = F.posexplode(chunks)
-        # replace, don't append (the images.py _project_struct_once rule):
-        # re-applying to a frame already carrying chunk_* columns must not
-        # create duplicate names -> ambiguous-reference AnalysisException
+        # replace, don't append: re-applying to a frame already carrying
+        # chunk_* columns must not create duplicate names ->
+        # ambiguous-reference AnalysisException
         produced = {"chunk_index", "chunk_text", "chunk_id", "chunk_n_tokens"}
         base = df.drop(*[c for c in df.columns if c in produced])
         out = base.select("*", pos.alias("chunk_index", "chunk_text"))
@@ -447,8 +447,8 @@ class SpanCorruptionBuilder(Refiner):
 
     Scale shape: one Arrow crossing per batch (numpy per row, no Python
     loops over tokens), zero shuffle, bytes-in == tokens-out; the struct
-    UDF is materialized exactly once (``_project_struct_once`` — the
-    N-fold-evaluation guard). Not SQL-expressible (hash-rank
+    UDF is materialized exactly once (``Refiner``'s struct-once geometry —
+    the N-fold-evaluation guard). Not SQL-expressible (hash-rank
     segmentation); the pytest bar is an independent pure-python
     reimplementation plus reconstruction/density/determinism properties
     (tests/test_packing.py), the k-means/PQ discipline.
@@ -485,7 +485,7 @@ class SpanCorruptionBuilder(Refiner):
         self.mean_span = float(mean_span)
         self.salt = salt
 
-    # one corruption per row, shared by apply() and the pipeline path
+    # one corruption per row
     def _udf(self):
         import numpy as np
         import pandas as pd
@@ -537,27 +537,13 @@ class SpanCorruptionBuilder(Refiner):
     def _seed(self) -> Column:
         return F.xxhash64(*[F.col(c) for c in self.seed_cols], F.lit(self.salt))
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        from mega_data_factory_spark.operators.images import _project_struct_once
-
-        return _project_struct_once(
-            df,
-            self._udf(),
-            self._packed_input(),
-            {"input_ids": "input_ids", "target_ids": "target_ids"},
-        )
-
     def _packed_input(self) -> Column:
         return F.struct(F.col(self.tokens_col).alias("t"), self._seed().alias("s"))
 
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        # struct-once on the pipeline path too, mirroring apply()'s
-        # _project_struct_once geometry: emit the (nondeterministic-marked)
-        # UDF struct exactly once under a private key; derived_columns
-        # extracts the fields BY NAME. Embedding the UDF expression in both
-        # output columns relied on Catalyst CSE and left it eligible for
-        # substitution into downstream filter predicates — ~2x the apply()
-        # path's Arrow cost in the worst case.
+        # the struct-once geometry (Refiner docstring): the
+        # nondeterministic-marked UDF struct exactly once under a private
+        # key; derived_columns extracts the fields BY NAME
         return {"__span_once": self._udf().asNondeterministic()(self._packed_input())}
 
     def derived_columns(self, df: DataFrame) -> dict[str, Column]:

@@ -319,12 +319,6 @@ class RepetitionStatsRefiner(Refiner):
         super().__init__(name)
         self.text_col = text_col
         self.long_docs = long_docs
-        # Pipeline._apply routes Refiners through columns(); the linear
-        # form is a full-frame transform (explode + joins), so flag it for
-        # the generic path — without this, long_docs=True was silently
-        # ignored inside config pipelines, exactly where book-length
-        # corpora run
-        self.pipeline_full_frame = long_docs
         self.id_col = id_col
 
     def _words_sql(self) -> str:
@@ -373,9 +367,13 @@ class RepetitionStatsRefiner(Refiner):
         }
 
     def apply(self, df: DataFrame) -> DataFrame:
-        if not self.long_docs:
-            return super().apply(df)
-        return self._apply_linear(df)
+        return self._apply_linear(df) if self.long_docs else super().apply(df)
+
+    def tag(self, df: DataFrame) -> DataFrame:
+        # the linear form is a full-frame transform (explode + joins) that
+        # keeps the tag column; config pipelines, where book-length corpora
+        # run, reach it only through this override
+        return self._apply_linear(df) if self.long_docs else super().tag(df)
 
     def _apply_linear(self, df: DataFrame) -> DataFrame:
         """Linear-cost top-bigram for book-length rows. The exploded rows
@@ -547,13 +545,11 @@ class BoilerplateLineRefiner(Refiner):
     lines (< ``min_line_chars``) are never counted OR removed: they are
     too common to be meaningful and too cheap to keep.
 
-    Not a pipeline ``columns()`` refiner — the line counts are a
-    full-frame aggregate (``pipeline_full_frame``). SQL-mirrorable
+    Not a ``columns()`` refiner — the line counts are a full-frame
+    aggregate, so ``tag`` is ``apply``. SQL-mirrorable
     (split/unnest-with-ordinality/count/string_agg); the differential
     test holds the driver-gate bar (tests/test_curation.py).
     """
-
-    pipeline_full_frame = True
 
     def __init__(
         self,
@@ -578,11 +574,8 @@ class BoilerplateLineRefiner(Refiner):
         self.group_col = group_col
         self.out_col = out_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:  # pragma: no cover
-        raise NotImplementedError(
-            f"{self.name} needs corpus-wide line counts; it runs as a "
-            "full-frame transform (pipeline_full_frame)"
-        )
+    def tag(self, df: DataFrame) -> DataFrame:
+        return self.apply(df)
 
     def apply(self, df: DataFrame) -> DataFrame:
         from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL

@@ -4,15 +4,16 @@
 Single-pass rejection tagging: instead of splitting passed/rejected per
 stage (which would re-scan the source once per side output — the reference
 writes rejected rows mid-pipeline from each worker, framework/worker.py:
-113-117), every row carries a nullable ``_rejection_details`` struct:
+113-117), every row carries a nullable ``_rejection_details`` struct,
+which every operator fills through its own ``tag`` (the tag contract in
+operators/base.py — the one implementation standalone ``apply``/``rejected``
+also use):
 
-  * a Filter or Deduplicator fills it through its own ``tag`` (the tag
-    contract in operators/base.py — the one implementation standalone
-    ``apply``/``rejected`` also use): a Filter tags failing alive rows, a
-    single-key Deduplicator ranks alive rows per key, a join-based
-    near-dedup left-joins its duplicate-pairs frame over alive rows;
-  * a Refiner computes its columns for alive rows only (rejected rows get
-    NULL — model UDFs never run on dead rows).
+  * a Filter tags failing alive rows, a single-key Deduplicator ranks alive
+    rows per key, a join-based near-dedup left-joins its duplicate-pairs
+    frame over alive rows;
+  * a Refiner's columns are NULL on rejected rows;
+  * any other operator is a full-frame transform that keeps the tag.
 
 The tagged frame is persisted once; the passed sink, rejected sink
 (partitioned by rejecting operator, reference executor.py:100-124) and the
@@ -37,12 +38,8 @@ from mega_data_factory_spark.operators.base import (
     DEAD_SQL,
     REJECTION_DETAILS_COL,
     REJECTION_STRUCT_DDL,
-    Deduplicator,
-    Filter,
     JoinDeduplicator,
     Operator,
-    Refiner,
-    with_sql_columns,
 )
 from mega_data_factory_spark.registry import OPERATORS
 from mega_data_factory_spark.sinks import write_sink
@@ -169,42 +166,27 @@ class Pipeline:
             # releases it after its action.
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
             self._mid_cached.append(df)
-        if isinstance(op, (Filter, Deduplicator)):
-            return op.tag(df)
-        if isinstance(op, Refiner):
-            if getattr(op, "pipeline_full_frame", False):
-                # refiner modes that are full-frame transforms (e.g. the
-                # linear-aggregation repetition stats) — apply() preserves
-                # the tag column; the alive gate is the operator's concern
-                return op.apply(df)
-            texts = op.columns_sql_text(df)
-            if texts is not None:
-                # the whole projection — alive gate included — in ONE
-                # selectExpr round trip instead of 2-3 py4j calls per
-                # output column; an existing output name is replaced in
-                # place, as withColumns would
-                out = with_sql_columns(
-                    df, {k: f"CASE WHEN (`{_R}` IS NULL) THEN {sql} END" for k, sql in texts.items()}
-                )
-                keys = texts
-            else:
-                # Column-authored projections (model UDFs): each gated by
-                # the alive flag so UDFs never run on dead rows
-                cols = op.columns(df)
-                alive = F.expr(ALIVE_SQL)
-                out = df.withColumns({k: F.when(alive, v) for k, v in cols.items()})
-                keys = cols
-            derived = op.derived_columns(out)
-            if derived:
-                alive = F.expr(ALIVE_SQL)
-                out = out.withColumns({k: F.when(alive, v) for k, v in derived.items()})
-            # '__'-prefixed columns() keys are refiner-private intermediates
-            # (the struct-once geometry — see Refiner docstring): feed
-            # derived_columns, then drop
-            tmp = [k for k in keys if k.startswith("__")]
-            return out.drop(*tmp) if tmp else out
-        # generic operator: full-frame transform (must preserve the tag col)
-        return op.apply(df)
+        return op.tag(df)
+
+    def update_stores(self, tagged: DataFrame) -> list[Operator]:
+        """Append the survivors of the persisted ``tagged`` frame to every
+        incremental dedup's seen-store; returns the operators updated.
+        Runners call it AFTER their sinks land (the resume manifest's
+        at-least-once posture): the next run or micro-batch then dedups
+        against everything this one admitted, and a replayed batch
+        re-appends keys the store lookup collapses. A no-op without a
+        PASSED sink: survivor keys only ever ship through it, so a
+        sink-less (or rejected-only audit) run must not remember docs as
+        seen — a later real run would reject them as duplicates of
+        representatives that never landed. ``tagged`` is the cached frame,
+        not an observed plan, so this action refires no Observation."""
+        if not self.config.sink:
+            return []
+        survivors = tagged.filter(ALIVE_SQL).drop(_R)
+        updated = [op for _stage, op in self._ops if hasattr(op, "update_store")]
+        for op in updated:
+            op.update_store(survivors, survivors=True)
+        return updated
 
     def explain(self, spark: SparkSession, mode: str = "formatted") -> str:
         """Physical plan of the built pipeline (one Catalyst plan for all
@@ -358,35 +340,20 @@ class Pipeline:
                 ColumnProfiler().profile(passed).write.mode("overwrite").parquet(
                     self.config.profile_path
                 )
-            # incremental dedup stores persist AFTER the sinks land (same
-            # at-least-once posture as the resume manifest) — without this
-            # a config-driven IncrementalExactDeduplicator would dedup
-            # within the run but never remember it across runs. Guarded on
-            # the PASSED sink specifically: survivor keys only ever ship
-            # through it, so a sink-less (or rejected-only audit) run must
-            # not remember docs as seen — a later real run would reject
-            # them as duplicates of representatives that never landed.
-            if self.config.sink:
-                for _stage, op in self._ops:
-                    if hasattr(op, "update_store"):
-                        # from the cached tagged frame, not the observed
-                        # plan (a second action must not refire the
-                        # Observation)
-                        op.update_store(tagged.filter(ALIVE_SQL).drop(_R), survivors=True)
-                        if self.config.metrics_path and getattr(op, "store_path", None):
-                            # store growth is monitorable from the metrics
-                            # table (event=post_update; footer/listing
-                            # stats, no data scan)
-                            from mega_data_factory_spark.metrics import write_store_metrics
+            for op in self.update_stores(tagged):
+                if self.config.metrics_path and getattr(op, "store_path", None):
+                    # store growth is monitorable from the metrics table
+                    # (event=post_update; footer/listing stats, no data scan)
+                    from mega_data_factory_spark.metrics import write_store_metrics
 
-                            write_store_metrics(
-                                spark,
-                                self.config.metrics_path,
-                                run_id=run_id,
-                                pipeline=self.config.name,
-                                operator_name=op.name,
-                                store_path=op.store_path,
-                            )
+                    write_store_metrics(
+                        spark,
+                        self.config.metrics_path,
+                        run_id=run_id,
+                        pipeline=self.config.name,
+                        operator_name=op.name,
+                        store_path=op.store_path,
+                    )
             if pending is not None and self.config.sink and self.config.max_samples is None:
                 # checkpoint ONLY when every record of the pending files
                 # could have durably landed: needs the PASSED sink (a

@@ -448,22 +448,10 @@ class StreamingPipeline:
                     _write_passed()
                 if cfg.rejected_sink:
                     _write_rejected()
-            # incremental dedup stores persist AFTER this micro-batch's
-            # sinks land (the batch runner's posture, per batch): batch
-            # N+1 then dedups against everything batch N admitted — the
-            # cross-batch seen-state the in-batch window cannot provide.
-            # At-least-once is safe: a replayed batch re-appends keys the
-            # store join collapses. Guarded on the PASSED sink
-            # specifically: survivor keys only ever ship through it, so a
-            # metrics-only or rejected-only run must not remember docs as
-            # seen — a later real run would reject them as duplicates of
-            # representatives that never landed.
-            if cfg.sink:
-                for _stage, op in self.pipeline._ops:
-                    if hasattr(op, "update_store"):
-                        op.update_store(
-                            tagged.filter(ALIVE_SQL).drop(REJECTION_DETAILS_COL), survivors=True
-                        )
+            # after this micro-batch's sinks land: batch N+1 then dedups
+            # against everything batch N admitted — the cross-batch
+            # seen-state the in-batch window cannot provide
+            self.pipeline.update_stores(tagged)
         finally:
             tagged.unpersist()
             self.pipeline.release_intermediates()

@@ -300,7 +300,7 @@ def test_phash_near_dedup_from_bytes(spark):
 def test_phash_near_dedup_single_udf_evaluation(spark):
     """The decode+DCT UDF appears exactly once per join side in the
     physical plan (inlining the hex expression three times planted three
-    UDF copies — the _project_struct_once rule)."""
+    UDF copies — the struct-once rule, Refiner docstring)."""
     from mega_data_factory_spark.operators.images import ImagePhashNearDeduplicator
 
     df = spark.createDataFrame(

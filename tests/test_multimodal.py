@@ -272,33 +272,74 @@ def test_model_numpy_fallback_without_torch(monkeypatch):
     assert m(np.empty((0, 8), np.float32)).shape == (0,)
 
 
+def _one_operator_pipeline(op):
+    """A Pipeline running just ``op`` (ImageFeatureExtractor is not in the
+    registry, so it cannot come from a config)."""
+    from mega_data_factory_spark.config import PipelineConfig
+    from mega_data_factory_spark.plans.pipeline import Pipeline
+
+    pipe = Pipeline(PipelineConfig.from_dict({"pipeline": {"name": "t", "source": {"table": "t"}, "stages": []}}))
+    pipe._ops = [("s", op)]
+    return pipe
+
+
 def test_struct_udf_refiners_evaluate_once(spark):
-    """The struct UDF must run ONCE per row in apply(), not once per
-    extracted field: nondeterministic expressions are never CSE'd, so the
-    old per-field columns() dict measured 5x/8x/4x evaluations (found with
-    a live accumulator). Pin the fixed plan shape: exactly one UDF call
-    listed in the (single) ArrowEvalPython node."""
+    """Every struct-UDF refiner runs its UDF ONCE per row, on the
+    standalone path and on the pipeline path, with a downstream filter on
+    an output field: nondeterministic expressions are never CSE'd, so a
+    struct reference per field measured 5x/8x/4x evaluations (found with a
+    live accumulator), and a deterministic UDF gets substituted into the
+    filter and kept in the projection (2x). Pin the plan shape — one
+    ArrowEvalPython node with one UDF call — and the alive gate: the
+    pre-rejected row's outputs are NULL, the alive row's equal apply's."""
     import re
 
-    import numpy as np
-
+    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
+    from mega_data_factory_spark.operators.images import (
+        ImageFeatureExtractor,
+        ImageMetadataRefiner,
+        ImageTechnicalQualityRefiner,
+    )
     from mega_data_factory_spark.operators.multimodal import (
         AudioMetadataRefiner,
         AudioSpectralFeaturesRefiner,
         VisualDegradationsRefiner,
     )
+    from mega_data_factory_spark.operators.packing import SpanCorruptionBuilder
 
-    adf = spark.createDataFrame([(1, b"x")], "id int, audio binary")
-    edf = spark.createDataFrame(
-        [(1, [float(x) for x in np.zeros(64)])], "id int, image_emb array<float>"
+    wav = _pcm16_wav(0.5 * np.sin(2 * np.pi * 440.0 * np.arange(1600) / 16000), 16000)
+    emb = [float(x) for x in np.random.default_rng(5).normal(size=64)]
+    idf = spark.createDataFrame([(1, make_png(NOISE)), (2, make_png(GRADIENT))], "id int, image binary")
+    adf = spark.createDataFrame([(1, wav), (2, wav)], "id int, audio binary")
+    edf = spark.createDataFrame([(1, emb), (2, emb)], "id int, image_emb array<float>")
+    tdf = spark.createDataFrame(
+        [(1, 0, 1, list(range(40))), (2, 0, 2, list(range(7, 47)))],
+        "id int, pack_bucket int, seq_id long, tokens array<int>",
     )
-    for ref, df in [
-        (AudioMetadataRefiner(), adf),
-        (AudioSpectralFeaturesRefiner(), adf),
-        (VisualDegradationsRefiner(), edf),
-    ]:
-        plan = ref.apply(df)._jdf.queryExecution().executedPlan().toString()
-        nodes = re.findall(r"ArrowEvalPython \[(.*?)\]", plan)
-        assert len(nodes) == 1, f"{type(ref).__name__}: {len(nodes)} ArrowEvalPython nodes"
-        n_calls = nodes[0].count("#") // 2  # each call prints in#id once and out#id once
-        assert nodes[0].count("_udf(") == 1, f"{type(ref).__name__}: {nodes[0]}"
+    cases = [
+        (ImageMetadataRefiner(), idf, "image_width"),
+        (ImageTechnicalQualityRefiner(), idf, "image_information_entropy"),
+        (ImageFeatureExtractor(), idf, "image_width"),
+        (AudioMetadataRefiner(), adf, "audio_sample_rate"),
+        (AudioSpectralFeaturesRefiner(), adf, "audio_rms"),
+        (VisualDegradationsRefiner(), edf, "img_vd_overall_quality"),
+        (SpanCorruptionBuilder(sentinel_start=1000), tdf, "input_ids"),
+    ]
+    dead = F.when(F.col("id") == 1, rejection_details("filtered", "Pre")).otherwise(
+        F.lit(None).cast(REJECTION_STRUCT_DDL)
+    )
+    for ref, df, field in cases:
+        name = type(ref).__name__
+        applied = ref.apply(df)
+        tagged = _one_operator_pipeline(ref).apply_ops(df.withColumn("_rejection_details", dead))
+        for path, out in (("apply", applied), ("pipeline", tagged)):
+            plan = out.filter(F.col(field).isNotNull())._jdf.queryExecution().executedPlan().toString()
+            nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[(.*?)\]", plan)
+            assert len(nodes) == 1, f"{name} {path}: {len(nodes)} ArrowEvalPython nodes"
+            assert len(nodes[0][1].split(", ")) == 1, f"{name} {path}: {nodes[0]}"
+        outputs = [c for c in applied.columns if c not in df.columns]
+        assert outputs and not any(c.startswith("__") for c in tagged.columns), name
+        rows = {r.id: r for r in tagged.select("id", *outputs).collect()}
+        assert all(rows[1][c] is None for c in outputs), f"{name}: dead row scored"
+        alive = applied.filter("id = 2").select("id", *outputs).collect()[0]
+        assert rows[2] == alive, f"{name}: {rows[2]} != {alive}"

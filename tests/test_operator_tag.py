@@ -1,15 +1,17 @@
-"""The tag contract (operators/base.py): one ``tag`` per Filter and
-Deduplicator serves the pipeline, the streaming runner and standalone
-``apply``/``rejected``, and builds its expressions once per input schema."""
+"""The tag contract (operators/base.py): one ``tag`` per operator serves
+the pipeline, the streaming runner and standalone ``apply``/``rejected``;
+a Filter's or Deduplicator's builds its expressions once per input schema,
+and a Refiner's is its ``apply`` projection gated on the alive rows."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.config import PipelineConfig
-from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
+from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, Refiner, rejection_details
 from mega_data_factory_spark.operators.dedup import KeyDeduplicator, TextExactDeduplicator
 from mega_data_factory_spark.plans.pipeline import Pipeline
+from mega_data_factory_spark.registry import OPERATORS
 
 
 def _rejections(df):
@@ -297,3 +299,57 @@ def test_tag_expressions_build_once_per_schema(spark):
     wider = batch([(7, "abc"), (8, "xyz")]).withColumn("lang", F.lit("en"))
     assert survivors(wider) == [7, 8]
     assert calls == {"predicate_sql": 2, "key_sql": 2}
+
+
+def test_refiners_that_override_apply_override_tag():
+    """The pipeline runs a Refiner through ``tag``, which is the column
+    hooks' projection: a registered Refiner that overrides ``apply`` alone
+    would be silently bypassed inside every pipeline."""
+    def owner(c, attr):
+        return next(k for k in c.__mro__ if attr in k.__dict__)
+
+    refiners = [c for c in map(OPERATORS.get, OPERATORS.names()) if issubclass(c, Refiner)]
+    overriding = [c for c in refiners if owner(c, "apply") is not Refiner]
+    assert {"RepetitionStatsRefiner", "BoilerplateLineRefiner", "PerplexityBucketRefiner"} <= {
+        c.__name__ for c in overriding
+    }
+    for c in overriding:
+        assert "tag" in owner(c, "apply").__dict__, f"{c.__name__} overrides apply without tag"
+
+
+def test_full_frame_refiners_in_a_pipeline_match_apply_on_alive_rows(spark):
+    """The refiners whose ``tag`` is a full-frame transform give, on the
+    alive rows of ``Pipeline.apply_ops``, what standalone ``apply`` gives
+    over the alive rows: a pre-rejected row neither votes on corpus-wide
+    line counts or percentile cuts nor changes a row-local statistic."""
+    cookie = "Accept all cookies to continue"
+    texts = {
+        1: f"{cookie}\nthe dead document repeats repeats repeats words",
+        2: f"{cookie}\nalpha beta gamma alpha beta gamma delta",
+        3: f"{cookie}\nsome prose about rivers and the sea and the sea",
+        4: "a short note without the banner at all today",
+        5: f"{cookie}\nfinal document words words words and more words",
+    }
+    df = spark.createDataFrame(
+        [(i, t, float(i * i), "en" if i % 2 else "de") for i, t in texts.items()],
+        "doc_id long, text string, score double, lang string",
+    )
+    dead = F.when(F.col("doc_id") == 1, rejection_details("filtered", "Pre")).otherwise(
+        F.lit(None).cast(REJECTION_STRUCT_DDL)
+    )
+    ops = [
+        ("RepetitionStatsRefiner", {"long_docs": True}, ["dup_word_ratio", "top_bigram_ratio"]),
+        ("BoilerplateLineRefiner", {"min_doc_frac": 0.5, "min_docs": 3}, ["text_cleaned", "boilerplate_lines_removed"]),
+        ("PerplexityBucketRefiner", {"score_col": "score", "cuts": (0.5,), "labels": ("lo", "hi")}, ["ppl_bucket"]),
+    ]
+    for name, params, outputs in ops:
+        pipe = Pipeline(
+            PipelineConfig.from_dict(
+                {"pipeline": {"name": "t", "source": {"table": "t"}, "operators": [{"name": name, "params": params}]}}
+            )
+        )
+        tagged = pipe.apply_ops(df.withColumn("_rejection_details", dead))
+        got = sorted(tagged.filter("_rejection_details IS NULL").select("doc_id", *outputs).collect())
+        want = sorted(OPERATORS.create(name, params).apply(df.filter("doc_id <> 1")).select("doc_id", *outputs).collect())
+        assert got == want, name
+        assert [r.doc_id for r in got] == [2, 3, 4, 5], name

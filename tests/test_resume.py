@@ -635,3 +635,21 @@ def test_update_store_recovers_crash_window_before_append(spark, tmp_path):
         [(9, text.replace("signature", "signatures"))], "doc_id long, text string"
     )
     assert d2.apply(neardup).count() == 0
+
+
+def test_seen_store_first_run_never_reaches_the_reader(spark, tmp_path):
+    """A missing local store directory is the empty first-run store
+    without a parquet read, whose file-not-found would log a stack trace
+    at WARN; an existing empty directory still reads as empty through the
+    reader's AnalysisException."""
+    from mega_data_factory_spark.operators.dedup import SeenStore
+
+    class NoReader:
+        @property
+        def read(self):
+            raise AssertionError("the parquet reader was called for a missing store")
+
+    store = SeenStore(str(tmp_path / "never_written"), "content_key", "string")
+    assert store.read(NoReader()) is None
+    (tmp_path / "empty").mkdir()
+    assert SeenStore(str(tmp_path / "empty"), "content_key", "string").read(spark) is None

@@ -176,13 +176,20 @@ class Refiner(Operator):
     in the projection (two ArrowEvalPython passes per row); a
     nondeterministic one referenced once per field would run once per
     field, since nondeterministic expressions are never CSE'd. Referenced
-    once in its own projection, it runs once per row."""
+    once in its own projection, it runs once per row.
+
+    A ``columns_sql_text`` key starting with ``__`` is projected FIRST, in
+    its own ``selectExpr``, and the other keys read it by name: the
+    struct-once geometry for a SQL-text struct with several output
+    fields. ``tag`` gates each output column in its own CASE, and codegen
+    CSE does not share a subexpression across CASE branches, so field
+    copies of one inline struct would each evaluate it."""
 
     def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
         """The projection as SQL text: new column name -> SQL fragment.
         The whole projection — alive gate included — is ONE ``selectExpr``
-        round trip. None for a class that authors :meth:`columns` as
-        Columns instead."""
+        round trip, two when it has ``__`` keys. None for a class that
+        authors :meth:`columns` as Columns instead."""
         return None
 
     def columns(self, df: DataFrame) -> dict[str, Column]:
@@ -212,7 +219,9 @@ class Refiner(Operator):
         if texts is not None:
             if gated:
                 texts = {k: f"CASE WHEN {ALIVE_SQL} THEN {sql} END" for k, sql in texts.items()}
-            out, keys = with_sql_columns(df, texts), texts
+            private = {k: sql for k, sql in texts.items() if k.startswith("__")}
+            out = with_sql_columns(df, private) if private else df
+            out, keys = with_sql_columns(out, {k: sql for k, sql in texts.items() if k not in private}), texts
         else:
             keys = self.columns(df)
             out = df.withColumns(_gate(keys) if gated else keys)
@@ -294,6 +303,8 @@ class Filter(Operator):
 # column a Column-authored dedup key is bound to, so the key wrappers
 # below (NULL handling, window ranking, the tag) stay SQL text
 RAW_KEY_COL = "__dedup_raw_key"
+# column the effective dedup key is bound to for the length of one tag
+KEY_COL = "__dedup_key"
 
 
 class Deduplicator(Operator):
@@ -383,23 +394,35 @@ class Deduplicator(Operator):
 
     def tag(self, df: DataFrame) -> DataFrame:
         """``df`` with every alive row after the first of its key tagged."""
-        raw, tag = self._per_schema(df, self._tag_exprs)
+        keyed, tag = self._keyed(df)
+        return keyed.withColumn(_R, tag).drop(KEY_COL)
+
+    def _keyed(self, df: DataFrame) -> tuple[DataFrame, Column]:
+        """(``df`` plus ``KEY_COL``, the window tag that reads it). A
+        subclass may tag rows between the two (the seen-store lookup)."""
+        raw, key, tag = self._per_schema(df, self._tag_exprs)
         if raw is None:
-            return df.withColumn(_R, tag)
-        return df.withColumn(RAW_KEY_COL, raw).withColumn(_R, tag).drop(RAW_KEY_COL)
+            return df.withColumn(KEY_COL, key), tag
+        return df.withColumn(RAW_KEY_COL, raw).withColumn(KEY_COL, key).drop(RAW_KEY_COL), tag
 
-    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, Column]:
+    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, Column, Column]:
         """(Column-authored key to bind as ``RAW_KEY_COL`` or None, the
-        window tag).
+        key to bind as ``KEY_COL``, the window tag).
 
-        The key is the effective key — the null_keys="distinct" contract
-        (rows with no dedup identity each survive) — for alive rows, and
-        for dead rows a per-row sentinel so they can neither absorb nor
-        represent alive rows. The sentinel is concat_ws, never NULL: a bare
-        concat made a dead NULL-id row's sentinel NULL, landing it in the
-        alive NULL-key window partition where it (sorting NULLS FIRST on
-        order_col) absorbed every alive NULL-key row as a "duplicate" of a
-        dead representative.
+        ``KEY_COL`` is the window's partition key: the effective key —
+        the null_keys="distinct" contract (rows with no dedup identity
+        each survive) — as a string for alive rows, and for dead rows a
+        per-row sentinel so they can neither absorb nor represent alive
+        rows. It is bound once and read by name, so the key (an md5 over
+        normalized text for the exact dedups) is evaluated once per row
+        and crosses the shuffle once: the window partition and the
+        rejection struct's ``dedup_key`` sit in different plan nodes,
+        where no subexpression elimination shares a repeated key text.
+        The sentinel is concat_ws, never NULL: a bare concat made a dead
+        NULL-id row's sentinel NULL, landing it in the alive NULL-key
+        window partition where it (sorting NULLS FIRST on order_col)
+        absorbed every alive NULL-key row as a "duplicate" of a dead
+        representative.
 
         ``rank()`` lets every row tied first survive (the NULL-order
         partition is one such tie); a later row's representative is the
@@ -416,30 +439,29 @@ class Deduplicator(Operator):
         that multiplies by micro-batch count under the streaming runner
         (measured ~0.2 s of the per-trigger floor). Both window functions
         share one window spec, so the physical plan is a single Window
-        node; the key is reused verbatim in the partition spec and the
-        rejection struct."""
+        node."""
         ksql, raw = self.key_sql(df), None
         if ksql is None:
-            # a Column-authored key (model UDFs) runs for alive rows only
+            # a Column-authored key is NULL on dead rows, but the gate does
+            # not keep a Python UDF from scoring them: Spark extracts the
+            # UDF into an ArrowEvalPython node below this projection, which
+            # sees every row
             raw, ksql = F.when(F.col(_R).isNull(), self.key(df)), sql_ident(RAW_KEY_COL)
-        ic, oc = sql_ident(self.id_col), sql_ident(self.order_col)
-        key = (
+        k, ic, oc = sql_ident(KEY_COL), sql_ident(self.id_col), sql_ident(self.order_col)
+        key = F.expr(
             f"CASE WHEN {ALIVE_SQL} THEN cast({self._effective_key_sql(df, ksql)} as string) "
             f"ELSE concat_ws('', '\\0D\x1f', coalesce(cast({ic} as string), '')) END"
         )
-        over = f"OVER (PARTITION BY {key} ORDER BY {oc})"
+        over = f"OVER (PARTITION BY {k} ORDER BY {oc})"
         rep = f"first({ic}) {over}"
         if ic != oc:
             rep = f"(min(struct({oc} AS o, {ic} AS i)) {over}).i"
         tag = F.expr(
             f"CASE WHEN ({ALIVE_SQL} AND (rank() {over} > 1)) "
-            f"THEN struct(cast('duplicate' as string) AS reason, "
-            f"cast({sql_string_literal(self.name)} as string) AS operator, "
-            f"cast({key} as string) AS dedup_key, "
-            f"cast({rep} as string) AS representative_id) "
+            f"THEN {rejection_details_sql('duplicate', self.name, k, rep)} "
             f"ELSE `{_R}` END"
         )
-        return raw, tag
+        return raw, key, tag
 
     def apply(self, df: DataFrame) -> DataFrame:
         return self._split(df, alive=True)

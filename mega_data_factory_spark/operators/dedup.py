@@ -21,6 +21,7 @@ from mega_data_factory_spark.functions.text import span_hashes_sql, sql_ident, w
 from mega_data_factory_spark.functions.vectors import is_finite_vector, l2_norm
 from mega_data_factory_spark.operators.base import (
     ALIVE_SQL,
+    KEY_COL,
     REJECTION_DETAILS_COL as _R,
     Deduplicator,
     JoinDeduplicator,
@@ -182,15 +183,17 @@ class IncrementalExactDeduplicator(TextExactDeduplicator):
         """Tag every alive row whose key the store holds as a duplicate of
         the stored representative, then apply the inherited window to the
         rows still alive: the store hits are dead by then, so they neither
-        absorb nor represent a batch row. The key's SQL text is built once
-        here; Spark evaluates it twice, in the lookup's projection and in
-        the window's."""
-        key = self._effective_key_sql(df, self.key_sql(df))
-        keyed = df.selectExpr("*", f"CASE WHEN {ALIVE_SQL} THEN cast({key} as string) END AS `__seen_key`")
-        joined = self.store.lookup(keyed, "__seen_key", "__seen_rep")
-        hit = rejection_details_sql("duplicate", self.name, "`__seen_key`", "`__seen_rep`")
-        tag = f"CASE WHEN (`__seen_rep` IS NOT NULL) THEN {hit} ELSE `{_R}` END AS `{_R}`"
-        return super().tag(joined.selectExpr(*(tag if c == _R else sql_ident(c, literal=True) for c in df.columns)))
+        absorb nor represent a batch row. The lookup, the window and both
+        rejection structs read the one bound ``KEY_COL``, so Spark
+        evaluates the key once. Every alive row of a stored key is a hit,
+        so the hits fill whole window partitions of dead rows, and the
+        inherited window can keep partitioning on ``KEY_COL``."""
+        keyed, tag = self._keyed(df)
+        joined = self.store.lookup(keyed, KEY_COL, "__seen_rep")
+        hit = rejection_details_sql("duplicate", self.name, f"`{KEY_COL}`", "`__seen_rep`")
+        seen = f"CASE WHEN ({ALIVE_SQL} AND (`__seen_rep` IS NOT NULL)) THEN {hit} ELSE `{_R}` END AS `{_R}`"
+        cols = [seen if c == _R else sql_ident(c, literal=True) for c in df.columns]
+        return joined.selectExpr(*cols, f"`{KEY_COL}`").withColumn(_R, tag).drop(KEY_COL)
 
     def update_store(self, df: DataFrame, *, survivors: bool = False) -> None:
         """Append the batch's NEW keys (survivors of ``apply``) to the

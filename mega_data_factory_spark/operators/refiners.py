@@ -82,20 +82,20 @@ class LanguageIdRefiner(Refiner):
         self.markers = markers or LANG_MARKERS
 
     def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
-        # Per-language marker counts are bound once PER OUTPUT COLUMN
-        # REFERENCE as a lambda variable (the round-10 expression-binding
-        # lesson, see QualityScoreRefiner below): the naive tree referenced
-        # each language's regex-count sum in `greatest` AND in every
-        # when-chain arm, so a pushed-down LanguageCut predicate re-ran ~3x
-        # the marker regexes per row interpreted. Note the invariant's
-        # limit: the dict below returns two field projections of the same
-        # tree, so a Project that materializes BOTH lang_pred and
-        # lang_score still carries two copies of the marker-count struct —
-        # deduplicated by codegen CSE when compiled, but NOT shared in a
-        # CodegenFallback Project or a pushed single-column filter (which
-        # only ever pulls one copy, the stated goal). First language in
-        # declared order wins ties: the CASE chain is built reversed so
-        # earlier languages wrap later ones.
+        # Per-language marker counts are bound once as a lambda variable
+        # (the round-10 expression-binding lesson, see QualityScoreRefiner
+        # below): the naive tree referenced each language's regex-count
+        # sum in `greatest` AND in every when-chain arm, so a pushed-down
+        # LanguageCut predicate re-ran ~3x the marker regexes per row
+        # interpreted. The result struct is emitted ONCE, under a private
+        # key, and the two output columns read its fields by name: the
+        # pipeline's tag wraps each output column in its own alive-gate
+        # CASE, whose branches codegen CSE does not enter, so two getField
+        # copies of the tree would run every marker regex twice per row
+        # (1,500 docs warm: 490 ms against 277 ms for one copy). First
+        # language in declared order wins ties: the
+        # CASE chain is built reversed so earlier languages wrap later
+        # ones.
         ref = sql_ident(self.text_col)
         scores = {
             lang: " + ".join(word_occurrences_sql(ref, w) for w in words)
@@ -113,8 +113,11 @@ class LanguageIdRefiner(Refiner):
                 f"THEN {sql_string_literal(langs[i])} ELSE {pred} END"
             )
         pred = f"CASE WHEN ({best} > 0) THEN {pred} ELSE 'und' END"
-        out = f"transform({base}, x -> struct({pred} AS lang_pred, {best} AS lang_score))[0]"
-        return {"lang_pred": f"{out}.lang_pred", "lang_score": f"{out}.lang_score"}
+        return {
+            "__lang_id": f"transform({base}, x -> struct({pred} AS lang_pred, {best} AS lang_score))[0]",
+            "lang_pred": "`__lang_id`.lang_pred",
+            "lang_score": "`__lang_id`.lang_score",
+        }
 
 
 DEFAULT_STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
@@ -137,13 +140,9 @@ class QualityScoreRefiner(Refiner):
 
     def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         # Each BASE signal (token count, stopword hits, normalized length)
-        # is bound once PER OUTPUT COLUMN REFERENCE as a lambda variable
-        # and the derived arithmetic reads the bound values (the two
-        # getField projections returned below are separate copies of the
-        # authored tree — shared only under codegen CSE, which is fine for
-        # the stated goal of single-column pushed filters). The naive
-        # formulation nested `tokens` inside ratio/avg_len/band/score, so
-        # the authored tree carried ~6
+        # is bound once as a lambda variable and the derived arithmetic
+        # reads the bound values. The naive formulation nested `tokens`
+        # inside ratio/avg_len/band/score, so the authored tree carried ~6
         # copies of split(regexp_replace(text)) and 2 copies of the
         # 10-regex stopword count — harmless under codegen CSE, but a
         # pushed-down NumericRangeFilter(quality_score >= x) inlines the
@@ -152,7 +151,12 @@ class QualityScoreRefiner(Refiner):
         # elimination), re-scanning the text per copy per row: measured
         # 11s -> 0.06s on a 500k-doc quality_rules chain (round-10
         # scripts/diag_fineweb.out attribution). Values are bit-identical —
-        # same arithmetic on the same doubles.
+        # same arithmetic on the same doubles. The result struct is
+        # emitted ONCE, under a private key, and the output columns read
+        # its fields: codegen CSE does not enter the pipeline tag's
+        # per-column alive-gate CASE, so two getField copies would run
+        # every stopword regex twice per row (1,500 docs warm: 629 ms
+        # against 309 ms for one copy).
         # Double literals carry the D suffix — bare 0.0 parses as DECIMAL
         # in Spark SQL, which would change the arithmetic.
         ref = sql_ident(self.text_col)
@@ -169,13 +173,13 @@ class QualityScoreRefiner(Refiner):
         stop_component = f"least({ratio} * 5.0D, 1.0D)"
         len_band = f"CASE WHEN (({avg_len} >= 3.0D) AND ({avg_len} <= 10.0D)) THEN 1.0D ELSE 0.0D END"
         score = f"0.4D * {length_component} + 0.3D * {stop_component} + 0.3D * {len_band}"
-        out = (
-            f"transform({base}, x -> struct(round({ratio}, 6) AS stopword_ratio, "
-            f"round({score}, 6) AS quality_score))[0]"
-        )
         return {
-            "stopword_ratio": f"{out}.stopword_ratio",
-            "quality_score": f"{out}.quality_score",
+            "__quality": (
+                f"transform({base}, x -> struct(round({ratio}, 6) AS stopword_ratio, "
+                f"round({score}, 6) AS quality_score))[0]"
+            ),
+            "stopword_ratio": "`__quality`.stopword_ratio",
+            "quality_score": "`__quality`.quality_score",
         }
 
 

@@ -353,3 +353,91 @@ def test_full_frame_refiners_in_a_pipeline_match_apply_on_alive_rows(spark):
         want = sorted(OPERATORS.create(name, params).apply(df.filter("doc_id <> 1")).select("doc_id", *outputs).collect())
         assert got == want, name
         assert [r.doc_id for r in got] == [2, 3, 4, 5], name
+
+
+def _plan_nodes_with(df, needle: str) -> int:
+    """Nodes of ``df``'s optimized plan whose expressions contain ``needle``."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(needle in line for line in plan.splitlines())
+
+
+def test_dedup_key_is_evaluated_in_one_plan_node(spark, tmp_path):
+    """The effective key is bound once per tag: the store lookup, the
+    window and the rejection struct read it by name, so each optimized
+    plan computes the md5 in exactly one node, and ``dedup_key`` still
+    names the content key of store hits and in-batch duplicates alike."""
+    import hashlib
+
+    from mega_data_factory_spark.operators.dedup import IncrementalExactDeduplicator
+
+    rows = [
+        (1, "alpha beta", None), (2, "alpha beta", None), (3, "gamma", None), (4, "gamma", "Pre"),
+        (5, "gamma", None), (6, None, None), (7, "delta", None),
+    ]
+    tagged = _pre_tagged(spark, rows, "doc_id long, text string, pre string", 2)
+    plain = tagged.drop("_rejection_details")
+    seen = IncrementalExactDeduplicator(str(tmp_path / "seen"), id_col="doc_id")
+    seen.update_store(spark.createDataFrame([(70, "delta")], "doc_id long, text string"), survivors=True)
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    def rejections(df):
+        return sorted(
+            (r.doc_id, r._rejection_details.reason, r._rejection_details.dedup_key, r._rejection_details.representative_id)
+            for r in df.filter("_rejection_details IS NOT NULL").collect()
+        )
+
+    ab, g, d = md5("alpha beta"), md5("gamma"), md5("delta")
+    pre = (4, "filtered", None, None)
+    cases = {
+        "TextExactDeduplicator.tag": (
+            TextExactDeduplicator(id_col="doc_id").tag(tagged),
+            [(2, "duplicate", ab, "1"), pre, (5, "duplicate", g, "3")],
+        ),
+        "IncrementalExactDeduplicator.tag": (
+            seen.tag(tagged),
+            [(2, "duplicate", ab, "1"), pre, (5, "duplicate", g, "3"), (7, "duplicate", d, "70")],
+        ),
+        "IncrementalExactDeduplicator.rejected": (
+            seen.rejected(plain),
+            [(2, "duplicate", ab, "1"), (4, "duplicate", g, "3"), (5, "duplicate", g, "3"), (7, "duplicate", d, "70")],
+        ),
+    }
+    for name, (df, want) in cases.items():
+        assert _plan_nodes_with(df, "md5(") == 1, name
+        assert rejections(df) == want, name
+        assert not any(c.startswith("__") for c in df.columns), name
+
+
+def test_struct_refiners_tag_evaluates_the_struct_once(spark):
+    """``LanguageIdRefiner`` and ``QualityScoreRefiner`` emit their result
+    struct once and read its fields by name, so the alive-gated ``tag``
+    runs each marker or stopword regex once per row — the same count as
+    ``apply`` — with the dead row NULL and the alive rows equal to
+    ``apply``."""
+    import re
+
+    from mega_data_factory_spark.operators.refiners import (
+        DEFAULT_STOPWORDS,
+        LANG_MARKERS,
+        LanguageIdRefiner,
+        QualityScoreRefiner,
+    )
+
+    rows = [(1, "the cat and a dog", None), (2, "el perro de la casa", "Pre"), (3, "der und das die", None), (4, None, None)]
+    tagged = _pre_tagged(spark, rows, "doc_id long, text string, pre string", 2)
+    plain = tagged.drop("_rejection_details")
+    n_markers = sum(len(ws) for ws in LANG_MARKERS.values())
+    for op, n_regex in ((LanguageIdRefiner(), n_markers), (QualityScoreRefiner(), len(DEFAULT_STOPWORDS))):
+        name = type(op).__name__
+        for mode, df in (("tag", op.tag(tagged)), ("apply", op.apply(plain))):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            # each whole-word count is one `\bword\b` pattern literal
+            assert len(re.findall(r"\\b[a-z]+\\b", plan)) == n_regex, (name, mode)
+        cols = [c for c in op.apply(plain).columns if c not in plain.columns]
+        got = {r.doc_id: tuple(r[c] for c in cols) for r in op.tag(tagged).collect()}
+        want = {r.doc_id: tuple(r[c] for c in cols) for r in op.apply(plain).collect()}
+        assert got[2] == (None, None), name
+        assert {k: v for k, v in got.items() if k != 2} == {k: v for k, v in want.items() if k != 2}, name
+        assert op.tag(tagged).columns == [*tagged.columns, *cols], name

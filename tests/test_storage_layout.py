@@ -136,3 +136,98 @@ def test_partition_pruning_skips_directories(spark, tmp_path):
     assert "PartitionFilters" in plan and "o_orderstatus" in plan.split("PartitionFilters")[1].split("]")[0]
     expect = orders.filter(F.col("o_orderstatus") == "F").count()
     assert df.count() == expect
+
+
+def _codecs(root: str) -> dict[str, set[str]]:
+    """Each directory under ``root`` holding parquet data files -> the
+    codecs of every column chunk in them, read from the footers."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, set[str]] = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".parquet"):
+                md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
+                chunks = out.setdefault(os.path.relpath(dirpath, root), set())
+                for i in range(md.num_row_groups):
+                    chunks.update(md.row_group(i).column(j).compression for j in range(md.num_columns))
+    return out
+
+
+def test_every_engine_write_lands_zstd(spark, tmp_path):
+    """The session's codec default reaches every parquet file the engine
+    lands — batch sinks (rejected partitioned by operator), metrics tables,
+    a seen-store and its compaction, a stream trigger's sinks and store,
+    the stream telemetry — and a sink's own ``compression`` option wins."""
+    import json
+
+    from mega_data_factory_spark.config import PipelineConfig, SinkConfig
+    from mega_data_factory_spark.operators.dedup import compact_store
+    from mega_data_factory_spark.plans.pipeline import Pipeline
+    from mega_data_factory_spark.sinks import write_sink
+    from mega_data_factory_spark.streaming import StreamingPipeline
+    from mega_data_factory_spark.streaming.listener import StreamingMetricsListener
+
+    rows = [(i, f"document {i % 5} about shuffles, joins and the parquet codec") for i in range(12)]
+    rows.append((12, "short"))
+    src = tmp_path / "in"
+    src.mkdir()
+    with open(src / "docs.json", "w") as f:
+        f.writelines(json.dumps({"doc_id": i, "text": t}) + "\n" for i, t in rows)
+    out = tmp_path / "out"
+
+    def config(name: str, store: str) -> PipelineConfig:
+        cfg = PipelineConfig.from_dict(
+            {
+                "pipeline": {
+                    "name": name,
+                    "id_col": "doc_id",
+                    "source": {"format": "json", "path": str(src)},
+                    "stages": [
+                        {
+                            "name": "s",
+                            "operators": [
+                                {"name": "TextLengthFilter", "params": {"min_length": 10}},
+                                {"name": "IncrementalExactDeduplicator", "params": {"store_path": store, "id_col": "doc_id"}},
+                            ],
+                        }
+                    ],
+                }
+            }
+        )
+        cfg.sink = SinkConfig(path=str(out / name / "passed"))
+        cfg.rejected_sink = SinkConfig(path=str(out / name / "rejected"))
+        return cfg
+
+    cfg = config("batch", str(out / "batch" / "store"))
+    cfg.metrics_path = str(out / "batch" / "metrics")
+    result = Pipeline(cfg).run(spark)
+    assert result.output_records == 5
+    compact_store(spark, str(out / "batch" / "store"), target_files=1)
+
+    cfg = config("stream", str(out / "stream" / "store"))
+    stream = spark.readStream.schema("doc_id long, text string").json(str(src))
+    q = StreamingPipeline(cfg, checkpoint_dir=str(tmp_path / "ckpt")).start(stream)
+    q.awaitTermination(120)
+    StreamingMetricsListener(spark, str(out / "stream" / "metrics"), pipeline="stream", run_id="r").write_health()
+
+    codecs = _codecs(str(out))
+    for d in (
+        "batch/passed",
+        "batch/rejected/operator=TextLengthFilter",
+        "batch/rejected/operator=IncrementalExactDeduplicator",
+        "batch/metrics/runs",
+        "batch/metrics/operators",
+        "batch/metrics/stores",
+        "batch/store",
+        "stream/passed",
+        "stream/rejected/operator=TextLengthFilter",
+        "stream/store",
+        "stream/metrics/telemetry",
+    ):
+        assert codecs.get(d) == {"ZSTD"}, (d, codecs.get(d))
+    assert {c for cs in codecs.values() for c in cs} == {"ZSTD"}, codecs
+
+    passed = spark.read.parquet(str(out / "batch" / "passed"))
+    write_sink(passed, SinkConfig(path=str(tmp_path / "snappy"), options={"compression": "snappy"}))
+    assert _codecs(str(tmp_path / "snappy")) == {".": {"SNAPPY"}}

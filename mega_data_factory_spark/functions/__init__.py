@@ -17,7 +17,6 @@ from mega_data_factory_spark.functions.text import (
 from mega_data_factory_spark.functions.hashing import (
     content_key,
     hash64_from_md5,
-    stable_text_hash,
 )
 from mega_data_factory_spark.functions.vectors import (
     cosine_similarity,
@@ -34,7 +33,6 @@ __all__ = [
     "word_shingles",
     "content_key",
     "hash64_from_md5",
-    "stable_text_hash",
     "cosine_similarity",
     "dot_product",
     "l2_norm",

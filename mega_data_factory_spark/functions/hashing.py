@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 from mega_data_factory_spark.functions.text import normalize_text_sql, sql_ident, sql_string_literal
 
 
-def stable_text_hash(col: Column | str) -> Column:
-    """md5 hex digest of the raw string's UTF-8 bytes; NULL for NULL."""
-    return F.md5((F.col(col) if isinstance(col, str) else col).cast("string"))
-
-
 def content_key_sql(
     text_sql: str,
     id_sql: str,

@@ -4,8 +4,8 @@ Web crawls carry the same page under many spellings: http vs https, with
 and without ``www.``, trailing slash, ``#fragment``, tracking parameters
 (``utm_*``, ``gclid``, ...), and shuffled query order. Exact-URL dedup
 (C4/RefinedWeb both dedup by URL before content dedup) needs one canonical
-spelling per page; ``canonical_url`` produces it as a pure codegen'd
-Column pipeline — no UDF, no shuffle, fuses into the scan.
+spelling per page; ``canonical_url_sql`` spells it as one codegen'd SQL
+expression — no UDF, no shuffle, fuses into the scan.
 
 Deliberately regex-only (no ``parse_url``): the Java-regex expressions
 here stay inside the Java/RE2 common subset (the PiiRedactRefiner
@@ -35,8 +35,7 @@ multi-key dedup).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from mega_data_factory_spark.functions.text import sql_string_literal
 
 # The standard strip set: Google/Facebook/Microsoft/Mailchimp click and
 # campaign trackers. Matched against the full "k=v" token by prefix-anchored
@@ -47,44 +46,38 @@ TRACKING_PARAM_RE = (
 )
 
 
-def canonical_url(url: Column | str) -> Column:
+def canonical_url_sql(url_sql: str) -> str:
     """Canonical scheme-less URL string (see module docstring), or NULL for
-    NULL/blank/host-less input."""
-    u = F.col(url) if isinstance(url, str) else url
-    u = F.trim(u)
+    NULL/blank/host-less input; ``url_sql`` is an already-rendered SQL
+    fragment."""
+    lit = sql_string_literal
+    u = f"trim({url_sql})"
     # scheme and fragment off first; what remains is authority[/path][?query].
     # The optional-scheme form also strips protocol-relative "//host/x"
     # (a valid crawl spelling that previously canonicalized to NULL).
-    bare = F.regexp_replace(u, "^([a-zA-Z][a-zA-Z0-9+.-]*:)?//", "")
-    bare = F.regexp_replace(bare, "#.*$", "")
+    scheme = lit("^([a-zA-Z][a-zA-Z0-9+.-]*:)?//")
+    www, dot, qs = lit("^www\\."), lit("\\.$"), lit("\\?(.*)$")
+    bare = f"regexp_replace({u}, {scheme}, '')"
+    bare = f"regexp_replace({bare}, {lit('#.*$')}, '')"
 
-    authority = F.regexp_extract(bare, "^([^/?]+)", 1)
+    authority = f"regexp_extract({bare}, {lit('^([^/?]+)')}, 1)"
     # userinfo@ is only stripped when the URL had an explicit //-authority:
     # on scheme-less values an unconditional "^[^@]*@" cut turned
     # "mailto:info@example.com" (and bare email addresses in the url
     # field) into the site root "example.com", aliasing unrelated
     # documents with the homepage's dedup key.
-    had_authority = u.rlike("^([a-zA-Z][a-zA-Z0-9+.-]*:)?//")
-    host = F.lower(
-        F.when(had_authority, F.regexp_replace(authority, "^[^@]*@", "")).otherwise(authority)
-    )
-    host = F.regexp_replace(host, ":[0-9]*$", "")  # drop port (incl. bare ':')
-    host = F.regexp_replace(host, "^www\\.", "")
-    host = F.regexp_replace(host, "\\.$", "")  # trailing-dot FQDN form
+    userinfo_cut = f"regexp_replace({authority}, {lit('^[^@]*@')}, '')"
+    host = f"lower(CASE WHEN ({u} RLIKE {scheme}) THEN {userinfo_cut} ELSE {authority} END)"
+    host = f"regexp_replace({host}, {lit(':[0-9]*$')}, '')"  # drop port (incl. bare ':')
+    host = f"regexp_replace({host}, {www}, '')"
+    host = f"regexp_replace({host}, {dot}, '')"  # trailing-dot FQDN form
 
-    path = F.regexp_extract(bare, "^[^/?]+([^?]*)", 1)
-    path = F.regexp_replace(path, "/+$", "")  # trailing slash(es); "/" -> ""
+    path = f"regexp_extract({bare}, {lit('^[^/?]+([^?]*)')}, 1)"
+    path = f"regexp_replace({path}, {lit('/+$')}, '')"  # trailing slash(es); "/" -> ""
 
-    query = F.when(bare.contains("?"), F.regexp_extract(bare, "\\?(.*)$", 1)).otherwise(F.lit(""))
-    params = F.filter(
-        F.split(query, "&"),
-        lambda p: (F.length(p) > 0) & ~p.rlike(TRACKING_PARAM_RE),
-    )
-    qpart = F.when(
-        F.size(params) > 0, F.concat(F.lit("?"), F.array_join(F.array_sort(params), "&"))
-    ).otherwise(F.lit(""))
+    query = f"CASE WHEN contains({bare}, '?') THEN regexp_extract({bare}, {qs}, 1) ELSE '' END"
+    params = f"filter(split({query}, '&'), x -> ((length(x) > 0) AND (NOT (x RLIKE {lit(TRACKING_PARAM_RE)}))))"
+    qpart = f"CASE WHEN (size({params}) > 0) THEN concat('?', array_join(array_sort({params}), '&')) ELSE '' END"
 
-    out = F.concat(host, path, qpart)
-    return F.when(u.isNull() | (F.length(u) == 0) | (F.length(host) == 0), F.lit(None)).otherwise(
-        out
-    )
+    out = f"concat({host}, {path}, {qpart})"
+    return f"CASE WHEN ((({u} IS NULL) OR (length({u}) = 0)) OR (length({host}) = 0)) THEN NULL ELSE {out} END"

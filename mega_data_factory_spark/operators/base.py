@@ -10,6 +10,11 @@ Re-expresses the reference's operator algebra (framework/operator.py:206-382):
   * ``Deduplicator``  — first-seen-wins on a derived key with representative
                         tracking (operator.py:271-382, backend.py:13-226).
 
+Every expression is authored once, as SQL text. What SQL cannot spell — a
+Python UDF call — is bound once under a private ``__`` column that the SQL
+text reads by name (``Refiner.udf_columns``, a Filter's ``_KEEP``, a
+Deduplicator's ``RAW_KEY_COL``).
+
 The tag contract: every operator runs inside a pipeline through ONE
 method, ``tag(df)``. ``df`` carries a nullable ``_rejection_details``
 struct, NULL meaning alive; ``tag`` fills it for the alive rows the
@@ -150,59 +155,50 @@ class Operator(ABC):
 # the *_sql hooks below — and the Column form is that text through F.expr:
 # py4j costs ~2-4 ms per Column call on the bench hosts, so one parse per
 # expression instead of dozens of composed calls is what keeps cold plan
-# builds cheap. Expressions SQL cannot spell (Python UDFs, higher-order
-# Column compositions) are authored as Columns instead, and their *_sql
-# hook stays None for every parameterization of the class.
+# builds cheap. What SQL cannot spell (a Python UDF call) is bound once
+# under a private column name and read by name from the SQL text: a
+# refiner's ``udf_columns``, a filter's ``_KEEP``, a dedup's
+# ``RAW_KEY_COL``.
 
 
 class Refiner(Operator):
-    """Adds columns; never drops rows. Subclasses author either
-    ``columns_sql_text`` (SQL text) or ``columns`` (Columns), never both;
-    ``derived_columns`` optionally adds a second projection whose
-    expressions reference the FIRST projection's columns BY NAME — the
-    contract for thresholds over UDF scores (``is_aigc = score >= t``):
-    repeating the score expression in ``columns`` would evaluate the UDF
-    twice. ``apply`` and ``tag`` are the same two projections; ``tag``
+    """Adds columns; never drops rows. The one authoring rule: every
+    output is SQL text (``columns_sql_text``), and a Python UDF call is
+    bound once under a ``__`` name (``udf_columns``) that the SQL text
+    reads by name. ``apply`` and ``tag`` are the same projection; ``tag``
     gates every column on the row being alive, so dead rows get NULL. A
     subclass that overrides ``apply`` must override ``tag`` too, or the
     pipeline keeps the hooks' projection.
 
-    A ``columns`` key starting with ``__`` is a refiner-private
-    intermediate: it is visible to ``derived_columns`` and DROPPED from the
-    output. It is the struct-once geometry for a multi-field UDF: emit the
-    struct once under a private key, from the UDF marked nondeterministic,
-    and extract the fields by name in ``derived_columns``. A deterministic
-    UDF would be substituted into a downstream filter predicate and kept
-    in the projection (two ArrowEvalPython passes per row); a
-    nondeterministic one referenced once per field would run once per
-    field, since nondeterministic expressions are never CSE'd. Referenced
-    once in its own projection, it runs once per row.
+    A ``__`` key is a private intermediate, projected FIRST and DROPPED
+    from the output; there is one level of them. ``tag`` gates each output
+    in its own CASE, and codegen CSE does not share a subexpression across
+    CASE branches, so a value two outputs share (a result struct, a
+    cleaned text, a UDF score) is bound once as a ``__`` key.
 
-    A ``columns_sql_text`` key starting with ``__`` is projected FIRST, in
-    its own ``selectExpr``, and the other keys read it by name: the
-    struct-once geometry for a SQL-text struct with several output
-    fields. ``tag`` gates each output column in its own CASE, and codegen
-    CSE does not share a subexpression across CASE branches, so field
-    copies of one inline struct would each evaluate it."""
+    Each ``udf_columns`` call is marked nondeterministic by its class: a
+    deterministic UDF would be substituted into a downstream filter and
+    also kept in the projection (two ArrowEvalPython passes per row).
+    Bound once and read by name, it runs once per row. The gate NULLs its
+    value on dead rows but does not stop it scoring them: Spark extracts
+    the call into an ArrowEvalPython node below the gated projection,
+    which sees every row (the binding is where an alive-only split of the
+    UDF input would go)."""
 
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         """The projection as SQL text: new column name -> SQL fragment.
         The whole projection — alive gate included — is ONE ``selectExpr``
-        round trip, two when it has ``__`` keys. None for a class that
-        authors :meth:`columns` as Columns instead."""
-        return None
+        round trip, two when it has ``__`` keys."""
+        raise NotImplementedError(f"{type(self).__name__} authors no columns_sql_text")
+
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        """``__`` name -> a nondeterministic-marked Python UDF call, bound
+        before the SQL text, which reads it by name."""
+        return {}
 
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        """New column name -> expression (by default, the parsed
-        :meth:`columns_sql_text`)."""
-        texts = self.columns_sql_text(df)
-        if texts is None:
-            raise NotImplementedError(f"{type(self).__name__} authors neither columns nor columns_sql_text")
-        return {k: F.expr(s) for k, s in texts.items()}
-
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        """Second-stage columns over the ``columns`` output (by name)."""
-        return {}
+        """The parsed :meth:`columns_sql_text`, one Column per key."""
+        return {k: F.expr(s) for k, s in self.columns_sql_text(df).items()}
 
     def apply(self, df: DataFrame) -> DataFrame:
         return self._project(df, gated=False)
@@ -212,30 +208,19 @@ class Refiner(Operator):
         return self._project(df, gated=True)
 
     def _project(self, df: DataFrame, *, gated: bool) -> DataFrame:
-        """The projection, then ``derived_columns`` over it, then the
-        ``__`` intermediates dropped. An existing output name is replaced
-        in place, as ``withColumns`` would."""
-        texts = self.columns_sql_text(df)
-        if texts is not None:
-            if gated:
-                texts = {k: f"CASE WHEN {ALIVE_SQL} THEN {sql} END" for k, sql in texts.items()}
-            private = {k: sql for k, sql in texts.items() if k.startswith("__")}
-            out = with_sql_columns(df, private) if private else df
-            out, keys = with_sql_columns(out, {k: sql for k, sql in texts.items() if k not in private}), texts
-        else:
-            keys = self.columns(df)
-            out = df.withColumns(_gate(keys) if gated else keys)
-        derived = self.derived_columns(out)
-        if derived:
-            out = out.withColumns(_gate(derived) if gated else derived)
-        tmp = [k for k in keys if k.startswith("__")]
+        """The UDF bindings, the private SQL keys, the outputs, then every
+        ``__`` intermediate dropped. An existing output name is replaced in
+        place, as ``withColumns`` would."""
+        udfs, texts = self.udf_columns(df), self.columns_sql_text(df)
+        if gated:
+            udfs = {k: F.when(F.expr(ALIVE_SQL), v) for k, v in udfs.items()}
+            texts = {k: f"CASE WHEN {ALIVE_SQL} THEN {sql} END" for k, sql in texts.items()}
+        private = {k: sql for k, sql in texts.items() if k.startswith("__")}
+        out = df.withColumns(udfs) if udfs else df
+        out = with_sql_columns(out, private) if private else out
+        out = with_sql_columns(out, {k: sql for k, sql in texts.items() if k not in private})
+        tmp = [*udfs, *private]
         return out.drop(*tmp) if tmp else out
-
-
-def _gate(cols: dict[str, Column]) -> dict[str, Column]:
-    """Each column NULL on dead rows."""
-    alive = F.expr(ALIVE_SQL)
-    return {k: F.when(alive, v) for k, v in cols.items()}
 
 
 # column a Column-authored filter predicate is bound to, so the filter tag
@@ -512,17 +497,11 @@ class JoinDeduplicator(Deduplicator):
         O(duplicates) — tiny on a clean corpus but O(n) on a near-dup-heavy
         one, where a forced broadcast OOMs the driver at scale. AQE sees
         the real size at runtime and broadcasts whenever it is small."""
-        alive = F.col(_R).isNull()
-        pairs = self._dup_pairs(df.filter(alive)).withColumnRenamed(self.id_col, "__dup_id")
+        pairs = self._dup_pairs(df.filter(ALIVE_SQL)).withColumnRenamed(self.id_col, "__dup_id")
         joined = df.join(pairs, df[self.id_col] == F.col("__dup_id"), "left")
-        tagged = joined.withColumn(
-            _R,
-            F.when(
-                alive & F.col("__dup_id").isNotNull(),
-                rejection_details(self.rejection_reason, self.name, representative_id="cast(__rep as string)"),
-            ).otherwise(F.col(_R)),
-        )
-        return tagged.drop("__dup_id", "__rep")
+        hit = rejection_details_sql(self.rejection_reason, self.name, representative_id="`__rep`")
+        dup = f"CASE WHEN ({ALIVE_SQL} AND (`__dup_id` IS NOT NULL)) THEN {hit} ELSE `{_R}` END AS `{_R}`"
+        return joined.selectExpr(*[dup if c == _R else sql_ident(c, literal=True) for c in df.columns])
 
 
 def anti_join_once(df: DataFrame, dup_ids: DataFrame, id_col: str) -> DataFrame:

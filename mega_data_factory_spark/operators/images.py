@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mega_data_factory_spark.functions.text import sql_ident
 from mega_data_factory_spark.operators.base import Deduplicator, JoinDeduplicator, Refiner
 
 # ------------------------------------------------------------ byte parsing
@@ -388,12 +389,18 @@ _META_FIELDS = [
 ]
 
 
-def _bytes_col(df: DataFrame, image_col: str) -> Column:
-    """Resolve a binary column or the HF-style ``image.bytes`` struct field."""
+def _bytes_name(df: DataFrame, image_col: str) -> str:
+    """The name of a binary column or of the HF-style ``image.bytes``
+    struct field."""
     field = dict(zip(df.schema.names, df.schema.fields))[image_col] if image_col in df.schema.names else None
     if field is not None and isinstance(field.dataType, StructType) and "bytes" in field.dataType.names:
-        return F.col(f"{image_col}.bytes")
-    return F.col(image_col)
+        return f"{image_col}.bytes"
+    return image_col
+
+
+def _bytes_col(df: DataFrame, image_col: str) -> Column:
+    """Resolve a binary column or the HF-style ``image.bytes`` struct field."""
+    return F.col(_bytes_name(df, image_col))
 
 
 class ImageMetadataRefiner(Refiner):
@@ -417,19 +424,15 @@ class ImageMetadataRefiner(Refiner):
         # not accept the Series -> DataFrame (struct-returning) signature.
         return F.pandas_udf(_meta, StructType(_META_FIELDS[:2] + [_META_FIELDS[3]]))
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # the struct-once geometry (Refiner docstring): one header parse
-        # per row, fields read by name in derived_columns
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # one header parse per row, fields read by name (Refiner docstring)
         return {"__image_meta": self._udf().asNondeterministic()(_bytes_col(df, self.image_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        m = F.col("__image_meta")
-        size = F.octet_length(_bytes_col(df, self.image_col)).cast("long")
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        size = f"cast(octet_length({sql_ident(_bytes_name(df, self.image_col))}) as bigint)"
         return {
-            "image_width": m["image_width"],
-            "image_height": m["image_height"],
-            "image_format": m["image_format"],
-            "image_file_size_bytes": F.coalesce(size, F.lit(0).cast("long")),
+            **{k: f"`__image_meta`.{k}" for k in ("image_width", "image_height", "image_format")},
+            "image_file_size_bytes": f"coalesce({size}, cast(0 as bigint))",
         }
 
 
@@ -472,13 +475,12 @@ class ImageTechnicalQualityRefiner(Refiner):
             ),
         )
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # one decode per row (the struct-once geometry, Refiner docstring)
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # one decode per row, fields read by name (Refiner docstring)
         return {"__image_quality": self._udf().asNondeterministic()(_bytes_col(df, self.image_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        q = F.col("__image_quality")
-        return {k: q[k] for k in ("image_compression_artifacts", "image_information_entropy")}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {k: f"`__image_quality`.{k}" for k in ("image_compression_artifacts", "image_information_entropy")}
 
 
 class ImageFeatureExtractor(Refiner):
@@ -557,13 +559,12 @@ class ImageFeatureExtractor(Refiner):
         # binary column itself stays JVM-side), halving Arrow traffic.
         return F.pandas_udf(_features, StructType(self._added()))
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # one decode per row (the struct-once geometry, Refiner docstring)
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # one decode per row, fields read by name (Refiner docstring)
         return {"__image_features": self._udf().asNondeterministic()(_bytes_col(df, self.image_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        f = F.col("__image_features")
-        return {a.name: f[a.name] for a in self._added()}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {a.name: f"`__image_features`.{a.name}" for a in self._added()}
 
 
 def phash_hex_or_null(df: DataFrame, *, image_col: str, phash_col: str) -> Column:
@@ -675,7 +676,7 @@ class ImagePhashNearDeduplicator(JoinDeduplicator):
         # rlike + two substrings from it BY NAME: inlining the expression
         # three times would plant three copies of the nondeterministic
         # decode+DCT UDF — measured as phash_udf evaluated 3x per row per
-        # join side (the struct-once rule, Refiner docstring)
+        # join side (the private-binding rule, Refiner docstring)
         hexed = df.select(
             F.col(self.id_col).alias("__id"),
             phash_hex_or_null(df, image_col=self.image_col, phash_col=self.phash_col).alias(

@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mega_data_factory_spark.functions.text import sql_number_literal
 from mega_data_factory_spark.operators.base import Refiner
 from mega_data_factory_spark.operators.images import _bytes_col, decode_image
 
@@ -134,7 +135,7 @@ class ImageEmbeddingRefiner(Refiner):
         self.seed = seed
         self.batch = inference_batch_size
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         import pandas as pd
 
         dim, seed, batch = self.dim, self.seed, self.batch
@@ -165,7 +166,10 @@ class ImageEmbeddingRefiner(Refiner):
             flush()
             return pd.Series(out)
 
-        return {self.output_col: embed_udf(_bytes_col(df, self.image_col))}
+        return {"__image_emb": embed_udf.asNondeterministic()(_bytes_col(df, self.image_col))}
+
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {self.output_col: "`__image_emb`"}
 
 
 class AestheticScoreRefiner(Refiner):
@@ -180,7 +184,7 @@ class AestheticScoreRefiner(Refiner):
         self.dim = dim
         self.seed = seed
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         import pandas as pd
 
         dim, seed = self.dim, self.seed
@@ -196,7 +200,10 @@ class AestheticScoreRefiner(Refiner):
             out = [0.0 if r is None else float(next(it)) for r in rows]
             return pd.Series(out, dtype="float32")
 
-        return {"image_aesthetic_score": score_udf(F.col(self.emb_col))}
+        return {"__aesthetic_score": score_udf.asNondeterministic()(F.col(self.emb_col))}
+
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {"image_aesthetic_score": "`__aesthetic_score`"}
 
 
 class AigcDetectorRefiner(Refiner):
@@ -219,7 +226,7 @@ class AigcDetectorRefiner(Refiner):
         self.seed = seed
         self.threshold = threshold
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         import pandas as pd
 
         dim, seed = self.dim, self.seed
@@ -234,13 +241,14 @@ class AigcDetectorRefiner(Refiner):
             out = [None if r is None else float(next(it)) for r in rows]
             return pd.Series(out, dtype="float32")
 
-        return {"image_aigc_score": aigc_udf(F.col(self.emb_col))}
+        return {"__aigc_score": aigc_udf.asNondeterministic()(F.col(self.emb_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        # boolean derives from the score COLUMN (not the UDF twice); the
-        # derived hook (not an apply override) so the Pipeline path
-        # materializes it too
-        return {"image_is_aigc": F.col("image_aigc_score") > F.lit(self.threshold)}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        # the boolean reads the bound score (not the UDF twice)
+        return {
+            "image_aigc_score": "`__aigc_score`",
+            "image_is_aigc": f"(`__aigc_score` > {sql_number_literal(self.threshold)})",
+        }
 
 
 class AudioMetadataRefiner(Refiner):
@@ -316,14 +324,13 @@ class AudioMetadataRefiner(Refiner):
 
         return meta_udf
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # ONE parse per row (the struct-once geometry, Refiner docstring):
-        # a struct reference per field measured 5 evaluations per row
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # ONE parse per row, fields read by name (Refiner docstring): a
+        # struct reference per field measured 5 evaluations per row
         return {"__audio_meta": self._udf().asNondeterministic()(_bytes_col(df, self.audio_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        m = F.col("__audio_meta")
-        return {dst: m[src] for dst, src in self._FIELDS.items()}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {dst: f"`__audio_meta`.{src}" for dst, src in self._FIELDS.items()}
 
 
 def _wav_pcm_mono(b: bytes | None, *, max_seconds: float):
@@ -489,14 +496,13 @@ class AudioSpectralFeaturesRefiner(Refiner):
 
         return feats_udf
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # ONE decode+FFT per row (the struct-once geometry, Refiner
-        # docstring): a struct reference per field measured 8 per row
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # ONE decode+FFT per row, fields read by name (Refiner docstring):
+        # a struct reference per field measured 8 per row
         return {"__audio_spectral": self._udf().asNondeterministic()(_bytes_col(df, self.audio_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        m = F.col("__audio_spectral")
-        return {f"audio_{f}": m[f] for f in _SPECTRAL_FIELDS}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {f"audio_{f}": f"`__audio_spectral`.{f}" for f in _SPECTRAL_FIELDS}
 
 
 class VisualDegradationsRefiner(Refiner):
@@ -542,16 +548,15 @@ class VisualDegradationsRefiner(Refiner):
 
         return heads_udf
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # ONE evaluation of the four heads (the struct-once geometry,
-        # Refiner docstring): a struct reference per field measured 4
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # ONE evaluation of the four heads, fields read by name (Refiner
+        # docstring): a struct reference per field measured 4
         return {"__vd_heads": self._udf().asNondeterministic()(F.col(self.emb_col))}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        h = F.col("__vd_heads")
-        heads = {f"img_vd_{k}": h[k] for k in self.HEAD_SEEDS}
-        overall = F.lit(1.0) - sum(h[k] * F.lit(w) for k, w in self.WEIGHTS.items())
-        return {**heads, "img_vd_overall_quality": overall.cast("float")}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        heads = {f"img_vd_{k}": f"`__vd_heads`.{k}" for k in self.HEAD_SEEDS}
+        penalty = " + ".join(f"(`__vd_heads`.{k} * {sql_number_literal(w)})" for k, w in self.WEIGHTS.items())
+        return {**heads, "img_vd_overall_quality": f"cast((1.0D - ({penalty})) as float)"}
 
 
 class ImageResizeRefiner(Refiner):
@@ -565,7 +570,7 @@ class ImageResizeRefiner(Refiner):
         self.height = height
         self.image_col = image_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         import pandas as pd
 
         tw, th = self.width, self.height
@@ -617,7 +622,10 @@ class ImageResizeRefiner(Refiner):
                 ]
             ),
         )
-        return {"image_resized": resize_udf(_bytes_col(df, self.image_col))}
+        return {"__image_resized": resize_udf.asNondeterministic()(_bytes_col(df, self.image_col))}
+
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {"image_resized": "`__image_resized`"}
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -680,7 +688,7 @@ class VideoFrameSampleRefiner(Refiner):
             )
         return None
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         import pandas as pd
 
         every_n = self.every_n
@@ -696,4 +704,7 @@ class VideoFrameSampleRefiner(Refiner):
                 out.append(frames)
             return pd.Series(out)
 
-        return {"video_frames": frames_udf(_bytes_col(df, self.video_col))}
+        return {"__video_frames": frames_udf.asNondeterministic()(_bytes_col(df, self.video_col))}
+
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {"video_frames": "`__video_frames`"}

@@ -447,7 +447,7 @@ class SpanCorruptionBuilder(Refiner):
 
     Scale shape: one Arrow crossing per batch (numpy per row, no Python
     loops over tokens), zero shuffle, bytes-in == tokens-out; the struct
-    UDF is materialized exactly once (``Refiner``'s struct-once geometry —
+    UDF is materialized exactly once (``Refiner``'s private UDF binding —
     the N-fold-evaluation guard). Not SQL-expressible (hash-rank
     segmentation); the pytest bar is an independent pure-python
     reimplementation plus reconstruction/density/determinism properties
@@ -540,15 +540,13 @@ class SpanCorruptionBuilder(Refiner):
     def _packed_input(self) -> Column:
         return F.struct(F.col(self.tokens_col).alias("t"), self._seed().alias("s"))
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        # the struct-once geometry (Refiner docstring): the
-        # nondeterministic-marked UDF struct exactly once under a private
-        # key; derived_columns extracts the fields BY NAME
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        # the nondeterministic-marked UDF struct exactly once under a
+        # private key, fields read BY NAME (Refiner docstring)
         return {"__span_once": self._udf().asNondeterministic()(self._packed_input())}
 
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        m = F.col("__span_once")
-        return {"input_ids": m["input_ids"], "target_ids": m["target_ids"]}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {"input_ids": "`__span_once`.input_ids", "target_ids": "`__span_once`.target_ids"}
 
 
 SENT_SEP = "\x1e"  # record separator: the in-plan sentence boundary sentinel

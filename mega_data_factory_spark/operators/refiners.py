@@ -14,9 +14,8 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution needs it in
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mega_data_factory_spark.functions.hashing import hash64_from_md5, stable_text_hash
+from mega_data_factory_spark.functions.hashing import hash64_from_md5
 from mega_data_factory_spark.functions.text import (
-    normalize_text,
     normalize_text_sql,
     sql_ident,
     sql_number_literal,
@@ -471,8 +470,11 @@ class CompressionRatioRefiner(Refiner):
 
         return ratio
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        return {self.out_col: self._udf()(F.col(self.text_col))}
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        return {"__compression_ratio": self._udf().asNondeterministic()(F.col(self.text_col))}
+
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        return {self.out_col: "`__compression_ratio`"}
 
 
 # PII patterns: deliberately anchored, ASCII, backtracking-free so Java
@@ -498,15 +500,16 @@ class PiiRedactRefiner(Refiner):
         super().__init__(name)
         self.text_col = text_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        t = F.col(self.text_col)
-        redacted = F.regexp_replace(t, PII_EMAIL, "<EMAIL>")
-        redacted = F.regexp_replace(redacted, PII_PHONE, "<PHONE>")
-        redacted = F.regexp_replace(redacted, PII_IPV4, "<IP>")
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        t = sql_ident(self.text_col)
+        email, phone, ip = (sql_string_literal(p) for p in (PII_EMAIL, PII_PHONE, PII_IPV4))
+        redacted = f"regexp_replace({t}, {email}, '<EMAIL>')"
+        redacted = f"regexp_replace({redacted}, {phone}, '<PHONE>')"
+        redacted = f"regexp_replace({redacted}, {ip}, '<IP>')"
         return {
-            "pii_email_count": F.regexp_count(t, F.lit(PII_EMAIL)),
-            "pii_phone_count": F.regexp_count(t, F.lit(PII_PHONE)),
-            "pii_ip_count": F.regexp_count(t, F.lit(PII_IPV4)),
+            "pii_email_count": f"regexp_count({t}, {email})",
+            "pii_phone_count": f"regexp_count({t}, {phone})",
+            "pii_ip_count": f"regexp_count({t}, {ip})",
             "text_redacted": redacted,
         }
 
@@ -522,9 +525,15 @@ class FingerprintRefiner(Refiner):
         super().__init__(name)
         self.text_col = text_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        fp = stable_text_hash(normalize_text(self.text_col))
-        return {"fingerprint": fp, "fingerprint_prefix": F.substring(fp, 1, 8)}
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        # the md5 bound once: tag's per-column CASE keeps codegen from
+        # sharing it between the two outputs
+        norm = normalize_text_sql(sql_ident(self.text_col))
+        return {
+            "__fingerprint": f"md5(cast({norm} as string))",
+            "fingerprint": "`__fingerprint`",
+            "fingerprint_prefix": "substring(`__fingerprint`, 1, 8)",
+        }
 
 
 class BoilerplateLineRefiner(Refiner):
@@ -549,7 +558,7 @@ class BoilerplateLineRefiner(Refiner):
     lines (< ``min_line_chars``) are never counted OR removed: they are
     too common to be meaningful and too cheap to keep.
 
-    Not a ``columns()`` refiner — the line counts are a full-frame
+    Not a ``columns_sql_text`` refiner — the line counts are a full-frame
     aggregate, so ``tag`` is ``apply``. SQL-mirrorable
     (split/unnest-with-ordinality/count/string_agg); the differential
     test holds the driver-gate bar (tests/test_curation.py).
@@ -692,7 +701,7 @@ class UrlCanonicalizeRefiner(Refiner):
     ``IncrementalKeyDeduplicator`` store at it for cross-run URL dedup.
     Beyond the reference's surface — first-class per the build brief.
 
-    Pure codegen'd regex/HOF Columns in the Java/RE2 common subset; the
+    Pure codegen'd regex/HOF SQL text in the Java/RE2 common subset; the
     DuckDB differential test mirrors every step token-for-token
     (tests/test_curation.py). Zero shuffle at any scale."""
 
@@ -701,10 +710,10 @@ class UrlCanonicalizeRefiner(Refiner):
         self.url_col = url_col
         self.out_col = out_col
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        from mega_data_factory_spark.functions.urls import canonical_url
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        from mega_data_factory_spark.functions.urls import canonical_url_sql
 
-        return {self.out_col: canonical_url(self.url_col)}
+        return {self.out_col: canonical_url_sql(sql_ident(self.url_col))}
 
 
 class IntraDocDedupRefiner(Refiner):
@@ -809,12 +818,11 @@ class C4HeuristicRefiner(Refiner):
     to drop flagged/short pages; the three-sentence-span dedup step is
     ``SharedSpanDeduplicator``.
 
-    Scale shape: pure Column HOFs over the split array — narrow map, fuses
+    Scale shape: pure SQL HOFs over the split array — narrow map, fuses
     into the scan, zero shuffle, zero Python. Fully SQL-mirrorable
     (list_filter + regexp_matches + array_to_string); the differential test
     in tests/test_curation.py holds the driver-gate bar. The keep-filter HOF
-    is evaluated twice (once for the rebuild, once for the removed count) —
-    both are codegen'd expressions, not UDFs, so no N-fold UDF hazard.
+    is evaluated once per row (the private ``__c4`` binding).
     """
 
     def __init__(
@@ -838,25 +846,20 @@ class C4HeuristicRefiner(Refiner):
         self.bad_words = tuple(bad_words)
         self.out_col = out_col
 
-    def _kept_lines(self, t: Column) -> Column:
-        def keep(u: Column) -> Column:
-            trimmed = F.trim(u)
-            # explicit whitespace class, not \s: Java's \s includes \x0B,
-            # RE2's (DuckDB) does not — the BPE fit/encode parity lesson
-            words = F.size(F.filter(F.split(trimmed, "[ \\t\\x0B\\f\\r]+"), lambda w: w != ""))
-            return (
-                trimmed.rlike('[.!?"]$')
-                & (words >= F.lit(self.min_words))
-                & ~F.lower(u).contains("javascript")
-            )
-
-        return F.filter(F.split(t, "\n"), keep)
-
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         import re as _re
 
-        t = F.col(self.text_col)
-        kept = self._kept_lines(t)
+        t = sql_ident(self.text_col)
+        nl = sql_string_literal("\n")
+        # explicit whitespace class, not \s: Java's \s includes \x0B,
+        # RE2's (DuckDB) does not — the BPE fit/encode parity lesson
+        ws, end = sql_string_literal("[ \\t\\x0B\\f\\r]+"), sql_string_literal('[.!?"]$')
+        words = f"size(filter(split(trim(x), {ws}), x -> (NOT (x = ''))))"
+        keep = (
+            f"((trim(x) RLIKE {end}) AND ({words} >= {sql_number_literal(self.min_words)}) "
+            "AND (NOT contains(lower(x), 'javascript')))"
+        )
+        kept = f"filter(split({t}, {nl}), x -> {keep})"
         if self.bad_words:
             # ONE alternation regex, not a scan per word: the published
             # LDNOOBW list is ~400 entries, and 400 regexp passes per row
@@ -874,32 +877,30 @@ class C4HeuristicRefiner(Refiner):
             # lesson). Lookarounds are Java-only; the DuckDB oracle keeps
             # the consuming-group form (RE2 has no lookbehind), so the
             # equivalence is hash-checked per row by the c4_clean gate.
-            words = "|".join(_re.escape(w.lower()) for w in self.bad_words)
-            pat = r"(?<![0-9A-Za-z_])(?:" + words + r")(?![0-9A-Za-z_])"
-            badword = F.lower(t).rlike(pat)
+            alts = "|".join(_re.escape(w.lower()) for w in self.bad_words)
+            pat = r"(?<![0-9A-Za-z_])(?:" + alts + r")(?![0-9A-Za-z_])"
+            badword = f"(lower({t}) RLIKE {sql_string_literal(pat)})"
         else:
-            badword = F.lit(False)
+            badword = "false"
+        # the keep-filter HOF runs once per row: its cleaned text and kept
+        # count are bound together as one private struct, and the sentence
+        # proxy reads the cleaned text from it. The proxy counts terminal-
+        # punctuation RUNS — '[.!?]+' not '[.!?]', so an ellipsis "..." is
+        # one sentence boundary, not three (a page with fewer real
+        # sentences than C4PageFilter's min_sentences must not spuriously
+        # pass the >=5 gate) — the deterministic proxy both engines
+        # compute identically
+        cleaned = f"CASE WHEN ({t} IS NOT NULL) THEN `__c4`.text END"
         return {
-            self.out_col: F.when(t.isNotNull(), F.array_join(kept, "\n")),
-            "c4_lines_removed": F.when(t.isNotNull(), F.size(F.split(t, "\n")) - F.size(kept))
-            .otherwise(F.lit(0))
-            .cast("int"),
-            "c4_flag_brace": F.coalesce(t.contains("{"), F.lit(False)),
-            "c4_flag_lorem": F.coalesce(F.lower(t).contains("lorem ipsum"), F.lit(False)),
-            "c4_flag_badword": F.when(t.isNotNull(), badword).otherwise(F.lit(False)),
-        }
-
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        # sentence proxy over the CLEANED text by name (no re-evaluation of
-        # the keep HOF): count of terminal-punctuation RUNS — '[.!?]+' not
-        # '[.!?]', so an ellipsis "..." is one sentence boundary, not three
-        # (a page with fewer real sentences than C4PageFilter's
-        # min_sentences must not spuriously pass the >=5 gate) — the same
-        # deterministic proxy both engines compute identically
-        return {
-            "c4_sentences": F.coalesce(
-                F.regexp_count(F.col(self.out_col), F.lit("[.!?]+")), F.lit(0)
-            ).cast("int")
+            "__c4": f"transform(array({kept}), x -> struct(array_join(x, {nl}) AS text, size(x) AS n_kept))[0]",
+            self.out_col: cleaned,
+            "c4_lines_removed": (
+                f"cast(CASE WHEN ({t} IS NOT NULL) THEN (size(split({t}, {nl})) - `__c4`.n_kept) ELSE 0 END as int)"
+            ),
+            "c4_flag_brace": f"coalesce(contains({t}, '{{'), false)",
+            "c4_flag_lorem": f"coalesce(contains(lower({t}), 'lorem ipsum'), false)",
+            "c4_flag_badword": f"CASE WHEN ({t} IS NOT NULL) THEN {badword} ELSE false END",
+            "c4_sentences": f"cast(coalesce(regexp_count({cleaned}, '[.!?]+'), 0) as int)",
         }
 
 
@@ -962,20 +963,28 @@ class UnicodeNormalizeRefiner(Refiner):
         self.form = form
         self.fix_mojibake = fix_mojibake
 
-    def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
-        if self.fix_mojibake:
-            return None
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        # the normalized text is bound once as a private key (or, under
+        # fix_mojibake, as the UDF binding): unicode_changed reads it by
+        # name, so the normalization runs once per row
         t = sql_ident(self.text_col)
-        method, compat = self._ICU[self.form]
-        normalized = f"reflect('com.ibm.icu.text.Normalizer', '{method}', {t}, {sql_number_literal(compat)})"
+        texts = {}
+        if not self.fix_mojibake:
+            method, compat = self._ICU[self.form]
+            normalized = f"reflect('com.ibm.icu.text.Normalizer', '{method}', {t}, {sql_number_literal(compat)})"
+            texts["__normalized"] = (
+                f"CASE WHEN {t} IS NOT NULL THEN "
+                f"regexp_replace({normalized}, {sql_string_literal(self._CONTROL_RE)}, '') END"
+            )
         return {
-            self.out_col: f"CASE WHEN {t} IS NOT NULL THEN "
-            f"regexp_replace({normalized}, {sql_string_literal(self._CONTROL_RE)}, '') END"
+            **texts,
+            self.out_col: "`__normalized`",
+            "unicode_changed": f"CASE WHEN ({t} IS NOT NULL) THEN ({t} != `__normalized`) END",
         }
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         if not self.fix_mojibake:
-            return super().columns(df)
+            return {}
         import re as _re
         import unicodedata
 
@@ -1021,15 +1030,4 @@ class UnicodeNormalizeRefiner(Refiner):
 
             return vs.map(one)
 
-        return {self.out_col: norm(F.col(self.text_col))}
-
-    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
-        # second projection referencing the UDF output BY NAME (the
-        # Refiner contract): repeating the UDF expression in columns()
-        # would run the Python normalization twice per row
-        return {
-            "unicode_changed": F.when(
-                F.col(self.text_col).isNotNull(),
-                F.col(self.text_col) != F.col(self.out_col),
-            )
-        }
+        return {"__normalized": norm.asNondeterministic()(F.col(self.text_col))}

@@ -20,18 +20,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mega_data_factory_spark.functions.hashing import hash64_from_md5
+from mega_data_factory_spark.functions.hashing import hash64_from_md5, hash64_from_md5_sql
+from mega_data_factory_spark.functions.text import sql_ident, sql_number_literal, sql_string_literal
 from mega_data_factory_spark.operators.base import Filter, Operator, Refiner, rejection_details
 
 BUCKETS = 10_000
 
 
-def stable_bucket(col: str, *, buckets: int = BUCKETS, salt: str | None = None) -> Column:
+def stable_bucket_sql(col_sql: str, *, buckets: int = BUCKETS, salt: str | None = None) -> str:
     """Deterministic bucket in [0, buckets) from the md5-derived 60-bit hash
-    of the column's string form. ``salt`` yields an independent assignment
+    of ``col_sql``'s string form. ``salt`` yields an independent assignment
     (e.g. a fresh split epoch) — mirrored in SQL by appending ``#salt``
     before hashing (the minhash seed convention)."""
-    return hash64_from_md5(col, seed=salt) % F.lit(buckets)
+    return f"({hash64_from_md5_sql(col_sql, seed=salt)} % {sql_number_literal(buckets)})"
+
+
+def stable_bucket(col: str, *, buckets: int = BUCKETS, salt: str | None = None) -> Column:
+    """Column form of :func:`stable_bucket_sql` over a named column."""
+    return F.expr(stable_bucket_sql(sql_ident(col), buckets=buckets, salt=salt))
 
 
 class DatasetSplitRefiner(Refiner):
@@ -79,13 +85,14 @@ class DatasetSplitRefiner(Refiner):
         out.append((names[-1], self.buckets))  # absorbs rounding remainder
         return out
 
-    def columns(self, df: DataFrame) -> dict[str, Column]:
-        b = stable_bucket(self.id_col, buckets=self.buckets, salt=self.salt)
+    def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
+        i = sql_ident(self.id_col)
+        b = stable_bucket_sql(i, buckets=self.buckets, salt=self.salt)
         ths = self.thresholds()
-        expr = F.lit(ths[-1][0])
+        expr = sql_string_literal(ths[-1][0])
         for s, hi in reversed(ths[:-1]):
-            expr = F.when(b < hi, F.lit(s)).otherwise(expr)
-        return {"split": F.when(F.col(self.id_col).isNotNull(), expr)}
+            expr = f"CASE WHEN ({b} < {sql_number_literal(hi)}) THEN {sql_string_literal(s)} ELSE {expr} END"
+        return {"split": f"CASE WHEN ({i} IS NOT NULL) THEN {expr} END"}
 
 
 class WeightedSourceSampler(Filter):

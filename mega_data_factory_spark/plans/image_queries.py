@@ -20,7 +20,10 @@ image_technical_quality.py:41-193, operators/dedup/image_phash_dedup.py:30-84.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,14 +43,30 @@ _MAT_ROOT = os.path.join(
     ".localdata",
     "oracle_mat",
 )
+# the one data file under each materialized name
+_PART = "part-00000.parquet"
 
 
 def _materialize(df: DataFrame, name: str) -> str:
     """Write ``df`` to the deterministic oracle-input path and return it.
     ``coalesce(1)`` keeps the layout stable (one part file) — these are
-    120-150 row frames, not scale-path data."""
+    120-150 row frames, not scale-path data. The file is written to a
+    staging directory of its own and renamed over ``<name>/_PART``, an
+    atomic step, so a process reading the name while another writes it
+    sees a complete file, never an empty or half-written directory.
+    Rewrites are byte-stable, so a reader that listed the old file reads
+    the new one at the same length."""
     path = os.path.join(_MAT_ROOT, name)
-    df.coalesce(1).write.mode("overwrite").parquet(path)
+    staging = os.path.join(_MAT_ROOT, ".staging", f"{name}-{os.getpid()}-{uuid.uuid4().hex}")
+    df.coalesce(1).write.parquet(staging)
+    (part,) = [f for f in os.listdir(staging) if f.startswith("part-") and f.endswith(".parquet")]
+    os.makedirs(path, exist_ok=True)
+    os.replace(os.path.join(staging, part), os.path.join(path, _PART))
+    shutil.rmtree(staging, ignore_errors=True)
+    for f in set(os.listdir(path)) - {_PART}:  # an overwrite-in-place writer's files
+        stale = os.path.join(path, f)
+        with contextlib.suppress(FileNotFoundError):
+            shutil.rmtree(stale) if os.path.isdir(stale) else os.remove(stale)
     return path
 
 

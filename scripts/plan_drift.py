@@ -2,7 +2,9 @@
 driver query and diff it against a baseline dump modulo expression ids
 (#123), cached-plan ids, AQE plan_ids, lambda-binder suffixes and the
 checkout path of materialized fixtures. Prints per-query OK/DRIFT and a
-summary; exits nonzero on any drift.
+summary; exits nonzero on any drift. A drifted plan also prints both
+sides' plans/lint.lint_plan regexp_replace sites, Arrow Python crossings
+and shuffle exchanges.
 
 The default baseline is the committed plans/r13/<q>_after.txt. To judge a
 change to the operator layer, dump the parent commit's plans from its own
@@ -89,6 +91,9 @@ def pin_expr_ids(spark, name: str) -> None:
     mh.collectArguments(setter, 0, lookup.unreflectGetter(field)).invokeWithArguments(args)
 
 
+# plans/lint.lint_plan counts printed for both sides of a drifted plan
+LINT_COUNTS = ("regexp_replace_sites", "arrow_python_crossings", "shuffle_exchanges")
+
 # recipes whose Pipeline plans are dumped next to the driver queries
 RECIPES = ("fineweb_style_recipe", "c4_style_recipe", "gopher_style_recipe")
 
@@ -123,6 +128,7 @@ def main() -> None:
     spark.range(1).count()
 
     import __spark_entry__ as e
+    from mega_data_factory_spark.plans.lint import lint_plan
 
     jvm = spark.sparkContext._jvm
     queries = e.queries()
@@ -157,6 +163,10 @@ def main() -> None:
             print(f"{name:34s} OK")
             continue
         print(f"{name:34s} DRIFT")
+        # the evaluation counts to check first: a drift that adds
+        # no regex site, Python crossing or exchange adds no evaluations
+        now_n, base_n = (lint_plan(p)["counts"] for p in (now, committed))
+        print("  lint now/baseline: " + ", ".join(f"{k} {now_n[k]}/{base_n[k]}" for k in LINT_COUNTS))
         la, lb = a.splitlines(), b.splitlines()
         shown = 0
         for x, y in zip(la, lb):

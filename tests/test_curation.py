@@ -700,6 +700,10 @@ FROM n ORDER BY doc_id
     assert got[2].text_normalized == rows[1][1] and not got[2].unicode_changed
     assert got[3].text_normalized == "ctrlcharsgone"
     assert got[5].text_normalized is None and got[5].unicode_changed is None
+    # normalizing in place still compares each row against its input text
+    inplace = {r.doc_id: r for r in UnicodeNormalizeRefiner(out_col="text").apply(df).collect()}
+    assert inplace[1].text == "caf\u00e9 du monde" and inplace[1].unicode_changed
+    assert inplace[4].unicode_changed is False and inplace[5].unicode_changed is None
 
     import re
     import unicodedata
@@ -746,6 +750,9 @@ def test_unicode_mojibake_repair(spark):
     assert out[1] == "caf\u00e9 au lait"
     assert "quoted" in out[2] and "\u00e2\u20ac" not in out[2]
     assert out[3] == "no artifacts at all"
+    inplace = {r.doc_id: r.unicode_changed for r in UnicodeNormalizeRefiner(
+        out_col="text", fix_mojibake=True).apply(df).collect()}
+    assert inplace == {1: True, 2: True, 3: False}
 
 
 def test_boilerplate_alive_rows_only_vote(spark):

@@ -290,9 +290,10 @@ def test_word_occurrences_escapes_metacharacters(spark):
 
 
 def test_pipeline_materializes_derived_refiner_columns(spark):
-    """Pipeline routes Refiners through columns(); threshold columns that
-    derive from UDF scores (image_is_aigc, img_vd_overall_quality) come
-    through the derived_columns hook and must exist on the pipeline path."""
+    """Pipeline routes Refiners through ``tag``; threshold columns that
+    derive from UDF scores (image_is_aigc, img_vd_overall_quality) read the
+    private UDF binding by name in the SQL text and must exist on the
+    pipeline path."""
     from mega_data_factory_spark.config import PipelineConfig
     from mega_data_factory_spark.plans.pipeline import Pipeline
 

@@ -300,7 +300,7 @@ def test_phash_near_dedup_from_bytes(spark):
 def test_phash_near_dedup_single_udf_evaluation(spark):
     """The decode+DCT UDF appears exactly once per join side in the
     physical plan (inlining the hex expression three times planted three
-    UDF copies — the struct-once rule, Refiner docstring)."""
+    UDF copies — the private-binding rule, Refiner docstring)."""
     from mega_data_factory_spark.operators.images import ImagePhashNearDeduplicator
 
     df = spark.createDataFrame(
@@ -312,3 +312,35 @@ def test_phash_near_dedup_single_udf_evaluation(spark):
 
     for node in _re.findall(r"ArrowEvalPython \[[^\]]*\]", plan):
         assert node.count("phash_udf") == 1, node
+
+
+def test_materialize_concurrent_writers_never_expose_partial_output(spark):
+    """Concurrent ``_materialize`` calls of one name (the image queries run
+    twice from one checkout at once): every returned path reads back every
+    row. The write is staged and renamed into place; an overwrite in place
+    let a reader see the other writer's empty or half-written directory
+    (UNABLE_TO_INFER_SCHEMA)."""
+    import os
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mega_data_factory_spark.plans import image_queries as Q
+
+    name = "concurrent_materialize_probe"
+    df = spark.range(200).withColumn("v", F.col("id") * 3)
+
+    def run(_):
+        reads = []
+        for _ in range(3):
+            path = Q._materialize(df, name)
+            reads.append(sorted(r.id for r in spark.read.parquet(path).select("id").collect()))
+        return path, reads
+
+    try:
+        with ThreadPoolExecutor(6) as pool:  # more writers than cores
+            results = list(pool.map(run, range(6), timeout=600))
+        assert {path for path, _ in results} == {os.path.join(Q._MAT_ROOT, name)}
+        assert all(ids == list(range(200)) for _, reads in results for ids in reads)
+        assert os.listdir(os.path.join(Q._MAT_ROOT, name)) == [Q._PART]
+    finally:
+        shutil.rmtree(os.path.join(Q._MAT_ROOT, name), ignore_errors=True)

@@ -283,18 +283,9 @@ def _one_operator_pipeline(op):
     return pipe
 
 
-def test_struct_udf_refiners_evaluate_once(spark):
-    """Every struct-UDF refiner runs its UDF ONCE per row, on the
-    standalone path and on the pipeline path, with a downstream filter on
-    an output field: nondeterministic expressions are never CSE'd, so a
-    struct reference per field measured 5x/8x/4x evaluations (found with a
-    live accumulator), and a deterministic UDF gets substituted into the
-    filter and kept in the projection (2x). Pin the plan shape — one
-    ArrowEvalPython node with one UDF call — and the alive gate: the
-    pre-rejected row's outputs are NULL, the alive row's equal apply's."""
-    import re
-
-    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
+def _udf_refiner_cases(spark):
+    """(refiner, input frame) for every Python-UDF refiner; row id 1 is
+    the one a pipeline test pre-rejects."""
     from mega_data_factory_spark.operators.images import (
         ImageFeatureExtractor,
         ImageMetadataRefiner,
@@ -306,6 +297,7 @@ def test_struct_udf_refiners_evaluate_once(spark):
         VisualDegradationsRefiner,
     )
     from mega_data_factory_spark.operators.packing import SpanCorruptionBuilder
+    from mega_data_factory_spark.operators.refiners import CompressionRatioRefiner, UnicodeNormalizeRefiner
 
     wav = _pcm16_wav(0.5 * np.sin(2 * np.pi * 440.0 * np.arange(1600) / 16000), 16000)
     emb = [float(x) for x in np.random.default_rng(5).normal(size=64)]
@@ -316,30 +308,85 @@ def test_struct_udf_refiners_evaluate_once(spark):
         [(1, 0, 1, list(range(40))), (2, 0, 2, list(range(7, 47)))],
         "id int, pack_bucket int, seq_id long, tokens array<int>",
     )
-    cases = [
-        (ImageMetadataRefiner(), idf, "image_width"),
-        (ImageTechnicalQualityRefiner(), idf, "image_information_entropy"),
-        (ImageFeatureExtractor(), idf, "image_width"),
-        (AudioMetadataRefiner(), adf, "audio_sample_rate"),
-        (AudioSpectralFeaturesRefiner(), adf, "audio_rms"),
-        (VisualDegradationsRefiner(), edf, "img_vd_overall_quality"),
-        (SpanCorruptionBuilder(sentinel_start=1000), tdf, "input_ids"),
+    xdf = spark.createDataFrame([(1, "cafÃ© text " * 5), (2, "plain prose, plain prose.")], "id int, text string")
+    fake = b"FAKEVID" + bytes([25]) + bytes(range(100))
+    vdf = spark.createDataFrame([(1, fake), (2, fake)], "id int, video binary")
+    return [
+        (ImageMetadataRefiner(), idf),
+        (ImageTechnicalQualityRefiner(), idf),
+        (ImageFeatureExtractor(), idf),
+        (AudioMetadataRefiner(), adf),
+        (AudioSpectralFeaturesRefiner(), adf),
+        (VisualDegradationsRefiner(), edf),
+        (SpanCorruptionBuilder(sentinel_start=1000), tdf),
+        (CompressionRatioRefiner(), xdf),
+        (UnicodeNormalizeRefiner(fix_mojibake=True), xdf),
+        (ImageEmbeddingRefiner(), idf),
+        (AestheticScoreRefiner(), edf),
+        (AigcDetectorRefiner(), edf),
+        (ImageResizeRefiner(), idf),
+        (VideoFrameSampleRefiner(every_n=5), vdf),
     ]
+
+
+def test_struct_udf_refiners_evaluate_once(spark):
+    """Every Python-UDF refiner runs its UDF ONCE per row, on the
+    standalone path and on the pipeline path, with a downstream filter on
+    any one of its outputs: nondeterministic expressions are never CSE'd,
+    so a struct reference per field measured 5x/8x/4x evaluations (found
+    with a live accumulator), and a deterministic UDF gets substituted into
+    the filter and kept in the projection (2x). Pin the plan shape — one
+    ArrowEvalPython node with one UDF call — and the alive gate: the
+    pre-rejected row's outputs are NULL, the alive row's equal apply's."""
+    import re
+
+    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
+
     dead = F.when(F.col("id") == 1, rejection_details("filtered", "Pre")).otherwise(
         F.lit(None).cast(REJECTION_STRUCT_DDL)
     )
-    for ref, df, field in cases:
+    for ref, df in _udf_refiner_cases(spark):
         name = type(ref).__name__
         applied = ref.apply(df)
         tagged = _one_operator_pipeline(ref).apply_ops(df.withColumn("_rejection_details", dead))
-        for path, out in (("apply", applied), ("pipeline", tagged)):
-            plan = out.filter(F.col(field).isNotNull())._jdf.queryExecution().executedPlan().toString()
-            nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[(.*?)\]", plan)
-            assert len(nodes) == 1, f"{name} {path}: {len(nodes)} ArrowEvalPython nodes"
-            assert len(nodes[0][1].split(", ")) == 1, f"{name} {path}: {nodes[0]}"
         outputs = [c for c in applied.columns if c not in df.columns]
         assert outputs and not any(c.startswith("__") for c in tagged.columns), name
+        for path, out in (("apply", applied), ("pipeline", tagged)):
+            for field in outputs:
+                plan = out.filter(F.col(field).isNotNull())._jdf.queryExecution().executedPlan().toString()
+                nodes = re.findall(r"ArrowEvalPython \[(.*?)\], \[(.*?)\]", plan)
+                assert len(nodes) == 1, f"{name} {path} {field}: {len(nodes)} ArrowEvalPython nodes"
+                assert len(nodes[0][1].split(", ")) == 1, f"{name} {path} {field}: {nodes[0]}"
         rows = {r.id: r for r in tagged.select("id", *outputs).collect()}
         assert all(rows[1][c] is None for c in outputs), f"{name}: dead row scored"
         alive = applied.filter("id = 2").select("id", *outputs).collect()[0]
         assert rows[2] == alive, f"{name}: {rows[2]} != {alive}"
+
+
+def test_refiners_author_sql_text_only(spark):
+    """The one Refiner authoring rule: no subclass overrides ``columns``
+    or brings back a ``derived_columns`` stage, and every Python UDF call
+    is a ``udf_columns`` binding under a private ``__`` name. Every class
+    that binds a UDF is among the evaluate-once cases above."""
+    import importlib
+    import pkgutil
+
+    import mega_data_factory_spark.operators as ops
+    from mega_data_factory_spark.operators.base import Refiner
+
+    for mod in pkgutil.iter_modules(ops.__path__):
+        importlib.import_module(f"{ops.__name__}.{mod.name}")
+    classes, todo = set(), [Refiner]
+    while todo:
+        for sub in todo.pop().__subclasses__():
+            classes.add(sub)
+            todo.append(sub)
+    assert len(classes) >= 25
+    assert not hasattr(Refiner, "derived_columns")
+    for cls in classes:
+        assert "columns" not in vars(cls) and "derived_columns" not in vars(cls), cls.__name__
+    cases = _udf_refiner_cases(spark)
+    assert {c for c in classes if "udf_columns" in vars(c)} <= {type(r) for r, _ in cases}
+    for ref, df in cases:
+        keys = ref.udf_columns(df)
+        assert keys and all(k.startswith("__") for k in keys), (type(ref).__name__, list(keys))

@@ -559,24 +559,21 @@ def test_span_corruption_single_udf_evaluation(spark):
 
 
 def test_span_corruption_pipeline_hooks_single_eval(spark):
-    """The Pipeline refiner path (columns/derived_columns) shares apply()'s
-    struct-once geometry: ONE ArrowEvalPython node, the private struct
-    column dropped, fields populated — columns() embedding the UDF twice
-    relied on Catalyst CSE and risked 2x Arrow cost under downstream
-    predicate substitution."""
+    """The Pipeline refiner path (``tag``) shares apply()'s private UDF
+    binding: ONE ArrowEvalPython node, the private struct column dropped,
+    fields populated — a UDF copy per field relied on Catalyst CSE and
+    risked 2x Arrow cost under downstream predicate substitution."""
     import pyspark.sql.functions as F
 
+    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, REJECTION_STRUCT_DDL
     from mega_data_factory_spark.operators.packing import SpanCorruptionBuilder
 
     b = SpanCorruptionBuilder(sentinel_start=1000)
     plain = spark.createDataFrame(
         [(0, 1, list(range(64)))], "pack_bucket int, seq_id long, tokens array<int>"
     )
-    alive = F.lit(True)  # the pipeline wraps every hook column in when(alive, ...)
-    cols = b.columns(plain)
-    out = plain.withColumns({k: F.when(alive, v) for k, v in cols.items()})
-    out = out.withColumns({k: F.when(alive, v) for k, v in b.derived_columns(out).items()})
-    out = out.drop(*[k for k in cols if k.startswith("__")])
+    # the pipeline gates every output on the row being alive
+    out = b.tag(plain.withColumn(REJECTION_DETAILS_COL, F.lit(None).cast(REJECTION_STRUCT_DDL)))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
     assert "__span_once" not in out.columns

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 import mega_data_factory_spark.operators.dedup as D
 import mega_data_factory_spark.operators.filters as Fi
 import mega_data_factory_spark.operators.refiners as R
+import mega_data_factory_spark.operators.sampling as S
 from mega_data_factory_spark.functions.hashing import hash64_from_md5
 from mega_data_factory_spark.functions.text import sql_ident, word_shingles
 from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
@@ -61,6 +62,23 @@ REFINERS = [
     ),
 ]
 
+WORD_WEIGHTS = {"the": 0.4, "line": 0.3, "c++": 0.2, "a.b": 0.1, "tür": 0.5}
+BLOCKED = ["spam-casino.biz", "Bad.Example.net"]
+URL_WEIGHTS = {"casino": 0.8, "poker": 0.6, "wiki": 0.3}
+# the filter fixture's url / domain / source / image columns, per doc_id:
+# NULL, empty and malformed URLs, a NULL and an empty domain, parent-suffix
+# and case-variant blocklist hits, and NULL image measurements
+URLS = [
+    "http://spam-casino.biz/win", "https://sub.BAD.example.net/a?q=poker", None, "", "not a url ::: %%",
+    "en.wikipedia.org/wiki/Cat", "http://[bad/casino", "https://GitHub.com/x/casino-poker",
+]
+DOMAINS = ["spam-casino.biz", "a.Bad.example.net", None, "", "good.org", "wikipedia.org", "x.spam-casino.biz", "ok"]
+SOURCES = ["books", "cc", "cc", "wiki", None, "books", "cc", "other"]
+IMAGES = [
+    (300, 300, 0.1, 4.0), (None, 300, 0.1, 4.0), (256, 256, 0.8, 3.0), (300, 300, None, 4.0),
+    (300, 300, 0.1, None), (255, 300, 0.1, 4.0), (None, None, None, None), (1000, 900, 0.81, 7.5),
+]
+
 FILTERS = [
     pytest.param(
         lambda: Fi.NumericRangeFilter(column="score", lo=1, hi=0.6, name="RangeCut"), id="NumericRangeFilter"
@@ -73,6 +91,19 @@ FILTERS = [
     ),
     pytest.param(lambda: Fi.GopherQualityFilter(), id="GopherQualityFilter"),
     pytest.param(lambda: Fi.C4PageFilter(), id="C4PageFilter"),
+]
+# filters whose predicate is still a composed Column, pinned before conversion
+COLUMN_FILTERS = [
+    pytest.param(lambda: Fi.WordScoreFilter(WORD_WEIGHTS, 0.45), id="WordScoreFilter"),
+    pytest.param(lambda: Fi.DomainBlocklistFilter(BLOCKED), id="DomainBlocklistFilter"),
+    pytest.param(lambda: Fi.UrlFilter(blocked_domains=BLOCKED), id="UrlFilter-blocklist"),
+    pytest.param(lambda: Fi.UrlFilter(word_weights=URL_WEIGHTS, threshold=0.5), id="UrlFilter-weights"),
+    pytest.param(lambda: Fi.UrlFilter(exclude_quality_sources=True), id="UrlFilter-quality"),
+    pytest.param(lambda: Fi.ImageQualityFilter(), id="ImageQualityFilter"),
+    pytest.param(
+        lambda: S.WeightedSourceSampler({"books": 1.0, "cc": 0.3, "wiki": 0.0}, default_weight=0.5),
+        id="WeightedSourceSampler",
+    ),
 ]
 
 DEDUPS = [
@@ -182,8 +213,10 @@ MINHASH_BANDS = (168, "c682e44974a93cff")
 # keep() per doc_id
 KEEP_VALUES = {
     "C4PageFilter": [False, False, False, False, False, False, False, False],
+    "DomainBlocklistFilter": [False, False, True, True, True, True, False, True],
     "GopherQualityFilter": [False, False, False, False, False, False, False, False],
     "GopherQualityFilter-wide": [False, True, False, True, False, True, False, False],
+    "ImageQualityFilter": [True, False, True, False, False, False, False, False],
     "NumericRangeFilter": [False, False, False, False, False, False, False, False],
     "NumericRangeFilter-backtick": [False, True, False, True, False, True, True, True],
     "NumericRangeFilter-inf": [False, True, False, True, False, True, True, True],
@@ -192,6 +225,11 @@ KEEP_VALUES = {
     "TextLengthFilter": [True, True, True, True, True, True, False, False],
     "TextLengthFilter-lencol": [True, True, True, True, True, True, False, False],
     "TextLengthFilter-wide": [True, True, True, True, True, True, False, False],
+    "UrlFilter-blocklist": [False, False, True, True, True, True, True, True],
+    "UrlFilter-quality": [True, True, True, True, True, False, True, False],
+    "UrlFilter-weights": [False, False, True, True, True, True, False, False],
+    "WeightedSourceSampler": [True, False, False, False, True, True, False, False],
+    "WordScoreFilter": [False, True, True, True, False, True, True, True],
 }
 # (pipeline tag digest, standalone survivors, standalone rejections digest)
 DEDUP_VALUES = {
@@ -202,6 +240,7 @@ DEDUP_VALUES = {
         "b315f15dc7d81574", [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11], "4f53cda18c2baa0c"
     ),
     "KeyDedup-single": ("4de71b7ca7b7012b", [0, 1, 3], "5c48f87fe2f5e095"),
+    "SimHash": ("09f5cc3aaf9cad6e", [0, 1, 2, 3, 4, 5, 6, 7, 10], "a475c4490faba194"),
     "TextExact": ("c48ac2778b8e411d", [0, 1, 2, 3, 4, 5, 6, 7, 10], "2b8a187a999d8a27"),
     "TextExact-backtick": ("c48ac2778b8e411d", [0, 1, 2, 3, 4, 5, 6, 7, 10], "2b8a187a999d8a27"),
     "TextExact-nocollapse": (
@@ -409,7 +448,13 @@ def test_minhash_band_ids_twin(spark):
 
 
 def _filter_fixture(spark):
-    df = _with_tags(_fixture_df(spark)).withColumn("score", (F.col("doc_id") * 7 % 13).cast("double") / 10)
+    extra = spark.createDataFrame(
+        [(i, URLS[i], DOMAINS[i], SOURCES[i], *IMAGES[i]) for i in range(len(ROWS))],
+        "doc_id long, url string, domain string, source string, image_width int, image_height int, "
+        "image_compression_artifacts double, image_information_entropy double",
+    )
+    df = _with_tags(_fixture_df(spark).join(extra, "doc_id"))
+    df = df.withColumn("score", (F.col("doc_id") * 7 % 13).cast("double") / 10)
     df = R.GopherQualityRefiner().apply(df)
     return R.C4HeuristicRefiner().apply(df)
 
@@ -418,12 +463,12 @@ def _keep(df, op):
     return [r[0] for r in df.orderBy("doc_id").select(op.keep(df)).collect()]
 
 
-@pytest.mark.parametrize("make_filter", FILTERS)
+@pytest.mark.parametrize("make_filter", FILTERS + COLUMN_FILTERS)
 def test_filter_keep_twin(spark, make_filter, request):
     assert _keep(_filter_fixture(spark), make_filter()) == KEEP_VALUES[request.node.callspec.id]
 
 
-@pytest.mark.parametrize("make_filter", FILTERS)
+@pytest.mark.parametrize("make_filter", FILTERS + COLUMN_FILTERS)
 def test_filter_tag_twin(spark, make_filter, request):
     """The pipeline's filter tag rejects exactly the rows the pinned keep
     flags reject, with the 'filtered' struct naming the operator."""
@@ -482,6 +527,12 @@ def test_key_dedup_tag_twin(spark, make_dedup, request):
     """Pipeline tag (dead-row sentinel, effective key, window ranking,
     rejection struct), standalone survivors and standalone rejections."""
     assert _dedup_values(make_dedup, _dedup_fixture(spark)) == DEDUP_VALUES[request.node.callspec.id]
+
+
+def test_simhash_dedup_tag_pinned(spark):
+    """SimHashDeduplicator's pipeline tag, survivors and rejections."""
+    got = _dedup_values(lambda: D.SimHashDeduplicator(), _dedup_fixture(spark))
+    assert got == DEDUP_VALUES["SimHash"]
 
 
 def _column_key(make):

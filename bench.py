@@ -130,7 +130,7 @@ def _text_pipeline_1m(spark) -> int:
         threshold=0.5,
     )
     lf = TextLengthFilter(50, 5000)
-    out = df.filter(uf.keep(df)).filter(lf.keep(df))
+    out = df.filter(uf.keep_sql(df)).filter(lf.keep_sql(df))
     return out.count()
 
 

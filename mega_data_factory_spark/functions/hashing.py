@@ -47,26 +47,6 @@ def content_key_sql(
     )
 
 
-def content_key(
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    url_col: str | None = None,
-    lowercase: bool = True,
-    collapse_whitespace: bool = True,
-) -> Column:
-    """Column form of :func:`content_key_sql` over named columns."""
-    return F.expr(
-        content_key_sql(
-            sql_ident(text_col),
-            sql_ident(id_col),
-            url_sql=None if url_col is None else sql_ident(url_col),
-            lowercase=lowercase,
-            collapse_whitespace=collapse_whitespace,
-        )
-    )
-
-
 def hash64_from_md5_sql(col_sql: str, *, seed: int | str | None = None) -> str:
     """Deterministic 60-bit integer hash derived from md5 hex — reproducible
     in ANSI SQL: ``conv(substr(md5(x), 1, 15), 16, 10)``; ``col_sql`` is an

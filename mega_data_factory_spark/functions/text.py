@@ -167,11 +167,6 @@ def text_length_sql(col_sql: str, length_col_sql: str | None = None) -> str:
     return f"coalesce(cast({ln} as bigint), cast(0 as bigint))"
 
 
-def text_length(text_col: str = "text", length_col: str | None = None) -> Column:
-    """Column form of :func:`text_length_sql` over named columns."""
-    return F.expr(text_length_sql(sql_ident(text_col), None if length_col is None else sql_ident(length_col)))
-
-
 def word_occurrences_sql(col_sql: str, word: str) -> str:
     r"""Count of whole-word occurrences of ``word`` (case-insensitive) using
     an ASCII ``\b`` regex — same counting rule RE2 (DuckDB) and Java regex
@@ -186,11 +181,6 @@ def word_occurrences_sql(col_sql: str, word: str) -> str:
 
     pat = r"\b" + _re.escape(word.lower()) + r"\b"
     return f"cast(coalesce(regexp_count(lower({col_sql}), {sql_string_literal(pat)}), 0) as bigint)"
-
-
-def word_occurrences(col: str, word: str) -> Column:
-    """Column form of :func:`word_occurrences_sql` over a named column."""
-    return F.expr(word_occurrences_sql(sql_ident(col), word))
 
 
 # GPT-2-style pre-tokenizer classes (contractions | letter runs | digit

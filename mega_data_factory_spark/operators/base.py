@@ -10,10 +10,12 @@ Re-expresses the reference's operator algebra (framework/operator.py:206-382):
   * ``Deduplicator``  — first-seen-wins on a derived key with representative
                         tracking (operator.py:271-382, backend.py:13-226).
 
-Every expression is authored once, as SQL text. What SQL cannot spell — a
-Python UDF call — is bound once under a private ``__`` column that the SQL
-text reads by name (``Refiner.udf_columns``, a Filter's ``_KEEP``, a
-Deduplicator's ``RAW_KEY_COL``).
+Every expression is authored once, as SQL text: a Refiner's
+``columns_sql_text``, a Filter's ``predicate_sql``, a Deduplicator's
+``key_sql``. What SQL cannot spell — a Python UDF call — is bound once
+under a private ``__`` column that the SQL text reads by name
+(``Operator.udf_columns``, read by Refiners and key Deduplicators; no
+Filter calls Python).
 
 The tag contract: every operator runs inside a pipeline through ONE
 method, ``tag(df)``. ``df`` carries a nullable ``_rejection_details``
@@ -27,8 +29,8 @@ and the streaming runner apply every operator through ``tag``:
     in the alive gate;
   * a standalone Deduplicator's ``apply``/``rejected`` are the alive/dead
     rows of ``tag`` over its input with every row alive;
-  * a Filter's ``apply``/``rejected`` stay plain ``filter`` calls, so the
-    predicate still pushes into the scan;
+  * a Filter's ``apply``/``rejected`` stay plain ``filter`` calls over its
+    SQL keep-condition, so the predicate still pushes into the scan;
   * a generic Operator's ``tag`` is its ``apply``, which keeps the tag
     column.
 
@@ -40,8 +42,9 @@ Spark-first design decisions:
   * every operator is a ``DataFrame -> DataFrame`` transform, so a
     pipeline is one Catalyst plan — pushdown/pruning/codegen work across
     operator boundaries (the reference's CombinedOperator fusion is free);
-  * filters expose a ``predicate`` so Catalyst can push it into the scan;
-    Python only appears when a Refiner genuinely needs it;
+  * filters author a SQL ``predicate_sql`` so Catalyst can push it into
+    the scan; Python only appears where an operator genuinely needs it,
+    bound through ``udf_columns``;
   * dedup is ONE hash-shuffle window, ``rank() over (partition by key
     order by order_col)`` — the shuffle *is* the reference's sharded
     seen-set (backend.py:134-143), with a deterministic ``min(order_col)``
@@ -93,13 +96,6 @@ def rejection_details_sql(
     )
 
 
-def rejection_details(
-    reason: str, operator: str, dedup_key: str = "null", representative_id: str = "null"
-) -> Column:
-    """Column form of :func:`rejection_details_sql`."""
-    return F.expr(rejection_details_sql(reason, operator, dedup_key, representative_id))
-
-
 def with_sql_columns(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
     """``df`` plus ``name -> SQL expression`` columns in ONE ``selectExpr``
     round trip. A name that already exists is REPLACED in its original
@@ -138,6 +134,26 @@ class Operator(ABC):
         transform's ``apply``, which must keep the tag column."""
         return self.apply(df)
 
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        """``__`` name -> a Python UDF call, bound before the operator's SQL
+        text, which reads it by name — the one place any operator binds
+        Python. Each call is marked nondeterministic by its class: a
+        deterministic UDF would be substituted into a downstream filter and
+        also kept in the projection (two ArrowEvalPython passes per row).
+        Bound once and read by name, it runs once per row."""
+        return {}
+
+    def _udf_bindings(self, df: DataFrame, *, gated: bool) -> dict[str, Column]:
+        """:meth:`udf_columns`, each NULL on dead rows when ``gated``. The
+        gate NULLs the value but does not stop the UDF scoring dead rows:
+        Spark extracts the call into an ArrowEvalPython node below the
+        gated projection, which sees every row (this is where an
+        alive-only split of the UDF input would go)."""
+        udfs = self.udf_columns(df)
+        if gated:
+            udfs = {k: F.when(F.expr(ALIVE_SQL), v) for k, v in udfs.items()}
+        return udfs
+
     def _per_schema(self, df: DataFrame, build):
         """``build(df)``, built once per input schema. Tag expressions are
         functions of the operator's params and ``df.columns`` only, so
@@ -150,15 +166,12 @@ class Operator(ABC):
         return memo[cols]
 
 
-# Each operator expression is authored ONCE. Where Spark SQL can spell it
-# (every name-parameterized expression), the authored form is SQL text —
-# the *_sql hooks below — and the Column form is that text through F.expr:
-# py4j costs ~2-4 ms per Column call on the bench hosts, so one parse per
-# expression instead of dozens of composed calls is what keeps cold plan
-# builds cheap. What SQL cannot spell (a Python UDF call) is bound once
-# under a private column name and read by name from the SQL text: a
-# refiner's ``udf_columns``, a filter's ``_KEEP``, a dedup's
-# ``RAW_KEY_COL``.
+# Each operator expression is authored ONCE, as SQL text — the *_sql hooks
+# below — and parsed in one round trip: py4j costs ~2-4 ms per Column call
+# on the bench hosts, so one parse per expression instead of dozens of
+# composed calls is what keeps cold plan builds cheap. What SQL cannot
+# spell (a Python UDF call) is bound once under a private ``__`` column by
+# ``udf_columns`` and read by name from the SQL text.
 
 
 class Refiner(Operator):
@@ -174,27 +187,13 @@ class Refiner(Operator):
     from the output; there is one level of them. ``tag`` gates each output
     in its own CASE, and codegen CSE does not share a subexpression across
     CASE branches, so a value two outputs share (a result struct, a
-    cleaned text, a UDF score) is bound once as a ``__`` key.
-
-    Each ``udf_columns`` call is marked nondeterministic by its class: a
-    deterministic UDF would be substituted into a downstream filter and
-    also kept in the projection (two ArrowEvalPython passes per row).
-    Bound once and read by name, it runs once per row. The gate NULLs its
-    value on dead rows but does not stop it scoring them: Spark extracts
-    the call into an ArrowEvalPython node below the gated projection,
-    which sees every row (the binding is where an alive-only split of the
-    UDF input would go)."""
+    cleaned text, a UDF score) is bound once as a ``__`` key."""
 
     def columns_sql_text(self, df: DataFrame) -> dict[str, str]:
         """The projection as SQL text: new column name -> SQL fragment.
         The whole projection — alive gate included — is ONE ``selectExpr``
         round trip, two when it has ``__`` keys."""
         raise NotImplementedError(f"{type(self).__name__} authors no columns_sql_text")
-
-    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
-        """``__`` name -> a nondeterministic-marked Python UDF call, bound
-        before the SQL text, which reads it by name."""
-        return {}
 
     def columns(self, df: DataFrame) -> dict[str, Column]:
         """The parsed :meth:`columns_sql_text`, one Column per key."""
@@ -211,9 +210,8 @@ class Refiner(Operator):
         """The UDF bindings, the private SQL keys, the outputs, then every
         ``__`` intermediate dropped. An existing output name is replaced in
         place, as ``withColumns`` would."""
-        udfs, texts = self.udf_columns(df), self.columns_sql_text(df)
+        udfs, texts = self._udf_bindings(df, gated=gated), self.columns_sql_text(df)
         if gated:
-            udfs = {k: F.when(F.expr(ALIVE_SQL), v) for k, v in udfs.items()}
             texts = {k: f"CASE WHEN {ALIVE_SQL} THEN {sql} END" for k, sql in texts.items()}
         private = {k: sql for k, sql in texts.items() if k.startswith("__")}
         out = df.withColumns(udfs) if udfs else df
@@ -223,71 +221,42 @@ class Refiner(Operator):
         return out.drop(*tmp) if tmp else out
 
 
-# column a Column-authored filter predicate is bound to, so the filter tag
-# stays one SQL spelling (Catalyst collapses the binding projection)
-_KEEP = "__filter_keep"
-
-
 class Filter(Operator):
-    """Keep rows where the predicate holds (NULL counts as reject).
-    Subclasses author either ``predicate_sql`` (SQL text) or ``predicate``
-    (a Column), never both. ``tag`` marks the alive rows that fail it
-    'filtered'; ``apply``/``rejected`` filter ``df`` directly."""
+    """Keep rows where the predicate holds (NULL counts as reject). The
+    one authoring rule: the predicate is SQL text (``predicate_sql``), and
+    ``apply``, ``rejected`` and ``tag`` all filter with the one keep-
+    condition ``keep_sql`` around it. ``tag`` marks the alive rows that
+    fail it 'filtered'; ``apply``/``rejected`` filter ``df`` directly."""
 
-    def predicate_sql(self, df: DataFrame) -> str | None:
-        """Boolean keep-condition as SQL text (NULL counts as reject).
-        ``tag`` parses its whole expression — alive gate, NULL-as-reject,
-        rejection struct — around it in ONE round trip. None for a class
-        that authors :meth:`predicate` as a Column instead."""
-        return None
+    @abstractmethod
+    def predicate_sql(self, df: DataFrame) -> str:
+        """Boolean keep-condition as SQL text (NULL counts as reject)."""
 
-    def predicate(self, df: DataFrame) -> Column:
-        """Boolean keep-condition (by default, the parsed
-        :meth:`predicate_sql`). NULL counts as reject."""
-        psql = self.predicate_sql(df)
-        if psql is None:
-            raise NotImplementedError(f"{type(self).__name__} authors neither predicate nor predicate_sql")
-        return F.expr(psql)
-
-    def keep(self, df: DataFrame) -> Column:
-        return F.coalesce(self.predicate(df), F.lit(False))
+    def keep_sql(self, df: DataFrame) -> str:
+        """The predicate with NULL read as reject."""
+        return f"coalesce(({self.predicate_sql(df)}), false)"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep(df))
+        return df.filter(self.keep_sql(df))
 
     def rejected(self, df: DataFrame) -> DataFrame:
         """Rejected rows with ``_rejection_details`` (reason='filtered')."""
-        return df.filter(~self.keep(df)).withColumn(
-            REJECTION_DETAILS_COL, rejection_details("filtered", self.name)
-        )
+        out = df.filter(f"(NOT {self.keep_sql(df)})")
+        return with_sql_columns(out, {_R: rejection_details_sql("filtered", self.name)})
 
     def tag(self, df: DataFrame) -> DataFrame:
         """``df`` with its alive rows that fail the predicate tagged."""
-        bound, tag = self._per_schema(df, self._tag_exprs)
-        if bound is None:
-            return df.withColumn(_R, tag)
-        return df.withColumn(_KEEP, bound).withColumn(_R, tag).drop(_KEEP)
+        return df.withColumn(_R, self._per_schema(df, self._tag_expr))
 
-    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, Column]:
-        """(predicate Column to bind as ``_KEEP`` or None, the tag): alive
-        gate, NULL-as-reject and rejection struct parsed in ONE round trip
-        around the SQL predicate. A Column-authored predicate is bound
-        first and read by name — the binding projection collapses into the
-        tag's, so the plan is the inline one."""
-        psql = self.predicate_sql(df)
-        bound = None
-        if psql is None:
-            bound, psql = self.predicate(df), sql_ident(_KEEP)
-        tag = F.expr(
-            f"CASE WHEN ({ALIVE_SQL} AND (NOT coalesce({psql}, false))) "
+    def _tag_expr(self, df: DataFrame) -> Column:
+        """Alive gate, NULL-as-reject and rejection struct parsed in ONE
+        round trip around the SQL predicate."""
+        return F.expr(
+            f"CASE WHEN ({ALIVE_SQL} AND (NOT {self.keep_sql(df)})) "
             f"THEN {rejection_details_sql('filtered', self.name)} ELSE `{_R}` END"
         )
-        return bound, tag
 
 
-# column a Column-authored dedup key is bound to, so the key wrappers
-# below (NULL handling, window ranking, the tag) stay SQL text
-RAW_KEY_COL = "__dedup_raw_key"
 # column the effective dedup key is bound to for the length of one tag
 KEY_COL = "__dedup_key"
 
@@ -295,18 +264,16 @@ KEY_COL = "__dedup_key"
 class Deduplicator(Operator):
     """First-seen-wins dedup on a derived key.
 
-    The key is authored as SQL text (``key_sql``) or, where SQL cannot
-    spell it (a Python UDF, a higher-order Column composition), as a
-    Column (``key``) — never both. ``order_col`` defines "first" (the
-    deterministic strengthening of the reference's arrival-order
-    semantics). ``tag`` marks every alive row after the first of its key
+    The key is authored as SQL text (``key_sql``); a Python UDF it needs
+    is bound by ``udf_columns`` and read by name. ``order_col`` defines
+    "first" (the deterministic strengthening of the reference's
+    arrival-order semantics). ``tag`` marks every alive row after the first of its key
     'duplicate', with ``dedup_key`` and ``representative_id`` = the first
     row's id (rows tied first all survive; the least of their ids
     represents); ``apply`` keeps the survivors and ``rejected`` the
     duplicates of ``tag`` over ``df`` with every row alive. Everything
     wrapped around the key — NULL handling, the window ranking, the
-    rejection struct — is SQL text over ``key_sql``; a Column-authored key
-    is first bound to ``RAW_KEY_COL`` and read from there.
+    rejection struct — is SQL text over ``key_sql``.
     """
 
     def __init__(
@@ -336,17 +303,9 @@ class Deduplicator(Operator):
             raise ValueError(f"null_keys must be 'group' or 'distinct', got {null_keys!r}")
         self.null_keys = null_keys
 
-    def key_sql(self, df: DataFrame) -> str | None:
-        """Dedup key (string) as SQL text. None for a class that authors
-        :meth:`key` as a Column instead."""
-        return None
-
-    def key(self, df: DataFrame) -> Column:
-        """Dedup key expression (by default, the parsed :meth:`key_sql`)."""
-        ksql = self.key_sql(df)
-        if ksql is None:
-            raise NotImplementedError(f"{type(self).__name__} authors neither key nor key_sql")
-        return F.expr(ksql)
+    def key_sql(self, df: DataFrame) -> str:
+        """Dedup key (string) as SQL text."""
+        raise NotImplementedError(f"{type(self).__name__} authors no key_sql")
 
     def _missing_key_sql(self, df: DataFrame, key_sql: str) -> str:
         """True where the row has NO dedup identity (used by
@@ -385,14 +344,14 @@ class Deduplicator(Operator):
     def _keyed(self, df: DataFrame) -> tuple[DataFrame, Column]:
         """(``df`` plus ``KEY_COL``, the window tag that reads it). A
         subclass may tag rows between the two (the seen-store lookup)."""
-        raw, key, tag = self._per_schema(df, self._tag_exprs)
-        if raw is None:
+        udfs, key, tag = self._per_schema(df, self._tag_exprs)
+        if not udfs:
             return df.withColumn(KEY_COL, key), tag
-        return df.withColumn(RAW_KEY_COL, raw).withColumn(KEY_COL, key).drop(RAW_KEY_COL), tag
+        return df.withColumns(udfs).withColumn(KEY_COL, key).drop(*udfs), tag
 
-    def _tag_exprs(self, df: DataFrame) -> tuple[Column | None, Column, Column]:
-        """(Column-authored key to bind as ``RAW_KEY_COL`` or None, the
-        key to bind as ``KEY_COL``, the window tag).
+    def _tag_exprs(self, df: DataFrame) -> tuple[dict[str, Column], Column, Column]:
+        """(the gated ``udf_columns`` bindings the key reads, the key to
+        bind as ``KEY_COL``, the window tag).
 
         ``KEY_COL`` is the window's partition key: the effective key —
         the null_keys="distinct" contract (rows with no dedup identity
@@ -425,13 +384,7 @@ class Deduplicator(Operator):
         (measured ~0.2 s of the per-trigger floor). Both window functions
         share one window spec, so the physical plan is a single Window
         node."""
-        ksql, raw = self.key_sql(df), None
-        if ksql is None:
-            # a Column-authored key is NULL on dead rows, but the gate does
-            # not keep a Python UDF from scoring them: Spark extracts the
-            # UDF into an ArrowEvalPython node below this projection, which
-            # sees every row
-            raw, ksql = F.when(F.col(_R).isNull(), self.key(df)), sql_ident(RAW_KEY_COL)
+        ksql = self.key_sql(df)
         k, ic, oc = sql_ident(KEY_COL), sql_ident(self.id_col), sql_ident(self.order_col)
         key = F.expr(
             f"CASE WHEN {ALIVE_SQL} THEN cast({self._effective_key_sql(df, ksql)} as string) "
@@ -446,7 +399,7 @@ class Deduplicator(Operator):
             f"THEN {rejection_details_sql('duplicate', self.name, k, rep)} "
             f"ELSE `{_R}` END"
         )
-        return raw, key, tag
+        return self._udf_bindings(df, gated=True), key, tag
 
     def apply(self, df: DataFrame) -> DataFrame:
         return self._split(df, alive=True)
@@ -474,16 +427,13 @@ class JoinDeduplicator(Deduplicator):
     inherit ONE ``tag``, a left join against those pairs (``apply`` and
     ``rejected`` are its views, as for every Deduplicator).
     ``rejection_reason`` customizes the tag (DecontaminationFilter:
-    "contaminated"). ``key`` is deliberately unavailable. A dedup with one
+    "contaminated"). ``key_sql`` is deliberately unavailable. A dedup with one
     key per row — store-backed ones included — is a plain
     :class:`Deduplicator`: first-wins per key is the inherited window, and
     a pairs frame would re-embed the input plan and make ``Pipeline``
     cache it."""
 
     rejection_reason = "duplicate"
-
-    def key(self, df: DataFrame) -> Column:  # pragma: no cover - guard
-        raise NotImplementedError(f"{type(self).__name__} is not a single-key dedup")
 
     @abstractmethod
     def _dup_pairs(self, df: DataFrame) -> DataFrame:

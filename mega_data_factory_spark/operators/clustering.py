@@ -29,7 +29,7 @@ from mega_data_factory_spark.functions.vectors import cosine_similarity
 from mega_data_factory_spark.operators.base import (
     JoinDeduplicator,
     anti_join_once,
-    rejection_details,
+    rejection_details_sql,
 )
 from mega_data_factory_spark.session import local_frame
 
@@ -302,7 +302,7 @@ class KMeansIndex:
             df.join(pairs, on=id_col)
             .withColumn(
                 "_rejection_details",
-                rejection_details("duplicate", name, representative_id="cast(__rep as string)"),
+                F.expr(rejection_details_sql("duplicate", name, representative_id="cast(__rep as string)")),
             )
             .drop("__rep")
         )

@@ -207,9 +207,9 @@ class IncrementalExactDeduplicator(TextExactDeduplicator):
             # identity-less rows are exempt from dedup; remembering their
             # synthetic per-row keys would reject replayed rows later
             out = out.filter(f"NOT {self._missing_key_sql(out, self.key_sql(out))}")
-        new_keys = out.select(
-            self.key(out).alias("content_key"),
-            F.col(self.id_col).cast("string").alias("representative_id"),
+        new_keys = out.selectExpr(
+            f"{self.key_sql(out)} AS content_key",
+            f"cast({sql_ident(self.id_col)} as string) AS representative_id",
         ).dropDuplicates(["content_key"])
         self.store.append(new_keys)
 
@@ -685,35 +685,29 @@ class IncrementalMinHashDeduplicator(MinHashLSHDeduplicator):
 SIMHASH_BITS = 60  # md5-derived hashes carry 60 usable bits (15 hex chars)
 
 
-def simhash64(text_col: str, *, shingle_n: int = 2) -> Column:
+def simhash64_sql(text_sql: str, *, shingle_n: int = 2) -> str:
     """SimHash over word shingles as BIGINT (60 significant bits).
 
     Each distinct shingle hashes to 60 bits (md5-derived, SQL-reproducible);
     bit i of the result is 1 iff more shingles have bit i set than clear.
     One ``aggregate`` maintains the 60-slot +1/-1 counter vector; the final
     value is ``sum(counts[i] > 0 ? 2^i : 0)`` — all exact integer math, so
-    an ANSI-SQL oracle computes the identical value.
+    an ANSI-SQL oracle computes the identical value. ``text_sql`` is an
+    already-rendered SQL fragment.
 
-    Bit-shift amounts are unrolled as Python ints (Spark's shiftright takes
-    a literal, not a Column), and ``counts`` is referenced exactly once so
-    the aggregate isn't re-evaluated per bit.
+    The per-bit shifts and powers are unrolled literals, and the counter
+    vector is a ``zip_with`` argument, so it is evaluated once rather than
+    once per bit.
     """
-    hashes = F.expr(
-        f"transform(array_distinct({word_shingles_sql(sql_ident(text_col), shingle_n)}), "
-        f"x -> {hash64_from_md5_sql('x')})"
+    hashes = f"transform(array_distinct({word_shingles_sql(text_sql, shingle_n)}), x -> {hash64_from_md5_sql('x')})"
+    bits = ", ".join(f"(shiftright(h, {i}) & 1)" for i in range(SIMHASH_BITS))
+    counts = (
+        f"aggregate({hashes}, array_repeat(0L, {SIMHASH_BITS}), "
+        f"(acc, h) -> zip_with(acc, array({bits}), (a, b) -> (a + ((b * 2) - 1))))"
     )
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[F.shiftright(h, i).bitwiseAND(F.lit(1)) for i in range(SIMHASH_BITS)]),
-            lambda a, b: a + (b * 2 - 1),  # +1 for set bit, -1 for clear
-        ),
-    )
-    powers = F.array(*[F.lit(1 << i).cast("long") for i in range(SIMHASH_BITS)])
-    terms = F.zip_with(counts, powers, lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    powers = ", ".join(f"{1 << i}L" for i in range(SIMHASH_BITS))
+    terms = f"zip_with({counts}, array({powers}), (c, p) -> CASE WHEN (c > 0) THEN p ELSE 0L END)"
+    return f"aggregate({terms}, 0L, (acc, x) -> (acc + x))"
 
 
 class SimHashDeduplicator(Deduplicator):
@@ -729,13 +723,13 @@ class SimHashDeduplicator(Deduplicator):
         self.text_col = text_col
         self.shingle_n = shingle_n
 
-    def key(self, df: DataFrame) -> Column:
+    def key_sql(self, df: DataFrame) -> str:
         # NULL-text rows produce a NULL signature, and the dedup window
         # groups NULL keys TOGETHER — collapsing all failed-extraction
         # rows to one survivor. Same id-fallback contract as
         # TextExactDeduplicator: unscorable rows never collide.
-        sig = simhash64(self.text_col, shingle_n=self.shingle_n).cast("string")
-        return F.coalesce(sig, F.concat(F.lit("id:"), F.col(self.id_col).cast("string")))
+        sig = simhash64_sql(sql_ident(self.text_col), shingle_n=self.shingle_n)
+        return f"coalesce(cast({sig} as string), concat('id:', cast({sql_ident(self.id_col)} as string)))"
 
 
 def banded_hamming_pairs(sig: DataFrame, *, bits: int, max_hamming: int, id_out: str) -> DataFrame:
@@ -827,10 +821,10 @@ class SimHashNearDeduplicator(JoinDeduplicator):
         # blowing an O(n_null^2 x bands) self-join that the hamming verify
         # then filters to nothing (bit_count(NULL xor NULL) is NULL). No
         # semantics change: NULL rows can never pass the verify filter.
-        sim = df.select(
-            F.col(self.id_col).alias("__id"),
-            simhash64(self.text_col, shingle_n=self.shingle_n).alias("__sim"),
-        ).filter(F.col("__sim").isNotNull())
+        sim = df.selectExpr(
+            f"{sql_ident(self.id_col)} AS __id",
+            f"{simhash64_sql(sql_ident(self.text_col), shingle_n=self.shingle_n)} AS __sim",
+        ).filter("__sim IS NOT NULL")
         return banded_hamming_pairs(
             sim, bits=SIMHASH_BITS, max_hamming=self.max_hamming, id_out=self.id_col
         )

@@ -1,4 +1,6 @@
-"""Filter operators (native Column predicates — codegen'd, pushdown-able).
+"""Filter operators. Every predicate is SQL text (``predicate_sql``):
+codegen'd, pushed into the scan where its columns allow, and never a
+Python call.
 
 Re-expresses the reference's filters:
   * TextLengthFilter  — operators/filters/text_length_filter.py:15-70
@@ -12,16 +14,14 @@ Re-expresses the reference's filters:
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from mega_data_factory_spark.functions.text import (
     sql_ident,
     sql_number_literal,
+    sql_string_literal,
     text_length_sql,
-    word_occurrences,
+    word_occurrences_sql,
 )
 from mega_data_factory_spark.operators.base import Filter
 
@@ -58,7 +58,7 @@ class TextLengthFilter(Filter):
         return f"(({ln} >= {mn}) AND ({ln} <= {mx}))"
 
 
-def word_score(col: str, weights: dict[str, float]) -> Column:
+def word_score_sql(col_sql: str, weights: dict[str, float]) -> str:
     """URLFilter-style weighted word score (reference url_filter.py:255-282):
 
         score = 0.8 * max(matched weights) + min(sum(matched weights)/3, 0.2)
@@ -68,16 +68,31 @@ def word_score(col: str, weights: dict[str, float]) -> Column:
     mirrors the word order computes bit-identical doubles.
     """
     matched = [
-        F.when(word_occurrences(col, w) > 0, F.lit(float(wt))).otherwise(F.lit(0.0))
+        f"CASE WHEN ({word_occurrences_sql(col_sql, w)} > 0) THEN {sql_number_literal(float(wt))} ELSE 0.0D END"
         for w, wt in weights.items()
     ]
-    max_w = matched[0] if len(matched) == 1 else F.greatest(*matched)
-    sum_w = reduce(lambda a, b: a + b, matched)
-    return F.when(max_w > 0, F.lit(0.8) * max_w + F.least(sum_w / F.lit(3.0), F.lit(0.2))).otherwise(F.lit(0.0))
+    max_w = matched[0] if len(matched) == 1 else f"greatest({', '.join(matched)})"
+    sum_w = matched[0]
+    for m in matched[1:]:
+        sum_w = f"({sum_w} + {m})"
+    return f"CASE WHEN ({max_w} > 0) THEN ((0.8D * {max_w}) + least(({sum_w} / 3.0D), 0.2D)) ELSE 0.0D END"
+
+
+def _suffixes_sql(dom_sql: str) -> str:
+    """The domain's parent-suffix chain: ``a.b.c`` -> [a.b.c, b.c, c]. The
+    split parts are bound once as the lambda variable ``p`` (a captured
+    expression inside the per-suffix lambda would re-parse the URL per
+    element)."""
+    chain = "transform(sequence(1, size(p)), i -> concat_ws('.', slice(p, i, size(p))))"
+    return f"transform(array(split({dom_sql}, '\\\\.')), p -> {chain})[0]"
+
+
+def _array_sql(values) -> str:
+    return f"array({', '.join(sql_string_literal(v) for v in values)})"
 
 
 class WordScoreFilter(Filter):
-    """Keep iff word_score(text) < threshold (reference keeps URLs scoring
+    """Keep iff word_score_sql(text) < threshold (reference keeps URLs scoring
     *below* the block threshold, url_filter.py:284-321; default 0.5)."""
 
     def __init__(
@@ -93,11 +108,9 @@ class WordScoreFilter(Filter):
         self.threshold = threshold
         self.text_col = text_col
 
-    def score(self) -> Column:
-        return word_score(self.text_col, self.weights)
-
-    def predicate(self, df: DataFrame) -> Column:
-        return self.score() < F.lit(self.threshold)
+    def predicate_sql(self, df: DataFrame) -> str:
+        score = word_score_sql(sql_ident(self.text_col), self.weights)
+        return f"({score} < {sql_number_literal(self.threshold)})"
 
 
 class DomainBlocklistFilter(Filter):
@@ -117,14 +130,9 @@ class DomainBlocklistFilter(Filter):
         self.blocked = sorted({d.lower() for d in blocked_domains})
         self.domain_col = domain_col
 
-    def predicate(self, df: DataFrame) -> Column:
-        dom = F.lower(F.col(self.domain_col))
-        parts = F.split(dom, r"\.")
-        n = F.size(parts)
-        # suffix chain: ["a.b.c", "b.c", "c"]
-        suffixes = F.transform(F.sequence(F.lit(1), n), lambda i: F.concat_ws(".", F.slice(parts, i, n)))
-        blocked = F.array(*[F.lit(d) for d in self.blocked])
-        return dom.isNull() | ~F.arrays_overlap(suffixes, blocked)
+    def predicate_sql(self, df: DataFrame) -> str:
+        dom = f"lower({sql_ident(self.domain_col)})"
+        return f"(({dom} IS NULL) OR (NOT arrays_overlap({_suffixes_sql(dom)}, {_array_sql(self.blocked)})))"
 
 
 class UrlFilter(Filter):
@@ -158,39 +166,35 @@ class UrlFilter(Filter):
         self.exclude_quality = exclude_quality_sources
         self.url_col = url_col
 
-    def domain(self) -> Column:
-        url = F.col(self.url_col)
-        with_scheme = F.when(url.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://"), url).otherwise(F.concat(F.lit("http://"), url))
+    def _domain_sql(self) -> str:
+        url = sql_ident(self.url_col)
+        with_scheme = (
+            f"CASE WHEN {url} RLIKE '^[a-zA-Z][a-zA-Z0-9+.-]*://' THEN {url} ELSE concat('http://', {url}) END"
+        )
         # try_parse_url, NOT parse_url: under Spark 4's default ANSI mode
         # parse_url THROWS INVALID_URL on any malformed URL — one bad URL
         # (web crawls are full of them) would abort the whole job instead
         # of being filtered. Malformed -> NULL host, handled in predicate.
-        return F.lower(F.try_parse_url(with_scheme, F.lit("HOST")))
+        return f"lower(try_parse_url({with_scheme}, 'HOST'))"
 
-    def predicate(self, df: DataFrame) -> Column:
-        url = F.col(self.url_col)
-        dom = self.domain()
-        parts = F.split(dom, r"\.")
-        n = F.size(parts)
-        suffixes = F.transform(F.sequence(F.lit(1), n), lambda i: F.concat_ws(".", F.slice(parts, i, n)))
-        keep = F.lit(True)
+    def predicate_sql(self, df: DataFrame) -> str:
+        url = sql_ident(self.url_col)
+        suffixes = _suffixes_sql(self._domain_sql())
+        keep = "true"
         if self.blocked:
             # NULL-safe: an unparsable/NULL host is NOT on the blocklist
             # (NULL would otherwise propagate through arrays_overlap and
-            # keep() would coalesce the row to rejected — the documented
-            # semantics keep no-domain rows, url_filter.py:296-299)
-            keep = keep & ~F.coalesce(
-                F.arrays_overlap(suffixes, F.array(*[F.lit(d) for d in self.blocked])), F.lit(False)
-            )
+            # the keep-condition would read the row as rejected — the
+            # documented semantics keep no-domain rows, url_filter.py:296-299)
+            keep = f"({keep} AND (NOT coalesce(arrays_overlap({suffixes}, {_array_sql(self.blocked)}), false)))"
         if self.weights:
-            keep = keep & (word_score(self.url_col, self.weights) < F.lit(self.threshold))
+            score = word_score_sql(url, self.weights)
+            keep = f"({keep} AND ({score} < {sql_number_literal(self.threshold)}))"
         if self.exclude_quality:
-            keep = keep & ~F.coalesce(
-                F.arrays_overlap(suffixes, F.array(*[F.lit(d) for d in self.QUALITY_SOURCES])),
-                F.lit(False),
-            )
+            quality = _array_sql(self.QUALITY_SOURCES)
+            keep = f"({keep} AND (NOT coalesce(arrays_overlap({suffixes}, {quality}), false)))"
         # records without URL are kept (url_filter.py:296-299)
-        return url.isNull() | (F.length(F.trim(url)) == 0) | keep
+        return f"((({url} IS NULL) OR (length(trim({url})) = 0)) OR {keep})"
 
 
 class ImageQualityFilter(Filter):
@@ -213,12 +217,14 @@ class ImageQualityFilter(Filter):
         self.max_artifacts = max_compression_artifacts
         self.min_entropy = min_entropy
 
-    def predicate(self, df: DataFrame) -> Column:
+    def predicate_sql(self, df: DataFrame) -> str:
+        w, h, art, ent = (
+            sql_number_literal(v) for v in (self.min_width, self.min_height, self.max_artifacts, self.min_entropy)
+        )
         return (
-            (F.coalesce(F.col("image_width"), F.lit(0)) >= self.min_width)
-            & (F.coalesce(F.col("image_height"), F.lit(0)) >= self.min_height)
-            & (F.coalesce(F.col("image_compression_artifacts"), F.lit(1.0)) <= self.max_artifacts)
-            & (F.coalesce(F.col("image_information_entropy"), F.lit(0.0)) >= self.min_entropy)
+            f"((((coalesce(`image_width`, 0) >= {w}) AND (coalesce(`image_height`, 0) >= {h})) "
+            f"AND (coalesce(`image_compression_artifacts`, 1.0D) <= {art})) "
+            f"AND (coalesce(`image_information_entropy`, 0.0D) >= {ent}))"
         )
 
 

@@ -228,15 +228,6 @@ def blockiness(gray: np.ndarray, block: int = 8) -> float:
     return float(min(max(boundary / (overall * 2.0) - 0.5, 0.0), 1.0))
 
 
-def compression_artifact_score(img: np.ndarray, nbytes: int) -> float:
-    """Composite artifact score in [0,1]: 0.6 * blockiness + 0.4 *
-    compression-ratio score (higher compression -> higher suspected
-    artifacts), matching the reference's weighting
-    (image_technical_quality.py:98-147; SURVEY §2.3). Thin wrapper over
-    ``batch_artifact``."""
-    return float(batch_artifact(np.atleast_3d(img)[None], np.array([float(nbytes)]))[0])
-
-
 # --------------------------------------------------- batched numpy kernels
 #
 # The per-image functions above are the readable reference implementations
@@ -567,15 +558,9 @@ class ImageFeatureExtractor(Refiner):
         return {a.name: f"`__image_features`.{a.name}" for a in self._added()}
 
 
-def phash_hex_or_null(df: DataFrame, *, image_col: str, phash_col: str) -> Column:
-    """The 16-hex-char perceptual hash, or NULL when the row has neither a
-    precomputed hash nor decodable bytes — the shared signature source for
-    exact (``ImagePhashDeduplicator``) and banded near
-    (``ImagePhashNearDeduplicator``) dedup. Rows that already carry a hash
-    (e.g. from ``ImageFeatureExtractor``) feed NULL bytes into the UDF —
-    the decode is skipped JVM-side, so a fully-precomputed frame pays no
-    Python while a mixed frame still computes the missing hashes; a frame
-    that PRUNED the bytes column entirely must not even reference it."""
+def _phash_udf():
+    """The decode+DCT perceptual hash as a nondeterministic pandas UDF:
+    16 hex chars, NULL for NULL or undecodable bytes."""
     import pandas as pd
 
     # NB: no type hints on any pandas-UDF function in this module —
@@ -593,21 +578,40 @@ def phash_hex_or_null(df: DataFrame, *, image_col: str, phash_col: str) -> Colum
                     out[i] = hx
         return pd.Series(out)
 
-    pre = F.col(phash_col) if phash_col in df.columns else F.lit(None).cast("string")
-    if image_col in df.columns:
-        computed = phash_udf.asNondeterministic()(F.when(pre.isNull(), _bytes_col(df, image_col)))
-    else:
-        computed = F.lit(None).cast("string")
-    return F.coalesce(pre, computed)
+    return phash_udf.asNondeterministic()
+
+
+def _phash_calls(df: DataFrame, *, image_col: str, phash_col: str) -> dict[str, Column]:
+    """``__phash``: the hash computed from the bytes of every row with no
+    precomputed one. Rows that already carry a hash (e.g. from
+    ``ImageFeatureExtractor``) feed NULL bytes into the UDF — the decode
+    is skipped JVM-side, so a fully-precomputed frame pays no Python while
+    a mixed frame still computes the missing hashes; a frame that PRUNED
+    the bytes column entirely binds nothing and never references it."""
+    if image_col not in df.columns:
+        return {}
+    raw = _bytes_col(df, image_col)
+    if phash_col in df.columns:
+        raw = F.when(F.col(phash_col).isNull(), raw)
+    return {"__phash": _phash_udf()(raw)}
+
+
+def _phash_sources(df: DataFrame, *, image_col: str, phash_col: str) -> list[str]:
+    """The hash sources as SQL, in order: the precomputed column, then the
+    ``__phash`` binding — the shared signature source for exact
+    (``ImagePhashDeduplicator``) and banded near
+    (``ImagePhashNearDeduplicator``) dedup."""
+    out = [sql_ident(phash_col)] if phash_col in df.columns else []
+    return out + (["`__phash`"] if image_col in df.columns else [])
 
 
 class ImagePhashDeduplicator(Deduplicator):
     """First-seen-wins dedup on the perceptual hash; reuses a precomputed
     ``phash`` column when present (reference image_phash_dedup.py:75-76),
-    falling back to decode+DCT. Undecodable images key on their id so they
-    never collide (image_phash_dedup.py: failures -> key = id). Whole rows
-    cross the base window's one shuffle; ``apply`` sends at most one row
-    per phash per partition."""
+    falling back to decode+DCT, bound once as ``__phash``. Undecodable
+    images key on their id so they never collide (image_phash_dedup.py:
+    failures -> key = id). Whole rows cross the base window's one
+    shuffle; ``apply`` sends at most one row per phash per partition."""
 
     def __init__(
         self,
@@ -621,11 +625,13 @@ class ImagePhashDeduplicator(Deduplicator):
         self.image_col = image_col
         self.phash_col = phash_col
 
-    def key(self, df: DataFrame) -> Column:
-        return F.coalesce(
-            phash_hex_or_null(df, image_col=self.image_col, phash_col=self.phash_col),
-            F.concat(F.lit("id:"), F.col(self.id_col).cast("string")),
-        )
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        return _phash_calls(df, image_col=self.image_col, phash_col=self.phash_col)
+
+    def key_sql(self, df: DataFrame) -> str:
+        sources = _phash_sources(df, image_col=self.image_col, phash_col=self.phash_col)
+        id_key = f"concat('id:', cast({sql_ident(self.id_col)} as string))"
+        return f"coalesce({', '.join([*sources, id_key])})"
 
 
 class ImagePhashNearDeduplicator(JoinDeduplicator):
@@ -669,19 +675,21 @@ class ImagePhashNearDeduplicator(JoinDeduplicator):
         self.image_col = image_col
         self.phash_col = phash_col
 
+    def udf_columns(self, df: DataFrame) -> dict[str, Column]:
+        return _phash_calls(df, image_col=self.image_col, phash_col=self.phash_col)
+
     def _dup_pairs(self, df: DataFrame) -> DataFrame:
         from mega_data_factory_spark.operators.dedup import banded_hamming_pairs
 
-        # materialize the hex ONCE in its own projection, then derive the
-        # rlike + two substrings from it BY NAME: inlining the expression
+        # the hex is materialized ONCE in its own projection, then the
+        # rlike + two substrings read it BY NAME: inlining the expression
         # three times would plant three copies of the nondeterministic
         # decode+DCT UDF — measured as phash_udf evaluated 3x per row per
-        # join side (the private-binding rule, Refiner docstring)
-        hexed = df.select(
-            F.col(self.id_col).alias("__id"),
-            phash_hex_or_null(df, image_col=self.image_col, phash_col=self.phash_col).alias(
-                "__hex"
-            ),
+        # join side (the private-binding rule, Operator.udf_columns)
+        sources = _phash_sources(df, image_col=self.image_col, phash_col=self.phash_col)
+        hexed = df.withColumns(self.udf_columns(df)).selectExpr(
+            f"{sql_ident(self.id_col)} AS __id",
+            f"coalesce({', '.join(sources or ['cast(NULL as string)'])}) AS __hex",
         )
         hx = F.col("__hex")
         hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")

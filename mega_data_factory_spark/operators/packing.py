@@ -133,13 +133,13 @@ class SequencePacker(Operator):
         return out.withColumn("__start", start), alive
 
     def _tag_unpackable(self, out: DataFrame, alive) -> DataFrame:
-        from mega_data_factory_spark.operators.base import rejection_details
+        from mega_data_factory_spark.operators.base import rejection_details_sql
 
         return out.withColumn(
             REJECTION_DETAILS_COL,
             F.when(
                 alive & F.col("pack_bucket").isNull() & F.col(self.id_col).isNull(),
-                rejection_details("unpackable_null_id", self.name),
+                F.expr(rejection_details_sql("unpackable_null_id", self.name)),
             ).otherwise(F.col(REJECTION_DETAILS_COL)),
         )
 

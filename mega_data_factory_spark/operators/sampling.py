@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from mega_data_factory_spark.functions.hashing import hash64_from_md5, hash64_from_md5_sql
 from mega_data_factory_spark.functions.text import sql_ident, sql_number_literal, sql_string_literal
-from mega_data_factory_spark.operators.base import Filter, Operator, Refiner, rejection_details
+from mega_data_factory_spark.operators.base import Filter, Operator, Refiner, rejection_details_sql
 
 BUCKETS = 10_000
 
@@ -101,7 +101,7 @@ class WeightedSourceSampler(Filter):
     stable id bucket falls below ``weight[source] * buckets``. Unlisted
     sources keep ``default_weight``. Reproducible across runs and engines;
     rejection accounting flows through the normal Filter tagging. NULL ids
-    are rejected (no stable identity -> NULL bucket -> keep() coalesces to
+    are rejected (no stable identity -> NULL bucket -> keep_sql coalesces to
     False). Default ``salt`` "mix" is DISTINCT from the split refiner's
     "split" — see DatasetSplitRefiner on why a shared salt corrupts
     composed sample+split flows."""
@@ -128,12 +128,14 @@ class WeightedSourceSampler(Filter):
         self.buckets = buckets
         self.salt = salt
 
-    def predicate(self, df: DataFrame) -> Column:
-        b = stable_bucket(self.id_col, buckets=self.buckets, salt=self.salt)
-        thr = F.lit(int(round(self.default_weight * self.buckets)))
+    def predicate_sql(self, df: DataFrame) -> str:
+        b = stable_bucket_sql(sql_ident(self.id_col), buckets=self.buckets, salt=self.salt)
+        src = sql_ident(self.source_col)
+        thr = sql_number_literal(int(round(self.default_weight * self.buckets)))
         for s, w in self.weights.items():
-            thr = F.when(F.col(self.source_col) == s, F.lit(int(round(w * self.buckets)))).otherwise(thr)
-        return b < thr
+            hi = sql_number_literal(int(round(w * self.buckets)))
+            thr = f"CASE WHEN ({src} = {sql_string_literal(s)}) THEN {hi} ELSE {thr} END"
+        return f"({b} < {thr})"
 
 
 class StratifiedQuotaSampler(Operator):
@@ -211,10 +213,7 @@ class StratifiedQuotaSampler(Operator):
     def apply(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        from mega_data_factory_spark.operators.base import (
-            REJECTION_DETAILS_COL,
-            rejection_details,
-        )
+        from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL
 
         tagged_mode = REJECTION_DETAILS_COL in df.columns
         alive = F.col(REJECTION_DETAILS_COL).isNull() if tagged_mode else F.lit(True)
@@ -293,7 +292,7 @@ class StratifiedQuotaSampler(Operator):
             REJECTION_DETAILS_COL,
             F.when(
                 F.col(REJECTION_DETAILS_COL).isNull() & ~F.col("__sq_keep"),
-                rejection_details("quota_exceeded", self.name),
+                F.expr(rejection_details_sql("quota_exceeded", self.name)),
             ).otherwise(F.col(REJECTION_DETAILS_COL)),
         ).drop(*aux)
 
@@ -439,7 +438,7 @@ class EpochWeightedMixer(Operator):
         alive = F.col(REJECTION_DETAILS_COL).isNull()
         df = df.withColumn(
             REJECTION_DETAILS_COL,
-            F.when(alive & (n == 0), rejection_details("sampled_out", self.name)).otherwise(
+            F.when(alive & (n == 0), F.expr(rejection_details_sql("sampled_out", self.name))).otherwise(
                 F.col(REJECTION_DETAILS_COL)
             ),
         )

@@ -101,10 +101,7 @@ class TokenBudgetSelector(Operator):
         self.score_bounds = score_bounds
 
     def apply(self, df: DataFrame) -> DataFrame:
-        from mega_data_factory_spark.operators.base import (
-            REJECTION_DETAILS_COL,
-            rejection_details,
-        )
+        from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details_sql
 
         tagged_mode = REJECTION_DETAILS_COL in df.columns
         alive = F.col(REJECTION_DETAILS_COL).isNull() if tagged_mode else F.lit(True)
@@ -174,6 +171,6 @@ class TokenBudgetSelector(Operator):
             REJECTION_DETAILS_COL,
             F.when(
                 F.col(REJECTION_DETAILS_COL).isNull() & ~F.col("__tb_keep"),
-                rejection_details("budget_exceeded", self.name),
+                F.expr(rejection_details_sql("budget_exceeded", self.name)),
             ).otherwise(F.col(REJECTION_DETAILS_COL)),
         ).drop(_B, "__tb_keep")

@@ -13,7 +13,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.operators.dedup import KeyDeduplicator, TextExactDeduplicator
-from mega_data_factory_spark.operators.filters import DomainBlocklistFilter, TextLengthFilter, WordScoreFilter
+from mega_data_factory_spark.operators.filters import (
+    DomainBlocklistFilter,
+    TextLengthFilter,
+    WordScoreFilter,
+    word_score_sql,
+)
 from mega_data_factory_spark.operators.refiners import (
     DEFAULT_STOPWORDS,
     LANG_MARKERS,
@@ -37,7 +42,7 @@ NORM = "lower(" + NORM_NOLOWER + ")"
 
 
 def _content_key_sql(text: str = "text", id_col: str = "doc_id") -> str:
-    """SQL mirror of functions.hashing.content_key INCLUDING the NULL-text
+    """SQL mirror of functions.hashing.content_key_sql INCLUDING the NULL-text
     id-fallback ('id:<id>', never collides). A bare md5 partition key would
     group every NULL-text row into ONE SQL window partition and keep a
     single survivor — diverging from the engine the moment testdata ships
@@ -48,7 +53,7 @@ def _content_key_sql(text: str = "text", id_col: str = "doc_id") -> str:
 
 
 def _wc(col: str, word: str) -> str:
-    """SQL mirror of functions.text.word_occurrences — incl. its
+    """SQL mirror of functions.text.word_occurrences_sql — incl. its
     re.escape (RE2-compatible) so metacharacter words count identically
     on both engines."""
     import re as _re
@@ -71,7 +76,7 @@ def _text_length(text_col: str, length_col: str | None) -> str:
 
 
 def _word_score(col: str, weights: dict[str, float]) -> str:
-    """SQL mirror of operators.filters.word_score (same evaluation tree)."""
+    """SQL mirror of operators.filters.word_score_sql (same evaluation tree)."""
     matched = [f"(CASE WHEN {_wc(col, w)} > 0 THEN {float(wt)!r} ELSE 0.0 END)" for w, wt in weights.items()]
     max_w = matched[0] if len(matched) == 1 else "greatest(" + ", ".join(matched) + ")"
     sum_w = " + ".join(matched)
@@ -111,7 +116,7 @@ def text_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup exchange keeps that shuffle at one compact (doc_id, key) row
     # per key per scan partition; the text itself never crosses it.
     d = TextExactDeduplicator(id_col="doc_id")
-    out = d.apply(t["documents"].withColumn("content_key", d.key(t["documents"])))
+    out = d.apply(t["documents"].withColumn("content_key", F.expr(d.key_sql(t["documents"]))))
     return out.select("doc_id", "content_key").orderBy("doc_id")
 
 
@@ -407,11 +412,11 @@ def url_rule_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = load_tables(spark, sf_dir, ("part", "documents"))
     ws = WordScoreFilter(PART_WEIGHTS, PART_THRESHOLD, text_col="p_name")
-    word_side = ws.apply(t["part"]).select(
-        F.lit("word_score").alias("rule"),
-        F.col("p_partkey").alias("entity_id"),
-        F.col("p_name").alias("attr"),
-        F.round(ws.score(), 6).alias("score"),
+    word_side = ws.apply(t["part"]).selectExpr(
+        "'word_score' AS rule",
+        "p_partkey AS entity_id",
+        "p_name AS attr",
+        f"round({word_score_sql('`p_name`', PART_WEIGHTS)}, 6) AS score",
     )
     bl = DomainBlocklistFilter(BLOCKED_SOURCES, domain_col="source")
     block_side = bl.apply(t["documents"]).select(
@@ -544,8 +549,8 @@ def curation_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t["documents"]
     lenf = TextLengthFilter(LEN_LO, LEN_HI, length_col="n_chars")
     ws = WordScoreFilter(PIPE_WEIGHTS, 0.5, text_col="text")
-    keep_len = lenf.keep(df)
-    keep_ws = ws.keep(df)
+    keep_len = F.expr(lenf.keep_sql(df))
+    keep_ws = F.expr(ws.keep_sql(df))
     return (
         df.groupBy("source")
         .agg(
@@ -593,7 +598,7 @@ def warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = warc_files_df(spark, N_WARC_FILES)
     recs = parse_warc_files(files, crawl_id="fixture-crawl")
     lenf = TextLengthFilter(60, 500, length_col="text_length")
-    return recs.filter(lenf.keep(recs)).orderBy("url")
+    return recs.filter(lenf.keep_sql(recs)).orderBy("url")
 
 
 def _warc_extract_oracle() -> str:
@@ -969,7 +974,7 @@ def c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t["documents"].select("doc_id", "text")
     planted = spark.createDataFrame(C4_PLANTED, "doc_id long, text string")
     df = C4HeuristicRefiner(bad_words=C4_BAD_WORDS).apply(base.unionByName(planted))
-    df = df.withColumn("c4_page_pass", C4PageFilter(min_sentences=C4_MIN_SENTENCES).predicate(df))
+    df = df.withColumn("c4_page_pass", F.expr(C4PageFilter(min_sentences=C4_MIN_SENTENCES).predicate_sql(df)))
     return df.select(
         "doc_id",
         "c4_text",
@@ -1145,7 +1150,7 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t["documents"].select("doc_id", "text")
     planted = spark.createDataFrame(GOPHER_PLANTED, "doc_id long, text string")
     df = GopherQualityRefiner().apply(base.unionByName(planted))
-    df = df.withColumn("gopher_pass", GopherQualityFilter().predicate(df))
+    df = df.withColumn("gopher_pass", F.expr(GopherQualityFilter().predicate_sql(df)))
     return df.select(
         "doc_id",
         "gopher_word_count",
@@ -1170,7 +1175,7 @@ def _gopher_quality_oracle() -> str:
     )
     bullets_sql = " OR ".join(f"starts_with(trim(u), '{g}')" for g in GOPHER_BULLETS)
     # the filter's NULL-fails coalescing, mirrored term by term
-    # (operators/filters.py GopherQualityFilter.predicate)
+    # (operators/filters.py GopherQualityFilter.predicate_sql)
     pass_sql = """
   COALESCE(gopher_word_count, -1) BETWEEN 50 AND 100000
   AND COALESCE(gopher_mean_word_len, -1.0) BETWEEN 3.0 AND 10.0

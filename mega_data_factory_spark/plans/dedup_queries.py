@@ -190,7 +190,7 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     validation of the 60-bit signature itself, not just the survivor set)."""
     d = SimHashDeduplicator(id_col="doc_id")
     corpus = _doc_corpus(spark, sf_dir)
-    keyed = corpus.withColumn("simhash", d.key(corpus))
+    keyed = corpus.withColumn("simhash", F.expr(d.key_sql(corpus)))
     return d.apply(keyed).select("doc_id", "simhash").orderBy("doc_id")
 
 

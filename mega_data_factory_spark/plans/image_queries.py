@@ -133,7 +133,7 @@ def image_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_filter_oracle() -> str:
-    """Mirror of ImageQualityFilter.predicate (operators/filters.py) over
+    """Mirror of ImageQualityFilter.predicate_sql (operators/filters.py) over
     the materialized refiner output — same coalesce defaults (missing
     values fail), same inclusive thresholds."""
     path = os.path.join(_MAT_ROOT, "image_features_quality")

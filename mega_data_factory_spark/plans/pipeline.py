@@ -369,8 +369,3 @@ class Pipeline:
         finally:
             tagged.unpersist()
             self.release_intermediates()
-
-
-def run_yaml(spark: SparkSession, yaml_path_or_text: str) -> PipelineResult:
-    """``mdf run -c config.yaml`` equivalent."""
-    return Pipeline(PipelineConfig.from_yaml(yaml_path_or_text)).run(spark)

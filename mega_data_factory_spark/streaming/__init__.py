@@ -8,17 +8,21 @@ Structured Streaming:
   * incremental pipelined execution  -> micro-batches (``foreachBatch``);
   * per-shard checkpoint/resume      -> ``checkpointLocation`` (source
     offsets + state store; exactly-once file sinks);
-  * unbounded dedup seen-set         -> ``dropDuplicates`` state (or
-    ``dropDuplicatesWithinWatermark`` when state must be bounded — the
-    eviction policy the reference lacks, SURVEY §7 risk list);
+  * unbounded dedup seen-set         -> the store-backed dedups' seen-key
+    store (``IncrementalExactDeduplicator`` and its siblings), looked up by
+    each micro-batch's tag and appended after its sinks land;
   * beyond the reference: real event-time semantics — watermarks, tumbling
     windows, session windows.
 
 ``StreamingPipeline`` reuses the SAME operator instances and YAML contract
 as the batch runner: filters/refiners are narrow and apply to streaming
 frames unchanged; dedup runs per micro-batch inside ``foreachBatch`` with
-first-wins semantics *within* each batch plus optional cross-batch exact
-dedup via ``dropDuplicates`` upstream.
+first-wins semantics *within* each batch, and a store-backed dedup also
+rejects keys earlier batches admitted: the runner appends each batch's
+new keys to the store (``Pipeline.update_stores``) once its sinks land.
+The event-time helpers below (``stream_exact_dedup`` and the
+grouped-state ``stream_dedup_with_reps*``) are standalone
+``dropDuplicates``/state-store examples outside that runner.
 """
 
 from mega_data_factory_spark.streaming.listener import StreamingMetricsListener

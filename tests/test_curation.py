@@ -224,7 +224,7 @@ def test_epoch_mixer_pipeline_tagging(spark):
     """Pipeline path: dead rows pass through untouched as one NULL-epoch
     copy, zero-repeat alive rows are TAGGED sampled_out (not dropped), and
     alive rows explode with the tag preserved."""
-    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details
+    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details_sql
     from mega_data_factory_spark.operators.sampling import EpochWeightedMixer
     from pyspark.sql import functions as F
 
@@ -232,7 +232,7 @@ def test_epoch_mixer_pipeline_tagging(spark):
         [(i, "up" if i % 2 == 0 else "gone") for i in range(20)], "doc_id long, source string"
     ).withColumn(
         REJECTION_DETAILS_COL,
-        F.when(F.col("doc_id") < 4, rejection_details("filtered", "Prior")),
+        F.when(F.col("doc_id") < 4, F.expr(rejection_details_sql("filtered", "Prior"))),
     )
     m = EpochWeightedMixer({"up": 2.0, "gone": 0.0}, id_col="doc_id")
     out = m.apply(df).cache()
@@ -760,7 +760,7 @@ def test_boilerplate_alive_rows_only_vote(spark):
     not boilerplate for the survivors; dead rows keep NULL outputs."""
     from mega_data_factory_spark.operators.base import (
         REJECTION_DETAILS_COL,
-        rejection_details,
+        rejection_details_sql,
     )
     from mega_data_factory_spark.operators.refiners import BoilerplateLineRefiner
     from pyspark.sql import functions as F
@@ -770,7 +770,7 @@ def test_boilerplate_alive_rows_only_vote(spark):
     dead_rows = [(100 + i, f"junk {i}\n{spamline}") for i in range(6)]
     df = spark.createDataFrame(alive_rows + dead_rows, "doc_id long, text string").withColumn(
         REJECTION_DETAILS_COL,
-        F.when(F.col("doc_id") >= 100, rejection_details("filtered", "Prior")),
+        F.when(F.col("doc_id") >= 100, F.expr(rejection_details_sql("filtered", "Prior"))),
     )
     # threshold 4 docs: spamline repeats in 8 docs total but only 2 ALIVE
     r = BoilerplateLineRefiner(min_doc_frac=0.1, min_docs=4)
@@ -781,7 +781,7 @@ def test_boilerplate_alive_rows_only_vote(spark):
     alive_many = [(i, f"real prose {i}\n{spamline}") for i in range(5)]
     df2 = spark.createDataFrame(alive_many + dead_rows, "doc_id long, text string").withColumn(
         REJECTION_DETAILS_COL,
-        F.when(F.col("doc_id") >= 100, rejection_details("filtered", "Prior")),
+        F.when(F.col("doc_id") >= 100, F.expr(rejection_details_sql("filtered", "Prior"))),
     )
     out2 = {x.doc_id: x for x in r.apply(df2).collect()}
     assert spamline not in out2[0].text_cleaned
@@ -1101,13 +1101,18 @@ def test_gopher_quality_filter_rules(spark, tmp_path):
 
 
 def test_word_occurrences_expr_parity(spark):
-    """word_occurrences (one parsed SQL expression) counts whole-word,
-    case-insensitive occurrences for every class of word — plain, regex
+    """word_occurrences_sql counts whole-word, case-insensitive
+    occurrences for every class of word — plain, regex
     metacharacters, quotes, backslashes, unicode — and 0 for NULL/empty
     text. The expected counts were generated where the earlier composed
     Column form agreed with the SQL text; a word that starts or ends in a
     non-word character has no ASCII \\b boundary there, hence its zeros."""
-    from mega_data_factory_spark.functions.text import word_occurrences
+    from pyspark.sql import functions as F
+
+    from mega_data_factory_spark.functions.text import sql_ident, word_occurrences_sql
+
+    def word_occurrences(col, word):
+        return F.expr(word_occurrences_sql(sql_ident(col), word))
 
     rows = [
         (0, "the cat and the hat"),

@@ -104,7 +104,7 @@ def test_simhash_near_banding_matches_allpairs(spark):
     verification must equal brute-force all-pairs hamming<=k dedup."""
     from pyspark.sql import functions as F
 
-    from mega_data_factory_spark.operators.dedup import SimHashNearDeduplicator, simhash64
+    from mega_data_factory_spark.operators.dedup import SimHashNearDeduplicator, simhash64_sql
     from mega_data_factory_spark.session import load_tables
 
     t = load_tables(spark, SF_DIR_ORACLE, ("documents",))
@@ -113,7 +113,7 @@ def test_simhash_near_banding_matches_allpairs(spark):
     d = SimHashNearDeduplicator(k, id_col="doc_id")
     got = {r.doc_id for r in d.apply(docs).select("doc_id").collect()}
 
-    sims = {r.doc_id: r.s for r in docs.select("doc_id", simhash64("text").alias("s")).collect()}
+    sims = {r.doc_id: r.s for r in docs.selectExpr("doc_id", f"{simhash64_sql('`text`')} AS s").collect()}
     expect = set()
     for i, si in sims.items():
         if not any(j < i and bin(si ^ sj).count("1") <= k for j, sj in sims.items()):

@@ -282,10 +282,10 @@ def test_url_filter_survives_malformed_urls(spark):
 
 
 def test_word_occurrences_escapes_metacharacters(spark):
-    from mega_data_factory_spark.functions.text import word_occurrences
+    from mega_data_factory_spark.functions.text import word_occurrences_sql
 
     df = spark.createDataFrame([("aXb text a.b end",)], "text string")
-    n = df.select(word_occurrences("text", "a.b").alias("n")).first()["n"]
+    n = df.selectExpr(f"{word_occurrences_sql('`text`', 'a.b')} AS n").first()["n"]
     assert n == 1  # literal 'a.b' only — the dot must not match 'aXb'
 
 
@@ -396,7 +396,7 @@ def test_rejected_sink_carries_run_id(spark, tmp_path):
 
 def test_pipeline_key_dedup_respects_null_keys_distinct(spark, tmp_path):
     """The PIPELINE tagging path must honor null_keys='distinct' too: it
-    builds the window key itself (Deduplicator.tag), and using op.key()
+    builds the window key itself (Deduplicator.tag), and using the raw key
     instead of op._effective_key() silently collapsed every NULL-key row
     into one window partition — all but one URL-less document in the
     corpus rejected as 'duplicates'."""

@@ -163,14 +163,14 @@ def test_perplexity_buckets_pipeline_voting(spark):
     """Pipeline semantics: dead rows neither vote on thresholds nor get a
     bucket. Planted: 6 alive scores 1..6 (median cut at 3.5) plus two dead
     outliers that would drag the cut to 35 if they voted."""
-    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details
+    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details_sql
     from mega_data_factory_spark.operators.lm import PerplexityBucketRefiner
 
     alive = [(i, float(i)) for i in range(1, 7)]
     df = spark.createDataFrame(alive + [(98, 100.0), (99, 101.0)], "doc_id long, perplexity double")
     tagged = df.withColumn(
         REJECTION_DETAILS_COL,
-        F.when(F.col("doc_id") >= 98, rejection_details("filtered", "SomeCut")).otherwise(
+        F.when(F.col("doc_id") >= 98, F.expr(rejection_details_sql("filtered", "SomeCut"))).otherwise(
             F.lit(None).cast("struct<reason:string,operator:string,dedup_key:string,representative_id:string>")
         ),
     )

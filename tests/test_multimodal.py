@@ -340,9 +340,9 @@ def test_struct_udf_refiners_evaluate_once(spark):
     pre-rejected row's outputs are NULL, the alive row's equal apply's."""
     import re
 
-    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
+    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details_sql
 
-    dead = F.when(F.col("id") == 1, rejection_details("filtered", "Pre")).otherwise(
+    dead = F.when(F.col("id") == 1, F.expr(rejection_details_sql("filtered", "Pre"))).otherwise(
         F.lit(None).cast(REJECTION_STRUCT_DDL)
     )
     for ref, df in _udf_refiner_cases(spark):
@@ -390,3 +390,63 @@ def test_refiners_author_sql_text_only(spark):
     for ref, df in cases:
         keys = ref.udf_columns(df)
         assert keys and all(k.startswith("__") for k in keys), (type(ref).__name__, list(keys))
+
+
+def _subclasses(base) -> set:
+    import importlib
+    import pkgutil
+
+    import mega_data_factory_spark.operators as ops
+
+    for mod in pkgutil.iter_modules(ops.__path__):
+        importlib.import_module(f"{ops.__name__}.{mod.name}")
+    classes, todo = set(), [base]
+    while todo:
+        for sub in todo.pop().__subclasses__():
+            classes.add(sub)
+            todo.append(sub)
+    return classes
+
+
+def test_filters_and_dedups_author_sql_text_only(spark, imgs):
+    """The one authoring rule for the other two operator kinds: a Filter
+    authors only ``predicate_sql`` and a key Deduplicator only
+    ``key_sql`` — no class, bases included, carries a Column ``predicate``,
+    ``key`` or ``keep`` hook — and ``udf_columns`` is the one place any
+    operator binds Python: only Refiner and Deduplicator classes define
+    it, under ``__`` names, and no Filter path ever calls it."""
+    from mega_data_factory_spark.operators.base import (
+        REJECTION_STRUCT_DDL,
+        Deduplicator,
+        Filter,
+        JoinDeduplicator,
+        Operator,
+        Refiner,
+    )
+    from mega_data_factory_spark.operators.filters import NumericRangeFilter
+    from mega_data_factory_spark.operators.images import ImagePhashDeduplicator, ImagePhashNearDeduplicator
+
+    filters, dedups = _subclasses(Filter), _subclasses(Deduplicator)
+    assert len(filters) >= 9 and len(dedups) >= 17
+    for cls in filters | dedups | {Filter, Deduplicator, JoinDeduplicator}:
+        for hook in ("predicate", "key", "keep", "_KEEP", "RAW_KEY_COL"):
+            assert not hasattr(cls, hook), (cls.__name__, hook)
+    assert all("predicate_sql" in vars(c) for c in filters), [c.__name__ for c in filters]
+    keyed = {c for c in dedups if not issubclass(c, JoinDeduplicator)}
+    assert keyed and all(any("key_sql" in vars(b) for b in c.__mro__ if b is not Deduplicator) for c in keyed)
+    binders = {c for c in _subclasses(Operator) if "udf_columns" in vars(c)}
+    assert binders and all(issubclass(c, (Refiner, Deduplicator)) for c in binders), binders
+    assert {c for c in binders if issubclass(c, Deduplicator)} == {ImagePhashDeduplicator, ImagePhashNearDeduplicator}
+    for op in (ImagePhashDeduplicator(), ImagePhashNearDeduplicator()):
+        keys = op.udf_columns(imgs)
+        assert keys and all(k.startswith("__") for k in keys), (type(op).__name__, list(keys))
+
+    def no_binding(df):
+        raise AssertionError("a Filter path bound a Python call")
+
+    df = spark.range(4).withColumn("_rejection_details", F.lit(None).cast(REJECTION_STRUCT_DDL))
+    op = NumericRangeFilter("id", lo=2)
+    op.udf_columns = no_binding
+    assert [r.id for r in op.apply(df).collect()] == [2, 3]
+    assert [r.id for r in op.rejected(df).collect()] == [0, 1]
+    assert op.tag(df).filter("_rejection_details IS NULL").count() == 2

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mega_data_factory_spark.config import PipelineConfig
-from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, Refiner, rejection_details
+from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, Refiner, rejection_details_sql
 from mega_data_factory_spark.operators.dedup import KeyDeduplicator, TextExactDeduplicator
 from mega_data_factory_spark.plans.pipeline import Pipeline
 from mega_data_factory_spark.registry import OPERATORS
@@ -334,7 +334,7 @@ def test_full_frame_refiners_in_a_pipeline_match_apply_on_alive_rows(spark):
         [(i, t, float(i * i), "en" if i % 2 else "de") for i, t in texts.items()],
         "doc_id long, text string, score double, lang string",
     )
-    dead = F.when(F.col("doc_id") == 1, rejection_details("filtered", "Pre")).otherwise(
+    dead = F.when(F.col("doc_id") == 1, F.expr(rejection_details_sql("filtered", "Pre"))).otherwise(
         F.lit(None).cast(REJECTION_STRUCT_DDL)
     )
     ops = [

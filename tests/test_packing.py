@@ -143,7 +143,7 @@ def test_packer_preserves_tagged_rows(spark):
     """Inside a tagged pipeline the packer must drop NOTHING: rejected and
     empty rows get NULL coordinates and consume no token budget, alive
     rows pack contiguously as if the dead rows were absent."""
-    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details
+    from mega_data_factory_spark.operators.base import REJECTION_DETAILS_COL, rejection_details_sql
     from mega_data_factory_spark.operators.packing import SequencePacker
 
     docs = spark.createDataFrame(
@@ -152,7 +152,7 @@ def test_packer_preserves_tagged_rows(spark):
     )
     tagged = docs.withColumn(
         REJECTION_DETAILS_COL,
-        F.when(F.col("doc_id") % 2 == 1, rejection_details("filtered", "f")),
+        F.when(F.col("doc_id") % 2 == 1, F.expr(rejection_details_sql("filtered", "f"))),
     )
     out = SequencePacker(16, buckets=1).apply(tagged)
     rows = {r.doc_id: r for r in out.collect()}

@@ -58,9 +58,9 @@ def test_filter_conjunction_order_invariance(spark, texts, lo, hi):
     df = _df(spark, texts)
     lenf = TextLengthFilter(lo, hi)
     ws = WordScoreFilter({"slow": 0.4, "big": 0.3}, 0.5)
-    a = {r.doc_id for r in df.filter(lenf.keep(df)).filter(ws.keep(df)).collect()}
-    b = {r.doc_id for r in df.filter(ws.keep(df)).filter(lenf.keep(df)).collect()}
-    c = {r.doc_id for r in df.filter(lenf.keep(df) & ws.keep(df)).collect()}
+    a = {r.doc_id for r in df.filter(lenf.keep_sql(df)).filter(ws.keep_sql(df)).collect()}
+    b = {r.doc_id for r in df.filter(ws.keep_sql(df)).filter(lenf.keep_sql(df)).collect()}
+    c = {r.doc_id for r in df.filter(f"{lenf.keep_sql(df)} AND {ws.keep_sql(df)}").collect()}
     assert a == b == c
 
 

@@ -26,7 +26,7 @@ import mega_data_factory_spark.operators.refiners as R
 import mega_data_factory_spark.operators.sampling as S
 from mega_data_factory_spark.functions.hashing import hash64_from_md5
 from mega_data_factory_spark.functions.text import sql_ident, word_shingles
-from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details
+from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL, rejection_details_sql
 from mega_data_factory_spark.plans.pipeline import Pipeline
 
 ROWS = [
@@ -91,9 +91,6 @@ FILTERS = [
     ),
     pytest.param(lambda: Fi.GopherQualityFilter(), id="GopherQualityFilter"),
     pytest.param(lambda: Fi.C4PageFilter(), id="C4PageFilter"),
-]
-# filters whose predicate is still a composed Column, pinned before conversion
-COLUMN_FILTERS = [
     pytest.param(lambda: Fi.WordScoreFilter(WORD_WEIGHTS, 0.45), id="WordScoreFilter"),
     pytest.param(lambda: Fi.DomainBlocklistFilter(BLOCKED), id="DomainBlocklistFilter"),
     pytest.param(lambda: Fi.UrlFilter(blocked_domains=BLOCKED), id="UrlFilter-blocklist"),
@@ -117,6 +114,7 @@ DEDUPS = [
         lambda: D.KeyDeduplicator(["url", "n_chars"], order_col="doc_id", null_keys="distinct"),
         id="KeyDedup-multi-distinct",
     ),
+    pytest.param(lambda: D.SimHashDeduplicator(), id="SimHash"),
 ]
 
 # ---------------------------------------------------------------- pinned
@@ -303,7 +301,7 @@ def _with_tags(df, dead_id: int | None = None):
     """Add the tag column; ``dead_id``'s row arrives already rejected."""
     tag = F.lit(None).cast(REJECTION_STRUCT_DDL)
     if dead_id is not None:
-        tag = F.when(F.col("doc_id") == dead_id, rejection_details("filtered", "Pre")).otherwise(tag)
+        tag = F.when(F.col("doc_id") == dead_id, F.expr(rejection_details_sql("filtered", "Pre"))).otherwise(tag)
     return df.withColumn("_rejection_details", tag)
 
 
@@ -460,15 +458,15 @@ def _filter_fixture(spark):
 
 
 def _keep(df, op):
-    return [r[0] for r in df.orderBy("doc_id").select(op.keep(df)).collect()]
+    return [r[0] for r in df.orderBy("doc_id").selectExpr(op.keep_sql(df)).collect()]
 
 
-@pytest.mark.parametrize("make_filter", FILTERS + COLUMN_FILTERS)
+@pytest.mark.parametrize("make_filter", FILTERS)
 def test_filter_keep_twin(spark, make_filter, request):
     assert _keep(_filter_fixture(spark), make_filter()) == KEEP_VALUES[request.node.callspec.id]
 
 
-@pytest.mark.parametrize("make_filter", FILTERS + COLUMN_FILTERS)
+@pytest.mark.parametrize("make_filter", FILTERS)
 def test_filter_tag_twin(spark, make_filter, request):
     """The pipeline's filter tag rejects exactly the rows the pinned keep
     flags reject, with the 'filtered' struct naming the operator."""
@@ -529,32 +527,38 @@ def test_key_dedup_tag_twin(spark, make_dedup, request):
     assert _dedup_values(make_dedup, _dedup_fixture(spark)) == DEDUP_VALUES[request.node.callspec.id]
 
 
-def test_simhash_dedup_tag_pinned(spark):
-    """SimHashDeduplicator's pipeline tag, survivors and rejections."""
-    got = _dedup_values(lambda: D.SimHashDeduplicator(), _dedup_fixture(spark))
-    assert got == DEDUP_VALUES["SimHash"]
-
-
-def _column_key(make):
-    """The same operator with its key authored as a Column (key_sql None),
-    which the key wrappers read from the bound RAW_KEY_COL."""
+def _udf_key(make):
+    """The same operator with its key composed from a ``udf_columns``
+    binding: an identity pandas UDF over the SQL key, bound as
+    ``__udf_key``, which ``key_sql`` then reads by name — the one path a
+    dedup key binds Python through."""
 
     def build():
         op = make()
         key_sql = op.key_sql
-        op.key = lambda df: F.expr(key_sql(df))
-        op.key_sql = lambda df: None
+        udf = F.pandas_udf(lambda s: s, "string").asNondeterministic()  # by value: workers cannot import tests
+        op.udf_columns = lambda df: {"__udf_key": udf(F.expr(key_sql(df)))}
+        op.key_sql = lambda df: "`__udf_key`"
         return op
 
     return build
 
 
-@pytest.mark.parametrize("make_dedup", DEDUPS)
-@pytest.mark.parametrize("force_composed_key", [False, True], ids=["twin-key", "composed-key"])
+STANDALONE = [
+    *[pytest.param(p.values[0], False, id=f"twin-key-{p.id}") for p in DEDUPS],
+    # Spark leaves a Python UDF unextracted (and unevaluable) when its
+    # argument holds a nested lambda that reads an outer lambda variable,
+    # as the simhash key's shingle builder does, so that key has no UDF leg
+    *[pytest.param(p.values[0], True, id=f"composed-key-{p.id}") for p in DEDUPS if p.id != "SimHash"],
+]
+
+
+@pytest.mark.parametrize("make_dedup, force_composed_key", STANDALONE)
 def test_standalone_dedup_twin(spark, make_dedup, force_composed_key, request):
-    """Standalone apply()/rejected(), for a SQL-authored key and for the
-    same key authored as a Column — both give the pinned values."""
-    make = _column_key(make_dedup) if force_composed_key else make_dedup
+    """Standalone apply()/rejected(), for the SQL key and for the same key
+    composed from a UDF bound through ``udf_columns`` — both give the
+    pinned values."""
+    make = _udf_key(make_dedup) if force_composed_key else make_dedup
     _, surv, rej = _dedup_values(make, _dedup_fixture(spark))
     key = request.node.callspec.id.split("-", 2)[-1]
     assert (surv, rej) == DEDUP_VALUES[key][1:]
@@ -574,5 +578,65 @@ def test_key_dedup_twin_refuses_unspellable(spark):
         mode, n = key.split("-")
         cols = ["url", "n_chars"][: int(n)]
         op = D.IncrementalKeyDeduplicator("/nonexistent", cols, id_col="doc_id", null_keys=mode)
-        assert [r[0] for r in df.orderBy("doc_id").select(op.key(df)).collect()] == expected, key
-    assert [r[0] for r in df.orderBy("doc_id").select(D.simhash64("text")).collect()] == SIMHASH_VALUES
+        assert [r[0] for r in df.orderBy("doc_id").selectExpr(op.key_sql(df)).collect()] == expected, key
+    simhash = D.simhash64_sql(sql_ident("text"))
+    assert [r[0] for r in df.orderBy("doc_id").selectExpr(simhash).collect()] == SIMHASH_VALUES
+
+
+# ------------------------------------------------------------ py4j budget
+
+PY4J_BUDGET = 30
+CONVERTED = {
+    "WordScoreFilter", "DomainBlocklistFilter", "UrlFilter-blocklist", "UrlFilter-weights",
+    "UrlFilter-quality", "ImageQualityFilter", "WeightedSourceSampler",
+}
+
+
+def _py4j_calls(build) -> int:
+    """Non-release py4j commands ``build()`` sends. Object-release
+    commands (``m\\nd\\n``) are py4j's finalizer reacting to garbage
+    collection, not plan building, so they are excluded and a collection
+    runs first."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    gc.collect()
+    send, calls = ClientServerConnection.send_command, []
+
+    def counted(conn, command):
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(conn, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    return len(calls)
+
+
+def test_sql_authored_tag_py4j_budget(spark):
+    """A fresh SimHashDeduplicator's and each converted filter's ``tag``
+    over sf0.01 documents builds in a bounded number of py4j calls: SQL
+    text parses in one round trip, where the composed Column forms took
+    100-2,300 calls."""
+    from mega_data_factory_spark.session import load_tables
+    from tests.conftest import SF_DIR_ORACLE
+
+    docs = load_tables(spark, SF_DIR_ORACLE, ("documents",))["documents"].selectExpr(
+        "*",
+        "concat('http://', source, '.example.com/', doc_id) AS url",
+        "concat(source, '.example.com') AS domain",
+        "cast(NULL as int) AS image_width",
+        "cast(NULL as int) AS image_height",
+        "cast(NULL as double) AS image_compression_artifacts",
+        "cast(NULL as double) AS image_information_entropy",
+        f"cast(NULL as {REJECTION_STRUCT_DDL}) AS _rejection_details",
+    )
+    makers = {p.id: p.values[0] for p in FILTERS if p.id in CONVERTED}
+    makers["SimHashDeduplicator"] = D.SimHashDeduplicator
+    assert len(makers) == len(CONVERTED) + 1
+    calls = {name: _py4j_calls(lambda: make().tag(docs)) for name, make in makers.items()}
+    assert all(n <= PY4J_BUDGET for n in calls.values()), calls

@@ -128,7 +128,7 @@ def test_incremental_dedup_across_runs(spark, tmp_path):
     assert reps == {10: "1", 12: "11", 13: "2"}
     # store hits (10, 13) and the in-batch duplicate (12) all carry the
     # content key they were rejected on: the md5 hex of the normalized text
-    content_keys = {r.doc_id: r.k for r in b2.select("doc_id", d.key(b2).alias("k")).collect()}
+    content_keys = {r.doc_id: r.k for r in b2.selectExpr("doc_id", f"{d.key_sql(b2)} AS k").collect()}
     assert {r.doc_id: r["dedup_key"] for r in rejected} == {i: content_keys[i] for i in (10, 12, 13)}
     assert all(len(content_keys[i]) == 32 for i in (10, 12, 13))
     d.update_store(b2)

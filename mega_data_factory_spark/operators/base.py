@@ -137,7 +137,8 @@ class Operator(ABC):
     def udf_columns(self, df: DataFrame) -> dict[str, Column]:
         """``__`` name -> a Python UDF call, bound before the operator's SQL
         text, which reads it by name — the one place any operator binds
-        Python. Each call is marked nondeterministic by its class: a
+        Python (Refiners and key Deduplicators bind it; no Filter calls
+        Python). Each call is marked nondeterministic by its class: a
         deterministic UDF would be substituted into a downstream filter and
         also kept in the projection (two ArrowEvalPython passes per row).
         Bound once and read by name, it runs once per row."""

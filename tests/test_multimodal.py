@@ -363,36 +363,8 @@ def test_struct_udf_refiners_evaluate_once(spark):
         assert rows[2] == alive, f"{name}: {rows[2]} != {alive}"
 
 
-def test_refiners_author_sql_text_only(spark):
-    """The one Refiner authoring rule: no subclass overrides ``columns``
-    or brings back a ``derived_columns`` stage, and every Python UDF call
-    is a ``udf_columns`` binding under a private ``__`` name. Every class
-    that binds a UDF is among the evaluate-once cases above."""
-    import importlib
-    import pkgutil
-
-    import mega_data_factory_spark.operators as ops
-    from mega_data_factory_spark.operators.base import Refiner
-
-    for mod in pkgutil.iter_modules(ops.__path__):
-        importlib.import_module(f"{ops.__name__}.{mod.name}")
-    classes, todo = set(), [Refiner]
-    while todo:
-        for sub in todo.pop().__subclasses__():
-            classes.add(sub)
-            todo.append(sub)
-    assert len(classes) >= 25
-    assert not hasattr(Refiner, "derived_columns")
-    for cls in classes:
-        assert "columns" not in vars(cls) and "derived_columns" not in vars(cls), cls.__name__
-    cases = _udf_refiner_cases(spark)
-    assert {c for c in classes if "udf_columns" in vars(c)} <= {type(r) for r, _ in cases}
-    for ref, df in cases:
-        keys = ref.udf_columns(df)
-        assert keys and all(k.startswith("__") for k in keys), (type(ref).__name__, list(keys))
-
-
 def _subclasses(base) -> set:
+    """Every operator class under ``base``, all operator modules imported."""
     import importlib
     import pkgutil
 
@@ -406,6 +378,25 @@ def _subclasses(base) -> set:
             classes.add(sub)
             todo.append(sub)
     return classes
+
+
+def test_refiners_author_sql_text_only(spark):
+    """The one Refiner authoring rule: no subclass overrides ``columns``
+    or brings back a ``derived_columns`` stage, and every Python UDF call
+    is a ``udf_columns`` binding under a private ``__`` name. Every class
+    that binds a UDF is among the evaluate-once cases above."""
+    from mega_data_factory_spark.operators.base import Refiner
+
+    classes = _subclasses(Refiner)
+    assert len(classes) >= 25
+    assert not hasattr(Refiner, "derived_columns")
+    for cls in classes:
+        assert "columns" not in vars(cls) and "derived_columns" not in vars(cls), cls.__name__
+    cases = _udf_refiner_cases(spark)
+    assert {c for c in classes if "udf_columns" in vars(c)} <= {type(r) for r, _ in cases}
+    for ref, df in cases:
+        keys = ref.udf_columns(df)
+        assert keys and all(k.startswith("__") for k in keys), (type(ref).__name__, list(keys))
 
 
 def test_filters_and_dedups_author_sql_text_only(spark, imgs):

@@ -8,8 +8,11 @@ proven equal. These tests pin the single rendering to those values:
 quotes, backslashes, regex metacharacters, repeated lines, unicode, empty
 and NULL text, a precomputed ``length_col``, the ``sep`` variant of
 ``IntraDocDedupRefiner``, wide-integer / infinite / boolean literals and
-backtick-carrying column names. Wide outputs are pinned by a digest of
-their stringified rows (``_digest``); short ones are spelled out.
+backtick-carrying column names. The URL, domain, word-score, image and
+sampling filters and the simhash key were pinned the same way on their
+composed-Column code before it was rewritten as SQL text. Wide outputs
+are pinned by a digest of their stringified rows (``_digest``); short
+ones are spelled out.
 """
 
 from __future__ import annotations
